@@ -8,8 +8,8 @@ training-data pipeline needs.
 Scale notes (100 TB):
 - keep-first/last are a single shuffle on the dedup key (window + filter);
   AQE handles skewed keys.
-- MinHash-LSH: signature computation is embarrassingly parallel (per-row
-  column math over exploded shingles); candidate generation joins on
+- MinHash-LSH: signature computation is embarrassingly parallel (one
+  per-row Arrow UDF pass); candidate generation joins on
   (band_id, band_hash) buckets so the shuffle volume is #bands × #docs tiny
   rows, never the quadratic pair space.
 - SimHash: 64-bit fingerprint per doc via bit-bucketed hash sums; near-dup
@@ -18,56 +18,16 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inference
 
 from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
-from tegallega_spark.session import attach_intermediates
-
-
-# logical-plan node classes whose OUTPUT partitioning comes from a shuffle
-# (spark.sql.shuffle.partitions), not from file splits — the two regimes
-# parallelize_for_udf must tell apart.  Exact nodeName() matches, so plan
-# TEXT (literals, column names) can't false-positive.
-_SHUFFLE_NODE_NAMES = frozenset(
-    {
-        "Join",
-        "Aggregate",
-        "Window",
-        "Deduplicate",
-        "Repartition",
-        "RepartitionByExpression",
-        "Sort",
-        "Intersect",
-        "Except",
-        # ADVICE r9: SQL-authored DISTINCT keeps a Distinct node at
-        # analysis time (ReplaceDistinctWithAggregate runs later, in the
-        # optimizer), and applyInPandas/cogroup stages shuffle on their
-        # grouping keys — all three were misread as scan-rooted before.
-        "Distinct",
-        "FlatMapGroupsInPandas",
-        "FlatMapCoGroupsInPandas",
-    }
+from tegallega_spark.session import (
+    _has_shuffle_origin_node,
+    attach_intermediates,
+    small_scan_input,
 )
-
-
-def _has_shuffle_origin_node(plan) -> bool:
-    """DFS over a py4j logical-plan TreeNode for shuffle-origin node
-    classes (early exit on first hit).  Subquery expressions are not
-    descended into — a shuffle buried in a scalar subquery doesn't set the
-    OUTER frame's partitioning, which is what the caller asks about."""
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        if node.nodeName() in _SHUFFLE_NODE_NAMES:
-            return True
-        children = node.children()
-        for i in range(children.length()):
-            stack.append(children.apply(i))
-    return False
 
 
 def parallelize_for_udf(df: DataFrame) -> DataFrame:
@@ -117,29 +77,22 @@ def parallelize_for_udf(df: DataFrame) -> DataFrame:
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    analyzed = df._jdf.queryExecution().analyzed()
-    if _has_shuffle_origin_node(analyzed):
-        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        if shuffle_parts < target:
-            return df.repartition(target)
-        return df
     max_split = int(
         spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     )
-    size = int(str(analyzed.stats().sizeInBytes()))
-    if size < target * max_split:
+    if small_scan_input(df, target * max_split):
+        return df.repartition(target)
+    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    if shuffle_parts < target and _has_shuffle_origin_node(
+        df._jdf.queryExecution().analyzed()
+    ):
         return df.repartition(target)
     return df
 
 
 # ---------------------------------------------------------------------------
-# Exact dedup
+# Keyed dedup
 # ---------------------------------------------------------------------------
-
-def dedup_exact(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact duplicate removal (hash-groupBy under the hood)."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
-
 
 def dedup_keep_first(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
     """First occurrence per key wins, 'first' defined by order_col ascending
@@ -204,46 +157,11 @@ def word_shingles(text: Column, n: int = 3) -> Column:
 MINHASH_PRIME = 4294967311  # prime > 2^32
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    """One xxhash64 per shingle, reduced into [0, MINHASH_PRIME)."""
-    return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_PRIME)))
-
-
-def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature from pre-hashed shingles (array<bigint> in [0,P)).
-
-    The k permutations are universal hashes h_i(x) = (a_i*x + b_i) mod P —
-    k multiply-adds per shingle instead of k string hashes (~k× cheaper on
-    the hot path; standard practice, see MMDS ch.3).  Deterministic
-    constants derive from splitmix64 of the permutation index.
-    """
-    # a < 2^29 and x < P ≈ 2^32 keep the product under 2^62 —
-    # no 64-bit overflow, safe under ANSI mode.
-    P = MINHASH_PRIME
-
-    def _ab(i: int) -> tuple[int, int]:
-        # splitmix64-derived deterministic constants per permutation
-        x = (i * 0x9E3779B97F4A7C15 + 0xBF58476D1CE4E5B9) % (1 << 64)
-        x ^= x >> 30
-        x = (x * 0xD6E8FEB86659FD93) % (1 << 64)
-        return (x % ((1 << 29) - 1)) + 1, x % P
-
-    def _perm(a: int, b: int):
-        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(P))
-
-    sig_cols = []
-    for i in range(num_hashes):
-        a, b = _ab(i)
-        sig_cols.append(F.array_min(F.transform(hashes, _perm(a, b))))
-    return F.array(*sig_cols)
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature straight from shingles (convenience wrapper)."""
-    return minhash_signature_from_hashes(shingle_hashes(shingles), num_hashes)
-
-
 def _perm_constants(num_hashes: int) -> tuple[list[int], list[int]]:
+    """(a_i, b_i) of the k universal-hash permutations
+    h_i(x) = (a_i*x + b_i) mod P, splitmix64-derived from i.  a < 2^29 and
+    x < P ≈ 2^32 keep the product under 2^62: no int64 overflow in the
+    numpy band kernel."""
     a_s, b_s = [], []
     for i in range(num_hashes):
         x = (i * 0x9E3779B97F4A7C15 + 0xBF58476D1CE4E5B9) % (1 << 64)
@@ -327,129 +245,6 @@ def _make_shingle_kernel(shingle_n: int):
     return kernel
 
 
-def make_signature_udf(shingle_n: int = 3, num_hashes: int = 32):
-    """Arrow-vectorized text→signature pandas_udf.
-
-    The pure-column path (word_shingles → shingle_hashes → permutations)
-    runs as interpreted higher-order functions — correct but ~3× slower on
-    long documents because HOFs don't enter whole-stage codegen.  This UDF
-    runs the shared shingle kernel (memoized word hashes + one numpy
-    polynomial pass, see _make_shingle_kernel) then all permutations as one
-    numpy matrix op.  Hash values differ from the column path but MinHash
-    only ever compares signatures to each other, so the estimator is
-    unaffected.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    a_s, b_s = _perm_constants(num_hashes)
-    A = np.array(a_s, dtype=np.int64)[:, None]
-    B = np.array(b_s, dtype=np.int64)[:, None]
-    P = MINHASH_PRIME
-    kernel = _make_shingle_kernel(shingle_n)
-
-    @pandas_udf("array<long>")
-    def signature(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            hv = (kernel(text) % np.uint64(P)).astype(np.int64)
-            out.append(((A * hv + B) % P).min(axis=1).tolist())
-        return pd.Series(out)
-
-    return signature
-
-
-def minhash_near_duplicates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    jaccard_threshold: float = 0.5,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """MinHash + LSH near-duplicate pairs.
-
-    Pipeline: shingle → signature → split signature into `bands` bands →
-    hash each band → self-join on (band_idx, band_hash) → estimate Jaccard
-    as fraction of matching signature positions → filter ≥ threshold.
-
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b.
-
-    At scale the only shuffle is the band-bucket join; the quadratic
-    candidate space is never materialized because only bucket-colliding
-    pairs meet.  use_arrow=True computes signatures in a vectorized
-    pandas_udf (~3× faster — HOFs don't codegen); False keeps the pure
-    column-expression path.  Signatures persist because the LSH self-join
-    reads them from both sides.
-    """
-    rows_per_band = num_hashes // bands
-    if use_arrow:
-        sig_udf = make_signature_udf(shingle_n, num_hashes)
-        sig = df.select(
-            F.col(id_col).alias("__id"), sig_udf(F.col(text_col)).alias("__sig")
-        ).persist()
-    else:
-        hashed = df.select(
-            F.col(id_col).alias("__id"),
-            shingle_hashes(word_shingles(F.col(text_col), shingle_n)).alias("__h"),
-        )
-        sig = hashed.select(
-            "__id",
-            minhash_signature_from_hashes(F.col("__h"), num_hashes).alias("__sig"),
-        ).persist()
-    pairs = _lsh_candidate_pairs(sig, bands, rows_per_band)
-    # join signatures back once per surviving pair — the band join itself
-    # only ever shuffles (id, band) rows, never the 32-long signatures
-    sa = sig.select(F.col("__id").alias("id_a"), F.col("__sig").alias("sig_a"))
-    sb = sig.select(F.col("__id").alias("id_b"), F.col("__sig").alias("sig_b"))
-    with_sigs = pairs.join(sa, "id_a").join(sb, "id_b")
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda a, b: a == b),
-            lambda m: m,
-        )
-    ) / F.lit(float(num_hashes))
-    return attach_intermediates(
-        with_sigs.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "est_jaccard"),
-        sig,
-    )
-
-
-def _lsh_candidate_pairs(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """Banded LSH self-join on (__id, __sig) → distinct BARE id pairs.
-
-    Only (id, band_idx, band_hash) rows enter the join and only (id_a, id_b)
-    pairs leave it — signatures never ride through the candidate shuffle
-    (they were 2×32 longs per pair; at q40's corpus that shuffle was 25% of
-    the whole headline bench)."""
-    banded = sig.select(
-        "__id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    F.concat_ws(",", F.transform(
-                        F.slice(F.col("__sig"), b * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ))
-                ),
-            )
-        ).alias("band_idx", "band_hash"),
-    )
-    left = banded.select(F.col("__id").alias("id_a"), "band_idx", "band_hash")
-    right = banded.select(F.col("__id").alias("id_b"), "band_idx", "band_hash")
-    return (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
 def _make_band_kernel(num_hashes: int, bands: int):
     """Shared numpy step: distinct shingle hashes (uint64) → band hashes.
 
@@ -510,12 +305,11 @@ def make_band_shingle_udf(shingle_n: int = 3, num_hashes: int = 32, bands: int =
     One pass emits BOTH the LSH band hashes and the distinct shingle-hash
     set.  The band kernel already derives the signature from the shingle
     hashes, so computing them separately (band UDF over the corpus, then a
-    second text scan + shingle UDF over the verify candidates, as the
-    unfused path does) does the tokenize+hash work twice; fusing halves the
-    Python CPU and removes a whole UDF stage.  The trade is storage: the
-    persisted frame carries the shingle arrays (≈ tokenized corpus size)
-    instead of just `bands` longs/doc — see minhash_near_duplicates_verified
-    for when each wins.
+    second text scan + shingle UDF over the verify candidates) would do the
+    tokenize+hash work twice; fusing halves the Python CPU and removes a
+    whole UDF stage.  The trade is storage: the persisted frame carries
+    the shingle arrays (≈ tokenized corpus size) instead of just `bands`
+    longs/doc.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -606,7 +400,7 @@ def _pairs_from_band_hashes(
 def make_shingle_hash_udf(shingle_n: int):
     """Arrow-vectorized text→sorted distinct shingle-hash array (array<long>).
 
-    Same tokenization as make_signature_udf; each distinct shingle becomes
+    Same tokenization as word_shingles; each distinct shingle becomes
     an 8-byte hash (shared kernel: memoized blake2b word hashes + positional
     polynomial), so exact set intersection/union runs over compact long
     arrays instead of wide string arrays (≈3× smaller shuffle, and the set
@@ -809,22 +603,13 @@ def minhash_near_duplicates_verified(
     num_hashes: int = 32,
     bands: int = 16,
     jaccard_threshold: float = 0.7,
-    use_arrow: bool = True,
     max_bucket: int | None = None,
-    fused: bool = True,
     remediate_dropped: bool = False,
     single_task: bool | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs with EXACT Jaccard verification.
 
-    remediate_dropped (needs max_bucket): buckets the guard drops are
-    resolved by a bounded star pass (see _pairs_from_band_hashes) whose
-    candidates flow through the SAME exact-Jaccard verification — the
-    emitted remediation pairs are therefore exactly as trustworthy as
-    every other pair, and a template mega-cluster collapses onto its
-    representative instead of silently surviving dedup.
-
-    Same LSH candidate generation as minhash_near_duplicates, but each
+    Candidates are doc pairs sharing at least one LSH band bucket; each
     candidate pair's exact shingle-set Jaccard is recomputed and filtered —
     the output (id_a, id_b, jaccard) is deterministic and equals the exact
     all-pairs result whenever the LSH recall is 1 at the threshold, which
@@ -834,20 +619,21 @@ def minhash_near_duplicates_verified(
     one band bucket; cap bucket size or salt hot buckets before the
     self-join if the corpus is template-heavy.
 
-    fused=True (default, Arrow path): ONE UDF pass emits band hashes AND the
-    shingle-hash set per doc; the band self-join still shuffles only
-    (id, band, hash) rows, and the verify join reads shingle arrays from the
-    persisted encoded frame — no second text scan, no candidate semi-join,
-    half the Python CPU.  The trade is that the persisted frame stores the
-    shingle arrays (≈ tokenized corpus size, MEMORY_AND_DISK) instead of
-    just `bands` longs/doc.  fused=False keeps the two-scan shape for
-    storage-constrained clusters: bands-only persist, then shingle hashes
-    recomputed for the (typically tiny) candidate subset only.
+    ONE Arrow UDF pass emits band hashes AND the shingle-hash set per doc
+    (make_band_shingle_udf); the band self-join shuffles only
+    (id, band, hash) rows, and the verify join reads shingle arrays from
+    the persisted encoded frame — no second text scan.
 
-    single_task: None (default) auto-gates the fused EXACT-semantics shape
-    (max_bucket=None, no remediation) — a SCAN-rooted input under
-    SMALL_PAIRGEN_BYTES runs the whole LSH+verify in one executor task
-    (_single_task_minhash_verified, one job); shuffle-origin or large
+    max_bucket / remediate_dropped: the hot-bucket guard and its star
+    remediation (see _pairs_from_band_hashes).  Remediation candidates
+    flow through the SAME exact-Jaccard verification, so a template
+    mega-cluster collapses onto its representative instead of silently
+    surviving dedup.
+
+    single_task: None (default) auto-gates the exact-semantics shape
+    (max_bucket=None, no remediation) — a small scan-rooted input
+    (session.small_scan_input) runs the whole LSH+verify tail in one
+    executor task (_single_task_minhash_verified); shuffle-origin or large
     inputs keep the distributed shape.  True forces it (valid only
     without max_bucket); False forces distributed."""
     if single_task and max_bucket is not None:
@@ -855,72 +641,31 @@ def minhash_near_duplicates_verified(
             "single_task implements the exact banded semantics only; "
             "max_bucket guarding requires the distributed shape"
         )
-    if single_task and not (use_arrow and fused):
-        # ADVICE r13: a forced True used to fall through to the
-        # distributed two-scan shapes silently — inconsistent with the
-        # max_bucket case above, which raises
-        raise ValueError(
-            "single_task is implemented for the fused Arrow path only "
-            "(use_arrow=True, fused=True)"
+    if single_task is None and max_bucket is None and not remediate_dropped:
+        single_task = small_scan_input(df)
+    if single_task:
+        return _single_task_minhash_verified(
+            df, id_col, text_col, shingle_n, num_hashes, bands,
+            jaccard_threshold,
         )
-    if use_arrow and fused:
-        if (
-            single_task is None
-            and max_bucket is None
-            and not remediate_dropped
-        ):
-            analyzed = df._jdf.queryExecution().analyzed()
-            single_task = (not _has_shuffle_origin_node(analyzed)) and int(
-                str(analyzed.stats().sizeInBytes())
-            ) < SMALL_PAIRGEN_BYTES
-        if single_task:
-            return _single_task_minhash_verified(
-                df, id_col, text_col, shingle_n, num_hashes, bands,
-                jaccard_threshold,
-            )
-        enc_udf = make_band_shingle_udf(shingle_n, num_hashes, bands)
-        enc = parallelize_for_udf(df).select(
-            F.col(id_col).alias("__id"), enc_udf(F.col(text_col)).alias("__e")
-        ).persist()  # band self-join reads it twice, verify join twice more
-        pairs = _pairs_from_band_hashes(
-            enc.select("__id", F.col("__e.bh").alias("__bh")),
-            max_bucket=max_bucket, remediate_dropped=remediate_dropped,
-        )
-        a = enc.select(F.col("__id").alias("id_a"), F.col("__e.sh").alias("sh_a"))
-        b = enc.select(F.col("__id").alias("id_b"), F.col("__e.sh").alias("sh_b"))
-        joined = pairs.join(a, "id_a").join(b, "id_b")
-        common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - common
-        exact = joined.select(
-            "id_a", "id_b", (common.cast("double") / union).alias("jaccard")
-        )
-        return attach_intermediates(
-            exact.filter(F.col("jaccard") >= jaccard_threshold), enc
-        )
-    if use_arrow:
-        # signatures are only consumed through their band hashes here, so the
-        # fused UDF emits `bands` longs per doc and the 32-long signature
-        # array never exists outside a numpy batch
-        bh_udf = make_band_hash_udf(shingle_n, num_hashes, bands)
-        bh = parallelize_for_udf(df).select(
-            F.col(id_col).alias("__id"), bh_udf(F.col(text_col)).alias("__bh")
-        ).persist()  # both sides of the band self-join read it
-        pairs = _pairs_from_band_hashes(
-            bh, max_bucket=max_bucket, remediate_dropped=remediate_dropped
-        )
-    else:
-        sig = df.select(
-            F.col(id_col).alias("__id"),
-            minhash_signature_from_hashes(
-                shingle_hashes(word_shingles(F.col(text_col), shingle_n)), num_hashes
-            ).alias("__sig"),
-        ).persist()
-        pairs = _lsh_candidate_pairs(sig, bands, num_hashes // bands)
-    exact = exact_jaccard_for_pairs(pairs, df, id_col, text_col, shingle_n)
+    enc_udf = make_band_shingle_udf(shingle_n, num_hashes, bands)
+    enc = parallelize_for_udf(df).select(
+        F.col(id_col).alias("__id"), enc_udf(F.col(text_col)).alias("__e")
+    ).persist()  # band self-join reads it twice, verify join twice more
+    pairs = _pairs_from_band_hashes(
+        enc.select("__id", F.col("__e.bh").alias("__bh")),
+        max_bucket=max_bucket, remediate_dropped=remediate_dropped,
+    )
+    a = enc.select(F.col("__id").alias("id_a"), F.col("__e.sh").alias("sh_a"))
+    b = enc.select(F.col("__id").alias("id_b"), F.col("__e.sh").alias("sh_b"))
+    joined = pairs.join(a, "id_a").join(b, "id_b")
+    common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - common
+    exact = joined.select(
+        "id_a", "id_b", (common.cast("double") / union).alias("jaccard")
+    )
     return attach_intermediates(
-        exact.filter(F.col("jaccard") >= jaccard_threshold),
-        exact,
-        bh if use_arrow else sig,
+        exact.filter(F.col("jaccard") >= jaccard_threshold), enc
     )
 
 
@@ -1238,70 +983,8 @@ def simhash_near_duplicates_verified(
 
 
 # ---------------------------------------------------------------------------
-# MLlib MinHashLSH variant (SURVEY §7: pyspark.ml.feature.MinHashLSH)
-# ---------------------------------------------------------------------------
-
-def minhash_near_duplicates_mllib(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    jaccard_threshold: float = 0.5,
-    vocab_size: int = 1 << 18,
-) -> DataFrame:
-    """Same contract as minhash_near_duplicates, built on
-    pyspark.ml.feature.MinHashLSH: shingles → hashed sparse vectors →
-    approxSimilarityJoin on Jaccard distance.
-
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b.  Kept alongside the
-    hand-rolled implementation because the MLlib estimator manages its own
-    banding internally (no tunable bands) and requires a vector conversion
-    pass; the hand-rolled path is the default for that control.
-    """
-    from pyspark.ml.feature import MinHashLSH
-    from pyspark.ml.linalg import Vectors, VectorUDT
-
-    shingles = df.select(
-        F.col(id_col).alias("__id"),
-        word_shingles(F.col(text_col), shingle_n).alias("__sh"),
-    )
-
-    # VectorUDT is not Arrow-serializable (no pandas_udf) — a pickled UDF
-    # is the documented bridge into MLlib's LSH estimator
-    @F.udf(VectorUDT())
-    def to_sparse(arr):
-        import zlib
-
-        idxs = sorted({zlib.crc32(s.encode()) % vocab_size for s in arr})
-        return Vectors.sparse(vocab_size, idxs, [1.0] * len(idxs))
-
-    vecs = shingles.select("__id", to_sparse(F.col("__sh")).alias("features"))
-    model = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hashes, seed=42
-    ).fit(vecs)
-    pairs = model.approxSimilarityJoin(
-        vecs, vecs, 1.0 - jaccard_threshold, distCol="jaccard_dist"
-    )
-    return (
-        pairs.select(
-            F.col("datasetA.__id").alias("id_a"),
-            F.col("datasetB.__id").alias("id_b"),
-            (1.0 - F.col("jaccard_dist")).alias("est_jaccard"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-# ---------------------------------------------------------------------------
 # Exact shingle-Jaccard pairs + decontamination (training-data hygiene)
 # ---------------------------------------------------------------------------
-
-SMALL_PAIRGEN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_PAIRGEN_BYTES", str(32 * 1024 * 1024))
-)
-
 
 def _single_task_jaccard_pairs(
     df: DataFrame,
@@ -1415,20 +1098,16 @@ def exact_shingle_jaccard_pairs(
     pair-discriminating signal, so at sane N the reported Jaccard barely
     moves (test-pinned).  Default None = exact classic semantics.
 
-    `single_task`: None (default) auto-gates — a SCAN-rooted input whose
-    analyzed-plan size estimate is under SMALL_PAIRGEN_BYTES runs the
-    whole computation in one executor task (_single_task_jaccard_pairs,
-    one job; the cc.py small-graph discipline applied to pair
-    generation).  Shuffle-origin inputs (post-join/filter frames, whose
+    `single_task`: None (default) auto-gates — a small scan-rooted input
+    (session.small_scan_input) runs the whole computation in one executor
+    task (_single_task_jaccard_pairs, one job; the cc.py small-graph
+    discipline applied to pair generation).  Shuffle-origin inputs (post-join/filter frames, whose
     estimates are unreliable upward) and large corpora always take the
     distributed shape below.  True/False force the choice (tests pin
     both shapes and their parity).
     """
     if single_task is None:
-        analyzed = df._jdf.queryExecution().analyzed()
-        single_task = (not _has_shuffle_origin_node(analyzed)) and int(
-            str(analyzed.stats().sizeInBytes())
-        ) < SMALL_PAIRGEN_BYTES
+        single_task = small_scan_input(df)
     if single_task:
         return _single_task_jaccard_pairs(
             df, id_col, text_col, shingle_n, threshold, max_df

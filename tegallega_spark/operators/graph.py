@@ -34,11 +34,8 @@ from tegallega_spark.functions.geo import haversine_km
 # session.aqe_off_for_small_input.  4M edges × ~24 B/row ≈ 100 MB per
 # round shuffle, still firmly in the regime where per-stage scheduling
 # latency (~100 ms × rounds × stages) dwarfs the work; above it AQE's
-# runtime coalescing/skew handling is worth its latency.  Overridable for
-# harnesses via env.
-import os as _os
-
-SMALL_GRAPH_EDGES = int(_os.environ.get("SPARK_GRAFT_SMALL_GRAPH_EDGES", str(1 << 22)))
+# runtime coalescing/skew handling is worth its latency.
+SMALL_GRAPH_EDGES = 1 << 22
 
 
 # ---------------------------------------------------------------------------

@@ -25,7 +25,6 @@ Nothing quadratic, nothing driver-side except the scalar V.
 
 from __future__ import annotations
 
-import os
 from typing import NamedTuple
 
 import pyspark.sql.functions as F
@@ -34,14 +33,6 @@ from pyspark.sql import DataFrame
 __all__ = ["BigramLM", "train_bigram_lm", "perplexity_score"]
 
 UNK = "<unk>"
-
-# Self-scoring corpora whose analyzed-plan size estimate is under this run
-# the whole train+score COUNTING pass in one executor task (the cc.py /
-# pair-gen small-input discipline).  At 100 TB the gate never fires.
-SMALL_LM_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_LM_BYTES", str(32 * 1024 * 1024))
-)
-
 
 class BigramLM(NamedTuple):
     """bigrams: (w1, w2, c12); contexts: (w1, c1); vocab: (word,);
@@ -273,21 +264,18 @@ def train_bigram_lm(
     single_task: None (default) auto-gates the small-input single-task
     SELF-scoring profile (see below); True/False force it (tests pin both
     shapes; plan-shape tests force False to audit the scale plan)."""
-    # small-input single-task profile, decided ONCE here: a scan-rooted
-    # corpus under SMALL_LM_BYTES will be SELF-scored in one executor
-    # task (perplexity_score), so the distributed model frames below are
-    # never executed — skip their persist registrations and the UDF-
-    # widening plan probes, which are pure driver-side py4j cost at this
-    # scale (measured ~0.45 s of q56's plan build).  A caller that
+    # small-input single-task profile, decided ONCE here: a small
+    # scan-rooted corpus (session.small_scan_input) will be SELF-scored in
+    # one executor task (perplexity_score), so the distributed model
+    # frames below are never executed — skip their persist registrations
+    # and the UDF-widening plan probes, which are pure driver-side py4j
+    # cost at this scale (measured ~0.45 s of q56's plan build).  A caller that
     # cross-scores a DIFFERENT frame against a gated model still gets
     # correct results (the lazy frames recompute per consumer).
     if single_task is None:
-        from tegallega_spark.operators.dedup import _has_shuffle_origin_node
+        from tegallega_spark.session import small_scan_input
 
-        analyzed = df._jdf.queryExecution().analyzed()
-        small_gate = (not _has_shuffle_origin_node(analyzed)) and int(
-            str(analyzed.stats().sizeInBytes())
-        ) < SMALL_LM_BYTES
+        small_gate = small_scan_input(df)
     else:
         small_gate = bool(single_task)
     # tokenize ONCE into stored arrays (persisted): the vocab count and

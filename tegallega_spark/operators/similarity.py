@@ -14,8 +14,6 @@ North-star extension (BASELINE.json): approximate-nearest-neighbor over the
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inference
 
 from pyspark.sql import Column, DataFrame
@@ -194,23 +192,11 @@ class _BroadcastHandle:
         return self
 
 
-# Vector tables whose analyzed-plan estimate is under this broadcast the
-# (id -> vector) matrix into the rescore UDF instead of joining the raw
-# vectors onto the candidate pairs (guide-§8 "move heavy bytes once":
-# at weak LSH parameters the candidate set approaches all-pairs, and the
-# two id-equi-joins were shuffling ~2 GB of vector payload per run at
-# bench scale).  At 100 TB the gate never fires and the joins stay.
-SMALL_VEC_BROADCAST_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_VEC_BROADCAST_BYTES", str(32 * 1024 * 1024))
-)
-
 # Row-count bound for the one-task all-pairs profile: the in-task
-# candidate mask is n² bools (16 MB at the default), and the worst-case
-# pair enumeration is n²/2 — quadratic in rows, so this gate is a ROW
-# bound on top of the byte gate above.
-SMALL_ALLPAIRS_TASK_N = int(
-    os.environ.get("SPARK_GRAFT_SMALL_ALLPAIRS_TASK_N", "4096")
-)
+# candidate mask is n² bools (16 MB at 4096), and the worst-case pair
+# enumeration is n²/2 — quadratic in rows, so this gate is a ROW bound on
+# top of the small-input byte gate (session.small_scan_input).
+SMALL_ALLPAIRS_TASK_N = 4096
 
 
 def _single_task_all_pairs(
@@ -343,20 +329,23 @@ def all_pairs_above(
     in hand to pick the one-task profile and to broadcast), but a caller
     building many never-executed plans pays it, and when the collected
     ids turn out non-unique the collect is discarded and the distributed
-    shape used (duplicate ids need join semantics).  The 32 MB byte gate
-    reads the ANALYZED-plan estimate (compressed scan bytes), which can
-    understate the decoded float64 footprint several-fold — at the
-    default gate the decoded matrix is still ≤ a few hundred MB, within
-    broadcast practice; lower SPARK_GRAFT_SMALL_VEC_BROADCAST_BYTES if
-    executors are memory-tight."""
-    if broadcast_rescore is None:
-        from tegallega_spark.operators.dedup import _has_shuffle_origin_node
+    shape used (duplicate ids need join semantics).
 
-        analyzed = df._jdf.queryExecution().analyzed()
-        broadcast_rescore = (not _has_shuffle_origin_node(analyzed)) and int(
-            str(analyzed.stats().sizeInBytes())
-        ) < SMALL_VEC_BROADCAST_BYTES
-    from tegallega_spark.session import attach_intermediates
+    The gate is session.small_scan_input: a scan-rooted vector table whose
+    ANALYZED-plan estimate is under session.SMALL_INPUT_BYTES (32 MiB)
+    broadcasts the (id -> vector) matrix into the rescore UDF instead of
+    joining the raw vectors onto the candidate pairs (guide-§8 "move heavy
+    bytes once": at weak LSH parameters the candidate set approaches
+    all-pairs, and the two id-equi-joins were shuffling ~2 GB of vector
+    payload per run at bench scale).  The estimate counts compressed scan
+    bytes, which can understate the decoded float64 footprint several-fold
+    — at 32 MiB the decoded matrix is still ≤ a few hundred MB, within
+    broadcast practice.  A caller whose executors are memory-tight passes
+    broadcast_rescore=False to keep the join shape at any size."""
+    from tegallega_spark.session import attach_intermediates, small_scan_input
+
+    if broadcast_rescore is None:
+        broadcast_rescore = small_scan_input(df)
 
     if broadcast_rescore:
         import numpy as np

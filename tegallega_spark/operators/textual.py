@@ -981,22 +981,16 @@ def duplicated_spans(
     interval merge is the classic running-max window per doc, JVM-side.
     Nothing persists, so there is nothing for callers to release.
 
-    single_task: None (default) auto-gates — a SCAN-rooted input whose
-    analyzed-plan estimate is under dedup.SMALL_PAIRGEN_BYTES runs the
-    whole computation in one executor task (_single_task_duplicated_spans,
-    one job — every quantity here is an integer, so the result is exactly
-    the distributed one); True/False force the shape (tests pin both).
+    single_task: None (default) auto-gates — a small scan-rooted input
+    (session.small_scan_input) runs the whole computation in one executor
+    task (_single_task_duplicated_spans, one job — every quantity here is
+    an integer, so the result is exactly the distributed one); True/False
+    force the shape (tests pin both).
     """
     if single_task is None:
-        from tegallega_spark.operators.dedup import (
-            SMALL_PAIRGEN_BYTES,
-            _has_shuffle_origin_node,
-        )
+        from tegallega_spark.session import small_scan_input
 
-        analyzed = df._jdf.queryExecution().analyzed()
-        single_task = (not _has_shuffle_origin_node(analyzed)) and int(
-            str(analyzed.stats().sizeInBytes())
-        ) < SMALL_PAIRGEN_BYTES
+        single_task = small_scan_input(df)
     if single_task:
         return _single_task_duplicated_spans(
             df, id_col, text_col, k, min_count, keep_first

@@ -125,15 +125,6 @@ def pbf_fetch_fn(
     return fetch
 
 
-def route_relation_ids(pbf_path: str) -> list[str]:
-    """Ids of every type=route relation in the file, ascending."""
-    return [
-        str(d["id"])
-        for kind, d in read_pbf(pbf_path)
-        if kind == "relation" and d["tags"].get("type") == "route"
-    ]
-
-
 def gtfs_from_pbf(
     spark: SparkSession,
     pbf_path: str,

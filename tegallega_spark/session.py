@@ -164,6 +164,71 @@ def plan_size_bytes(df) -> int:
     return int(str(df._jdf.queryExecution().analyzed().stats().sizeInBytes()))
 
 
+# logical-plan node classes whose OUTPUT partitioning comes from a shuffle
+# (spark.sql.shuffle.partitions), not from file splits.  Exact nodeName()
+# matches, so plan TEXT (literals, column names) can't false-positive.
+_SHUFFLE_NODE_NAMES = frozenset(
+    {
+        "Join",
+        "Aggregate",
+        "Window",
+        "Deduplicate",
+        "Repartition",
+        "RepartitionByExpression",
+        "Sort",
+        "Intersect",
+        "Except",
+        # ADVICE r9: SQL-authored DISTINCT keeps a Distinct node at
+        # analysis time (ReplaceDistinctWithAggregate runs later, in the
+        # optimizer), and applyInPandas/cogroup stages shuffle on their
+        # grouping keys — all three were misread as scan-rooted before.
+        "Distinct",
+        "FlatMapGroupsInPandas",
+        "FlatMapCoGroupsInPandas",
+    }
+)
+
+
+def _has_shuffle_origin_node(plan) -> bool:
+    """DFS over a py4j logical-plan TreeNode for shuffle-origin node
+    classes (early exit on first hit).  Subquery expressions are not
+    descended into — a shuffle buried in a scalar subquery doesn't set the
+    OUTER frame's partitioning, which is what the caller asks about."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in _SHUFFLE_NODE_NAMES:
+            return True
+        children = node.children()
+        for i in range(children.length()):
+            stack.append(children.apply(i))
+    return False
+
+
+# The one small-input threshold every gated operator shares: pair
+# generation, the bigram LM, span dedup and the vector broadcast rescore
+# run their single-task / broadcast shape below it.  At 100 TB no input
+# is under it, so the gates only ever fire on small local inputs.
+SMALL_INPUT_BYTES = 32 * 1024 * 1024
+
+
+def small_scan_input(df, limit_bytes: int | None = None) -> bool:
+    """True when `df` is scan-rooted (no shuffle-origin node in its
+    analyzed plan) and Catalyst's analyzed sizeInBytes is under
+    `limit_bytes` (default SMALL_INPUT_BYTES).
+
+    Only scan-rooted lineage is trusted: analyzed stats multiply child
+    sizes through joins and ignore filters, so a post-join/aggregate
+    estimate says nothing about the real size.  Such inputs never pass
+    the gate.  The shuffle walk runs first, so a shuffle-rooted plan
+    never pays for the stats computation."""
+    analyzed = df._jdf.queryExecution().analyzed()
+    if _has_shuffle_origin_node(analyzed):
+        return False
+    limit = SMALL_INPUT_BYTES if limit_bytes is None else limit_bytes
+    return int(str(analyzed.stats().sizeInBytes())) < limit
+
+
 class aqe_off_for_small_input:
     """Context manager: the SMALL-INPUT execution profile — disable
     adaptive query execution and narrow the shuffle width while a

@@ -9,11 +9,7 @@ import pyspark.sql.functions as F
 
 
 from tegallega_spark.operators import multimodal as MM
-from tegallega_spark.operators.dedup import (
-    dedup_keep_first,
-    dedup_keep_last,
-    minhash_near_duplicates,
-)
+from tegallega_spark.operators.dedup import dedup_keep_first, dedup_keep_last
 from tegallega_spark.operators.spatial import (
     interpolate_virtual_stops,
     nearest_vertex_join,
@@ -202,20 +198,6 @@ def test_dedup_first_and_last(spark):
     assert last == {"k1": "b", "k2": "c"}
 
 
-def test_minhash_finds_planted_near_dups(spark):
-    base = "the quick brown fox jumps over the lazy dog again and again " * 5
-    docs = [
-        (1, base),
-        (2, base + " tiny tail change"),
-        (3, "completely different content about spark engines and parquet files " * 5),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    pairs = minhash_near_duplicates(df, "doc_id", "text", jaccard_threshold=0.5).collect()
-    found = {(r.id_a, r.id_b) for r in pairs}
-    assert (1, 2) in found
-    assert all(3 not in p for p in found)
-
-
 # ---------------------------------------------------------------------------
 # multimodal plumbing
 # ---------------------------------------------------------------------------
@@ -237,24 +219,6 @@ def test_frame_sample_shape(spark, sf_dir):
     out = MM.frame_sample(MM.attach_binary_payload(docs)).collect()
     assert len(out) == 5  # n_frames=1 → one frame row each
     assert all(r.frame_idx == 0 for r in out)
-
-
-def test_mllib_minhash_agrees_on_planted_dups(spark):
-    from tegallega_spark.operators.dedup import minhash_near_duplicates_mllib
-
-    base = "the quick brown fox jumps over the lazy dog again and again " * 5
-    docs = [
-        (1, base),
-        (2, base + " tiny tail change"),
-        (3, "completely different content about spark engines and parquet files " * 5),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    pairs = minhash_near_duplicates_mllib(
-        df, "doc_id", "text", jaccard_threshold=0.5
-    ).collect()
-    found = {(r.id_a, r.id_b) for r in pairs}
-    assert (1, 2) in found
-    assert all(3 not in p for p in found)
 
 
 def test_verified_neardups_equal_exact_sets(spark, sf_dir):

@@ -474,18 +474,19 @@ def test_parallelize_for_udf_scan_vs_shuffle_rooted_plans(spark):
         spark.conf.set(key, prior)
 
 
-def test_parallelize_for_udf_ignores_shuffle_words_in_literals(spark):
+def test_parallelize_for_udf_ignores_shuffle_words_in_literals(spark, monkeypatch):
     """r9 advice fix: plan classification walks logical nodeName()s, not
     the rendered plan STRING — a query literal or column name containing
     'Sort'/'Window'/'Join' must not route a tiny scan-rooted frame down
     the shuffle branch (where an adequate shuffle width would skip the
-    widening repartition, running the UDF 1-2-way)."""
+    widening repartition, running the UDF 1-2-way).  The same frame
+    drives session.small_scan_input, the one small-input gate: true for
+    the tiny scan, false once it is over SMALL_INPUT_BYTES, and false for
+    any shuffle-rooted frame whatever its size."""
     import pyspark.sql.functions as F
 
-    from tegallega_spark.operators.dedup import (
-        _has_shuffle_origin_node,
-        parallelize_for_udf,
-    )
+    import tegallega_spark.session as S
+    from tegallega_spark.operators.dedup import parallelize_for_udf
 
     target = spark.sparkContext.defaultParallelism
     trap = (
@@ -493,12 +494,18 @@ def test_parallelize_for_udf_ignores_shuffle_words_in_literals(spark):
         .withColumn("label", F.lit("Sort Window Join code"))
         .filter(F.col("label") != "Aggregate")
     )
-    assert not _has_shuffle_origin_node(trap._jdf.queryExecution().analyzed())
+    assert not S._has_shuffle_origin_node(trap._jdf.queryExecution().analyzed())
+    assert S.small_scan_input(trap)
     # scan-rooted and tiny → must still widen to cluster parallelism
     assert parallelize_for_udf(trap).rdd.getNumPartitions() == target
     # and a REAL shuffle node is still detected
     agg = trap.groupBy("label").count()
-    assert _has_shuffle_origin_node(agg._jdf.queryExecution().analyzed())
+    assert S._has_shuffle_origin_node(agg._jdf.queryExecution().analyzed())
+    assert not S.small_scan_input(agg)
+    # the same scan-rooted frame over the threshold fails the gate
+    monkeypatch.setattr(S, "SMALL_INPUT_BYTES", 16)
+    assert S.plan_size_bytes(trap) >= 16
+    assert not S.small_scan_input(trap)
 
 
 def test_shuffle_origin_covers_distinct_and_apply_in_pandas(spark):
@@ -509,7 +516,7 @@ def test_shuffle_origin_covers_distinct_and_apply_in_pandas(spark):
     parallelize_for_udf doesn't stack a redundant exchange on top."""
     import pandas as pd
 
-    from tegallega_spark.operators.dedup import _has_shuffle_origin_node
+    from tegallega_spark.session import _has_shuffle_origin_node
 
     spark.range(10).toDF("n").createOrReplaceTempView("t_adv_distinct")
     sql_distinct = spark.sql("SELECT DISTINCT n FROM t_adv_distinct")

@@ -7,7 +7,7 @@ from __future__ import annotations
 import math
 
 import pyspark.sql.functions as F
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from tegallega_spark.functions.timecodec import (
     gtfs_time_to_seconds,
@@ -323,10 +323,17 @@ def test_y4m_c444_roundtrip_property(n_frames, h2, w2, fps, gray, seed):
     fps=st.integers(min_value=1, max_value=60),
     seed=st.integers(min_value=0, max_value=2**31 - 1),
 )
+# 2×2 frame whose averaged chroma pushes most decoded pixels out of RGB
+# range: the old mean-luma bound (< 4) measured 7.39 here
+@example(n_frames=1, h2=1, w2=1, fps=1, seed=114086)
 def test_y4m_c420_roundtrip_property(n_frames, h2, w2, fps, seed):
-    """C420 2×2-averages chroma: frame count / dims / fps exact, and the
-    BT.601-weighted luma tracks the original closely even on worst-case
-    random chroma."""
+    """C420 2×2-averages chroma, so only luma survives per pixel: frame
+    count / dims / fps exact, and on every pixel whose decoded RGB is not
+    clipped to 0 or 255 the BT.601 luma is within 1.5 of the original.
+    Clipped pixels are excluded: averaged chroma on random frames can put
+    the reconstruction outside [0, 255], and the clip then moves luma by
+    an amount no codec bound covers (small frames have few pixels to
+    average that out, so a mean bound fails there too)."""
     import numpy as np
 
     from tegallega_spark.operators import multimodal as MM
@@ -338,12 +345,12 @@ def test_y4m_c420_roundtrip_property(n_frames, h2, w2, fps, seed):
     back, got_fps = MM.decode_y4m(MM.encode_y4m(frames, fps=fps,
                                                 colorspace="C420"))
     assert got_fps == fps and len(back) == n_frames
+    yw = np.array([0.299, 0.587, 0.114])
     for orig, dec in zip(frames, back):
         assert dec.shape == (h, w, 3)
-        yw = np.array([0.299, 0.587, 0.114])
-        yo = orig.astype(float) @ yw
-        yd = dec.astype(float) @ yw
-        assert np.abs(yo - yd).mean() < 4
+        unclipped = ((dec > 0) & (dec < 255)).all(axis=-1)
+        err = np.abs(orig.astype(float) @ yw - dec.astype(float) @ yw)
+        assert err[unclipped].max(initial=0.0) <= 1.5
 
 
 @settings(max_examples=40, deadline=None)

@@ -935,21 +935,6 @@ def test_minhash_single_task_rejects_max_bucket(spark):
         )
 
 
-def test_minhash_single_task_rejects_unfused_shapes(spark):
-    """ADVICE r13: single_task=True with fused=False/use_arrow=False used
-    to silently fall through to the distributed shape."""
-    import pytest
-
-    from tegallega_spark.operators.dedup import minhash_near_duplicates_verified
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    for kw in ({"fused": False}, {"use_arrow": False}):
-        with pytest.raises(ValueError, match="fused Arrow path"):
-            minhash_near_duplicates_verified(
-                docs, "doc_id", "text", single_task=True, **kw
-            )
-
-
 def test_duplicated_spans_single_task_matches_distributed(spark):
     """r13 single-task profile for duplicated_spans: identical row set to
     the distributed window shape (all-integer pipeline, so exact equality
