@@ -106,8 +106,7 @@ def connected_components(
         that want singleton clusters union them in afterwards.
     Returns DataFrame(node, cluster_id).
     """
-    from tegallega_spark.operators.graph import SMALL_GRAPH_EDGES
-    from tegallega_spark.session import aqe_off_for_small_input
+    from tegallega_spark.operators.graph import SMALL_GRAPH_EDGES, UNROLL
 
     und = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     und = und.union(und.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
@@ -126,8 +125,7 @@ def connected_components(
     # executor task (one job, numpy sweeps — see _single_task_components).
     # At real scale the gate never fires and the iterative join loop below
     # keeps AQE's skew/coalesce wins.
-    small = n_edges < SMALL_GRAPH_EDGES
-    if small:
+    if n_edges < SMALL_GRAPH_EDGES:
         labels = _single_task_components(und, max_iter).localCheckpoint(
             eager=False
         )
@@ -159,65 +157,56 @@ def connected_components(
     )
     labels_h = CheckpointHandle(labels)
 
-    n_changed = 0
     # Propagation rounds are batched UNROLL per checkpoint/convergence
     # cycle (the GraphX-Pregel checkpoint-interval trade): per-round fixed
     # costs — driver plan construction, the convergence action, the
     # checkpoint barrier — divide by the unroll factor, while min-label
     # propagation is idempotent past convergence, so overshooting inside
     # the final cycle wastes at most UNROLL−1 no-op rounds.
-    UNROLL = 3
-    with aqe_off_for_small_input(und, fires=small):
-        rounds_left = max_iter
-        n_changed = 0
-        while rounds_left > 0:
-            cur = labels
-            for _ in range(min(UNROLL, rounds_left)):
-                # min label among each node's neighbors, one shuffle keyed
-                # on node.  Checkpointed frames are LogicalRDDs with
-                # unknown stats (planner assumes huge → sort-merge, two
-                # exchanges + sorts per round); under the measured small
-                # gate the label set is ≤ n_nodes ≤ n_edges rows,
-                # broadcastable by construction.
-                lbl = cur.select(F.col("node").alias("s"), "label")
-                nbr_min = (
-                    und.join(F.broadcast(lbl) if small else lbl, "s")
-                    .groupBy(F.col("d").alias("node"))
-                    .agg(F.min("label").alias("nbr_label"))
-                )
-                cur = cur.join(
-                    F.broadcast(nbr_min) if small else nbr_min, "node", "left"
-                ).select(
-                    "node",
-                    F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-                )
-                rounds_left -= 1
-            # LAZY checkpoint + fused convergence count: the single count()
-            # action materializes every partition of this cycle's label set
-            # (the filter sits above the checkpoint barrier — nothing is
-            # pruned through it) AND counts the changed labels, where the
-            # eager form paid one job to checkpoint and a second to count
-            # — per ROUND, not per cycle.
-            old = labels.select("node", F.col("label").alias("__old"))
-            proposed = (
-                cur.join(F.broadcast(old) if small else old, "node", "left")
-                .select(
-                    "node",
-                    "label",
-                    (F.col("label") < F.col("__old")).alias("changed"),
-                )
-                .localCheckpoint(eager=False)
+    rounds_left = max_iter
+    n_changed = 0
+    while rounds_left > 0:
+        cur = labels
+        for _ in range(min(UNROLL, rounds_left)):
+            # min label among each node's neighbors, one shuffle keyed
+            # on node
+            lbl = cur.select(F.col("node").alias("s"), "label")
+            nbr_min = (
+                und.join(lbl, "s")
+                .groupBy(F.col("d").alias("node"))
+                .agg(F.min("label").alias("nbr_label"))
             )
-            n_changed = proposed.filter("changed").count()
-            # the superseded cycle's checkpoint is dead the moment its
-            # successor materializes — free it NOW, not at ContextCleaner's
-            # leisure (a 20-round run would otherwise hold 20 generations of
-            # the full label set in block storage simultaneously)
-            labels_h.unpersist()
-            labels_h = CheckpointHandle(proposed)
-            labels = proposed.drop("changed")
-            if n_changed == 0:
-                break
+            cur = cur.join(nbr_min, "node", "left").select(
+                "node",
+                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
+            )
+            rounds_left -= 1
+        # LAZY checkpoint + fused convergence count: the single count()
+        # action materializes every partition of this cycle's label set
+        # (the filter sits above the checkpoint barrier — nothing is
+        # pruned through it) AND counts the changed labels, where the
+        # eager form paid one job to checkpoint and a second to count
+        # — per ROUND, not per cycle.
+        old = labels.select("node", F.col("label").alias("__old"))
+        proposed = (
+            cur.join(old, "node", "left")
+            .select(
+                "node",
+                "label",
+                (F.col("label") < F.col("__old")).alias("changed"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        n_changed = proposed.filter("changed").count()
+        # the superseded cycle's checkpoint is dead the moment its
+        # successor materializes — free it NOW, not at ContextCleaner's
+        # leisure (a 20-round run would otherwise hold 20 generations of
+        # the full label set in block storage simultaneously)
+        labels_h.unpersist()
+        labels_h = CheckpointHandle(proposed)
+        labels = proposed.drop("changed")
+        if n_changed == 0:
+            break
 
     if n_changed:
         und_h.unpersist()

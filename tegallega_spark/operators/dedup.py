@@ -24,7 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
 from tegallega_spark.session import (
-    _has_shuffle_origin_node,
+    _SHUFFLE_NODE_NAMES,
+    _has_plan_node,
     attach_intermediates,
     small_scan_input,
 )
@@ -83,8 +84,8 @@ def parallelize_for_udf(df: DataFrame) -> DataFrame:
     if small_scan_input(df, target * max_split):
         return df.repartition(target)
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if shuffle_parts < target and _has_shuffle_origin_node(
-        df._jdf.queryExecution().analyzed()
+    if shuffle_parts < target and _has_plan_node(
+        df._jdf.queryExecution().analyzed(), _SHUFFLE_NODE_NAMES
     ):
         return df.repartition(target)
     return df

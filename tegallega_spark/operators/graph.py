@@ -29,13 +29,17 @@ from pyspark.sql import DataFrame, Window
 
 from tegallega_spark.functions.geo import haversine_km
 
-# Edge count below which an iterative graph loop runs on the static
-# small-input execution profile (AQE off, narrow shuffle) — see
-# session.aqe_off_for_small_input.  4M edges × ~24 B/row ≈ 100 MB per
-# round shuffle, still firmly in the regime where per-stage scheduling
-# latency (~100 ms × rounds × stages) dwarfs the work; above it AQE's
-# runtime coalescing/skew handling is worth its latency.
+# Edge count below which an iterative graph loop (shortest_paths_distributed,
+# cc.connected_components) runs all its rounds as numpy sweeps inside one
+# executor task.  4M edges × ~24 B/row ≈ 100 MB, still firmly in the regime
+# where per-stage scheduling latency (~100 ms × rounds × stages) dwarfs the
+# work; above it the rounds run as join loops under AQE, whose runtime
+# coalescing/skew handling is worth its latency.
 SMALL_GRAPH_EDGES = 1 << 22
+
+# Rounds per checkpoint/convergence cycle of those join loops (the
+# GraphX-Pregel checkpoint-interval trade; see shortest_paths_distributed).
+UNROLL = 3
 
 
 # ---------------------------------------------------------------------------
@@ -151,7 +155,6 @@ def dijkstra_local(
 
 def shortest_paths_distributed(
     edges: DataFrame, src: str, max_iterations: int = 50,
-    rounds_per_checkpoint: int = 3,
 ) -> DataFrame:
     """Single-source shortest distances via Bellman-Ford rounds expressed as
     join+groupBy; stops early once no distance improves.
@@ -161,23 +164,22 @@ def shortest_paths_distributed(
     Pregel-without-GraphFrames formulation: one shuffle per round, rounds
     ≤ graph diameter.
 
-    `rounds_per_checkpoint` relaxation rounds run INSIDE one
-    checkpoint/convergence cycle (the GraphX-Pregel checkpoint-interval
-    trade): localCheckpoint per cycle truncates lineage (otherwise the
-    plan doubles every round and the driver chokes on planning long
-    before executors sweat), while batching rounds cuts the per-round
-    fixed costs — driver plan construction, the convergence action, the
-    checkpoint barrier — by the unroll factor.  Relaxation is idempotent
-    past convergence (min() of an already-minimal frame), so overshooting
-    inside the final cycle changes nothing but wasted work bounded by
-    rounds_per_checkpoint − 1 rounds.  Keep the factor SMALL: the distance
-    frame is referenced twice per round (relax join + union), so the
-    UNCHECKPOINTED plan doubles per unrolled round — measured on the
-    36-node bench graph, factors ≥ 4 lose to 1 on planning cost alone
-    (13–23 s vs 6 s); 1–3 are within noise of each other, and 3 keeps a
-    3× action/barrier reduction for the scale regime.
+    UNROLL relaxation rounds run INSIDE one checkpoint/convergence cycle
+    (the GraphX-Pregel checkpoint-interval trade): localCheckpoint per
+    cycle truncates lineage (otherwise the plan doubles every round and
+    the driver chokes on planning long before executors sweat), while
+    batching rounds cuts the per-round fixed costs — driver plan
+    construction, the convergence action, the checkpoint barrier — by the
+    unroll factor.  Relaxation is idempotent past convergence (min() of an
+    already-minimal frame), so overshooting inside the final cycle changes
+    nothing but wasted work bounded by UNROLL − 1 rounds.  Keep the factor
+    SMALL: the distance frame is referenced twice per round (relax join +
+    union), so the UNCHECKPOINTED plan doubles per unrolled round —
+    measured on the 36-node bench graph, factors ≥ 4 lose to 1 on planning
+    cost alone (13–23 s vs 6 s); 1–3 are within noise of each other, and 3
+    keeps a 3× action/barrier reduction for the scale regime.
     """
-    from tegallega_spark.session import CheckpointHandle, aqe_off_for_small_input
+    from tegallega_spark.session import CheckpointHandle
 
     e = edges.select("src", "dst", "weight_km").persist()
     # one tiny job: materializes the persisted edge set AND measures it, so
@@ -190,11 +192,9 @@ def shortest_paths_distributed(
     dist_h = None
     # Round cost on a small graph is pure scheduling: each groupBy shuffle
     # under AQE is a separately planned stage job (~100 ms) doing
-    # microseconds of work.  Below SMALL_GRAPH_EDGES run the rounds on the
-    # static 8-partition profile (aqe_off_for_small_input); at real scale
-    # the gate never fires and AQE keeps its skew/coalesce wins.
-    small = n_edges < SMALL_GRAPH_EDGES
-    if small:
+    # microseconds of work.  At real scale the gate never fires and AQE
+    # keeps its skew/coalesce wins.
+    if n_edges < SMALL_GRAPH_EDGES:
         # One-job small-graph profile (the cc.py single-task discipline):
         # run the SAME per-round relaxation vectorized (numpy) inside one
         # executor task.  The distributed loop pays one scheduled job plus
@@ -251,58 +251,56 @@ def shortest_paths_distributed(
         out._tegallega_persisted = [out_h]
         return out
 
-    unroll = max(1, int(rounds_per_checkpoint))
-    with aqe_off_for_small_input(e, fires=small):
-        rounds_left = max_iterations
-        while rounds_left > 0:
-            cur = dist
-            for _ in range(min(unroll, rounds_left)):
-                # NO broadcast hints inside the cycle: each BroadcastExchange
-                # is its own blocking build job, serializing the unrolled
-                # rounds back into per-round jobs (measured 9.5 s → 24 s on
-                # the 36-node bench graph); as plain shuffle joins the whole
-                # cycle pipelines as ONE job whose stages each run once.
-                d_j = cur
-                cur = (
-                    d_j.join(e, d_j["id"] == e["src"])
-                    .select(
-                        F.col("dst").alias("id"),
-                        (F.col("dist") + F.col("weight_km")).alias("dist"),
-                    )
-                    .unionByName(cur)
-                    .groupBy("id")
-                    .agg(F.min("dist").alias("dist"))
-                )
-                rounds_left -= 1
-            # the convergence flag rides INSIDE the checkpointed frame, and
-            # the checkpoint is LAZY: the single count() action below both
-            # materializes this cycle's frame (all partitions — the filter
-            # sits above the checkpoint barrier, nothing is pruned through
-            # it) and answers "did any node improve" — one job per cycle
-            # where the eager-checkpoint + join-back form paid two per round.
-            old = dist.select("id", F.col("dist").alias("__old"))
-            candidates = (
-                cur.join(old, "id", "left")
+    rounds_left = max_iterations
+    while rounds_left > 0:
+        cur = dist
+        for _ in range(min(UNROLL, rounds_left)):
+            # NO broadcast hints inside the cycle: each BroadcastExchange
+            # is its own blocking build job, serializing the unrolled
+            # rounds back into per-round jobs (measured 9.5 s → 24 s on
+            # the 36-node bench graph); as plain shuffle joins the whole
+            # cycle pipelines as ONE job whose stages each run once.
+            d_j = cur
+            cur = (
+                d_j.join(e, d_j["id"] == e["src"])
                 .select(
-                    "id",
-                    "dist",
-                    (
-                        F.col("__old").isNull()
-                        | (F.col("dist") < F.col("__old") - 1e-12)
-                    ).alias("__improved"),
+                    F.col("dst").alias("id"),
+                    (F.col("dist") + F.col("weight_km")).alias("dist"),
                 )
-                .localCheckpoint(eager=False)
+                .unionByName(cur)
+                .groupBy("id")
+                .agg(F.min("dist").alias("dist"))
             )
-            improved = candidates.filter("__improved").count()
-            # the superseded cycle's checkpoint blocks are dead now — free
-            # them instead of leaving a generation per cycle to the
-            # ContextCleaner (the cc.py discipline)
-            if dist_h is not None:
-                dist_h.unpersist()
-            dist_h = CheckpointHandle(candidates)
-            dist = candidates.drop("__improved")
-            if improved == 0:
-                break
+            rounds_left -= 1
+        # the convergence flag rides INSIDE the checkpointed frame, and
+        # the checkpoint is LAZY: the single count() action below both
+        # materializes this cycle's frame (all partitions — the filter
+        # sits above the checkpoint barrier, nothing is pruned through
+        # it) and answers "did any node improve" — one job per cycle
+        # where the eager-checkpoint + join-back form paid two per round.
+        old = dist.select("id", F.col("dist").alias("__old"))
+        candidates = (
+            cur.join(old, "id", "left")
+            .select(
+                "id",
+                "dist",
+                (
+                    F.col("__old").isNull()
+                    | (F.col("dist") < F.col("__old") - 1e-12)
+                ).alias("__improved"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        improved = candidates.filter("__improved").count()
+        # the superseded cycle's checkpoint blocks are dead now — free
+        # them instead of leaving a generation per cycle to the
+        # ContextCleaner (the cc.py discipline)
+        if dist_h is not None:
+            dist_h.unpersist()
+        dist_h = CheckpointHandle(candidates)
+        dist = candidates.drop("__improved")
+        if improved == 0:
+            break
     e.unpersist()
     # the final round's checkpoint must outlive the return (the result
     # reads it); hand the release handle to well-behaved callers

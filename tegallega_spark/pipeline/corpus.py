@@ -34,6 +34,7 @@ from tegallega_spark.operators.dedup import (
 from tegallega_spark.operators.packing import pack_sequences
 from tegallega_spark.operators.sampling import mixture_sample, stratified_hash_sample
 from tegallega_spark.session import (
+    _has_plan_node,
     aqe_off_for_small_input,
     attach_intermediates,
     plan_size_bytes,
@@ -45,20 +46,19 @@ from tegallega_spark.session import (
 # simultaneous scratch.  Rounded up to 64 as the projection factor.
 _SPILL_FACTOR = 64
 
+# Analyzed-plan leaves of in-memory roots (createDataFrame), whose
+# sizeInBytes undercounts the scan bytes _SPILL_FACTOR was calibrated on.
+_IN_MEMORY_NODE_NAMES = frozenset({"LocalRelation", "LogicalRDD"})
 
-def stage_boundaries_needed(
-    input_bytes: int,
-    free_bytes: int,
-    spill_factor: int = _SPILL_FACTOR,
-    safety: float = 0.5,
-) -> bool:
+
+def stage_boundaries_needed(input_bytes: int, free_bytes: int) -> bool:
     """Pure decision for the auto stage-boundary gate (r9 verdict #6):
     boundaries turn ON when the projected concurrent shuffle spill
-    (input_bytes × spill_factor) would eat more than `safety` of the free
+    (input_bytes × _SPILL_FACTOR) would eat more than half the free
     scratch disk.  Below that, the write+read round trip is pure latency
     (the small-input regime the boundary docstring warns about); above
     it, skipping the boundary is how the 3.2 M race hit ENOSPC."""
-    return input_bytes * spill_factor > free_bytes * safety
+    return input_bytes * _SPILL_FACTOR > free_bytes / 2
 
 
 class _StageBoundaryDirHandle:
@@ -87,38 +87,31 @@ class _StageBoundaryDirHandle:
 def _auto_stage_boundary_dir(docs: DataFrame) -> tuple[str | None, object]:
     """Size-gated default for `stage_boundary_dir` (same pattern as
     aqe_off_for_small_input: estimate the input with Catalyst's analyzed
-    sizeInBytes, compare against the environment, no-op outside the
+    sizeInBytes, compare against the free scratch disk, no-op outside the
     regime).  Returns (dir_or_None, release_handle_or_None); the dir is a
-    fresh temp directory owned by the returned handle.
-
-    TEGALLEGA_STAGE_BOUNDARY overrides: 'off'/'0'/'never' disables,
-    'always'/'1'/'on' forces, anything else (default 'auto') gates on
-    projected spill vs free disk."""
-    import os
+    fresh temp directory owned by the returned handle."""
     import shutil
     import tempfile
 
-    mode = os.environ.get("TEGALLEGA_STAGE_BOUNDARY", "auto").lower()
-    if mode in ("0", "off", "never", "false"):
+    try:
+        size = plan_size_bytes(docs)
+        # _SPILL_FACTOR was calibrated against zstd-parquet scan bytes;
+        # in-memory roots (createDataFrame → LocalRelation / LogicalRDD)
+        # report sizeInBytes ~17× below that calibration (measured in the
+        # r10 stress harness), so without a correction the ENOSPC gate
+        # silently stays off in exactly the regime it protects (r10
+        # ADVICE).  16× multiplier when the lineage has such a leaf —
+        # matched by node name, so a column or literal spelled like one
+        # cannot trigger it.
+        if _has_plan_node(
+            docs._jdf.queryExecution().analyzed(), _IN_MEMORY_NODE_NAMES
+        ):
+            size *= 16
+        free = shutil.disk_usage(tempfile.gettempdir()).free
+    except Exception:
         return None, None
-    if mode not in ("1", "on", "always", "true"):
-        try:
-            size = plan_size_bytes(docs)
-            # _SPILL_FACTOR was calibrated against zstd-parquet scan
-            # bytes; in-memory roots (createDataFrame → LocalRelation /
-            # LogicalRDD) report sizeInBytes ~17× below that calibration
-            # (measured in the r10 stress harness), so without a
-            # correction the ENOSPC gate silently stays off in exactly
-            # the regime it protects (r10 ADVICE).  16× multiplier when
-            # the lineage is not scan-rooted.
-            plan_str = str(docs._jdf.queryExecution().analyzed())
-            if "LocalRelation" in plan_str or "LogicalRDD" in plan_str:
-                size *= 16
-            free = shutil.disk_usage(tempfile.gettempdir()).free
-        except Exception:
-            return None, None
-        if not stage_boundaries_needed(size, free):
-            return None, None
+    if not stage_boundaries_needed(size, free):
+        return None, None
     path = tempfile.mkdtemp(prefix="tegallega_stage_boundaries_")
     return path, _StageBoundaryDirHandle(path)
 
@@ -147,8 +140,7 @@ def _stage_boundary(df: DataFrame, path: str, handles=()) -> DataFrame:
     latency, is the binding constraint.  Since r10, clean_corpus gates
     this automatically (stage_boundaries_needed: projected spill vs free
     disk) when the text-cut stages are enabled and no explicit dir is
-    passed; an explicit `stage_boundary_dir` always forces it, and
-    TEGALLEGA_STAGE_BOUNDARY=off/always overrides the gate."""
+    passed; an explicit `stage_boundary_dir` always forces it."""
     spark = df.sparkSession
     df.write.mode("overwrite").option("compression", "zstd").parquet(path)
     for h in handles:
@@ -311,7 +303,7 @@ def clean_corpus(
     scratch disk — the regime where the 3.2 M-doc race hit ENOSPC with
     the old opt-in default.  The auto directory is temp-created and
     removed by release_intermediates(result).  An explicit path always
-    forces boundaries on; TEGALLEGA_STAGE_BOUNDARY=off|always overrides.
+    forces boundaries on.
     """
     # Auto stage boundaries (r9 verdict #6): when the caller passes no
     # explicit dir AND the pipeline has the multi-wave text-cut stages

@@ -1379,6 +1379,11 @@ def q40(spark, sf_dir):
     return d.select("doc_id", TXT.quality_score(F.col("text")).alias("quality"))
 
 
+# q41's per-task scan-byte budget for its fold exchange (see the sizing
+# note in q41).
+THIN_TASK_BYTES = 64 << 20
+
+
 @register(
     "q41_stateful_thinning",
     oracle=r"""
@@ -1456,13 +1461,10 @@ def q41(spark, sf_dir):
     # conservative-huge analyzer estimate (only join/union-derived
     # lineage produces those; this input is scan-rooted) falls back to
     # the admin-set shuffle width rather than trusting it.
-    import os
-
     from tegallega_spark.session import plan_size_bytes
 
     dp = spark.sparkContext.defaultParallelism
-    task_bytes = int(os.environ.get("SPARK_GRAFT_THIN_TASK_BYTES", str(64 << 20)))
-    n_parts = plan_size_bytes(e) // task_bytes + 1
+    n_parts = plan_size_bytes(e) // THIN_TASK_BYTES + 1
     if n_parts <= dp:
         n_parts = dp
     elif n_parts > (1 << 21):  # estimate not credible (Long.Max-ish)

@@ -11,6 +11,9 @@ sense on a 1000-executor cluster reading 100 TB:
 - shuffle.partitions defaults to cores locally; on a real cluster AQE's
   coalescing makes the initial number mostly irrelevant as long as it is
   high enough, so we leave it overridable via SPARK_GRAFT_CPUS.
+- get_spark is the package's only reader of the process environment: five
+  SPARK_GRAFT_* settings size the session to its host or cluster (README
+  "Run"); every other execution choice comes from the input.
 """
 
 from __future__ import annotations
@@ -70,12 +73,8 @@ def get_spark(app_name: str = "tegallega-spark", cpus: int | None = None) -> Spa
         # fingerprints).  A clean maxResultSize error on an oversized
         # collect beats a driver OOM, and no production path here
         # collects corpus-sized results (operators are sink-to-sink;
-        # collects are bounded and documented).  Env knob kept for
-        # harnesses that knowingly collect more.
-        .config(
-            "spark.driver.maxResultSize",
-            os.environ.get("SPARK_GRAFT_MAX_RESULT_SIZE", "1g"),
-        )
+        # collects are bounded and documented).
+        .config("spark.driver.maxResultSize", "1g")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Local test files are ~10 MB; the 128 MB default split puts a whole
         # table in 1-3 tasks and wastes 29 cores.  4 MB splits parallelize
@@ -131,14 +130,10 @@ def _prefork_python_workers(spark: SparkSession, cpus: int) -> None:
     executors amortize this over a long-lived daemon pool
     (spark.python.worker.reuse=true, the default); doing the fork at
     session creation gives local mode the same treatment.  One trivial
-    identity UDF over `cpus` partitions touches every worker slot.
-    Disable with SPARK_GRAFT_PREFORK=0 (e.g. for pure-JVM jobs that
-    never run Python stages)."""
+    identity UDF over `cpus` partitions touches every worker slot."""
     if getattr(spark, "_tegallega_preforked", False):
         return
     spark._tegallega_preforked = True
-    if os.environ.get("SPARK_GRAFT_PREFORK", "1") == "0":
-        return
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
@@ -189,15 +184,16 @@ _SHUFFLE_NODE_NAMES = frozenset(
 )
 
 
-def _has_shuffle_origin_node(plan) -> bool:
-    """DFS over a py4j logical-plan TreeNode for shuffle-origin node
-    classes (early exit on first hit).  Subquery expressions are not
+def _has_plan_node(plan, names: frozenset) -> bool:
+    """DFS over a py4j logical-plan TreeNode for a node whose class is in
+    `names` (early exit on first hit).  Subquery expressions are not
     descended into — a shuffle buried in a scalar subquery doesn't set the
-    OUTER frame's partitioning, which is what the caller asks about."""
+    OUTER frame's partitioning, which is what the shuffle-origin callers
+    ask about."""
     stack = [plan]
     while stack:
         node = stack.pop()
-        if node.nodeName() in _SHUFFLE_NODE_NAMES:
+        if node.nodeName() in names:
             return True
         children = node.children()
         for i in range(children.length()):
@@ -223,7 +219,7 @@ def small_scan_input(df, limit_bytes: int | None = None) -> bool:
     the gate.  The shuffle walk runs first, so a shuffle-rooted plan
     never pays for the stats computation."""
     analyzed = df._jdf.queryExecution().analyzed()
-    if _has_shuffle_origin_node(analyzed):
+    if _has_plan_node(analyzed, _SHUFFLE_NODE_NAMES):
         return False
     limit = SMALL_INPUT_BYTES if limit_bytes is None else limit_bytes
     return int(str(analyzed.stats().sizeInBytes())) < limit
@@ -241,7 +237,7 @@ class aqe_off_for_small_input:
     minutes; on a kB-MB input each stage's work is microseconds while its
     scheduling + replanning latency is ~100 ms — the composed corpus race
     measured ~115 stage jobs ≈ 15 s of pure wave latency at 5 k docs
-    (r7 profiling).  Below `threshold_bytes` (Catalyst's own analyzed
+    (r7 profiling).  Below SMALL_PLAN_BYTES (Catalyst's own analyzed
     estimate of the input) the static plan is strictly better; at or
     above it this is a no-op and AQE keeps its coalesce/skew wins.  On a
     real cluster reading real data the gate never fires.
@@ -279,6 +275,7 @@ class aqe_off_for_small_input:
 
     _KEY = "spark.sql.adaptive.enabled"
     _SHUF = "spark.sql.shuffle.partitions"
+    SMALL_PLAN_BYTES = 1 << 30
     NARROW_SHUFFLE = 8
     _lock = threading.Lock()
     _depth = 0
@@ -288,18 +285,9 @@ class aqe_off_for_small_input:
     # priors onto session B (ADVICE r8)
     _outermost: tuple | None = None
 
-    def __init__(self, df, threshold_bytes: int = 1 << 30,
-                 fires: bool | None = None) -> None:
-        """`fires` overrides the plan-size gate with a caller-measured
-        decision: iterative operators (connected components, Bellman-Ford)
-        work on join-DERIVED inputs whose analyzed estimate is
-        conservative-huge (a join's sizeInBytes multiplies its sides), so
-        the plan gate never fires for them even on a 36-node graph; they
-        instead gate on the COUNTED size of the materialized frame the
-        loop iterates over."""
+    def __init__(self, df) -> None:
         self._spark = df.sparkSession
-        self._fires = (plan_size_bytes(df) < threshold_bytes
-                       if fires is None else bool(fires))
+        self._fires = plan_size_bytes(df) < self.SMALL_PLAN_BYTES
         self._entered = False
 
     def __enter__(self) -> "aqe_off_for_small_input":

@@ -40,6 +40,10 @@ PAIR_SCHEMA = "id_a bigint, id_b bigint, band_idx int"
 # hashes, all bucket id lists flattened, and offsets delimiting each
 # bucket's slice of the flat list (len(offsets) == len(hashes) + 1).
 STATE_SCHEMA = "hashes array<bigint>, flat_ids array<bigint>, offsets array<int>"
+# State is keyed by (band_idx, band_hash mod STATE_SHARDS); see
+# neardup_candidates_stream.  Part of the checkpoint's grouping key:
+# changing it invalidates existing checkpoints.
+STATE_SHARDS = 128
 
 
 def _make_shard_matcher(max_ids: int):
@@ -54,7 +58,7 @@ def _make_shard_matcher(max_ids: int):
     Python calls + pandas frame constructions per ~1k-doc trigger at
     ~3.7 ms each (the stress race's measured wall, 92 s for 40k docs).
     Sharding the hash space bounds the per-trigger group count at
-    bands × state_shards while keeping bucket semantics bit-identical."""
+    bands × STATE_SHARDS while keeping bucket semantics bit-identical."""
 
     def _match(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
@@ -111,39 +115,31 @@ def neardup_candidates_stream(
     num_hashes: int = 32,
     bands: int = 16,
     max_ids_per_bucket: int = 1024,
-    state_shards: int | None = None,
 ) -> DataFrame:
     """(id_a, id_b, band_idx) candidate pairs; distinct (id_a, id_b) over
     the stream equals the batch `_pairs_from_band_hashes` candidate set for
     the same corpus (while bucket state stays within max_ids_per_bucket).
 
-    state_shards (r14): state is keyed by (band_idx, band_hash mod
-    state_shards), not by raw bucket — per-bucket matching semantics are
+    State sharding (r14): state is keyed by (band_idx, band_hash mod
+    STATE_SHARDS), not by raw bucket — per-bucket matching semantics are
     unchanged (each shard's state holds its buckets' id lists), but the
     per-trigger applyInPandasWithState GROUP count is bounded at
-    bands × state_shards instead of one group per distinct bucket.  The
+    bands × STATE_SHARDS instead of one group per distinct bucket.  The
     old keying paid ~3.7 ms of Python-call + pandas-construction overhead
-    per bucket per trigger (the stress race's measured wall).  Size it so
-    a shard's state value stays comfortably row-sized:
-    expected buckets / (bands × state_shards) ≈ tens of buckets per
-    shard; raise it with corpus scale (the per-shard value grows linearly
-    with corpus buckets at fixed shards).  Changing it invalidates
-    existing checkpoints (different grouping key).  Default: the
-    SPARK_GRAFT_STREAM_STATE_SHARDS env knob, else 128 — the measured
-    knee of the 40k-doc stress race (433 → 819 docs/s; 1024 shards
-    measured 526 — with ~19k distinct buckets per trigger nearly every
-    shard was still hit, so the group count barely dropped).
+    per bucket per trigger (the stress race's measured wall).  A shard's
+    state value stays comfortably row-sized while expected buckets /
+    (bands × STATE_SHARDS) ≈ tens of buckets per shard (the per-shard
+    value grows linearly with corpus buckets).  128 is the measured knee
+    of the 40k-doc stress race (433 → 819 docs/s; 1024 shards measured
+    526 — with ~19k distinct buckets per trigger nearly every shard was
+    still hit, so the group count barely dropped).
     """
-    if state_shards is None:
-        import os
-
-        state_shards = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_SHARDS", "128"))
     bh_udf = make_band_hash_udf(shingle_n, num_hashes, bands)
     banded = docs.select(
         F.col(id_col).alias("doc_id"), bh_udf(F.col(text_col)).alias("__bh")
     ).select("doc_id", F.posexplode("__bh").alias("band_idx", "band_hash"))
     banded = banded.withColumn(
-        "__shard", F.pmod(F.col("band_hash"), F.lit(int(state_shards)))
+        "__shard", F.pmod(F.col("band_hash"), F.lit(STATE_SHARDS))
     )
     return banded.groupBy("band_idx", "__shard").applyInPandasWithState(
         _make_shard_matcher(max_ids_per_bucket),
@@ -163,7 +159,6 @@ def verified_neardup_sink(
     text_col: str = "text",
     shingle_n: int = 3,
     jaccard_threshold: float = 0.7,
-    available_now: bool = True,
 ):
     """Compose the candidate stream with EXACT Jaccard verification — the
     same falsifiable contract as the batch path: streamed verified pairs
@@ -181,7 +176,8 @@ def verified_neardup_sink(
     neardup_candidates_stream; verification cost is per-candidate, not
     per-corpus (semi-join pushdown in exact_jaccard_for_pairs).
 
-    Returns the started StreamingQuery.
+    Returns the started StreamingQuery, triggered availableNow: it drains
+    what has landed and stops.
     """
 
     def _verify(batch_df, batch_id):
@@ -192,11 +188,10 @@ def verified_neardup_sink(
         out.write.mode("append").parquet(out_path)
         release_intermediates(verified)
 
-    writer = (
+    return (
         candidates.writeStream.foreachBatch(_verify)
         .outputMode("append")
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -497,12 +497,14 @@ def test_stage_boundary_auto_gate_regimes(spark, monkeypatch, tmp_path):
     """r9 verdict #6: stage boundaries are size-gated by default.  Pin the
     pure decision at both regimes (3.2 M-race numbers: ~1.3 GB input ×
     64 projected spill vs 75 GB free → ON; a 5 k-doc toy input → OFF),
-    then the plumbing: forced-on via env writes real boundary parquet
-    into an auto temp dir whose handle release_intermediates removes;
-    default auto stays OFF for a toy corpus (identical rows, no temp dir)."""
+    then the plumbing: forced on (spill projection inflated) writes real
+    boundary parquet into an auto temp dir whose handle
+    release_intermediates removes; default auto stays OFF for a toy corpus
+    (identical rows, no temp dir)."""
     import glob
     import os
 
+    from tegallega_spark.pipeline import corpus
     from tegallega_spark.pipeline.corpus import stage_boundaries_needed
     from tegallega_spark.session import release_intermediates
 
@@ -511,7 +513,7 @@ def test_stage_boundary_auto_gate_regimes(spark, monkeypatch, tmp_path):
     assert stage_boundaries_needed(int(1.3 * gib), 75 * gib)
     # toy corpus: ~4 MB input, plenty of disk — boundary is pure latency
     assert not stage_boundaries_needed(4 << 20, 75 * gib)
-    # boundary of the rule: spill exactly at safety*free does NOT fire
+    # boundary of the rule: spill exactly at half the free disk does NOT fire
     assert not stage_boundaries_needed(gib, 2 * 64 * gib)
     assert stage_boundaries_needed(gib + 1, 2 * 64 * gib)
 
@@ -527,15 +529,15 @@ def test_stage_boundary_auto_gate_regimes(spark, monkeypatch, tmp_path):
     before = set(glob.glob("/tmp/tegallega_stage_boundaries_*"))
 
     # default auto on a toy corpus: gate stays off, no temp dir appears
-    monkeypatch.delenv("TEGALLEGA_STAGE_BOUNDARY", raising=False)
     base = clean_corpus(docs, **kwargs)
     base_rows = sorted(map(tuple, base.collect()))
     release_intermediates(base)
     assert set(glob.glob("/tmp/tegallega_stage_boundaries_*")) == before
 
-    # forced on (the at-scale regime, exercised via the env override):
-    # same rows, real parquet in an auto dir, dir removed on release
-    monkeypatch.setenv("TEGALLEGA_STAGE_BOUNDARY", "always")
+    # forced on (the at-scale regime, exercised by inflating the spill
+    # projection past any free disk): same rows, real parquet in an auto
+    # dir, dir removed on release
+    monkeypatch.setattr(corpus, "_SPILL_FACTOR", 1 << 40)
     out = clean_corpus(docs, **kwargs)
     rows = sorted(map(tuple, out.collect()))
     assert rows == base_rows
@@ -547,3 +549,25 @@ def test_stage_boundary_auto_gate_regimes(spark, monkeypatch, tmp_path):
         assert any(f.endswith(".parquet") for f in files), (sub, files)
     release_intermediates(out)
     assert not os.path.exists(bdir)
+
+
+def test_stage_boundary_estimate_reads_plan_nodes_not_text(spark, monkeypatch):
+    """The auto gate's ×16 in-memory correction keys on LocalRelation /
+    LogicalRDD plan NODES: a column named like one leaves a scan-rooted
+    estimate unchanged, while a real in-memory root still gets it."""
+    from tegallega_spark.pipeline import corpus
+    from tegallega_spark.session import plan_size_bytes
+
+    seen = []
+    monkeypatch.setattr(
+        corpus, "stage_boundaries_needed",
+        lambda size, free: seen.append(size) or False,
+    )
+    scan = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    trap = scan.withColumnRenamed("text", "LocalRelation")
+    local = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    for df in (scan, trap, local):
+        assert corpus._auto_stage_boundary_dir(df) == (None, None)
+    assert seen == [
+        plan_size_bytes(scan), plan_size_bytes(scan), 16 * plan_size_bytes(local)
+    ]

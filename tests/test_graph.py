@@ -92,3 +92,38 @@ def test_real_gtfs_graph_route(spark):
     total, path, routes = dijkstra_local(edges, e0.src, e0.dst)
     assert total <= e0.weight_km + 1e-9
     assert path[0] == e0.src and path[-1] == e0.dst
+
+
+def test_join_loops_agree_with_single_task_paths(spark, toy_graph, monkeypatch):
+    """Every test graph is under SMALL_GRAPH_EDGES, so the tests above run
+    the single-task numpy paths.  With the gate at 0 the same graphs go
+    through the join loops of shortest_paths_distributed and
+    connected_components (under dedup_cluster_assignments), which must
+    give the same answers and the same non-convergence error."""
+    from tegallega_spark.operators import graph
+    from tegallega_spark.operators.cc import (
+        connected_components,
+        dedup_cluster_assignments,
+    )
+
+    stops, stop_times, trips = toy_graph
+    edges = build_edges(stop_times, stops, trips)
+    cc_edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20)], ["src", "dst"]
+    )
+    pairs = spark.createDataFrame([(5, 9), (9, 7), (2, 3)], ["id_a", "id_b"])
+    chain = spark.createDataFrame([(i, i + 1) for i in range(12)], ["src", "dst"])
+
+    def run():
+        return (
+            {r.id: r.dist for r in shortest_paths_distributed(edges, "s1").collect()},
+            set(map(tuple, connected_components(cc_edges).collect())),
+            set(map(tuple, connected_components(chain, max_iter=20).collect())),
+            set(map(tuple, dedup_cluster_assignments(pairs).collect())),
+        )
+
+    single = run()
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
+    assert run() == single
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, max_iter=3)

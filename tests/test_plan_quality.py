@@ -328,7 +328,7 @@ def test_clean_corpus_output_reads_cached_corpus(spark):
         release_intermediates(out)
 
 
-def test_aqe_gate_fires_small_restores_and_ignores_large(spark):
+def test_aqe_gate_fires_small_restores_and_ignores_large(spark, monkeypatch):
     """session.aqe_off_for_small_input: flips adaptive off only inside the
     `with` body and only when Catalyst's analyzed-plan size estimate is
     under the threshold; restores the prior setting on normal exit AND on
@@ -350,8 +350,10 @@ def test_aqe_gate_fires_small_restores_and_ignores_large(spark):
         assert spark.conf.get(key) == "true"
 
         # threshold below the estimate -> gate must not fire
-        with aqe_off_for_small_input(small, threshold_bytes=1):
-            assert spark.conf.get(key) == "true"
+        with monkeypatch.context() as m:
+            m.setattr(aqe_off_for_small_input, "SMALL_PLAN_BYTES", 1)
+            with aqe_off_for_small_input(small):
+                assert spark.conf.get(key) == "true"
 
         # restore must happen even when the body raises
         with pytest.raises(RuntimeError, match="boom"):
@@ -363,7 +365,7 @@ def test_aqe_gate_fires_small_restores_and_ignores_large(spark):
         spark.conf.set(key, prior)
 
 
-def test_aqe_gate_interleaved_instances_restore_outermost_prior(spark):
+def test_aqe_gate_interleaved_instances_restore_outermost_prior(spark, monkeypatch):
     """r8 advice fix: per-instance save/restore mis-restores under
     interleaved (non-nested) lifetimes — A-enter(prior=true),
     B-enter(prior=false), A-exit, B-exit used to leave AQE permanently
@@ -397,7 +399,9 @@ def test_aqe_gate_interleaved_instances_restore_outermost_prior(spark):
         assert spark.conf.get(key) == "true"
 
         # a non-firing instance interleaved with a firing one is inert
-        c = aqe_off_for_small_input(small, threshold_bytes=1)  # won't fire
+        with monkeypatch.context() as m:
+            m.setattr(aqe_off_for_small_input, "SMALL_PLAN_BYTES", 1)
+            c = aqe_off_for_small_input(small)  # won't fire
         d = aqe_off_for_small_input(small)
         c.__enter__()
         d.__enter__()
@@ -494,13 +498,17 @@ def test_parallelize_for_udf_ignores_shuffle_words_in_literals(spark, monkeypatc
         .withColumn("label", F.lit("Sort Window Join code"))
         .filter(F.col("label") != "Aggregate")
     )
-    assert not S._has_shuffle_origin_node(trap._jdf.queryExecution().analyzed())
+    assert not S._has_plan_node(
+        trap._jdf.queryExecution().analyzed(), S._SHUFFLE_NODE_NAMES
+    )
     assert S.small_scan_input(trap)
     # scan-rooted and tiny → must still widen to cluster parallelism
     assert parallelize_for_udf(trap).rdd.getNumPartitions() == target
     # and a REAL shuffle node is still detected
     agg = trap.groupBy("label").count()
-    assert S._has_shuffle_origin_node(agg._jdf.queryExecution().analyzed())
+    assert S._has_plan_node(
+        agg._jdf.queryExecution().analyzed(), S._SHUFFLE_NODE_NAMES
+    )
     assert not S.small_scan_input(agg)
     # the same scan-rooted frame over the threshold fails the gate
     monkeypatch.setattr(S, "SMALL_INPUT_BYTES", 16)
@@ -516,12 +524,12 @@ def test_shuffle_origin_covers_distinct_and_apply_in_pandas(spark):
     parallelize_for_udf doesn't stack a redundant exchange on top."""
     import pandas as pd
 
-    from tegallega_spark.session import _has_shuffle_origin_node
+    from tegallega_spark.session import _SHUFFLE_NODE_NAMES, _has_plan_node
 
     spark.range(10).toDF("n").createOrReplaceTempView("t_adv_distinct")
     sql_distinct = spark.sql("SELECT DISTINCT n FROM t_adv_distinct")
-    assert _has_shuffle_origin_node(
-        sql_distinct._jdf.queryExecution().analyzed()
+    assert _has_plan_node(
+        sql_distinct._jdf.queryExecution().analyzed(), _SHUFFLE_NODE_NAMES
     )
 
     applied = (
@@ -530,7 +538,9 @@ def test_shuffle_origin_covers_distinct_and_apply_in_pandas(spark):
         .groupBy("n")
         .applyInPandas(lambda pdf: pdf, "n long")
     )
-    assert _has_shuffle_origin_node(applied._jdf.queryExecution().analyzed())
+    assert _has_plan_node(
+        applied._jdf.queryExecution().analyzed(), _SHUFFLE_NODE_NAMES
+    )
 
 
 def test_prefork_runs_once_per_session(spark):

@@ -161,14 +161,14 @@ def test_thinning_exchange_sized_from_input_bytes(spark, sf_dir, monkeypatch):
     the stand-in for input bytes growing at fixed budget — the partition
     count rises with it, bounding the per-task pandas buffer.  Rows are
     identical in both shapes."""
-    from tegallega_spark.queries import SPARK_QUERIES
+    import tegallega_spark.queries as Q
 
-    q = SPARK_QUERIES["q41_stateful_thinning"]
+    q = Q.SPARK_QUERIES["q41_stateful_thinning"]
     dp = spark.sparkContext.defaultParallelism
     base = q(spark, sf_dir)
     assert base.rdd.getNumPartitions() == dp
     rows = {(r.user_id, r.event_id) for r in base.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_THIN_TASK_BYTES", "1024")
+    monkeypatch.setattr(Q, "THIN_TASK_BYTES", 1024)
     wide = q(spark, sf_dir)
     assert wide.rdd.getNumPartitions() > dp
     assert {(r.user_id, r.event_id) for r in wide.collect()} == rows
