@@ -187,7 +187,6 @@ def time_spark(root: str, spark=None, sink_dir: str | None = None
     warm = []
     tables = build_gtfs(
         spark, root,
-        on_shapes=lambda s: warm.append(pre.submit(s.count)),
         on_cached=lambda _name, df: warm.append(pre.submit(df.count)),
     )
     # the 7 sinks are independent outputs — run them as concurrent jobs

@@ -12,8 +12,9 @@ Scale notes (100 TB):
   per-row Arrow UDF pass); candidate generation joins on
   (band_id, band_hash) buckets so the shuffle volume is #bands × #docs tiny
   rows, never the quadratic pair space.
-- SimHash: 64-bit fingerprint per doc via bit-bucketed hash sums; near-dup
-  candidates join on band substrings of the fingerprint.
+- SimHash: 60-bit fingerprint per doc from md5 shingle hashes (the same
+  hash the DuckDB oracle replays); near-dup candidates join on band
+  substrings of the fingerprint.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inference
 from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
+from tegallega_spark.operators.sampling import md5_60
 from tegallega_spark.session import (
     _SHUFFLE_NODE_NAMES,
     _has_plan_node,
@@ -726,73 +728,12 @@ def ngram_jaccard_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash64(text: Column, shingle_n: int = 2) -> Column:
-    """64-bit SimHash fingerprint as bigint, pure column math.
-
-    For each of 64 bit positions, sum +1/-1 over shingles according to that
-    bit of xxhash64(shingle); bit set iff the sum is positive.
-    """
-    shingles = word_shingles(text, shingle_n)
-    hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-    def bit_of(i):
-        # shiftright on bigint keeps sign for bit 63; mask with 1 fixes it
-        return F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-    bits = [
-        F.when(bit_of(i) > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        * F.lit(1 << i).cast("long")
-        for i in range(63)  # skip the sign bit to stay positive
-    ]
-    total = bits[0]
-    for b in bits[1:]:
-        total = total + b
-    return total
-
-
-def make_simhash_udf(shingle_n: int = 2):
-    """Arrow-vectorized text→SimHash-fingerprint pandas_udf.
-
-    The column-expression path (simhash64) re-traverses the shingle-hash
-    array once per bit — 63 interpreted F.aggregate passes per document.
-    This UDF computes all 64 bit-sums in ONE numpy pass per Arrow batch:
-    distinct shingle hashes from the shared kernel (memoized word hashes +
-    positional polynomial), expand to a (shingles × 64) ±1 matrix,
-    column-sum, threshold.  Hash values differ from the column path but
-    fingerprints are only ever compared to each other, so the near-dup
-    semantics are unchanged."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    kernel = _make_shingle_kernel(shingle_n)
-    shifts = np.arange(64, dtype=np.uint64)
-
-    @pandas_udf("long")
-    def fingerprint(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            hv = kernel(text)
-            bits = ((hv[:, None] >> shifts) & np.uint64(1)).astype(np.int64)
-            sums = (2 * bits - 1).sum(axis=0)
-            fp = int(((sums[:63] > 0).astype(np.uint64) << shifts[:63]).sum())
-            out.append(fp)
-        return pd.Series(out, dtype="int64")
-
-    return fingerprint
-
-
 def md5_shingle_hashes(text: Column, shingle_n: int = 2) -> Column:
     """60-bit integers from the first 15 md5 hex chars of each distinct
     shingle — the ENGINE-AUDITABLE hash family (DuckDB replays md5 exactly;
-    xxhash64 it cannot).  Same construction as the winnowing sketch's
-    auditable hasher."""
-    return F.transform(
-        word_shingles(text, shingle_n),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-    )
+    xxhash64 it cannot).  Same hash as the winnowing sketch and hash_frac
+    (sampling.md5_60)."""
+    return F.transform(word_shingles(text, shingle_n), md5_60)
 
 
 def make_simhash_bitsum_udf():
@@ -818,64 +759,15 @@ def make_simhash_bitsum_udf():
     return fingerprint
 
 
-def md5_simhash_column(hashes: Column) -> Column:
-    """Pure-column 60-bit SimHash over an array of md5 shingle hashes —
-    the no-Arrow fallback for make_simhash_bitsum_udf (ADVICE r9: callers
-    with use_arrow=False used to get an Arrow UDF anyway).  One
-    F.aggregate fold per bit (60 interpreted folds per row): correct
-    everywhere, ~an order slower than the Arrow pass — parity is pinned
-    bit-identical in tests.  Bit b is set iff strictly more than half the
-    shingle hashes carry it (sum of ±1 > 0 ⇔ 2·ones > n; the tie rounds
-    to 0, matching the numpy kernel's `sums > 0`)."""
-    n = F.size(hashes)
-
-    def _bit_counter(b: int):
-        # NOTE: a `b=b` default param would make pyspark's lambda-arity
-        # inspection see a 3-ary merge function and bind a lambda var to b
-        return lambda acc, h: acc + F.shiftrightunsigned(h, b).bitwiseAND(
-            F.lit(1)
-        )
-
-    terms = []
-    for b in range(60):
-        ones = F.aggregate(hashes, F.lit(0).cast("long"), _bit_counter(b))
-        terms.append(
-            F.when(ones * 2 > n, F.lit(1 << b).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def simhash_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int, use_arrow: bool,
-    hash_fn: str = "xxhash",
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int
 ) -> DataFrame:
-    if hash_fn == "md5":
-        # oracle-replayable: md5 hashes via columns, bit sums via Arrow
-        # (or, with use_arrow=False, via the pure-column fold — ADVICE r9)
-        if not use_arrow:
-            return df.select(
-                F.col(id_col).alias("__id"),
-                md5_simhash_column(
-                    md5_shingle_hashes(F.col(text_col), shingle_n)
-                ).alias("__fp"),
-            )
-        fp_udf = make_simhash_bitsum_udf()
-        return parallelize_for_udf(df).select(
-            F.col(id_col).alias("__id"),
-            fp_udf(md5_shingle_hashes(F.col(text_col), shingle_n)).alias("__fp"),
-        )
-    if use_arrow:
-        fp_udf = make_simhash_udf(shingle_n)
-        return parallelize_for_udf(df).select(
-            F.col(id_col).alias("__id"), fp_udf(F.col(text_col)).alias("__fp")
-        )
-    return df.select(
-        F.col(id_col).alias("__id"), simhash64(F.col(text_col), shingle_n).alias("__fp")
+    """(__id, __fp) with a 60-bit SimHash per document: md5 shingle hashes
+    as a column, bit sums in one Arrow pass — oracle-replayable."""
+    fp_udf = make_simhash_bitsum_udf()
+    return parallelize_for_udf(df).select(
+        F.col(id_col).alias("__id"),
+        fp_udf(md5_shingle_hashes(F.col(text_col), shingle_n)).alias("__fp"),
     )
 
 
@@ -886,24 +778,18 @@ def simhash_near_duplicates(
     shingle_n: int = 2,
     max_hamming: int = 3,
     bands: int = 4,
-    use_arrow: bool = True,
-    max_bucket: int | None = None,
-    hash_fn: str = "xxhash",
 ) -> DataFrame:
-    """SimHash near-dup pairs: band the fingerprint (63-bit xxhash family,
-    60-bit md5 family — `hash_fn`) into `bands` chunks; by pigeonhole, any
-    pair within max_hamming (< bands) shares at least one identical chunk
-    → equi-join per chunk, then exact Hamming filter via bit_count(xor).
+    """SimHash near-dup pairs: band the 60-bit fingerprint into `bands`
+    chunks; by pigeonhole, any pair within max_hamming (< bands) shares at
+    least one identical chunk → equi-join per chunk, then exact Hamming
+    filter via bit_count(xor).
     The pigeonhole argument needs only bands > max_hamming — chunks not
     covering all bits still guarantee recall (uncovered-bit diffs only
-    reduce covered-bit diffs).  hash_fn="md5" keeps the whole family
-    DuckDB-replayable (see md5_shingle_hashes)."""
+    reduce covered-bit diffs).  The md5 hash family keeps the whole
+    contract DuckDB-replayable (see md5_shingle_hashes)."""
     # persist: the banded self-join reads fingerprints from both sides
-    fp = simhash_fingerprints(
-        df, id_col, text_col, shingle_n, use_arrow, hash_fn=hash_fn
-    ).persist()
-    width = 60 if hash_fn == "md5" else 64
-    chunk_bits = width // bands
+    fp = simhash_fingerprints(df, id_col, text_col, shingle_n).persist()
+    chunk_bits = 60 // bands
     banded = fp.select(
         "__id",
         "__fp",
@@ -918,23 +804,13 @@ def simhash_near_duplicates(
             )
         ).alias("band_idx", "band_val"),
     )
-    if max_bucket is not None:
-        # same k^2 hot-bucket guard as _pairs_from_band_hashes: a band value
-        # shared by k docs emits k^2 join rows; template spam gets dropped
-        ok = (
-            banded.groupBy("band_idx", "band_val")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") <= max_bucket)
-            .select("band_idx", "band_val")
-        )
-        banded = banded.join(ok, ["band_idx", "band_val"], "left_semi")
     a = banded.select(F.col("__id").alias("id_a"), F.col("__fp").alias("fp_a"), "band_idx", "band_val")
     b = banded.select(F.col("__id").alias("id_b"), F.col("__fp").alias("fp_b"), "band_idx", "band_val")
     hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
     # hamming filter BEFORE the pair dedup: fingerprints (8 bytes) ride the
     # band join anyway, so filtering each join row first means the dedup
     # shuffle only sees true near-candidates — with coarse chunks (small
-    # 64/bands) the unfiltered band join can emit millions of junk pairs
+    # 60/bands) the unfiltered band join can emit millions of junk pairs
     return attach_intermediates(
         a.join(b, ["band_idx", "band_val"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -954,9 +830,6 @@ def simhash_near_duplicates_verified(
     max_hamming: int = 12,
     bands: int = 13,
     jaccard_threshold: float = 0.7,
-    use_arrow: bool = True,
-    max_bucket: int | None = None,
-    hash_fn: str = "xxhash",
 ) -> DataFrame:
     """SimHash near-dup pairs with EXACT Jaccard verification.
 
@@ -965,16 +838,15 @@ def simhash_near_duplicates_verified(
     shingle-set Jaccard is then recomputed and filtered, so the output
     (id_a, id_b, jaccard) is deterministic: exactly the pairs with
     fingerprint hamming ≤ max_hamming AND exact Jaccard ≥ threshold.
-    With hash_fn="md5" that CONTRACT is itself oracle-checkable — DuckDB
-    can recompute the md5-simhash fingerprints, the hamming distances,
-    and the exact Jaccard, so the gate checks what the operator promises
+    That CONTRACT is itself oracle-checkable — DuckDB can recompute the
+    md5-simhash fingerprints, the hamming distances, and the exact
+    Jaccard, so the gate checks what the operator promises
     at every scale.  (A plain exact-Jaccard oracle is STRICTER than the
     operator's horizon: NIGHTLY_r9 at sf0.1 found one 0.7-Jaccard pair at
     hamming 13 — simhash's documented ε materializing, not a banding
     recall bug; the md5 oracle form pins the horizon explicitly.)"""
     cand_full = simhash_near_duplicates(
-        df, id_col, text_col, shingle_n, max_hamming, bands, use_arrow,
-        max_bucket=max_bucket, hash_fn=hash_fn,
+        df, id_col, text_col, shingle_n, max_hamming, bands
     )
     cand = attach_intermediates(cand_full.select("id_a", "id_b"), cand_full)
     exact = exact_jaccard_for_pairs(cand, df, id_col, text_col, shingle_n)

@@ -56,6 +56,14 @@ def stratified_hash_sample(
     return df.withColumn("bucket", hash_bucket(F.col(key))).filter(F.col("bucket") < thr)
 
 
+def md5_60(x: Column) -> Column:
+    """First 15 hex chars of md5(x) — 60 bits — as a non-negative bigint.
+    The one text hash every auditable operator uses (hash_frac, SimHash
+    shingles, winnowing sketches): any engine with md5 replays it exactly,
+    which is what the q36, q62 and q63 DuckDB oracles do."""
+    return F.conv(F.substring(F.md5(x.cast("binary")), 1, 15), 16, 10).cast("long")
+
+
 def hash_frac(key: Column, salt: str = "") -> Column:
     """Deterministic uniform fraction in [0, 1) from a row key: the first 15
     hex chars of md5 (60 bits) as a bigint, divided by 2^60.  Fine-grained
@@ -69,8 +77,7 @@ def hash_frac(key: Column, salt: str = "") -> Column:
     is exactly the top 8 bits of the unsalted fraction) and its effective
     rate is silently wrong."""
     salted = F.concat(F.lit(salt), key.cast("string")) if salt else key.cast("string")
-    h = F.conv(F.substring(F.md5(salted.cast("binary")), 1, 15), 16, 10)
-    return h.cast("long").cast("double") / F.lit(float(1 << 60))
+    return md5_60(salted).cast("double") / F.lit(float(1 << 60))
 
 
 def mixture_sample(

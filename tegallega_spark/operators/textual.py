@@ -15,6 +15,8 @@ import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inference
 from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
+from tegallega_spark.operators.sampling import md5_60
+
 # Tiny per-language stopword lists for the n-gram/stopword heuristic.
 # Deliberately small: language ID here is a deterministic heuristic, not a
 # model — mirrors fastText-style scoring with hand-rolled features.
@@ -251,24 +253,22 @@ def fingerprint(text: Column) -> Column:
 
 
 def rolling_hash_fingerprints(
-    text: Column, window: int = 8, keep_every: int = 16, hasher: str = "xxhash64"
+    text: Column, window: int = 8, keep_every: int = 16
 ) -> Column:
     """Winnowing-style document fingerprints: hash every `window`-word
     shingle, keep hashes ≡ 0 (mod keep_every).  array<bigint> sketch usable
     for containment checks at scale.
 
-    hasher: 'xxhash64' (default, fastest — one JVM hash per shingle) or
-    'md5' (first 60 bits of md5 as a non-negative bigint — bit-identical
-    reproducible in any engine with an md5 function, which is what the q62
-    DuckDB oracle does; use it when the sketch must be auditable outside
-    Spark)."""
+    Each shingle hash is the first 60 bits of md5 as a non-negative bigint
+    (sampling.md5_60) — bit-identical reproducible in any engine with an
+    md5 function, which is what the q62 DuckDB oracle does."""
     return rolling_hash_fingerprints_from_tokens(
-        tokens(text), window=window, keep_every=keep_every, hasher=hasher
+        tokens(text), window=window, keep_every=keep_every
     )
 
 
 def rolling_hash_fingerprints_from_tokens(
-    toks: Column, window: int = 8, keep_every: int = 16, hasher: str = "xxhash64"
+    toks: Column, window: int = 8, keep_every: int = 16
 ) -> Column:
     """rolling_hash_fingerprints over a PRE-TOKENIZED array column.
 
@@ -279,14 +279,6 @@ def rolling_hash_fingerprints_from_tokens(
     just by tokenizing once into a stored array column in a prior select
     (the q37 idiom) and shingling from the attribute.  Pass a bare column
     reference here, not a derived expression, to keep that property."""
-    if hasher == "xxhash64":
-        def shingle_hash(g: Column) -> Column:
-            return F.xxhash64(g)
-    elif hasher == "md5":
-        def shingle_hash(g: Column) -> Column:
-            return F.conv(F.substring(F.md5(g.cast("binary")), 1, 15), 16, 10).cast("long")
-    else:
-        raise ValueError(f"unknown hasher {hasher!r}")
     num = F.size(toks) - F.lit(window - 1)
     # guard: sequence(1, 0) DESCENDS ([1, 0]) and slice rejects start 0 —
     # a doc shorter than `window` tokens must yield an empty sketch, not
@@ -295,7 +287,7 @@ def rolling_hash_fingerprints_from_tokens(
         num >= 1,
         F.transform(
             F.sequence(F.lit(1), num),
-            lambda i: shingle_hash(F.concat_ws(" ", F.slice(toks, i, window))),
+            lambda i: md5_60(F.concat_ws(" ", F.slice(toks, i, window))),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     return F.array_sort(

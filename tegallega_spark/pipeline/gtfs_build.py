@@ -333,23 +333,19 @@ def calendar_table(spark: SparkSession) -> DataFrame:
 
 
 def build_gtfs(
-    spark: SparkSession, ref_root: str, on_shapes=None, on_cached=None
+    spark: SparkSession, ref_root: str, on_cached=None
 ) -> dict[str, DataFrame]:
     """The full DAG: routes.json + geojson + schedule CSVs → seven GTFS
     tables (generate_gtfs.py:477-521).
 
-    `on_shapes` (optional callback) receives the persisted shapes frame as
-    soon as its plan exists — a driver can submit its materialization job
-    there so the shape computation overlaps the (driver-side, py4j-bound)
-    construction of the remaining table plans instead of serializing after
-    it.  Plan construction and cluster execution are independent resources;
-    overlapping them is free latency.
-
-    `on_cached` (optional callback) generalizes the same trick to EVERY
-    persisted upstream: it receives (name, frame) for catalog and
-    stops_raw the moment each plan exists, so a driver can warm all three
-    shared caches concurrently with plan construction instead of paying
-    for them inside whichever output job touches them first.
+    `on_cached` (optional callback) receives (name, frame) for each
+    persisted upstream — "catalog", "stops_raw" and "shapes" — as soon as
+    its plan exists.  A driver can submit each materialization job there,
+    so the three shared caches warm concurrently with the (driver-side,
+    py4j-bound) construction of the remaining table plans instead of
+    inside whichever output job touches them first.  Plan construction and
+    cluster execution are independent resources; overlapping them is free
+    latency.
     """
     raw = read_routes_json(spark, f"{ref_root}/routes.json")
     # construct each unnest level ONCE and thread it through — rebuilding
@@ -375,8 +371,8 @@ def build_gtfs(
     schedule = read_schedule_long(spark, f"{ref_root}/route-data/schedule")
 
     shapes = build_shapes_table(catalog, vertices).persist()
-    if on_shapes is not None:
-        on_shapes(shapes)
+    if on_cached is not None:
+        on_cached("shapes", shapes)
     shaped_rels = shapes.select("relation_id", "shape_id").distinct()
 
     # The remaining table plans are independent of one another — construct

@@ -1172,8 +1172,8 @@ def q35(spark, sf_dir):
     # promises: at sf0.1 one 0.7-Jaccard pair sits at hamming 13
     # (NIGHTLY_r9 caught it), which is the method's documented ε, not a
     # recall bug.  The md5 hash family (md5_shingle_hashes) exists so
-    # DuckDB can recompute the identical fingerprints (q62's auditable-
-    # hasher technique).
+    # DuckDB can recompute the identical fingerprints (the same 60-bit
+    # md5 prefix as q62's sketch, sampling.md5_60).
     oracle=r"""
     WITH words AS (
       SELECT doc_id,
@@ -1240,7 +1240,7 @@ def q36(spark, sf_dir):
     d = T(spark, sf_dir, "documents")
     pairs = D.simhash_near_duplicates_verified(
         d, "doc_id", "text", shingle_n=2, max_hamming=12, bands=13,
-        jaccard_threshold=0.7, hash_fn="md5",
+        jaccard_threshold=0.7,
     )
     return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 
@@ -2429,10 +2429,10 @@ def q62(spark, sf_dir):
     """Winnowing-style document fingerprints (Schleimer et al., MOSS):
     hash every 8-word shingle, keep hashes ≡ 0 (mod 16) — a ~1/16-density
     sketch for containment/overlap checks at corpus scale
-    (operators/textual.rolling_hash_fingerprints).  The 'md5' hasher keeps
-    the first 60 bits of md5, which the oracle rebuilds hex-digit-by-digit
-    with shift arithmetic — the sketch is engine-auditable, not a Spark-
-    private hash."""
+    (operators/textual.rolling_hash_fingerprints).  Each shingle hash is
+    the first 60 bits of md5 (sampling.md5_60), which the oracle rebuilds
+    hex-digit-by-digit with shift arithmetic — the sketch is
+    engine-auditable, not a Spark-private hash."""
     d = T(spark, sf_dir, "documents")
     # tokenize ONCE into a stored array column: interpreted HOF lambdas get
     # no subexpression reuse, so shingling directly over tokens(text) would
@@ -2442,7 +2442,7 @@ def q62(spark, sf_dir):
         "doc_id",
         F.explode(
             TXT.rolling_hash_fingerprints_from_tokens(
-                F.col("__toks"), window=8, keep_every=16, hasher="md5"
+                F.col("__toks"), window=8, keep_every=16
             )
         ).alias("fp"),
     )

@@ -275,9 +275,7 @@ def test_md5_simhash_fingerprints_rederivable(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").limit(50)
     got = {
         r["__id"]: r["__fp"]
-        for r in simhash_fingerprints(
-            d, "doc_id", "text", 2, use_arrow=True, hash_fn="md5"
-        ).collect()
+        for r in simhash_fingerprints(d, "doc_id", "text", 2).collect()
     }
     for row in d.select("doc_id", "text").collect():
         words = [w for w in _re.split(r"[^a-z0-9]+", (row.text or "").lower()) if w]
@@ -297,8 +295,7 @@ def test_md5_simhash_fingerprints_rederivable(spark, sf_dir):
     md5_pairs = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
         for r in simhash_near_duplicates_verified(
-            full, "doc_id", "text", shingle_n=2, jaccard_threshold=0.7,
-            hash_fn="md5",
+            full, "doc_id", "text", shingle_n=2, jaccard_threshold=0.7
         ).collect()
     }
     ex2 = {
@@ -306,29 +303,6 @@ def test_md5_simhash_fingerprints_rederivable(spark, sf_dir):
         for r in ngram_jaccard_pairs(full, "doc_id", "text", 2, 0.7).collect()
     }
     assert md5_pairs == ex2 and len(md5_pairs) > 0
-
-
-def test_md5_simhash_no_arrow_fallback_bit_identical(spark, sf_dir):
-    """r9 ADVICE: hash_fn='md5' with use_arrow=False used to silently get
-    the Arrow bitsum UDF anyway.  Now it takes the pure-column fold
-    (md5_simhash_column) — pin that path bit-identical to the Arrow pass
-    over real documents."""
-    from tegallega_spark.operators.dedup import simhash_fingerprints
-
-    d = load_table(spark, sf_dir, "documents").limit(40)
-    arrow = {
-        r["__id"]: r["__fp"]
-        for r in simhash_fingerprints(
-            d, "doc_id", "text", 2, use_arrow=True, hash_fn="md5"
-        ).collect()
-    }
-    cols = {
-        r["__id"]: r["__fp"]
-        for r in simhash_fingerprints(
-            d, "doc_id", "text", 2, use_arrow=False, hash_fn="md5"
-        ).collect()
-    }
-    assert cols == arrow and len(cols) == 40
 
 
 def test_embedding_all_pairs_equals_brute_force(spark, sf_dir):

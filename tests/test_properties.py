@@ -15,6 +15,8 @@ from tegallega_spark.functions.timecodec import (
 )
 from tegallega_spark.operators.stateful import (
     MIN_SPACING_M,
+    _make_thin_batch,
+    _stitch_batch,
     _stitch_group,
     _thin_group,
 )
@@ -89,6 +91,87 @@ def test_thinning_invariant(points):
         if last is not None and not row.is_real:
             assert hav_m(last, row.lat) >= MIN_SPACING_M - 1e-9
         last = row.lat
+
+
+# Production runs the multi-relation batch kernels (apply_sorted_groups
+# feeds them whole relations, sorted and concatenated); each must equal the
+# per-relation reference above, concatenated in key order.  Coordinates mix
+# a coarse grid (so way endpoints coincide and the reversal branch fires)
+# with free floats.
+_coord = st.one_of(
+    st.sampled_from([0.0, 0.5, 1.0]),
+    st.floats(min_value=-1, max_value=1, allow_nan=False),
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.lists(
+            st.lists(st.tuples(_coord, _coord), min_size=1, max_size=5),
+            min_size=1,
+            max_size=4,
+        ),
+        min_size=1,
+        max_size=5,
+    ),
+    st.randoms(use_true_random=False),
+)
+def test_stitch_batch_equals_per_relation_reference(relations, rnd):
+    rows = []
+    for r, ways in enumerate(relations):
+        orders = sorted(rnd.sample(range(10), len(ways)))
+        for wo, way in zip(orders, ways):
+            for vi, (lon, lat) in enumerate(way):
+                rows.append((f"r{r}", wo, vi, lon, lat))
+    rnd.shuffle(rows)
+    pdf = pd.DataFrame(
+        rows, columns=["relation_id", "way_order", "vertex_idx", "lon", "lat"]
+    ).sort_values(["relation_id", "way_order", "vertex_idx"], ignore_index=True)
+    want = [
+        t
+        for _, g in pdf.groupby("relation_id", sort=True)
+        for t in _stitch_group(g).itertuples(index=False, name=None)
+    ]
+    got = list(_stitch_batch(pdf).itertuples(index=False, name=None))
+    assert got == want
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.lists(
+            st.tuples(
+                st.floats(min_value=0, max_value=0.01, allow_nan=False),
+                st.floats(min_value=0, max_value=0.01, allow_nan=False),
+                st.booleans(),
+            ),
+            min_size=1,
+            max_size=20,
+        ),
+        min_size=1,
+        max_size=5,
+    ),
+    st.randoms(use_true_random=False),
+)
+def test_thin_batch_equals_per_relation_reference(relations, rnd):
+    rows = []
+    for r, stops in enumerate(relations):
+        fracs = rnd.sample(range(100), len(stops))
+        for i, ((lon, lat, is_real), frac) in enumerate(zip(stops, fracs)):
+            rows.append((f"r{r}", f"r{r}s{i}", lon, lat, float(frac), is_real))
+    pdf = pd.DataFrame(
+        rows,
+        columns=["relation_id", "stop_id", "lon", "lat", "frac_idx", "is_real"],
+    ).sort_values(["relation_id", "frac_idx"], ignore_index=True)
+    want = pd.concat(
+        [_thin_group(g) for _, g in pdf.groupby("relation_id", sort=True)]
+    )
+    got = _make_thin_batch("relation_id")(pdf)
+    assert list(got["stop_id"]) == list(want["stop_id"])
+    assert list(got.itertuples(index=False, name=None)) == list(
+        want.itertuples(index=False, name=None)
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,8 @@ measured counts) and from explicit per-call arguments, never from the
 process environment: an env knob is a hidden switch that no query, test
 or bench run sets, so the shape it selects goes untested.  The one
 exception is `session.get_spark`, which reads the five settings that size
-the session to its host or cluster."""
+the session to its host or cluster.  Likewise the one auditable text hash
+is defined in one place, so every operator and oracle agree on it."""
 
 from __future__ import annotations
 
@@ -79,3 +80,35 @@ def test_only_get_spark_reads_the_environment():
     stray = [r for r in reads if r[:3] not in ALLOWED_READS]
     assert not stray, f"env reads outside session.get_spark's five settings: {stray}"
     assert sorted(r[:3] for r in reads) == sorted(ALLOWED_READS)
+
+
+def _call_name(node) -> str | None:
+    """`F.conv(...)` / `conv(...)` → "conv"; None for anything else."""
+    if not isinstance(node, ast.Call):
+        return None
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _is_md5_60(node) -> bool:
+    """conv(substring(md5(x), 1, 15), ...) — the 60-bit md5 prefix."""
+    if _call_name(node) != "conv" or not node.args:
+        return False
+    sub = node.args[0]
+    if _call_name(sub) != "substring" or len(sub.args) != 3:
+        return False
+    bounds = [a.value for a in sub.args[1:] if isinstance(a, ast.Constant)]
+    return _call_name(sub.args[0]) == "md5" and bounds == [1, 15]
+
+
+def test_md5_60_hash_is_written_once():
+    """The auditable text hash (first 15 hex chars of md5, as an integer)
+    is what the q36, q62 and q63 DuckDB oracles replay; every operator must
+    reach it through the one helper so the copies cannot drift apart."""
+    hits = [
+        (f.relative_to(PACKAGE).as_posix(), node.lineno)
+        for f in sorted(PACKAGE.rglob("*.py"))
+        for node in ast.walk(ast.parse(f.read_text(), filename=str(f)))
+        if _is_md5_60(node)
+    ]
+    assert len(hits) == 1, f"md5-60 expression written out at {hits}"

@@ -755,23 +755,41 @@ def test_mixture_sample_scan_side_filter(spark):
 
 
 def test_rolling_fingerprints_md5_hasher_matches_reference_hash(spark):
-    """The md5 hasher is the documented first-60-bits-of-md5 value — pin one
-    shingle's fingerprint against hashlib computed in plain Python."""
+    """The shingle hash is the documented first-60-bits-of-md5 value
+    (sampling.md5_60) — pin one ASCII and one non-ASCII shingle's
+    fingerprint, and hash_frac's salted fraction, against hashlib computed
+    in plain Python."""
     import hashlib
 
+    from tegallega_spark.operators.sampling import hash_frac
     from tegallega_spark.operators.textual import rolling_hash_fingerprints
 
-    words = [f"w{i}" for i in range(8)]
-    text = " ".join(words)
-    expected = int(hashlib.md5(text.encode()).hexdigest()[:15], 16)
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    out = df.select(
-        rolling_hash_fingerprints(F.col("text"), window=8, keep_every=1,
-                                  hasher="md5").alias("fps")
-    ).collect()[0]["fps"]
-    assert out == [expected]
-    with pytest.raises(ValueError, match="unknown hasher"):
-        df.select(rolling_hash_fingerprints(F.col("text"), hasher="sha1"))
+    def md5_60(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    ascii_text = " ".join(f"w{i}" for i in range(8))
+    utf8_text = "café naïve über straße ñandú été jalan 東京"
+    df = spark.createDataFrame(
+        [(1, ascii_text), (2, utf8_text)], "doc_id long, text string"
+    )
+    out = {
+        r.doc_id: r.fps
+        for r in df.select(
+            "doc_id",
+            rolling_hash_fingerprints(F.col("text"), window=8, keep_every=1)
+            .alias("fps"),
+        ).collect()
+    }
+    assert out == {1: [md5_60(ascii_text)], 2: [md5_60(utf8_text)]}
+
+    keys = ["1", "42", "doc-東京", "ünïcode"]
+    kdf = spark.createDataFrame([(k,) for k in keys], "k string")
+    got = {
+        r.k: r.f
+        for r in kdf.select("k", hash_frac(F.col("k"), salt="mix|").alias("f"))
+        .collect()
+    }
+    assert got == {k: md5_60("mix|" + k) / 2**60 for k in keys}
 
 
 def test_dedupe_paragraphs_keep_first_order(spark):
