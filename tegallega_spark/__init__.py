@@ -13,7 +13,7 @@ Layout:
     schemas     — explicit StructTypes for every table (SURVEY §1)
     functions/  — scalar column-expression builders (SURVEY §2.8)
     operators/  — relational + ML-data operators (joins, dedup, similarity,
-                  windows, stateful scans; SURVEY §2.3–2.7, §7)
+                  spatial, stateful scans; SURVEY §2.3–2.7, §7)
     sources/    — nested-JSON / GeoJSON / two-header-CSV / GTFS readers
                   (SURVEY §2.1)
     pipeline/   — the end-to-end GTFS build (generate_gtfs.py parity)

@@ -8,7 +8,6 @@ zero serialization overhead.
 from tegallega_spark.functions.geo import (  # noqa: F401
     haversine_km,
     haversine_m,
-    coords_equal,
     lerp,
 )
 from tegallega_spark.functions.timecodec import (  # noqa: F401
@@ -20,6 +19,7 @@ from tegallega_spark.functions.ids import (  # noqa: F401
     shape_id_for,
     trip_id_train,
     trip_id_bus,
+    trip_id_pbf,
     block_id_for,
     virtual_stop_id,
 )
@@ -28,6 +28,4 @@ from tegallega_spark.functions.text import (  # noqa: F401
     detect_direction,
     extract_code,
     origin_dest_via,
-    sanitize_filename,
-    hex_to_kml_color,
 )

@@ -1,6 +1,6 @@
 """Geodesic column expressions (reference: generate_gtfs.py:18-24 [km, R=6371],
-update-routes.js:188-203 [m, R=6371e3], :106-108 [tolerance compare],
-:229-232/:304-307 [linear interpolation]).
+update-routes.js:188-203 [m, R=6371e3], :229-232/:304-307 [linear
+interpolation]).
 
 All pure Column math — no UDFs, fully codegen'd, vectorized by Tungsten.
 """
@@ -36,11 +36,6 @@ def haversine_km(lon1, lat1, lon2, lat2) -> Column:
 def haversine_m(lon1, lat1, lon2, lat2) -> Column:
     """Great-circle distance in meters (reference update-routes.js:188-203)."""
     return _haversine(lon1, lat1, lon2, lat2, EARTH_RADIUS_M)
-
-
-def coords_equal(lon1, lat1, lon2, lat2, tol: float = 1e-6) -> Column:
-    """Tolerance coordinate equality (reference update-routes.js:106-108)."""
-    return (F.abs(lon1 - lon2) < tol) & (F.abs(lat1 - lat2) < tol)
 
 
 def lerp(a: Column, b: Column, t: Column) -> Column:

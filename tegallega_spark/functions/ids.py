@@ -28,6 +28,12 @@ def trip_id_bus(agency_id: Column, group_id: Column, direction_id: Column, n: Co
     )
 
 
+def trip_id_pbf(relation_id: Column, n: Column) -> Column:
+    """'t-{relationId}-{n}' — the PBF path's trips (pipeline/pbf_extract.py),
+    which have no agency or group to name them by."""
+    return F.concat(F.lit("t-"), relation_id, F.lit("-"), n.cast("string"))
+
+
 def block_id_for(agency_id: Column, group_id: Column, n: Column, is_loop: Column) -> Column:
     """'{agency}{group}{n}' iff loop route else empty (generate_gtfs.py:252-254,416-418)."""
     return F.when(is_loop, F.concat(agency_id, group_id, n.cast("string"))).otherwise(F.lit(""))

@@ -1,7 +1,6 @@
-"""Route-name string functions (reference convert-routes-json/convert.py:75-105,
-convert-geojson-kml.py:5-15, convert-geojson-shp.py:6-7).
-
-All regexp/substring column expressions — no UDFs.
+"""Route-name string functions (reference convert-routes-json/convert.py:75-105)
+as regexp/substring column expressions — no UDFs — plus the driver-side
+sink file-name rule (convert-geojson-shp.py:6-7).
 """
 
 from __future__ import annotations
@@ -48,30 +47,10 @@ def origin_dest_via(col: Column) -> tuple[Column, Column, Column]:
     return origin, dest, via
 
 
-def sanitize_filename(col: Column) -> Column:
-    """Keep alnum/space/dash/underscore (convert-geojson-kml.py:5-6)."""
-    return F.regexp_replace(col, r"[^A-Za-z0-9 _-]", "_")
-
-
 def sanitize_filename_py(name: str) -> str:
-    """Driver-side twin of sanitize_filename for per-route sink paths —
-    exactly the reference's expression (convert-geojson-shp.py:6-7),
-    including the trailing .strip()."""
+    """Per-route sink file name: keep alnum/space/dash/underscore, exactly
+    the reference's expression (convert-geojson-shp.py:6-7), including the
+    trailing .strip()."""
     return "".join(
         c if c.isalnum() or c in (" ", "-", "_") else "_" for c in name
     ).strip()
-
-
-def hex_to_kml_color(col: Column, alpha: str = "ff") -> Column:
-    """'#rgb'/'#rrggbb' → 'aabbggrr' (convert-geojson-kml.py:8-15)."""
-    c = F.regexp_replace(col, "^#", "")
-    c6 = F.when(
-        F.length(c) == 3,
-        F.concat(
-            F.substring(c, 1, 1), F.substring(c, 1, 1),
-            F.substring(c, 2, 1), F.substring(c, 2, 1),
-            F.substring(c, 3, 1), F.substring(c, 3, 1),
-        ),
-    ).otherwise(c)
-    r, g, b = F.substring(c6, 1, 2), F.substring(c6, 3, 2), F.substring(c6, 5, 2)
-    return F.lower(F.concat(F.lit(alpha), b, g, r))

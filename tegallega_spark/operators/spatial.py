@@ -1,11 +1,12 @@
-"""Spatial join / projection operators (SURVEY.md §2.3 J3-J5, §2.5 W10).
+"""Spatial join / projection operators (SURVEY.md §2.3 J4-J5, §2.5 W10).
 
-The reference brute-forces nearest-neighbor per stop against its route's
-shape (generate_gtfs.py:354-365, O(stops × shape_pts) Python loops) and
-projects stops onto segments (update-routes.js:206-246).  Here the same
-semantics are an equi-join on the route key followed by a min_by argmin —
-one shuffle, broadcastable shape side, and the candidate space bounded by
-the route key (never a global cross join).
+The reference projects stops onto segments with O(stops × segments)
+Python loops (update-routes.js:206-246).  Here the same semantics are an
+equi-join on the route key followed by an argmin — one shuffle,
+broadcastable shape side, and the candidate space bounded by the route
+key (never a global cross join).  The nearest-vertex argmin of the GTFS
+build (J3, generate_gtfs.py:354-365) is written inline in
+pipeline/gtfs_build.py, its only user.
 """
 
 from __future__ import annotations
@@ -15,35 +16,6 @@ import pyspark.sql.functions as F
 
 from tegallega_spark.functions.geo import haversine_km, haversine_m, lerp
 from tegallega_spark.functions.ids import virtual_stop_id
-
-
-def nearest_vertex_join(
-    stops: DataFrame,
-    shape_pts: DataFrame,
-    key: str = "relation_id",
-    stop_id: str = "stop_id",
-) -> DataFrame:
-    """For every stop, the closest vertex of its route's polyline and that
-    vertex's cumulative distance (reference generate_gtfs.py:354-365).
-
-    Equi-join on the route key bounds candidates to one route's vertices;
-    min_by picks the argmin without a window sort.  Shape side per key is
-    small (≤ ~400 vertices) so AQE broadcasts it.
-    """
-    joined = stops.alias("s").join(shape_pts.alias("p"), key)
-    dist = haversine_km(
-        F.col("s.lon"), F.col("s.lat"), F.col("p.lon"), F.col("p.lat")
-    )
-    return (
-        joined.withColumn("__d", dist)
-        .groupBy(key, stop_id)
-        .agg(
-            F.min_by(F.struct("p.vertex_idx", "p.cum_dist"), F.col("__d")).alias("__nn"),
-            F.min("__d").alias("nn_dist_km"),
-        )
-        .select(key, stop_id, F.col("__nn.vertex_idx").alias("nn_vertex_idx"),
-                F.col("__nn.cum_dist").alias("shape_dist"), "nn_dist_km")
-    )
 
 
 def project_onto_segments(

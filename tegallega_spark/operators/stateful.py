@@ -22,8 +22,9 @@ COORD_TOL = 1e-6          # update-routes.js:106-108
 MIN_SPACING_M = 150.0     # update-routes.js:282-283
 
 
-def _close(a: tuple[float, float], b: tuple[float, float], tol: float = COORD_TOL) -> bool:
-    return abs(a[0] - b[0]) < tol and abs(a[1] - b[1]) < tol
+def _close(a: tuple[float, float], b: tuple[float, float]) -> bool:
+    """Tolerance coordinate equality (update-routes.js:106-108)."""
+    return abs(a[0] - b[0]) < COORD_TOL and abs(a[1] - b[1]) < COORD_TOL
 
 
 def _haversine_m(lon1: float, lat1: float, lon2: float, lat2: float) -> float:

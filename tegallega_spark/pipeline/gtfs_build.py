@@ -8,6 +8,10 @@ preserved deliberately for hash parity (SURVEY §7 hard part 2):
 - train stop_seq counts only non-empty column pairs (:268-324),
 - agency rows are not deduplicated (:54-60).
 
+The shape, travel-time, headway and dwell rules are module functions that
+pipeline/pbf_extract.gtfs_from_pbf calls too, with its own orderings; the
+id grammar is functions/ids.py.
+
 Scale notes: all windows partition by route/trip keys (never global, except
 the documented stop_counter edge path); the stop×shape argmin join is an
 equi-join on relation_id followed by min_by — candidates bounded per route,
@@ -20,6 +24,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from tegallega_spark.functions.geo import haversine_km
+from tegallega_spark.functions.ids import (
+    block_id_for,
+    shape_id_for,
+    trip_id_bus,
+    trip_id_train,
+)
 from tegallega_spark.functions.timecodec import (
     gtfs_time_to_seconds,
     hhmm_to_seconds,
@@ -28,6 +38,8 @@ from tegallega_spark.functions.timecodec import (
 from tegallega_spark.sources.geojson import read_stops, read_way_vertices
 from tegallega_spark.sources.routes_json import (
     agencies_table,
+    categories,
+    fixed_groups,
     read_routes_json,
     route_catalog,
     route_groups_table,
@@ -94,18 +106,18 @@ def build_stops_table(catalog: DataFrame, stops_raw: DataFrame) -> DataFrame:
     )
 
 
-def build_shapes_table(catalog: DataFrame, vertices: DataFrame) -> DataFrame:
-    """shapes.txt: order-preserving flatten (W7) + lag distance (W1) +
-    cumulative sum (W2) + sequence numbers (W3) — generate_gtfs.py:127-186.
+def shape_points(vertices: DataFrame, order: tuple[str, ...]) -> DataFrame:
+    """shapes.txt rows from each relation's polyline vertices in `order`:
+    lag distance (W1) + cumulative sum (W2) + sequence numbers (W3) —
+    generate_gtfs.py:163-178.
 
     Window partitioned per relation; addition order matches the reference's
-    sequential accumulation so the IEEE result is bit-identical.
+    sequential accumulation so the IEEE result is bit-identical, and bround
+    is Python round()'s banker's rounding (:178).
     """
-    rels = catalog.select("relation_id").distinct()
-    v = vertices.join(rels, "relation_id")
-    w = Window.partitionBy("relation_id").orderBy("feature_idx", "line_idx", "vertex_idx")
+    w = Window.partitionBy("relation_id").orderBy(*order)
     frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    with_prev = v.withColumn("__plon", F.lag("lon").over(w)).withColumn(
+    with_prev = vertices.withColumn("__plon", F.lag("lon").over(w)).withColumn(
         "__plat", F.lag("lat").over(w)
     )
     seg = F.when(F.col("__plon").isNull(), F.lit(0.0)).otherwise(
@@ -114,13 +126,69 @@ def build_shapes_table(catalog: DataFrame, vertices: DataFrame) -> DataFrame:
     return (
         with_prev.withColumn("__seg", seg)
         .select(
-            F.concat(F.lit("shape_"), F.col("relation_id")).alias("shape_id"),
+            shape_id_for(F.col("relation_id")).alias("shape_id"),
             F.col("lon").alias("shape_pt_lon"),
             F.col("lat").alias("shape_pt_lat"),
             F.row_number().over(w).alias("shape_pt_sequence"),
             F.bround(F.sum("__seg").over(frame), 6).alias("shape_dist_traveled"),
             F.col("relation_id"),
         )
+    )
+
+
+def stop_travel_times(stops: DataFrame, order: tuple) -> DataFrame:
+    """Adds seq0 (0-based stop position in `order` within its relation)
+    and cum_travel, seconds from the first stop: each gap is
+    max(haversine, 0.01 km) driven at 30 km/h up to 5 km, else 55 km/h
+    (W4 + W5, generate_gtfs.py:373-387)."""
+    w = Window.partitionBy("relation_id").orderBy(*order)
+    prev_lon = F.lag("lon").over(w)
+    gap = haversine_km(prev_lon, F.lag("lat").over(w), F.col("lon"), F.col("lat"))
+    dist = F.greatest(gap, F.lit(0.01))
+    speed = F.when(dist <= 5.0, F.lit(30.0)).otherwise(F.lit(55.0))
+    seg_time = F.when(prev_lon.isNull(), F.lit(0.0)).otherwise(dist / speed * 3600.0)
+    frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return (
+        stops.withColumn("seq0", F.row_number().over(w) - 1)
+        .withColumn("__seg_t", seg_time)
+        .withColumn("cum_travel", F.sum("__seg_t").over(frame))
+    )
+
+
+def headway_trips(params: DataFrame) -> DataFrame:
+    """One row per synthesized trip of every route with num_trips ≥ 1
+    (W11, generate_gtfs.py:398-410): idx 0..n-1 and
+    trip_start = start_sec + idx·headway, headway = (end_sec − start_sec)
+    / (n − 1), 0 for a single trip.  trip_start stays unrounded: the
+    reference rounds once, at the stop time (dwell_stop_times)."""
+    n = F.col("num_trips")
+    headway = F.when(
+        n > 1, (F.col("end_sec") - F.col("start_sec")) / (n - 1).cast("double")
+    ).otherwise(F.lit(0.0))
+    return (
+        params.filter(n >= 1)
+        .withColumn("headway", headway)
+        .withColumn("idx", F.explode(F.sequence(F.lit(0), n - 1)))
+        .withColumn("trip_start", F.col("start_sec") + F.col("idx") * F.col("headway"))
+    )
+
+
+def dwell_stop_times(trips: DataFrame, timed: DataFrame) -> DataFrame:
+    """stop_times for every trip (relation_id, trip_id, trip_start) × every
+    stop of its relation in stop_travel_times order (W12,
+    generate_gtfs.py:430-443): arrival = trip_start + cum_travel + seq0·10
+    — the dwell accumulates per stop, kept as the reference has it — and
+    departure = arrival + 10, each rounded once to H:MM:SS."""
+    st = trips.join(
+        timed.select("relation_id", "stop_id", "seq0", "cum_travel"), "relation_id"
+    )
+    arrival = F.col("trip_start") + F.col("cum_travel") + F.col("seq0") * 10
+    return st.select(
+        "trip_id",
+        "stop_id",
+        (F.col("seq0") + 1).alias("stop_sequence"),
+        seconds_to_hhmmss(arrival).alias("arrival_time"),
+        seconds_to_hhmmss(arrival + 10).alias("departure_time"),
     )
 
 
@@ -136,11 +204,10 @@ def _train_trips_and_times(
         schedule_long.withColumnRenamed("direction", "direction_id"),
         ["agency_id", "direction_id", "relation_id"],
     )
-    trip_id = F.concat(F.lit("t-"), F.col("agency_id"), F.col("group_id"), F.col("trip_num"))
-    block_id = F.when(
-        F.col("loop") == "yes",
-        F.concat(F.col("agency_id"), F.col("group_id"), F.col("trip_num")),
-    ).otherwise(F.lit(""))
+    trip_id = trip_id_train(F.col("agency_id"), F.col("group_id"), F.col("trip_num"))
+    block_id = block_id_for(
+        F.col("agency_id"), F.col("group_id"), F.col("trip_num"), F.col("loop") == "yes"
+    )
 
     trips = (
         rows.groupBy(
@@ -221,26 +288,12 @@ def _bus_trips_and_times(
     projected = route_stops.join(argmin, ["relation_id", "feature_idx"], "left")
 
     # ordering (:367-371): by (shape_dist, real-first), stable on feature
-    # order; routes with no shape keep pure feature order (sort not applied)
+    # order; routes with no shape keep pure feature order (sort not applied);
+    # segment + cumulative travel times in that order (:373-387)
     has_shape = F.col("shape_dist").isNotNull()
     sort1 = F.when(has_shape, F.col("shape_dist")).otherwise(F.lit(0.0))
     sort2 = F.when(has_shape & ~F.col("is_real"), 1).otherwise(0)
-    w_route = Window.partitionBy("relation_id").orderBy(sort1, sort2, "feature_idx")
-    ordered = projected.withColumn("seq0", F.row_number().over(w_route) - 1)
-
-    # segment + cumulative travel times (:373-387)
-    gap = haversine_km(
-        F.lag("lon").over(w_route), F.lag("lat").over(w_route), F.col("lon"), F.col("lat")
-    )
-    dist = F.greatest(gap, F.lit(0.01))
-    speed = F.when(dist <= 5.0, F.lit(30.0)).otherwise(F.lit(55.0))
-    seg_time = F.when(F.lag("lon").over(w_route).isNull(), F.lit(0.0)).otherwise(
-        dist / speed * 3600.0
-    )
-    frame = w_route.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    timed = ordered.withColumn("__seg_t", seg_time).withColumn(
-        "cum_travel", F.sum("__seg_t").over(frame)
-    )
+    timed = stop_travel_times(projected, (sort1, sort2, "feature_idx"))
 
     # per-route trip generation parameters (:389-401)
     routes_with_stops = bus.join(
@@ -262,30 +315,17 @@ def _bus_trips_and_times(
     )
     params = params.withColumn(
         "trip_offset", F.coalesce(F.sum("num_trips").over(w_count), F.lit(0))
-    ).filter(F.col("num_trips") >= 1)
-
-    headway = F.when(
-        F.col("num_trips") > 1,
-        (F.col("end_sec") - F.col("start_sec"))
-        / (F.col("num_trips") - 1).cast("double"),
-    ).otherwise(F.lit(0.0))
-    exploded = params.withColumn("headway", headway).withColumn(
-        "idx", F.explode(F.sequence(F.lit(0), F.col("num_trips") - 1))
     )
-    exploded = exploded.withColumn(
+    exploded = headway_trips(params).withColumn(
         "trip_num", F.col("trip_offset") + F.col("idx") + 1
-    ).withColumn(
-        "trip_start", F.col("start_sec") + F.col("idx") * F.col("headway")
     )
 
-    trip_id = F.concat(
-        F.lit("t-"), F.col("agency_id"), F.col("group_id"),
-        F.col("direction_id").cast("string"), F.col("trip_num").cast("string"),
+    trip_id = trip_id_bus(
+        F.col("agency_id"), F.col("group_id"), F.col("direction_id"), F.col("trip_num")
     )
-    block_id = F.when(
-        F.col("loop") == "yes",
-        F.concat(F.col("agency_id"), F.col("group_id"), F.col("trip_num").cast("string")),
-    ).otherwise(F.lit(""))
+    block_id = block_id_for(
+        F.col("agency_id"), F.col("group_id"), F.col("trip_num"), F.col("loop") == "yes"
+    )
 
     shaped_rels = shapes.select("relation_id", "shape_id").distinct()
     trips = (
@@ -301,24 +341,10 @@ def _bus_trips_and_times(
         )
     )
 
-    # stop_times (:430-443): every trip × every ordered stop of its route;
-    # arrival = trip_start + cum_travel + seq0*10, departure = arrival + 10
-    tx = exploded.select(
-        "relation_id", trip_id.alias("trip_id"), "trip_start"
-    )
-    st = tx.join(
-        timed.select("relation_id", "stop_id", "seq0", "cum_travel"), "relation_id"
-    )
-    arrival = F.col("trip_start") + F.col("cum_travel") + F.col("seq0") * 10
-    stop_times = st.select(
-        "trip_id",
-        "stop_id",
-        (F.col("seq0") + 1).alias("stop_sequence"),
-        seconds_to_hhmmss(arrival).alias("arrival_time"),
-        seconds_to_hhmmss(arrival + 10).alias("departure_time"),
-        F.lit(0).alias("pickup_type"),
-        F.lit(0).alias("drop_off_type"),
-    )
+    # stop_times (:430-443): every trip × every ordered stop of its route
+    stop_times = dwell_stop_times(
+        exploded.select("relation_id", trip_id.alias("trip_id"), "trip_start"), timed
+    ).withColumns({"pickup_type": F.lit(0), "drop_off_type": F.lit(0)})
     return trips, stop_times
 
 
@@ -347,21 +373,16 @@ def build_gtfs(
     cluster execution are independent resources; overlapping them is free
     latency.
     """
-    raw = read_routes_json(spark, f"{ref_root}/routes.json")
     # construct each unnest level ONCE and thread it through — rebuilding
     # categories/fixed_groups per consumer triples the driver-side plan
     # construction (measured ~2 s of py4j/analysis at 1×)
-    from tegallega_spark.sources.routes_json import categories, fixed_groups
-
-    cats = categories(raw)
-    grps = fixed_groups(raw, cats=cats)
+    cats = categories(read_routes_json(spark, f"{ref_root}/routes.json"))
+    grps = fixed_groups(cats)
     # the catalog, stop features, and shapes feed 3-5 output tables each;
     # persist them so the 7 table materializations share one computation of
     # the common upstream (at scale these are exactly the datasets worth
     # caching: small dims + the reused shape fact)
-    catalog = route_catalog(
-        spark, f"{ref_root}/routes.json", raw=raw, groups=grps
-    ).persist()
+    catalog = route_catalog(grps).persist()
     if on_cached is not None:
         on_cached("catalog", catalog)
     stops_raw = read_stops(spark, f"{ref_root}/route-data/geojson").persist()
@@ -370,7 +391,12 @@ def build_gtfs(
     vertices = read_way_vertices(spark, f"{ref_root}/route-data/geojson")
     schedule = read_schedule_long(spark, f"{ref_root}/route-data/schedule")
 
-    shapes = build_shapes_table(catalog, vertices).persist()
+    # shapes.txt over the order-preserving flatten (W7) of the catalog's
+    # relations (generate_gtfs.py:127-186)
+    rels = catalog.select("relation_id").distinct()
+    shapes = shape_points(
+        vertices.join(rels, "relation_id"), ("feature_idx", "line_idx", "vertex_idx")
+    ).persist()
     if on_cached is not None:
         on_cached("shapes", shapes)
     shaped_rels = shapes.select("relation_id", "shape_id").distinct()
@@ -388,8 +414,8 @@ def build_gtfs(
         f_train = ex.submit(_train_trips_and_times, catalog, schedule, shaped_rels)
         f_bus = ex.submit(_bus_trips_and_times, catalog, stops_raw, shapes)
         f_stops = ex.submit(build_stops_table, catalog, stops_raw)
-        f_agency = ex.submit(agencies_table, raw, cats)
-        routes = route_groups_table(raw, groups=grps)
+        f_agency = ex.submit(agencies_table, cats)
+        routes = route_groups_table(grps)
         train_trips, train_times = f_train.result()
         bus_trips, bus_times = f_bus.result()
 

@@ -14,6 +14,9 @@ repo's own pieces instead:
       → headway trips           W11 explode(sequence)
       → dwell stop_times        W4/W5 segment speeds + seq*10 dwell
 
+The last four steps are build_gtfs's own rules (pipeline/gtfs_build.py),
+called with the extract chain's orderings.
+
 No network anywhere: the single fetch boundary of the extract chain is
 satisfied from one driver-side parse of the PBF.  OSM carries no timetable
 data, so trip synthesis parameters (num_trips, first/last departure) are
@@ -35,13 +38,15 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from tegallega_spark.functions.geo import haversine_km
-from tegallega_spark.functions.timecodec import hhmm_to_seconds, seconds_to_hhmmss
-from tegallega_spark.operators.windows import (
-    cumulative_shape_distance,
-    headway_trip_starts,
-)
+from tegallega_spark.functions.ids import shape_id_for, trip_id_pbf
+from tegallega_spark.functions.timecodec import hhmm_to_seconds
 from tegallega_spark.pipeline.extract import extract_route
+from tegallega_spark.pipeline.gtfs_build import (
+    dwell_stop_times,
+    headway_trips,
+    shape_points,
+    stop_travel_times,
+)
 from tegallega_spark.sources.overpass import FetchFn
 from tegallega_spark.sources.osm_pbf import read_pbf
 
@@ -159,35 +164,10 @@ def gtfs_from_pbf(
     for p in stop_parts[1:]:
         stops = stops.unionByName(p)
 
-    # shapes.txt: W1+W2+W3 over the stitched polyline
-    shapes = cumulative_shape_distance(
-        stitched, key="relation_id", order_col="vertex_idx"
-    ).select(
-        F.concat(F.lit("shape_"), F.col("relation_id")).alias("shape_id"),
-        F.col("lon").alias("shape_pt_lon"),
-        F.col("lat").alias("shape_pt_lat"),
-        F.col("seq").alias("shape_pt_sequence"),
-        F.col("cum_dist").alias("shape_dist_traveled"),
-        "relation_id",
-    )
-
-    # ordered stops + segment/cumulative travel times (W4+W5, the bus
-    # branch's speed rule: max(gap,0.01) km at 30 km/h ≤5 km else 55)
-    w = Window.partitionBy("relation_id").orderBy("frac_idx")
-    frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap = haversine_km(
-        F.lag("lon").over(w), F.lag("lat").over(w), F.col("lon"), F.col("lat")
-    )
-    dist = F.greatest(gap, F.lit(0.01))
-    speed = F.when(dist <= 5.0, F.lit(30.0)).otherwise(F.lit(55.0))
-    seg_t = F.when(F.lag("lon").over(w).isNull(), F.lit(0.0)).otherwise(
-        dist / speed * 3600.0
-    )
-    timed = (
-        stops.withColumn("seq0", F.row_number().over(w) - 1)
-        .withColumn("__seg_t", seg_t)
-        .withColumn("cum_time_s", F.sum("__seg_t").over(frame))
-    )
+    # shapes.txt (W1-W3) and ordered stops with travel times (W4+W5):
+    # build_gtfs's rules, in the extract chain's vertex / frac_idx order
+    shapes = shape_points(stitched, ("vertex_idx",))
+    timed = stop_travel_times(stops, ("frac_idx",))
 
     # routes.txt from relation tags (driver-side: #relations rows)
     route_rows = [
@@ -206,39 +186,24 @@ def gtfs_from_pbf(
         "route_type int",
     )
 
-    # trips via headway synthesis (W11)
-    params = routes.select(F.col("route_id").alias("relation_id")).withColumn(
-        "num_trips", F.lit(num_trips)
-    ).withColumn(
-        "first_sec", hhmm_to_seconds(F.lit(first_departure))
-    ).withColumn("last_sec", hhmm_to_seconds(F.lit(last_departure)))
-    exploded = headway_trip_starts(params)
-    trip_id = F.concat(
-        F.lit("t-"), F.col("relation_id"), F.lit("-"),
-        (F.col("trip_idx") + 1).cast("string"),
+    # trips via headway synthesis (W11) and dwell stop_times (W12)
+    params = routes.select(
+        F.col("route_id").alias("relation_id"),
+        F.lit(num_trips).alias("num_trips"),
+        hhmm_to_seconds(F.lit(first_departure)).alias("start_sec"),
+        hhmm_to_seconds(F.lit(last_departure)).alias("end_sec"),
+    )
+    exploded = headway_trips(params).withColumn(
+        "trip_id", trip_id_pbf(F.col("relation_id"), F.col("idx") + 1)
     )
     trips = exploded.select(
         F.col("relation_id").alias("route_id"),
-        trip_id.alias("trip_id"),
-        F.lit("everyday").alias("service_id"),
-        F.concat(F.lit("shape_"), F.col("relation_id")).alias("shape_id"),
-    )
-
-    # stop_times: every trip × its route's ordered stops; dwell = seq*10
-    # cumulative + 10 s at the stop (the reference bus rule,
-    # generate_gtfs.py:430-443)
-    tx = exploded.select("relation_id", trip_id.alias("trip_id"), "trip_start_sec")
-    st = tx.join(
-        timed.select("relation_id", "stop_id", "seq0", "cum_time_s"),
-        "relation_id",
-    )
-    arrival = F.col("trip_start_sec") + F.col("cum_time_s") + F.col("seq0") * 10
-    stop_times = st.select(
         "trip_id",
-        "stop_id",
-        (F.col("seq0") + 1).alias("stop_sequence"),
-        seconds_to_hhmmss(arrival).alias("arrival_time"),
-        seconds_to_hhmmss(arrival + 10).alias("departure_time"),
+        F.lit("everyday").alias("service_id"),
+        shape_id_for(F.col("relation_id")).alias("shape_id"),
+    )
+    stop_times = dwell_stop_times(
+        exploded.select("relation_id", "trip_id", "trip_start"), timed
     )
 
     # stops.txt: first-wins dedup by stop_id (A1)

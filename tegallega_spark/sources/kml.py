@@ -18,14 +18,13 @@ import os
 from pyspark.sql import DataFrame
 
 
-def _kml_color(hex_color: str, alpha: str = "ff") -> str:
-    """'#rgb'/'#rrggbb' → 'aabbggrr' (convert-geojson-kml.py:8-15); the
-    column-expression twin is functions.text.hex_to_kml_color."""
+def _kml_color(hex_color: str) -> str:
+    """'#rgb'/'#rrggbb' → opaque 'ffbbggrr' (convert-geojson-kml.py:8-15)."""
     c = hex_color.lstrip("#")
     if len(c) == 3:
         c = "".join(ch * 2 for ch in c)
     r, g, b = c[0:2], c[2:4], c[4:6]
-    return (alpha + b + g + r).lower()
+    return ("ff" + b + g + r).lower()
 
 
 def write_route_kml(

@@ -38,13 +38,12 @@ def categories(raw: DataFrame) -> DataFrame:
     )
 
 
-def fixed_groups(raw: DataFrame, cats: DataFrame | None = None) -> DataFrame:
-    """One row per type=='fixed' group (generate_gtfs.py:62-73), parent
-    category attrs carried down; loop defaults 'no' (:72).  Pass `cats`
-    (an existing categories(raw)) to reuse the constructed plan."""
+def fixed_groups(cats: DataFrame) -> DataFrame:
+    """One row per type=='fixed' group of `categories(raw)`
+    (generate_gtfs.py:62-73), parent category attrs carried down; loop
+    defaults 'no' (:72)."""
     return (
-        (categories(raw) if cats is None else cats)
-        .select(
+        cats.select(
             "cat_idx",
             "agency_id",
             "agency_name",
@@ -73,22 +72,10 @@ def fixed_groups(raw: DataFrame, cats: DataFrame | None = None) -> DataFrame:
     )
 
 
-def route_catalog(
-    spark: SparkSession,
-    path: str,
-    raw: DataFrame | None = None,
-    groups: DataFrame | None = None,
-) -> DataFrame:
-    """Fully-flattened catalog: one row per route-direction, ordered by
-    route_order = document order (drives A4 trip numbering + A1 dedup).
-
-    Pass `raw` (an existing read_routes_json result) to reuse its
-    constructed reader — rebuilding it re-lists and re-analyzes for
-    nothing when the caller already holds one."""
-    if groups is None:
-        if raw is None:
-            raw = read_routes_json(spark, path)
-        groups = fixed_groups(raw)
+def route_catalog(groups: DataFrame) -> DataFrame:
+    """Fully-flattened catalog of `fixed_groups(cats)`: one row per
+    route-direction, ordered by route_order = document order (drives A4
+    trip numbering + A1 dedup)."""
     routes = groups.select(
         "cat_idx",
         "grp_idx",
@@ -129,20 +116,20 @@ def route_catalog(
     )
 
 
-def agencies_table(raw: DataFrame, cats: DataFrame | None = None) -> DataFrame:
-    """agency.txt rows: one per category in document order
-    (generate_gtfs.py:54-60 — the reference does NOT dedup repeated ids;
-    neither do we)."""
-    return (categories(raw) if cats is None else cats).select(
+def agencies_table(cats: DataFrame) -> DataFrame:
+    """agency.txt rows: one per category of `categories(raw)` in document
+    order (generate_gtfs.py:54-60 — the reference does NOT dedup repeated
+    ids; neither do we)."""
+    return cats.select(
         "agency_id", "agency_name", "agency_url", "agency_timezone", "agency_lang"
     )
 
 
-def route_groups_table(raw: DataFrame, groups: DataFrame | None = None) -> DataFrame:
-    """routes.txt rows: one per fixed group in document order
-    (generate_gtfs.py:492-502).  route_type 2 for train else 3 (:52);
-    leading '#' stripped from color (:499)."""
-    return (fixed_groups(raw) if groups is None else groups).select(
+def route_groups_table(groups: DataFrame) -> DataFrame:
+    """routes.txt rows: one per fixed group of `fixed_groups(cats)` in
+    document order (generate_gtfs.py:492-502).  route_type 2 for train
+    else 3 (:52); leading '#' stripped from color (:499)."""
+    return groups.select(
         F.col("group_id").alias("route_id"),
         "agency_id",
         F.col("group_id").alias("route_short_name"),

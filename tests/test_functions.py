@@ -9,16 +9,14 @@ import pytest
 
 from tegallega_spark.functions import (
     block_id_for,
-    coords_equal,
     gtfs_time_to_seconds,
     haversine_km,
     haversine_m,
-    hex_to_kml_color,
     hhmm_to_seconds,
-    sanitize_filename,
     seconds_to_hhmmss,
     shape_id_for,
     trip_id_bus,
+    trip_id_pbf,
     trip_id_train,
     virtual_stop_id,
 )
@@ -57,6 +55,7 @@ def test_id_grammar(spark):
     assert one(spark, shape_id_for(F.lit("123"))) == "shape_123"
     assert one(spark, trip_id_train(F.lit("KCI"), F.lit("B"), F.lit("380"))) == "t-KCIB380"
     assert one(spark, trip_id_bus(F.lit("TMB"), F.lit("K1"), F.lit(0), F.lit(7))) == "t-TMBK107"
+    assert one(spark, trip_id_pbf(F.lit("900"), F.lit(2))) == "t-900-2"
     assert one(spark, block_id_for(F.lit("TMB"), F.lit("K1"), F.lit(7), F.lit(True))) == "TMBK17"
     assert one(spark, block_id_for(F.lit("TMB"), F.lit("K1"), F.lit(7), F.lit(False))) == ""
     assert (
@@ -123,13 +122,18 @@ def test_to_fixed_integer_part_exact_across_magnitudes(spark):
             assert r.s == js_tofixed(r.x, d), (r.x, d)
 
 
-def test_misc_string_functions(spark):
-    assert one(spark, sanitize_filename(F.lit("K1: A→B/C"))) == "K1_ A_B_C"
+def test_misc_string_functions():
+    from tegallega_spark.functions.text import sanitize_filename_py
+    from tegallega_spark.operators.stateful import _close
+    from tegallega_spark.sources.kml import _kml_color
+
+    assert sanitize_filename_py("K1: A→B/C") == "K1_ A_B_C"
     # '#rrggbb' → 'aabbggrr' (convert-geojson-kml.py:8-15)
-    assert one(spark, hex_to_kml_color(F.lit("#2D398B"))) == "ff8b392d"
-    assert one(spark, hex_to_kml_color(F.lit("#f00"))) == "ff0000ff"
-    assert one(spark, coords_equal(F.lit(1.0), F.lit(2.0), F.lit(1.0 + 5e-7), F.lit(2.0)))
-    assert not one(spark, coords_equal(F.lit(1.0), F.lit(2.0), F.lit(1.01), F.lit(2.0)))
+    assert _kml_color("#2D398B") == "ff8b392d"
+    assert _kml_color("#f00") == "ff0000ff"
+    # tolerance equality of way endpoints (update-routes.js:106-108)
+    assert _close((1.0, 2.0), (1.0 + 5e-7, 2.0))
+    assert not _close((1.0, 2.0), (1.01, 2.0))
 
 
 def test_kml_sink(spark, tmp_path):

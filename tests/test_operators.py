@@ -10,16 +10,13 @@ import pyspark.sql.functions as F
 
 from tegallega_spark.operators import multimodal as MM
 from tegallega_spark.operators.dedup import dedup_keep_first, dedup_keep_last
-from tegallega_spark.operators.spatial import (
-    interpolate_virtual_stops,
-    nearest_vertex_join,
-)
+from tegallega_spark.operators.spatial import interpolate_virtual_stops
 from tegallega_spark.operators.stateful import (
     MIN_SPACING_M,
     stitch_ways,
     thin_stops,
 )
-from tegallega_spark.operators.windows import cumulative_shape_distance
+from tegallega_spark.pipeline.gtfs_build import shape_points
 from tegallega_spark.session import load_table
 
 
@@ -147,25 +144,13 @@ def test_apply_sorted_groups_survives_batch_splits(spark):
 
 def test_cumdist_monotone(spark):
     rows = [("s1", i, float(i) * 0.001, 0.0) for i in range(50)]
-    df = spark.createDataFrame(rows, "shape_id string, vertex_idx int, lon double, lat double")
-    out = cumulative_shape_distance(df, key="shape_id").orderBy("vertex_idx").collect()
-    dists = [r.cum_dist for r in out]
+    df = spark.createDataFrame(rows, "relation_id string, vertex_idx int, lon double, lat double")
+    out = shape_points(df, ("vertex_idx",)).orderBy("shape_pt_sequence").collect()
+    dists = [r.shape_dist_traveled for r in out]
     assert dists[0] == 0.0
     assert all(b >= a for a, b in zip(dists, dists[1:]))
-    assert out[-1].seq == 50
-
-
-def test_nearest_vertex_join(spark):
-    shape = spark.createDataFrame(
-        [("r1", i, float(i), 0.0, float(i) * 111.0) for i in range(5)],
-        "relation_id string, vertex_idx int, lon double, lat double, cum_dist double",
-    )
-    stops = spark.createDataFrame(
-        [("r1", "a", 2.2, 0.1), ("r1", "b", 3.9, -0.1)],
-        "relation_id string, stop_id string, lon double, lat double",
-    )
-    out = {r.stop_id: r for r in nearest_vertex_join(stops, shape).collect()}
-    assert out["a"].nn_vertex_idx == 2 and out["b"].nn_vertex_idx == 4
+    assert out[-1].shape_pt_sequence == 50
+    assert {r.shape_id for r in out} == {"shape_s1"}
 
 
 def test_interpolate_virtual_stops(spark):

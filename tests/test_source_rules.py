@@ -6,7 +6,8 @@ process environment: an env knob is a hidden switch that no query, test
 or bench run sets, so the shape it selects goes untested.  The one
 exception is `session.get_spark`, which reads the five settings that size
 the session to its host or cluster.  Likewise the one auditable text hash
-is defined in one place, so every operator and oracle agree on it."""
+is defined in one place, so every operator and oracle agree on it, and the
+feed's trip and shape id grammar is written only in functions/ids.py."""
 
 from __future__ import annotations
 
@@ -112,3 +113,22 @@ def test_md5_60_hash_is_written_once():
         if _is_md5_60(node)
     ]
     assert len(hits) == 1, f"md5-60 expression written out at {hits}"
+
+
+ID_PREFIXES = {"t-", "shape_"}
+
+
+def test_gtfs_id_prefixes_live_in_ids_module():
+    """The "t-" trip and "shape_" shape id prefixes appear as string
+    constants only in functions/ids.py: both GTFS paths (build_gtfs and
+    gtfs_from_pbf) name their trips and shapes through those helpers, so
+    the feed's id grammar has one copy."""
+    hits = [
+        (f.relative_to(PACKAGE).as_posix(), node.lineno, node.value)
+        for f in sorted(PACKAGE.rglob("*.py"))
+        for node in ast.walk(ast.parse(f.read_text(), filename=str(f)))
+        if isinstance(node, ast.Constant) and node.value in ID_PREFIXES
+    ]
+    stray = [h for h in hits if h[0] != "functions/ids.py"]
+    assert not stray, f"id prefixes written outside functions/ids.py: {stray}"
+    assert {h[2] for h in hits} == ID_PREFIXES
