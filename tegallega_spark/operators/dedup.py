@@ -19,6 +19,9 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import functools
+import hashlib
+
 import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inference
 
 from pyspark.sql import Column, DataFrame, Window
@@ -187,63 +190,65 @@ def _mix_constants(n: int, stream: int) -> list[int]:
     return out
 
 
+@functools.lru_cache(maxsize=1 << 21)  # bounds worker-lifetime memory
+def _word_hash(w: str) -> int:
+    """8-byte blake2b of one word, memoized across Arrow batches for the
+    (reused) worker's lifetime — a big win under Zipfian vocabularies.
+    The one word hash every shingle operator builds its window hashes
+    from; `_word_hash("")` is the empty document's hash."""
+    return int.from_bytes(hashlib.blake2b(w.encode(), digest_size=8).digest(), "big")
+
+
+def _window_coef(k: int) -> "np.ndarray":
+    """The k odd 64-bit multipliers of the window polynomial (uint64)."""
+    import numpy as np
+
+    return np.array(_mix_constants(k, stream=0x5173), dtype=np.uint64)
+
+
+def _window_hashes(wh: "np.ndarray", coef: "np.ndarray") -> "np.ndarray":
+    """Hash of every len(coef)-word window of the uint64 word-hash array
+    `wh`: sum_j coef[j] * wh[i + j] mod 2^64 (uint64 multiply-add wraps),
+    one shifted-slice pass per coefficient.  Empty when `wh` is shorter
+    than the window."""
+    m = len(wh) - len(coef) + 1
+    if m <= 0:
+        return wh[:0]
+    acc = wh[:m] * coef[0]
+    for j in range(1, len(coef)):
+        acc = acc + wh[j : m + j] * coef[j]
+    return acc
+
+
 def _make_shingle_kernel(shingle_n: int):
     """Per-worker closure: text → np.uint64 array of DISTINCT shingle hashes.
 
     Tokenization is identical to word_shingles (lowercase, [^a-z0-9]+ split,
-    empties removed).  Each distinct WORD is hashed once — 8-byte blake2b,
-    memoized across the Arrow batch and the (reused) worker's lifetime, a
-    big win under Zipfian vocabularies — and a shingle's hash is a fixed
-    odd-multiplier positional polynomial over its word hashes mod 2^64,
-    numpy-vectorized over all shingle positions at once; np.unique gives
+    empties removed).  A shingle's hash is the window polynomial over its
+    word hashes (_word_hash, _window_coef, _window_hashes); np.unique gives
     the distinct set.  Collision odds per distinct-shingle pair are the
     same order as hashing the shingle strings directly (~2⁻⁶⁴), and kernel
     hashes are only ever compared to hashes from this same kernel, so set
     cardinalities — and every Jaccard derived from them — match the
     string-set semantics the oracles compute.
     """
-    import hashlib
     import re
 
     import numpy as np
 
     token_re = re.compile(r"[^a-z0-9]+")
-    coef_ints = _mix_constants(shingle_n, stream=0x5173)
-    coef = np.array(coef_ints, dtype=np.uint64)
-    empty = np.array(
-        [int.from_bytes(hashlib.blake2b(b"", digest_size=8).digest(), "big")],
-        dtype=np.uint64,
-    )
-    cache: dict[str, int] = {}
+    coef = _window_coef(shingle_n)
+    empty = np.array([_word_hash("")], dtype=np.uint64)
 
     def kernel(text: str | None) -> "np.ndarray":
         words = [w for w in token_re.split((text or "").lower()) if w]
         n = len(words)
         if n == 0:
             return empty
-        if len(cache) > (1 << 21):  # bound worker-lifetime memory
-            cache.clear()
-        wh = np.empty(n, dtype=np.uint64)
-        miss = cache.get
-        for i, w in enumerate(words):
-            h = miss(w)
-            if h is None:
-                h = int.from_bytes(
-                    hashlib.blake2b(w.encode(), digest_size=8).digest(), "big"
-                )
-                cache[w] = h
-            wh[i] = h
-        if n < shingle_n:
-            # whole text is the single shingle; prefix of the same polynomial
-            acc = 0
-            for i in range(n):
-                acc = (acc + coef_ints[i] * int(wh[i])) & 0xFFFFFFFFFFFFFFFF
-            return np.array([acc], dtype=np.uint64)
-        m = n - shingle_n + 1
-        acc = wh[:m] * coef[0]
-        for j in range(1, shingle_n):
-            acc = acc + wh[j : m + j] * coef[j]
-        return np.unique(acc)
+        wh = np.fromiter(map(_word_hash, words), dtype=np.uint64, count=n)
+        # a doc shorter than shingle_n words is one shingle: the whole
+        # text, hashed by the prefix of the same polynomial
+        return np.unique(_window_hashes(wh, coef[:n]))
 
     return kernel
 
@@ -608,7 +613,6 @@ def minhash_near_duplicates_verified(
     jaccard_threshold: float = 0.7,
     max_bucket: int | None = None,
     remediate_dropped: bool = False,
-    single_task: bool | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs with EXACT Jaccard verification.
 
@@ -633,20 +637,12 @@ def minhash_near_duplicates_verified(
     mega-cluster collapses onto its representative instead of silently
     surviving dedup.
 
-    single_task: None (default) auto-gates the exact-semantics shape
-    (max_bucket=None, no remediation) — a small scan-rooted input
-    (session.small_scan_input) runs the whole LSH+verify tail in one
-    executor task (_single_task_minhash_verified); shuffle-origin or large
-    inputs keep the distributed shape.  True forces it (valid only
-    without max_bucket); False forces distributed."""
-    if single_task and max_bucket is not None:
-        raise ValueError(
-            "single_task implements the exact banded semantics only; "
-            "max_bucket guarding requires the distributed shape"
-        )
-    if single_task is None and max_bucket is None and not remediate_dropped:
-        single_task = small_scan_input(df)
-    if single_task:
+    Shape: the exact-semantics form (max_bucket=None, no remediation) of
+    a small scan-rooted input (session.small_scan_input) runs the whole
+    LSH+verify tail in one executor task (_single_task_minhash_verified);
+    shuffle-origin or large inputs, and the hot-bucket guard, take the
+    distributed shape."""
+    if max_bucket is None and not remediate_dropped and small_scan_input(df):
         return _single_task_minhash_verified(
             df, id_col, text_col, shingle_n, num_hashes, bands,
             jaccard_threshold,
@@ -669,58 +665,6 @@ def minhash_near_duplicates_verified(
     )
     return attach_intermediates(
         exact.filter(F.col("jaccard") >= jaccard_threshold), enc
-    )
-
-
-# ---------------------------------------------------------------------------
-# n-gram Jaccard (exact similarity on shingle sets)
-# ---------------------------------------------------------------------------
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard over word n-gram sets via an inverted-index join.
-
-    explode shingles → join on shingle → count common per pair →
-    |A∩B| / (|A|+|B|-|A∩B|).  The join on shingle is the inverted index:
-    pair candidates only materialize when they share ≥1 shingle.
-
-    r6: shingles come from the Arrow hash kernel (make_shingle_hash_udf)
-    instead of the word_shingles column HOF — the interpreted transform
-    re-evaluates the tokenize subtree per shingle (O(tokens²) regex per
-    doc, the same pathology fixed in repetition_stats/contamination this
-    round), and both the index join and the set cardinalities only need
-    shingle IDENTITY, which the kernel's 8-byte hashes carry exactly up
-    to 2⁻⁶⁴ collisions (the q34 oracle recomputes every Jaccard from
-    string sets and would hash-mismatch on any corpus-visible one).
-    """
-    sh_udf = make_shingle_hash_udf(shingle_n)
-    sh = parallelize_for_udf(df).select(
-        F.col(id_col).alias("__id"),
-        sh_udf(F.col(text_col)).alias("__sh"),
-    ).withColumn("__card", F.size("__sh"))
-    exploded = sh.select("__id", "__card", F.explode("__sh").alias("shingle"))
-    a = exploded.select(
-        F.col("__id").alias("id_a"), F.col("__card").alias("card_a"), "shingle"
-    )
-    b = exploded.select(
-        F.col("__id").alias("id_b"), F.col("__card").alias("card_b"), "shingle"
-    )
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "card_a", "card_b")
-        .agg(F.count("*").alias("common"))
-    )
-    jac = F.col("common") / (F.col("card_a") + F.col("card_b") - F.col("common"))
-    return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -946,7 +890,6 @@ def exact_shingle_jaccard_pairs(
     shingle_n: int = 4,
     threshold: float = 0.5,
     max_df: int | None = None,
-    single_task: bool | None = None,
 ) -> DataFrame:
     """Exact n-gram-shingle Jaccard over all pairs via an inverted index.
 
@@ -971,17 +914,14 @@ def exact_shingle_jaccard_pairs(
     pair-discriminating signal, so at sane N the reported Jaccard barely
     moves (test-pinned).  Default None = exact classic semantics.
 
-    `single_task`: None (default) auto-gates — a small scan-rooted input
-    (session.small_scan_input) runs the whole computation in one executor
-    task (_single_task_jaccard_pairs, one job; the cc.py small-graph
-    discipline applied to pair generation).  Shuffle-origin inputs (post-join/filter frames, whose
+    Shape: a small scan-rooted input (session.small_scan_input) runs the
+    whole computation in one executor task (_single_task_jaccard_pairs,
+    one job; the cc.py small-graph discipline applied to pair
+    generation).  Shuffle-origin inputs (post-join/filter frames, whose
     estimates are unreliable upward) and large corpora always take the
-    distributed shape below.  True/False force the choice (tests pin
-    both shapes and their parity).
+    distributed shape below.
     """
-    if single_task is None:
-        single_task = small_scan_input(df)
-    if single_task:
+    if small_scan_input(df):
         return _single_task_jaccard_pairs(
             df, id_col, text_col, shingle_n, threshold, max_df
         )

@@ -255,15 +255,10 @@ def train_bigram_lm(
     text_col: str = "text",
     min_count: int = 2,
     alpha: float = 0.1,
-    single_task: bool | None = None,
 ) -> BigramLM:
     """Count-based smoothed bigram LM from the corpus.  Two single-
     exchange aggregates (token counts → vocab; bigram counts after <unk>
-    mapping) plus one derived context-count aggregate.
-
-    single_task: None (default) auto-gates the small-input single-task
-    SELF-scoring profile (see below); True/False force it (tests pin both
-    shapes; plan-shape tests force False to audit the scale plan)."""
+    mapping) plus one derived context-count aggregate."""
     # small-input single-task profile, decided ONCE here: a small
     # scan-rooted corpus (session.small_scan_input) will be SELF-scored in
     # one executor task (perplexity_score), so the distributed model
@@ -272,12 +267,9 @@ def train_bigram_lm(
     # cost at this scale (measured ~0.45 s of q56's plan build).  A caller that
     # cross-scores a DIFFERENT frame against a gated model still gets
     # correct results (the lazy frames recompute per consumer).
-    if single_task is None:
-        from tegallega_spark.session import small_scan_input
+    from tegallega_spark.session import small_scan_input
 
-        small_gate = small_scan_input(df)
-    else:
-        small_gate = bool(single_task)
+    small_gate = small_scan_input(df)
     # tokenize ONCE into stored arrays (persisted): the vocab count and
     # the bigram derivation both read the cached arrays instead of each
     # re-running the regex split over the corpus

@@ -60,18 +60,6 @@ def stopword_ratio(text: Column, lang: str = "en") -> Column:
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
-def detect_language(text: Column) -> Column:
-    """argmax over per-language stopword hit counts; 'und' if no hits.
-    Ties break by language-key order (en, id, fr, de, es — first max wins).
-
-    NOTE: evaluates the tokenizer once per language; callers on a hot path
-    should pre-materialize tokens in a prior select and use
-    detect_language_from_tokens (HOFs are interpreted, so Catalyst can't
-    share the five subtrees — see q42).
-    """
-    return detect_language_from_tokens(tokens(text))
-
-
 def language_scores(toks: Column) -> dict:
     """Per-language stopword hit counts (with multiplicity) over a token
     array.  Hot paths should stage these as STORED columns in a
@@ -97,14 +85,6 @@ def argmax_language(scores: dict) -> Column:
     for lang in reversed(langs):
         expr = F.when(scores[lang] == best, F.lit(lang)).otherwise(expr)
     return F.when(best == 0, F.lit("und")).otherwise(expr)
-
-
-def detect_language_from_tokens(toks: Column) -> Column:
-    """Same as detect_language but over a pre-computed token array —
-    tokenize once in a prior select, score five languages over the stored
-    array.  (Single-expression form; see language_scores for the staged
-    two-projection form hot paths want.)"""
-    return argmax_language(language_scores(toks))
 
 
 def quality_score(text: Column) -> Column:
@@ -333,18 +313,6 @@ def redact_pii(text: Column) -> Column:
 # low-quality training data even when surface stats look fine)
 # ---------------------------------------------------------------------------
 
-def word_ngrams(text: Column, n: int = 2) -> Column:
-    """NON-distinct n-word grams (multiplicity matters for repetition
-    measurement, unlike dedup's word_shingles); same [a-z0-9] tokenization.
-    A doc shorter than n words contributes its whole text as one gram."""
-    words = F.filter(F.split(F.lower(text), r"[^a-z0-9]+"), lambda w: w != "")
-    num = F.greatest(F.size(words) - F.lit(n - 1), F.lit(0))
-    grams = F.transform(
-        F.sequence(F.lit(1), num), lambda i: F.concat_ws(" ", F.slice(words, i, n))
-    )
-    return F.when(F.size(words) < n, F.array(F.concat_ws(" ", words))).otherwise(grams)
-
-
 def repetition_stats(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 2
 ) -> DataFrame:
@@ -360,62 +328,42 @@ def repetition_stats(
     whole corpus to compute something each partition can finish locally
     (measured 68 s at 100 k docs; the gram builder was also an interpreted
     HOF re-evaluating the tokenize subtree per element).  The kernel is
-    the span/shingle family's shape: factorize the batch's tokens to int
-    codes, memoized blake2b per DISTINCT word, positional-polynomial gram
-    identities (collision odds ~2⁻⁶⁴ per in-doc gram pair — the same
-    accepted basis as the hashed-shingle Jaccard, and any corpus-visible
-    collision would hash-mismatch the q33 oracle), np.unique counts give
-    (total, distinct, top) per doc at C speed.  No shuffle anywhere.
+    the shared shingle hash (dedup's _word_hash + window polynomial):
+    gram identities are window hashes (collision odds ~2⁻⁶⁴ per in-doc
+    gram pair — the same accepted basis as the hashed-shingle Jaccard,
+    and any corpus-visible collision would hash-mismatch the q33 oracle),
+    np.unique counts give (total, distinct, top) per doc at C speed.  No
+    shuffle anywhere.
     Fractions keep the floor(x*1e4+0.5) idiom for cross-engine bit
     identity.
     """
-    import hashlib
     import re
 
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    from tegallega_spark.operators.dedup import _mix_constants, parallelize_for_udf
+    from tegallega_spark.operators.dedup import (
+        _window_coef,
+        _window_hashes,
+        _word_hash,
+        parallelize_for_udf,
+    )
 
     token_re = re.compile(r"[^a-z0-9]+")
-    coef = np.array(_mix_constants(n, stream=0x9311), dtype=np.uint64)
+    coef = _window_coef(n)
 
     @pandas_udf("struct<total: long, nd: long, top: long>")
     def rep_kernel(texts: pd.Series) -> pd.DataFrame:
-        per_doc = [
-            [w for w in token_re.split(("" if t is None else t).lower()) if w]
-            for t in texts
-        ]
-        flat = [w for ws in per_doc for w in ws]
-        if flat:
-            codes_all, uniques = pd.factorize(np.asarray(flat, dtype=object))
-            uh = np.fromiter(
-                (
-                    int.from_bytes(
-                        hashlib.blake2b(w.encode(), digest_size=8).digest(), "big"
-                    )
-                    for w in uniques
-                ),
-                dtype=np.uint64,
-                count=len(uniques),
-            )
-            hashed = uh[codes_all]
         rows = []
-        off = 0
-        for ws in per_doc:
-            ln = len(ws)
-            if ln < n:
-                # the whole text as one gram (word_ngrams' short-doc rule)
+        for t in texts:
+            ws = [w for w in token_re.split(("" if t is None else t).lower()) if w]
+            if len(ws) < n:
+                # a doc shorter than n words is one gram: its whole text
                 rows.append((1, 1, 1))
-                off += ln
                 continue
-            gh = (
-                np.lib.stride_tricks.sliding_window_view(hashed[off : off + ln], n)
-                * coef
-            ).sum(axis=1, dtype=np.uint64)
-            off += ln
-            _, counts = np.unique(gh, return_counts=True)
-            rows.append((int(gh.size), int(counts.size), int(counts.max())))
+            wh = np.fromiter(map(_word_hash, ws), dtype=np.uint64, count=len(ws))
+            _, counts = np.unique(_window_hashes(wh, coef), return_counts=True)
+            rows.append((len(ws) - n + 1, int(counts.size), int(counts.max())))
         return pd.DataFrame(rows, columns=["total", "nd", "top"])
 
     stats = parallelize_for_udf(df).select(
@@ -675,84 +623,56 @@ def normalize_text_udf():
 # Training Data Makes Language Models Better", arXiv:2107.06499)
 # ---------------------------------------------------------------------------
 
-def _span_shingle_udf(k: int):
-    """Arrow-vectorized text → ORDERED array of k-token shingle hashes
-    (position = array index; empty for docs shorter than k tokens).
+def _span_window_hashes(texts, k: int) -> "list[np.ndarray]":
+    """Per text, the ORDERED uint64 hashes of its k-token windows
+    (position = array index; empty for texts shorter than k tokens).
 
-    Same design as dedup's shared shingle kernel: memoized 8-byte blake2b
-    word hashes + one numpy positional-polynomial pass per doc (uint64
-    multiply-add wraps mod 2^64).  A first version was a pure column
+    The shared shingle hash (dedup's _word_hash + window polynomial),
+    vectorized over the whole batch: every token of the batch is
+    factorized to small int codes (C speed), only the DISTINCT words are
+    hashed, and ONE window pass runs over the flat concatenated hash
+    array; each text then takes the slice of windows that start and end
+    inside it.  A per-doc loop with a per-word dict lookup and .tolist()
+    was 5-10× slower (11M Python int objects per batch at 80k docs).
+
+    Tokenization matches the REBUILD path's `F.split(text, r'\\s+')`
+    exactly: Java's \\s is ASCII-only, so the Python side splits on the
+    same explicit class (_WS_SPLIT_RE), not str.split()'s unicode
+    whitespace.
+    """
+    import numpy as np
+
+    from tegallega_spark.operators.dedup import (
+        _window_coef,
+        _window_hashes,
+        _word_hash,
+    )
+
+    per_doc = [[w for w in _WS_SPLIT_RE.split(t or "") if w] for t in texts]
+    flat_words = [w for ws in per_doc for w in ws]
+    codes, uniques = pd.factorize(np.asarray(flat_words, dtype=object))
+    uh = np.fromiter(map(_word_hash, uniques), dtype=np.uint64, count=len(uniques))
+    win_h = _window_hashes(uh[codes], _window_coef(k))
+    out, off = [], 0
+    for ws in per_doc:
+        out.append(win_h[off : off + max(len(ws) - k + 1, 0)])
+        off += len(ws)
+    return out
+
+
+def _span_shingle_udf(k: int):
+    """Arrow-vectorized text → ORDERED array of k-token window hashes
+    (_span_window_hashes).  A first version was a pure column
     expression — transform(sequence, slice+concat+xxhash64) — but HOF
     lambdas are interpreted AND re-evaluate the token subtree per window
     element, an O(tokens²) regex split per doc that measured 45× slower
     than DuckDB's linear pass at 2k docs; materializing the token array
-    first made it linear but still interpreted.  This kernel is the same
-    shape minhash banding uses (dedup.py:237-252) for the same reason.
-
-    Tokenization matches the REBUILD path's `F.split(text, r'\\s+')`
-    exactly: Java's \\s is ASCII-only, so the Python side splits on the
-    same explicit class, not str.split()'s unicode whitespace.
-    """
-    import hashlib
-    import re
-
-    import numpy as np
+    first made it linear but still interpreted."""
     from pyspark.sql.functions import pandas_udf
-
-    ws_re = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, exactly
-    rng = np.random.default_rng(0xD5FA)  # fixed stream — deterministic
-    coef = (
-        rng.integers(0, 2**62, size=k, dtype=np.uint64) << np.uint64(1)
-    ) | np.uint64(1)
-    cache: dict[str, int] = {}
-
-    def _word_hash(w: str) -> int:
-        h = cache.get(w)
-        if h is None:
-            if len(cache) > (1 << 21):  # bound worker memory
-                cache.clear()
-            h = int.from_bytes(
-                hashlib.blake2b(w.encode(), digest_size=8).digest(), "big"
-            )
-            cache[w] = h
-        return h
 
     @pandas_udf("array<long>")
     def span_shingles(texts: pd.Series) -> pd.Series:
-        # Whole-batch vectorization: factorize every token of the batch to
-        # small int codes (C speed), blake2b only the DISTINCT words, then
-        # ONE sliding-window polynomial over the flat concatenated hash
-        # array, masking windows that straddle a document boundary.  A
-        # per-doc loop with a per-word dict lookup and .tolist() was 5-10×
-        # slower (11M Python int objects per batch at 80k docs).
-        per_doc = [
-            [w for w in ws_re.split(t or "") if w] for t in texts
-        ]
-        lens = np.array([len(ws) for ws in per_doc], dtype=np.int64)
-        flat_words = [w for ws in per_doc for w in ws]
-        if not flat_words:
-            return pd.Series([np.array([], dtype=np.int64)] * len(per_doc))
-        codes, uniques = pd.factorize(np.asarray(flat_words, dtype=object))
-        uh = np.fromiter(
-            (_word_hash(w) for w in uniques), dtype=np.uint64, count=len(uniques)
-        )
-        flat = uh[codes]
-        n = len(flat)
-        if n < k:
-            win_h = np.empty(0, dtype=np.uint64)
-        else:
-            win = np.lib.stride_tricks.sliding_window_view(flat, k)
-            win_h = (win * coef).sum(axis=1, dtype=np.uint64)
-        offs = np.concatenate([[0], np.cumsum(lens)])
-        out = []
-        for d in range(len(per_doc)):
-            m = lens[d] - k + 1
-            if m <= 0:
-                out.append(np.array([], dtype=np.int64))
-            else:
-                s = offs[d]
-                out.append(win_h[s : s + m].view("int64"))
-        return pd.Series(out)
+        return pd.Series([h.view("int64") for h in _span_window_hashes(texts, k)])
 
     return span_shingles
 
@@ -780,26 +700,17 @@ def _single_task_duplicated_spans(
     keep_first: bool,
 ) -> DataFrame:
     """One-job small-corpus profile for duplicated_spans (the pair-gen /
-    cc.py small-input discipline): the SAME batch-vectorized shingle
-    hashing (_span_shingle_udf's factorize + polynomial, identical coef
-    stream and word hashes), corpus-wide window counts, keep-first
+    cc.py small-input discipline): the SAME batch-vectorized window
+    hashing (_span_window_hashes), corpus-wide window counts, keep-first
     arbitration and interval merge run inside a single executor task.
     Every quantity is an integer (hashes, counts, token positions), so
     the output is exactly the distributed result — no float boundary at
     all.  At bench scale the distributed shape schedules ~5 AQE stage
     jobs around one hash-keyed exchange; below the byte gate the whole
     shingle frame fits one task."""
-    import hashlib
-    import re
-
     import numpy as np
     import pyspark.sql.types as T
 
-    ws_re = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, exactly
-    rng = np.random.default_rng(0xD5FA)  # same stream as _span_shingle_udf
-    coef = (
-        rng.integers(0, 2**62, size=k, dtype=np.uint64) << np.uint64(1)
-    ) | np.uint64(1)
     id_t = df.schema[id_col].dataType
     schema = T.StructType(
         [
@@ -812,51 +723,14 @@ def _single_task_duplicated_spans(
     def fn(batches):
         import pandas as pd
 
-        cache: dict[str, int] = {}
-
-        def word_hash(w: str) -> int:
-            h = cache.get(w)
-            if h is None:
-                h = int.from_bytes(
-                    hashlib.blake2b(w.encode(), digest_size=8).digest(), "big"
-                )
-                cache[w] = h
-            return h
-
         doc_ids: list = []
         doc_wins: list = []  # per row: uint64 window-hash array
         for pdf in batches:
-            texts = pdf[text_col]
-            per_doc = [[w for w in ws_re.split(t or "") if w] for t in texts]
-            flat_words = [w for ws in per_doc for w in ws]
-            if flat_words:
-                codes, uniques = pd.factorize(
-                    np.asarray(flat_words, dtype=object)
-                )
-                uh = np.fromiter(
-                    (word_hash(w) for w in uniques),
-                    dtype=np.uint64,
-                    count=len(uniques),
-                )
-                flat = uh[codes]
-            else:
-                flat = np.empty(0, dtype=np.uint64)
-            if len(flat) >= k:
-                win = np.lib.stride_tricks.sliding_window_view(flat, k)
-                win_h = (win * coef).sum(axis=1, dtype=np.uint64)
-            else:
-                win_h = np.empty(0, dtype=np.uint64)
-            off = 0
-            for i, ws in zip(pdf[id_col].tolist(), per_doc):
-                m = len(ws) - k + 1
-                doc_ids.append(i)
-                doc_wins.append(
-                    win_h[off : off + m] if m > 0 else np.empty(0, np.uint64)
-                )
-                off += len(ws)
+            doc_ids.extend(pdf[id_col].tolist())
+            doc_wins.extend(_span_window_hashes(pdf[text_col], k))
         if not doc_ids:
             return
-        all_h = np.concatenate(doc_wins) if doc_wins else np.empty(0, np.uint64)
+        all_h = np.concatenate(doc_wins)
         if len(all_h) == 0:
             return
         # Vectorized tail (r14 — on the 4× bench corpus 98% of positions
@@ -938,7 +812,6 @@ def duplicated_spans(
     k: int = 8,
     min_count: int = 2,
     keep_first: bool = False,
-    single_task: bool | None = None,
 ) -> DataFrame:
     """Maximal duplicated token spans per document: every span of ≥ k
     whitespace tokens whose every k-token window occurs ≥ `min_count`
@@ -973,17 +846,14 @@ def duplicated_spans(
     interval merge is the classic running-max window per doc, JVM-side.
     Nothing persists, so there is nothing for callers to release.
 
-    single_task: None (default) auto-gates — a small scan-rooted input
-    (session.small_scan_input) runs the whole computation in one executor
-    task (_single_task_duplicated_spans, one job — every quantity here is
-    an integer, so the result is exactly the distributed one); True/False
-    force the shape (tests pin both).
+    Shape: a small scan-rooted input (session.small_scan_input) runs the
+    whole computation in one executor task (_single_task_duplicated_spans,
+    one job — every quantity here is an integer, so the result is exactly
+    the distributed one).
     """
-    if single_task is None:
-        from tegallega_spark.session import small_scan_input
+    from tegallega_spark.session import plan_size_bytes, small_scan_input
 
-        single_task = small_scan_input(df)
-    if single_task:
+    if small_scan_input(df):
         return _single_task_duplicated_spans(
             df, id_col, text_col, k, min_count, keep_first
         )
@@ -999,8 +869,6 @@ def duplicated_spans(
     # number instead, which stays AQE-coalescible (a numbered user
     # repartition is exempt from coalescing): measured 1.63 s → 0.65 s
     # at sf0.1 where the whole shingle frame is ~6 MB.
-    from tegallega_spark.session import plan_size_bytes
-
     spark = df.sparkSession
     est_shuffle_bytes = plan_size_bytes(df) * 64
     n_parts = est_shuffle_bytes // (16 << 20) + 1

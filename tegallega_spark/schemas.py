@@ -1,4 +1,4 @@
-"""Explicit StructTypes for every table in the pipeline (SURVEY.md §1).
+"""Explicit schemas for the routes.json input and the GTFS output tables.
 
 The reference is stringly-typed CSV/JSON with conventions; these schemas make
 the conventions explicit.  Notes carried over from the reference:
@@ -15,11 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -68,82 +64,6 @@ CATEGORY_SCHEMA = StructType(
 
 ROUTES_JSON_SCHEMA = StructType(
     [StructField("categories", ArrayType(CATEGORY_SCHEMA))]
-)
-
-# Flattened route-catalog row (one per route-direction).
-ROUTE_CATALOG_COLUMNS = [
-    "agency_id",
-    "agency_name",
-    "agency_url",
-    "agency_timezone",
-    "agency_lang",
-    "mode",
-    "group_id",
-    "group_name",
-    "color",
-    "group_type",
-    "loop",
-    "route_name",
-    "direction_id",
-    "relation_id",
-    "first_departure",
-    "last_departure",
-    "trips",
-]
-
-# ---------------------------------------------------------------------------
-# GeoJSON features (reference: generate_gtfs.py:93-159, update-routes.js)
-# ---------------------------------------------------------------------------
-
-GEOJSON_GEOMETRY_SCHEMA = StructType(
-    [
-        StructField("type", StringType()),
-        # Point: [lon, lat]; LineString: [[lon,lat],...]; MultiLineString:
-        # [[[lon,lat],...],...]. JSON scan keeps the raw string and each
-        # reader casts with from_json to the shape it needs.
-        StructField("coordinates", StringType()),
-    ]
-)
-
-STOP_ROW_SCHEMA = StructType(
-    [
-        StructField("relation_id", StringType()),
-        StructField("stop_id", StringType()),
-        StructField("stop_name", StringType()),
-        StructField("role", StringType()),
-        StructField("is_real", BooleanType()),
-        StructField("wheelchair", IntegerType()),
-        StructField("lon", DoubleType()),
-        StructField("lat", DoubleType()),
-        StructField("tags", MapType(StringType(), StringType())),
-        StructField("ingest_order", LongType()),
-    ]
-)
-
-SHAPE_VERTEX_SCHEMA = StructType(
-    [
-        StructField("relation_id", StringType()),
-        StructField("feature_idx", IntegerType()),
-        StructField("line_idx", IntegerType()),
-        StructField("vertex_idx", IntegerType()),
-        StructField("lon", DoubleType()),
-        StructField("lat", DoubleType()),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Schedule matrix long form (reference: generate_gtfs.py:228-324)
-# ---------------------------------------------------------------------------
-
-SCHEDULE_LONG_SCHEMA = StructType(
-    [
-        StructField("relation_id", StringType()),
-        StructField("trip_num", StringType()),
-        StructField("col_pair_idx", IntegerType()),
-        StructField("stop_id", StringType()),
-        StructField("arrival", StringType()),
-        StructField("departure", StringType()),
-    ]
 )
 
 # ---------------------------------------------------------------------------

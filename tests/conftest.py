@@ -23,3 +23,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def force_shape(monkeypatch):
+    """Pin the small-input gate (session.small_scan_input) for the rest of
+    the test: force_shape("distributed") makes every scan-rooted input
+    fail it, force_shape("single") makes every scan-rooted input pass it,
+    whatever its size estimate.  The gate reads the threshold when an
+    operator builds its plan, so a test can build one shape, switch, and
+    build the other."""
+    import tegallega_spark.session as S
+
+    limits = {"distributed": 0, "single": 1 << 100}
+
+    def force(shape: str) -> None:
+        monkeypatch.setattr(S, "SMALL_INPUT_BYTES", limits[shape])
+
+    return force

@@ -35,13 +35,9 @@ def _emb(spark):
 
 
 OPERATORS = {
-    # single_task=False: the r13 small-input profile persists nothing —
-    # this test audits the DISTRIBUTED shape's persist-release contract
     "minhash": lambda spark: __import__(
         "tegallega_spark.operators.dedup", fromlist=["x"]
-    ).minhash_near_duplicates_verified(
-        _docs(spark), "doc_id", "text", single_task=False
-    ),
+    ).minhash_near_duplicates_verified(_docs(spark), "doc_id", "text"),
     "simhash": lambda spark: __import__(
         "tegallega_spark.operators.dedup", fromlist=["x"]
     ).simhash_near_duplicates_verified(_docs(spark), "doc_id", "text"),
@@ -69,17 +65,16 @@ OPERATORS = {
         min_quality=0.0, max_dup_ngram_frac=1.0,
         dedup_strategy="exact",
     ),
-    # single_task=False: same reason as "minhash" above.  NOTE the two
-    # _docs() calls return different objects, so this is CROSS-scoring
-    # (distributed regardless); the force makes the persist contract
-    # explicit rather than incidental
+    # NOTE the two _docs() calls return different objects, so this is
+    # CROSS-scoring (distributed regardless); the forced distributed
+    # training makes the persist contract explicit rather than incidental
     "ngram_lm_score": lambda spark: __import__(
         "tegallega_spark.operators.ngram_lm", fromlist=["x"]
     ).perplexity_score(
         _docs(spark),
         __import__(
             "tegallega_spark.operators.ngram_lm", fromlist=["x"]
-        ).train_bigram_lm(_docs(spark), single_task=False),
+        ).train_bigram_lm(_docs(spark)),
     ),
     "clean_corpus_lm_gate": lambda spark: __import__(
         "tegallega_spark.pipeline.corpus", fromlist=["x"]
@@ -105,8 +100,15 @@ def test_span_dedup_persists_nothing(spark):
     assert not getattr(out, "_tegallega_persisted", [])
 
 
+# the small-input profile of these persists nothing — audit the
+# DISTRIBUTED shape's persist-release contract
+DISTRIBUTED = {"minhash", "ngram_lm_score"}
+
+
 @pytest.mark.parametrize("name", sorted(OPERATORS))
-def test_release_restores_persistent_rdd_registry(spark, name):
+def test_release_restores_persistent_rdd_registry(spark, name, force_shape):
+    if name in DISTRIBUTED:
+        force_shape("distributed")
     spark.catalog.clearCache()
     before = _persistent_ids(spark)
     out = OPERATORS[name](spark)

@@ -75,7 +75,7 @@ def test_df_cut_is_noop_when_not_binding(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_single_task_pair_gen_matches_distributed(spark):
+def test_single_task_pair_gen_matches_distributed(spark, force_shape):
     """The r13 small-corpus profile (one-task inverted index) must return
     the EXACT pair set and bit-identical Jaccards of the distributed
     postings-join shape, across the DF-cut, duplicate ids, and string
@@ -83,33 +83,30 @@ def test_single_task_pair_gen_matches_distributed(spark):
     from tegallega_spark.operators.dedup import exact_shingle_jaccard_pairs
     from tegallega_spark.session import release_intermediates
 
+    def both(docs, **kw):
+        force_shape("single")
+        single = exact_shingle_jaccard_pairs(docs, **kw)
+        assert "MapInPandas" in single._jdf.queryExecution().logical().toString()
+        a = {(r.id_a, r.id_b): r.jaccard for r in single.collect()}
+        force_shape("distributed")
+        dist = exact_shingle_jaccard_pairs(docs, **kw)
+        b = {(r.id_a, r.id_b): r.jaccard for r in dist.collect()}
+        release_intermediates(dist, blocking=True)
+        return a, b
+
     rows = [(i, f"w{i % 7} w{(i + 1) % 7} w{(i + 2) % 7} common tail text {i % 3}")
             for i in range(40)]
     rows.append((5, "w5 w6 w0 common tail text 2"))  # duplicate id
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     for max_df in (None, 3, 10):
-        a = {(r.id_a, r.id_b): r.jaccard
-             for r in exact_shingle_jaccard_pairs(
-                 docs, shingle_n=2, threshold=0.3, max_df=max_df,
-                 single_task=True).collect()}
-        dist = exact_shingle_jaccard_pairs(
-            docs, shingle_n=2, threshold=0.3, max_df=max_df,
-            single_task=False)
-        b = {(r.id_a, r.id_b): r.jaccard for r in dist.collect()}
-        release_intermediates(dist, blocking=True)
+        a, b = both(docs, shingle_n=2, threshold=0.3, max_df=max_df)
         assert a == b, f"max_df={max_df}: {len(a)} vs {len(b)} pairs"
     sdocs = spark.createDataFrame(
         [(f"d{i:02d}", f"alpha beta gamma {i % 4} delta epsilon")
          for i in range(20)],
         "doc_id string, text string",
     )
-    a = {(r.id_a, r.id_b): r.jaccard
-         for r in exact_shingle_jaccard_pairs(
-             sdocs, shingle_n=3, threshold=0.2, single_task=True).collect()}
-    dist = exact_shingle_jaccard_pairs(
-        sdocs, shingle_n=3, threshold=0.2, single_task=False)
-    b = {(r.id_a, r.id_b): r.jaccard for r in dist.collect()}
-    release_intermediates(dist, blocking=True)
+    a, b = both(sdocs, shingle_n=3, threshold=0.2)
     assert a == b and a
 
 

@@ -132,7 +132,7 @@ def test_unseen_bigram_and_context_smoothing(spark):
     assert math.isfinite(rows[0].avg_nll)
 
 
-def test_model_joins_broadcast(spark, sf_dir):
+def test_model_joins_broadcast(spark, sf_dir, force_shape):
     """The vocabulary-bounded model tables must broadcast — a sort-merge
     join on (w1,w2) would shuffle every bigram in a 100 TB corpus."""
     from tegallega_spark.session import load_table
@@ -140,7 +140,8 @@ def test_model_joins_broadcast(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # force the distributed (scale) shape: the auto gate would take the
     # single-task profile at this input size, which has no joins at all
-    lm = train_bigram_lm(docs, single_task=False)
+    force_shape("distributed")
+    lm = train_bigram_lm(docs)
     plan = (
         perplexity_score(docs, lm)._jdf.queryExecution().executedPlan().toString()
     )
@@ -148,7 +149,7 @@ def test_model_joins_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_single_task_matches_distributed_bitwise(spark):
+def test_single_task_matches_distributed_bitwise(spark, force_shape):
     """r13 single-task profile: the gated one-job counting pass must give
     BIT-identical scores to the distributed train+score (the floats come
     from the same JVM expressions over the same longs).  Edge rows: NULL
@@ -170,15 +171,16 @@ def test_single_task_matches_distributed_bitwise(spark):
     ]
     df = spark.createDataFrame(texts, "doc_id long, text string")
 
-    def run(st):
-        lm = train_bigram_lm(df, min_count=2, alpha=0.1, single_task=st)
-        assert lm.small_gate is st
+    def run(shape):
+        force_shape(shape)
+        lm = train_bigram_lm(df, min_count=2, alpha=0.1)
+        assert lm.small_gate is (shape == "single")
         return sorted(
             (r.doc_id, r.n_bigrams, struct.pack("<d", r.avg_nll).hex())
             for r in perplexity_score(df, lm).collect()
         )
 
-    dist, single = run(False), run(True)
+    dist, single = run("distributed"), run("single")
     assert dist and dist == single
 
 

@@ -212,8 +212,8 @@ def test_verified_neardups_equal_exact_sets(spark, sf_dir):
     result on the test corpus — a missed pair or wrong score is an oracle
     mismatch, not a silent grey row."""
     from tegallega_spark.operators.dedup import (
+        exact_shingle_jaccard_pairs,
         minhash_near_duplicates_verified,
-        ngram_jaccard_pairs,
         simhash_near_duplicates_verified,
     )
 
@@ -226,7 +226,7 @@ def test_verified_neardups_equal_exact_sets(spark, sf_dir):
     }
     ex3 = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in ngram_jaccard_pairs(d, "doc_id", "text", 3, 0.7).collect()
+        for r in exact_shingle_jaccard_pairs(d, "doc_id", "text", 3, 0.7).collect()
     }
     assert mh == ex3 and len(mh) > 0
     sh = {
@@ -237,9 +237,47 @@ def test_verified_neardups_equal_exact_sets(spark, sf_dir):
     }
     ex2 = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in ngram_jaccard_pairs(d, "doc_id", "text", 2, 0.7).collect()
+        for r in exact_shingle_jaccard_pairs(d, "doc_id", "text", 2, 0.7).collect()
     }
     assert sh == ex2 and len(sh) > 0
+
+
+def test_band_shingle_hashes_pinned(spark):
+    """The MinHash band hashes and shingle-hash sets are persisted state
+    (the streaming near-dup checkpoint keys on band hashes), so their
+    exact values are pinned: a change to the word hash, the window
+    multipliers or the polynomial must show up here, not in a silently
+    re-keyed checkpoint.  Edge rows: NULL, empty, punctuation-only, one-
+    and two-word docs (shorter than the 3-shingle), and duplicates."""
+    import hashlib
+
+    from tegallega_spark.operators.dedup import make_band_shingle_udf
+
+    texts = [
+        None,
+        "",
+        "?!, ... --",
+        "solo",
+        "Two words",
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy dog",
+        "The QUICK brown fox; jumps over the lazy cat!",
+        "a b c a b c a b c",
+        "angkot route 12 Tegallega to Kebon Kalapa via Jl. Moh. Toha",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    rows = (
+        df.select("i", make_band_shingle_udf(3, 32, 16)(F.col("text")).alias("e"))
+        .orderBy("i")
+        .collect()
+    )
+    assert [r.i for r in rows] == list(range(len(texts)))
+
+    def digest(field):
+        return hashlib.sha256(repr([list(r.e[field]) for r in rows]).encode()).hexdigest()
+
+    assert digest("bh") == "a924bc2c48c40b3bf7ff939de927a2fab2ff5738b0772e929563e61854c08394"
+    assert digest("sh") == "58778dc70fb555f5e9abf6093e991d0cc2a20fee346a2fb9103908ed8a3cc8a2"
 
 
 def test_md5_simhash_fingerprints_rederivable(spark, sf_dir):
@@ -252,7 +290,7 @@ def test_md5_simhash_fingerprints_rederivable(spark, sf_dir):
     import re as _re
 
     from tegallega_spark.operators.dedup import (
-        ngram_jaccard_pairs,
+        exact_shingle_jaccard_pairs,
         simhash_fingerprints,
         simhash_near_duplicates_verified,
     )
@@ -285,7 +323,7 @@ def test_md5_simhash_fingerprints_rederivable(spark, sf_dir):
     }
     ex2 = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in ngram_jaccard_pairs(full, "doc_id", "text", 2, 0.7).collect()
+        for r in exact_shingle_jaccard_pairs(full, "doc_id", "text", 2, 0.7).collect()
     }
     assert md5_pairs == ex2 and len(md5_pairs) > 0
 

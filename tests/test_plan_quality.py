@@ -222,7 +222,7 @@ def test_boilerplate_anti_join_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_duplicated_spans_plan_shape(spark):
+def test_duplicated_spans_plan_shape(spark, force_shape):
     """ExactSubstr-style span detection: shingle hashing is ONE
     Arrow-batched pass (never row-at-a-time Python, never evaluated
     twice — the single-exchange window formulation replaced the old
@@ -234,11 +234,10 @@ def test_duplicated_spans_plan_shape(spark):
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     for kf in (False, True):
-        # single_task=False: audit the DISTRIBUTED (scale) shape — the
-        # r13 auto gate would take the one-task profile at this size
-        plan = plan_of(
-            duplicated_spans(docs, keep_first=kf, single_task=False), "simple"
-        )
+        # audit the DISTRIBUTED (scale) shape — the r13 auto gate would
+        # take the one-task profile at this size
+        force_shape("distributed")
+        plan = plan_of(duplicated_spans(docs, keep_first=kf), "simple")
         assert "Window" in plan
         assert "SinglePartition" not in plan
         assert "CartesianProduct" not in plan
@@ -250,9 +249,8 @@ def test_duplicated_spans_plan_shape(spark):
         # exchange feeding the window stage, not a second shuffle
         assert plan.count("Exchange hashpartitioning(__h") == 1
         # and the gated single-task shape: one MapInPandas, no exchange
-        st = plan_of(
-            duplicated_spans(docs, keep_first=kf, single_task=True), "simple"
-        )
+        force_shape("single")
+        st = plan_of(duplicated_spans(docs, keep_first=kf), "simple")
         assert "MapInPandas" in st
         assert "Exchange" not in st
 
@@ -577,7 +575,7 @@ def test_aqe_gate_narrows_shuffle_and_restores(spark):
         spark.conf.set(key, prior)
 
 
-def test_exact_jaccard_pair_gen_no_cartesian(spark):
+def test_exact_jaccard_pair_gen_no_cartesian(spark, force_shape):
     """q23's pair generator (exact_shingle_jaccard_pairs) must meet pairs
     only through the shingle-keyed postings equi-join — no cartesian, no
     nested loop, and the shuffled postings carry the 8-byte hash, never
@@ -593,19 +591,16 @@ def test_exact_jaccard_pair_gen_no_cartesian(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     # distributed shape (forced: the r13 auto-gate would route this tiny
     # frame down the single-task path)
-    pairs = exact_shingle_jaccard_pairs(df, shingle_n=2, threshold=0.5,
-                                        single_task=False)
+    force_shape("distributed")
+    pairs = exact_shingle_jaccard_pairs(df, shingle_n=2, threshold=0.5)
     plan = plan_of(pairs)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     release_intermediates(pairs)
     # r13 small-corpus profile: ONE task — a single MapInPandas, no join,
-    # no exchange in the pair generation at all.  (Forced: createDataFrame
-    # frames are LogicalRDDs with unknown stats, so the auto byte-gate
-    # conservatively keeps them distributed; parquet scans with real
-    # stats — q23's input — gate automatically.)
-    small = exact_shingle_jaccard_pairs(df, shingle_n=2, threshold=0.5,
-                                        single_task=True)
+    # no exchange in the pair generation at all
+    force_shape("single")
+    small = exact_shingle_jaccard_pairs(df, shingle_n=2, threshold=0.5)
     small_plan = plan_of(small)
     assert "MapInPandas" in small_plan
     assert "Exchange" not in small_plan

@@ -361,6 +361,41 @@ def test_chunker_empty_split_artifacts_dropped(n, chunk_tokens):
 
 
 # ---------------------------------------------------------------------------
+# Shingle window hash (dedup._window_hashes, under MinHash, exact Jaccard,
+# repetition stats and span dedup): the numpy uint64 form against the
+# pure-Python big-int polynomial it stands for
+# ---------------------------------------------------------------------------
+
+@settings(max_examples=200, deadline=None)
+@given(
+    words=st.lists(st.text(max_size=6), max_size=30),
+    k=st.integers(min_value=1, max_value=8),
+)
+def test_window_hashes_equal_bigint_polynomial(words, k):
+    """Window i hashes to sum_j coef[j] * word_hash(words[i + j]) mod 2^64
+    — exactly what numpy's wrapping uint64 multiply-add computes — and a
+    list shorter than k has no windows."""
+    import numpy as np
+
+    from tegallega_spark.operators.dedup import (
+        _window_coef,
+        _window_hashes,
+        _word_hash,
+    )
+
+    coef = _window_coef(k)
+    wh = np.array([_word_hash(w) for w in words], dtype=np.uint64)
+    want = [
+        sum(int(c) * _word_hash(words[i + j]) for j, c in enumerate(coef))
+        % (1 << 64)
+        for i in range(len(words) - k + 1)
+    ]
+    got = _window_hashes(wh, coef)
+    assert got.dtype == np.uint64
+    assert got.tolist() == want
+
+
+# ---------------------------------------------------------------------------
 # YUV4MPEG2 codec (r6 operator): encode→decode round-trips arbitrary
 # frame stacks for every colorspace the writer emits; raw hand-built
 # streams pin the plane geometry for the read-only colorspaces

@@ -1,13 +1,14 @@
 """Source-level rules for the package.
 
 Execution shapes come from the input (session's shared small-input gate,
-measured counts) and from explicit per-call arguments, never from the
-process environment: an env knob is a hidden switch that no query, test
-or bench run sets, so the shape it selects goes untested.  The one
-exception is `session.get_spark`, which reads the five settings that size
-the session to its host or cluster.  Likewise the one auditable text hash
-is defined in one place, so every operator and oracle agree on it, and the
-feed's trip and shape id grammar is written only in functions/ids.py."""
+measured counts), never from the process environment: an env knob is a
+hidden switch that no query, test or bench run sets, so the shape it
+selects goes untested.  The one exception is `session.get_spark`, which
+reads the five settings that size the session to its host or cluster.
+Likewise the one auditable text hash and the one shingle word hash are
+each defined in one place, so every operator and oracle agree on them,
+and the feed's trip and shape id grammar is written only in
+functions/ids.py."""
 
 from __future__ import annotations
 
@@ -113,6 +114,21 @@ def test_md5_60_hash_is_written_once():
         if _is_md5_60(node)
     ]
     assert len(hits) == 1, f"md5-60 expression written out at {hits}"
+
+
+def test_word_hash_is_written_once():
+    """The 8-byte blake2b word hash under every shingle operator (MinHash,
+    exact Jaccard, repetition stats, span dedup) is computed at one site,
+    dedup._word_hash: the band hashes and shingle sets it feeds are
+    persisted (streaming checkpoint) and compared across operators, so a
+    second copy could drift from the first."""
+    hits = [
+        (f.relative_to(PACKAGE).as_posix(), node.lineno)
+        for f in sorted(PACKAGE.rglob("*.py"))
+        for node in ast.walk(ast.parse(f.read_text(), filename=str(f)))
+        if _call_name(node) == "blake2b"
+    ]
+    assert len(hits) == 1, f"blake2b called at {hits}"
 
 
 ID_PREFIXES = {"t-", "shape_"}

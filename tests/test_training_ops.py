@@ -273,7 +273,7 @@ def test_cc_raises_when_diameter_exceeds_max_iter(spark):
     assert got == {0}
 
 
-def test_release_intermediates_frees_operator_caches(spark):
+def test_release_intermediates_frees_operator_caches(spark, force_shape):
     """LSH operators persist() self-join inputs; the handles must ride out
     on the result so callers can free them after their action (ADVICE r2)."""
     from tegallega_spark.operators.dedup import minhash_near_duplicates_verified
@@ -283,9 +283,8 @@ def test_release_intermediates_frees_operator_caches(spark):
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     # force the distributed shape: the r13 single-task profile persists
     # nothing (this test audits the distributed path's cache lifecycle)
-    pairs = minhash_near_duplicates_verified(
-        docs, "doc_id", "text", single_task=False
-    )
+    force_shape("distributed")
+    pairs = minhash_near_duplicates_verified(docs, "doc_id", "text")
     pairs.collect()
     handles = pairs._tegallega_persisted
     # fused path: one encoded frame (band hashes + shingle sets together)
@@ -906,7 +905,7 @@ def test_chunk_documents_whitespace_class_matches_token_count(spark):
     assert rows[0].chunk_text == "a b c d e"
 
 
-def test_minhash_single_task_matches_distributed_bitwise(spark):
+def test_minhash_single_task_matches_distributed_bitwise(spark, force_shape):
     """r13 single-task profile for the fused verified-MinHash: the gated
     one-job shape must emit the IDENTICAL pair multiset with bit-identical
     Jaccards (same kernels, same long->double division).  Edge rows:
@@ -928,32 +927,23 @@ def test_minhash_single_task_matches_distributed_bitwise(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    def run(st):
+    def run(shape):
+        force_shape(shape)
         out = minhash_near_duplicates_verified(
-            docs, "doc_id", "text", jaccard_threshold=0.5, single_task=st
+            docs, "doc_id", "text", jaccard_threshold=0.5
         )
+        plan = out._jdf.queryExecution().logical().toString()
+        assert ("MapInPandas" in plan) is (shape == "single")
         return sorted(
             (r.id_a, r.id_b, struct.pack("<d", r.jaccard).hex())
             for r in out.collect()
         )
 
-    dist, single = run(False), run(True)
+    dist, single = run("distributed"), run("single")
     assert dist and dist == single
 
 
-def test_minhash_single_task_rejects_max_bucket(spark):
-    import pytest
-
-    from tegallega_spark.operators.dedup import minhash_near_duplicates_verified
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="max_bucket"):
-        minhash_near_duplicates_verified(
-            docs, "doc_id", "text", max_bucket=5, single_task=True
-        )
-
-
-def test_duplicated_spans_single_task_matches_distributed(spark):
+def test_duplicated_spans_single_task_matches_distributed(spark, force_shape):
     """r13 single-task profile for duplicated_spans: identical row set to
     the distributed window shape (all-integer pipeline, so exact equality
     with no float caveat).  Edge rows: a duplicated doc_id whose two rows
@@ -970,17 +960,13 @@ def test_duplicated_spans_single_task_matches_distributed(spark):
         (5, "just seven tokens here not enough pad"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    def run(shape, kf):
+        force_shape(shape)
+        out = duplicated_spans(docs, k=8, min_count=2, keep_first=kf)
+        plan = out._jdf.queryExecution().logical().toString()
+        assert ("MapInPandas" in plan) is (shape == "single")
+        return sorted(tuple(r) for r in out.collect())
+
     for kf in (False, True):
-        dist = sorted(
-            tuple(r)
-            for r in duplicated_spans(
-                docs, k=8, min_count=2, keep_first=kf, single_task=False
-            ).collect()
-        )
-        single = sorted(
-            tuple(r)
-            for r in duplicated_spans(
-                docs, k=8, min_count=2, keep_first=kf, single_task=True
-            ).collect()
-        )
+        dist, single = run("distributed", kf), run("single", kf)
         assert dist and dist == single
