@@ -349,12 +349,15 @@ def _bus_trips_and_times(
 
 
 def calendar_table(spark: SparkSession) -> DataFrame:
-    """calendar.txt literal (generate_gtfs.py:450-463)."""
-    row = [("everyday", 1, 1, 1, 1, 1, 1, 1, "20250101", "20991231")]
-    return spark.createDataFrame(
-        row,
-        "service_id string, monday int, tuesday int, wednesday int, thursday int, "
-        "friday int, saturday int, sunday int, start_date string, end_date string",
+    """calendar.txt literal (generate_gtfs.py:450-463).  JVM literals over
+    a one-row range: a createDataFrame from a Python list would run a
+    Python worker in every default-parallelism task to write one row."""
+    days = ("monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday")
+    return spark.range(1, numPartitions=1).select(
+        F.lit("everyday").alias("service_id"),
+        *(F.lit(1).alias(d) for d in days),
+        F.lit("20250101").alias("start_date"),
+        F.lit("20991231").alias("end_date"),
     )
 
 

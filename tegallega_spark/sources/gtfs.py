@@ -10,6 +10,12 @@ bytes are identical to a single-file write — but CSV serialization of
 a 39 M-row stop_times now uses every core instead of one (r10 verdict
 #5: the old coalesce(1) was an unnecessary single-thread funnel).
 
+A feed's tables are independent outputs, so write_gtfs_feed submits
+them as concurrent jobs: the small tables' 1-5-task jobs fill the slots
+that stop_times and shapes leave idle, and Spark's scheduler interleaves
+the rest.  Each table still has its own temp dir and its own ordered
+concatenation, so concurrency cannot change a file's bytes.
+
 K3: gtfs.zip packaging for the OTP consumer.
 """
 
@@ -20,6 +26,7 @@ import os
 import shutil
 import tempfile
 import zipfile
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,7 +62,13 @@ def write_gtfs_table(df: DataFrame, name: str, out_dir: str) -> str:
 
 
 def write_gtfs_feed(tables: dict[str, DataFrame], out_dir: str) -> list[str]:
-    return [write_gtfs_table(df, name, out_dir) for name, df in tables.items()]
+    """Write every table with write_gtfs_table, one concurrent job per
+    table; returns the paths in `tables` order and raises the first
+    table's error (after every other write has finished)."""
+    with ThreadPoolExecutor(max_workers=max(1, len(tables))) as ex:
+        futures = [ex.submit(write_gtfs_table, df, name, out_dir)
+                   for name, df in tables.items()]
+        return [f.result() for f in futures]
 
 
 def make_gtfs_zip(feed_dir: str, zip_path: str) -> str:

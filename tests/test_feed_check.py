@@ -2,10 +2,13 @@
 `--build` smoke cannot run offline — no network, no vendored jar, and
 the reference's otp-deploy/graph.obj is a 134-byte LFS pointer).  What
 OTP's GTFS loader enforces first is the GTFS static spec's referential
-rules; pipeline/feed_check.py implements them as Spark anti-joins, and
-this test runs them over the FULL feed our pipeline generates from the
-reference's real inputs — so the gtfs.zip we'd hand OTP is known
-resolvable before it leaves the repo.  See FIXTURES.md §OTP for the
+rules; pipeline/feed_check.py implements them as Spark aggregates, and
+each test runs them twice: over the FULL feed our pipeline generates from
+the reference's real inputs — so the gtfs.zip we'd hand OTP is known
+resolvable before it leaves the repo — and over the offline feed built
+from tests/test_gtfs_build.py's hand-written fixture, which needs no
+reference checkout.  test_report_equals_python_recount recounts every rule
+in plain Python on planted offline feeds.  See FIXTURES.md §OTP for the
 acquisition attempt log."""
 
 from __future__ import annotations
@@ -22,13 +25,20 @@ from tegallega_spark.pipeline.feed_check import validate_gtfs_feed  # noqa: E402
 REF = "/root/reference"
 
 
-@pytest.fixture(scope="module")
-def feed_dir(spark, tmp_path_factory):
+@pytest.fixture(scope="module", params=["reference", "offline"])
+def feed_dir(request, spark, tmp_path_factory):
     from tegallega_spark.pipeline.gtfs_build import build_gtfs
     from tegallega_spark.sources.gtfs import write_gtfs_feed
 
+    if request.param == "reference":
+        root = REF
+    else:
+        from test_gtfs_build import _write_fixture
+
+        root = _write_fixture(tmp_path_factory.mktemp("ref"))
     out = str(tmp_path_factory.mktemp("feed"))
-    write_gtfs_feed(build_gtfs(spark, REF), out)
+    write_gtfs_feed(build_gtfs(spark, root), out)
+    spark.catalog.clearCache()
     return out
 
 
@@ -161,18 +171,21 @@ def test_optional_shapes_absent(spark, feed_dir, tmp_path):
     os.remove(os.path.join(dangling, "shapes.txt"))
     with open(os.path.join(dangling, "trips.txt")) as f:
         lines = f.readlines()
-    n_trips = len([ln for ln in lines[1:] if ln.strip()])
+    header = lines[0].rstrip("\n").split(",")
+    shape_idx = header.index("shape_id")
+    # the offline fixture has trips without a shape (a relation with no ways)
+    n_shaped = len([ln for ln in lines[1:]
+                    if ln.strip() and ln.rstrip("\n").split(",")[shape_idx]])
+    assert n_shaped > 0
     report = validate_gtfs_feed(spark, dangling)
     assert all(v == 0 for k, v in report.items() if k.startswith("missing_"))
-    assert report["trips_unknown_shape"] == n_trips
+    assert report["trips_unknown_shape"] == n_shaped
     assert "shapes_duplicate_sequence" not in report
 
     # (b) shapes.txt gone AND no trip references a shape → fully valid
     clean = str(tmp_path / "clean")
     shutil.copytree(feed_dir, clean)
     os.remove(os.path.join(clean, "shapes.txt"))
-    header = lines[0].rstrip("\n").split(",")
-    shape_idx = header.index("shape_id")
     with open(os.path.join(clean, "trips.txt"), "w") as f:
         f.write(lines[0])
         for ln in lines[1:]:
@@ -184,3 +197,150 @@ def test_optional_shapes_absent(spark, feed_dir, tmp_path):
     report = validate_gtfs_feed(spark, clean)
     bad = {k: v for k, v in report.items() if v != 0}
     assert not bad, f"optional-files-omitted feed should validate: {bad}"
+
+
+def _plant(feed: str) -> None:
+    """One or more violations of every rule, plus rows whose empty
+    references must NOT count as dangling."""
+    import shutil
+
+    def append(name: str, *rows: str) -> None:
+        with open(os.path.join(feed, f"{name}.txt"), "a") as f:
+            f.writelines(r + "\n" for r in rows)
+
+    with open(os.path.join(feed, "shapes.txt")) as f:
+        f.readline()
+        first_shape_pt = f.readline().rstrip("\n")
+    append("stop_times",
+           "ghost_trip,ghost_stop,1,25:00:00,24:59:59,0,0",
+           "t-KCIB380,S1,9999,9:99:99,noon,0,0",
+           "t-KCIB381,S2,9998,06:10:00,6h,0,0",
+           # sequence 1 twice in t-KCIB380, three times in t-KCIB381
+           "t-KCIB380,S1,1,06:00:00,05:59:00,0,0",
+           "t-KCIB381,S1,1,06:00:00,06:00:00,0,0",
+           "t-KCIB381,S1,1,06:00:00,06:00:00,0,0",
+           ",,7,,,0,0")
+    append("trips",
+           "ghost_route,ghost_trip2,ghost_service,X,0,ghost_shape,b1",
+           "K1,t-no-times,everyday,X,0,,")
+    append("stops", "polar_stop,Bad,91.0,200.0,0,", "nowhere,Blank,,107.6,0,")
+    append("shapes", first_shape_pt)
+    append("routes", "RX,ghost_agency,RX,x,3,000000", "RY,,RY,y,3,000000")
+    shutil.copy(os.path.join(feed, "calendar.txt"),
+                os.path.join(feed, "calendar_dates.txt"))
+
+
+def _recount(feed: str) -> dict[str, int]:
+    """validate_gtfs_feed's report recomputed with the csv module: empty
+    fields are absent values (Spark reads them as NULL), and a rule whose
+    input tables are missing is left out."""
+    import csv
+    import re
+    from collections import Counter
+
+    t = {}
+    for name in ("agency", "routes", "trips", "stops", "stop_times", "shapes",
+                 "calendar", "calendar_dates"):
+        path = os.path.join(feed, f"{name}.txt")
+        if os.path.exists(path):
+            with open(path, newline="") as f:
+                t[name] = [{k: v or None for k, v in r.items()}
+                           for r in csv.DictReader(f)]
+
+    def dangling(rows, col, keys) -> int:
+        return sum(1 for r in rows if r[col] and r[col] not in keys)
+
+    def ids(name, col) -> set:
+        return {r[col] for r in t[name]}
+
+    def dup_groups(rows, *cols) -> int:
+        return sum(1 for n in Counter(tuple(r[c] for c in cols)
+                                      for r in rows).values() if n > 1)
+
+    time_re = re.compile(r"^\d{1,3}:[0-5]\d:[0-5]\d$", re.ASCII)
+
+    def secs(v):
+        try:
+            h, m, s = (int(x) for x in v.split(":"))
+        except (AttributeError, ValueError):
+            return None
+        return h * 3600 + m * 60 + s
+
+    def num(v):
+        try:
+            return float(v)
+        except (TypeError, ValueError):
+            return None
+
+    out = {f"missing_table_{n}": int(n not in t)
+           for n in ("agency", "stops", "routes", "trips", "stop_times")}
+    out["missing_table_calendar"] = int(
+        "calendar" not in t and "calendar_dates" not in t)
+    st, trips = t.get("stop_times"), t.get("trips")
+    if st is not None and trips is not None:
+        out["stop_times_unknown_trip"] = dangling(st, "trip_id", ids("trips", "trip_id"))
+        out["trips_without_stop_times"] = dangling(trips, "trip_id", ids("stop_times", "trip_id"))
+    if st is not None and "stops" in t:
+        out["stop_times_unknown_stop"] = dangling(st, "stop_id", ids("stops", "stop_id"))
+    if trips is not None and "routes" in t:
+        out["trips_unknown_route"] = dangling(trips, "route_id", ids("routes", "route_id"))
+    services = [ids(n, "service_id") for n in ("calendar", "calendar_dates") if n in t]
+    if trips is not None and services:
+        out["trips_unknown_service"] = dangling(trips, "service_id", set().union(*services))
+    if trips is not None:
+        shapes = ids("shapes", "shape_id") if "shapes" in t else set()
+        out["trips_unknown_shape"] = dangling(trips, "shape_id", shapes)
+    if "routes" in t and "agency" in t:
+        out["routes_unknown_agency"] = dangling(t["routes"], "agency_id", ids("agency", "agency_id"))
+    if st is not None:
+        out["stop_times_duplicate_sequence"] = dup_groups(st, "trip_id", "stop_sequence")
+        out["stop_times_bad_time"] = sum(
+            1 for r in st
+            if any(v is not None and not time_re.match(v)
+                   for v in (r["arrival_time"], r["departure_time"])))
+        out["stop_times_departure_before_arrival"] = sum(
+            1 for r in st
+            if None not in (secs(r["departure_time"]), secs(r["arrival_time"]))
+            and secs(r["departure_time"]) < secs(r["arrival_time"]))
+    if "shapes" in t:
+        out["shapes_duplicate_sequence"] = dup_groups(t["shapes"], "shape_id", "shape_pt_sequence")
+    if "stops" in t:
+        out["stops_bad_coordinates"] = sum(
+            1 for r in t["stops"]
+            if None in (num(r["stop_lat"]), num(r["stop_lon"]))
+            or abs(num(r["stop_lat"])) > 90 or abs(num(r["stop_lon"])) > 180)
+    return out
+
+
+@pytest.fixture(scope="module")
+def planted_feed(spark, tmp_path_factory):
+    from test_gtfs_build import _write_fixture
+
+    from tegallega_spark.pipeline.gtfs_build import build_gtfs
+    from tegallega_spark.sources.gtfs import write_gtfs_feed
+
+    feed = str(tmp_path_factory.mktemp("planted"))
+    write_gtfs_feed(build_gtfs(spark, _write_fixture(tmp_path_factory.mktemp("ref"))), feed)
+    spark.catalog.clearCache()
+    _plant(feed)
+    return feed
+
+
+@pytest.mark.parametrize("removed", [
+    (), ("shapes",), ("calendar",), ("calendar", "calendar_dates"),
+    ("stop_times",), ("trips",), ("agency", "stops"),
+])
+def test_report_equals_python_recount(spark, planted_feed, tmp_path, removed):
+    """The report — keys, their order and every count — equals a plain
+    Python recount on the offline feed with planted defects, with each
+    set of tables removed."""
+    import shutil
+
+    feed = str(tmp_path / "feed")
+    shutil.copytree(planted_feed, feed)
+    for name in removed:
+        os.remove(os.path.join(feed, f"{name}.txt"))
+    want = _recount(feed)
+    assert list(validate_gtfs_feed(spark, feed).items()) == list(want.items())
+    if not removed:
+        assert all(v > 0 for k, v in want.items() if not k.startswith("missing_"))

@@ -13,6 +13,7 @@ skipped stop pair and one-sided times.  Stop X9 is shared by 1001 and
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 
@@ -121,12 +122,16 @@ def _write_fixture(root) -> str:
 
 
 @pytest.fixture(scope="module")
-def feed(spark, tmp_path_factory):
+def tables(spark, tmp_path_factory):
     from tegallega_spark.pipeline.gtfs_build import build_gtfs
 
-    tables = build_gtfs(spark, _write_fixture(tmp_path_factory.mktemp("ref")))
-    yield {name: df.collect() for name, df in tables.items()}
+    yield build_gtfs(spark, _write_fixture(tmp_path_factory.mktemp("ref")))
     spark.catalog.clearCache()
+
+
+@pytest.fixture(scope="module")
+def feed(tables):
+    return {name: df.collect() for name, df in tables.items()}
 
 
 def test_trip_and_block_ids(feed):
@@ -290,3 +295,46 @@ def test_headway_and_dwell_round_once(spark):
             twice_rounded_differs |= round(rounded_start + cum + seq0 * 10) != round(exact)
     assert got[("trip1", "s1")].arrival_time == "07:17:19"  # 26239 s
     assert twice_rounded_differs
+
+
+def _sha256s(paths) -> dict[str, str]:
+    out = {}
+    for p in paths:
+        with open(p, "rb") as f:
+            out[os.path.basename(p)] = hashlib.sha256(f.read()).hexdigest()
+    return out
+
+
+def test_feed_sink_equals_sequential_table_writes(tables, tmp_path):
+    """write_gtfs_feed runs the seven table writes as concurrent jobs; every
+    file's bytes equal a one-table-at-a-time write_gtfs_table of the same
+    frames, and the paths come back in table order."""
+    from tegallega_spark.sources.gtfs import write_gtfs_feed, write_gtfs_table
+
+    feed = write_gtfs_feed(tables, str(tmp_path / "feed"))
+    seq = [write_gtfs_table(df, name, str(tmp_path / "seq"))
+           for name, df in tables.items()]
+    assert [os.path.basename(p) for p in feed] == [f"{n}.txt" for n in tables]
+    assert _sha256s(feed) == _sha256s(seq)
+    assert sorted(os.listdir(tmp_path / "feed")) == sorted(f"{n}.txt" for n in tables)
+
+
+def test_feed_sink_raises_when_a_table_fails(spark, tables, tmp_path):
+    """A table whose plan fails at run time makes write_gtfs_feed raise, and
+    only after the other tables' writes have finished and every temp dir is
+    gone."""
+    import pyspark.sql.functions as F
+    from pyspark.errors import PySparkException
+
+    from tegallega_spark.sources.gtfs import write_gtfs_feed
+
+    failing = tables["calendar"].withColumn(
+        "service_id", F.raise_error(F.lit("planted sink failure")).cast("string"))
+    out = tmp_path / "feed"
+    with pytest.raises(PySparkException, match="planted sink failure"):
+        write_gtfs_feed(
+            {"agency": tables["agency"], "calendar": failing,
+             "routes": tables["routes"]},
+            str(out),
+        )
+    assert sorted(os.listdir(out)) == ["agency.txt", "routes.txt"]
