@@ -6,8 +6,9 @@ centroid's list → a query probes only the `nprobe` nearest lists.  At
 100 TB the centroid assignment is a parquet partition column, so a query
 is a partition-pruned scan of nprobe/k of the data instead of a full pass.
 
-Training uses pyspark.ml KMeans (Catalyst-side features via
-array_to_vector, seeded → deterministic).
+Training runs Lloyd's k-means driver-side on a bounded hash-ordered
+sample (deterministic, corpus-size-independent), then assigns every vector
+in one Arrow pass (`train_ivf_index_sampled`).
 """
 
 from __future__ import annotations
@@ -19,31 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 
 from tegallega_spark.operators.similarity import cosine
-
-
-def _to_vec(col):
-    from pyspark.ml.functions import array_to_vector
-
-    return array_to_vector(col.cast("array<double>"))
-
-
-def train_ivf_index(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    k: int = 16,
-    seed: int = 42,
-) -> "IVFIndex":
-    from pyspark.ml.clustering import KMeans
-
-    feat = df.withColumn("__features", _to_vec(F.col(vec_col)))
-    model = KMeans(k=k, seed=seed, featuresCol="__features").fit(feat)
-    assigned = (
-        model.transform(feat)
-        .withColumnRenamed("prediction", "ivf_list")
-        .drop("__features")
-    )
-    centroids = [c.tolist() for c in model.clusterCenters()]
-    return IVFIndex(assigned, centroids, vec_col)
 
 
 def _kmeans_blas(
@@ -178,11 +154,14 @@ def train_centroids_sampled(
         # holds the whole corpus (the _ann_setup under-fill case); a
         # short draw from a larger corpus would silently train on a
         # different sample than the documented result (ADVICE r13).
-        if len(sample_x) < sample and n is not None and n > len(sample_x):
+        # With `n` unknown the whole-corpus case cannot be told apart,
+        # so any short draw is refused.
+        if len(sample_x) < sample and (n is None or n > len(sample_x)):
             raise ValueError(
                 f"sample_x has {len(sample_x)} rows < sample={sample} on a "
-                f"corpus of {n} — the draw must cover `sample` rows (or the "
-                "whole corpus) to be result-identical"
+                f"corpus of {n if n is not None else 'unknown size'} — the "
+                "draw must cover `sample` rows (or the whole corpus, with "
+                "`n` given) to be result-identical"
             )
         x = np.asarray(sample_x, dtype=np.float64)[:sample]
     else:
@@ -205,13 +184,12 @@ def train_ivf_index_sampled(
     sample_salt: int = 0,
     sample_x: "np.ndarray | None" = None,
 ) -> "IVFIndex":
-    """Coarse quantizer trained on a bounded hash-ordered SAMPLE —
-    the scale path `train_ivf_index` (full pyspark.ml KMeans) isn't.
+    """Coarse quantizer trained on a bounded hash-ordered SAMPLE.
 
-    Full KMeans re-scans the corpus every iteration, so growing k_lists
-    with N makes the build superlinear (measured: 441 s at 2 M vectors
-    with k capped at 256 — the cap that eased the r7 ANN race's recall
-    from 0.994 to 0.95 as occupancy doubled).  IVF's own literature
+    Full (pyspark.ml) KMeans re-scans the corpus every iteration, so
+    growing k_lists with N makes the build superlinear (measured: 441 s
+    at 2 M vectors with k capped at 256 — the cap that eased the r7 ANN
+    race's recall from 0.994 to 0.95 as occupancy doubled).  IVF's own literature
     trains the coarse quantizer on a learning subset (Jégou TPAMI 2011,
     §V — the same practice `train_pq_codebooks` already follows), which
     makes training cost a function of k alone:
@@ -421,7 +399,7 @@ class IVFIndex:
     ) -> "IVFIndex":
         """Attach PQ codes to the inverted lists in place (one call, no
         manual reassignment ritual) and return self so
-        `train_ivf_index(df).encode(cb)` chains.  After this,
+        `train_ivf_index_sampled(df).encode(cb)` chains.  After this,
         operators.pq.ivfpq_topk(self, cb, q) works directly."""
         from tegallega_spark.operators.pq import encode_pq
 

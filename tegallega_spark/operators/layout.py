@@ -9,9 +9,9 @@ is how Delta/Iceberg OPTIMIZE ZORDER and the classic Morton-curve
 literature get multi-column skipping from single-column clustering.
 
 Everything here is column expressions — the bit interleave compiles into
-whole-stage codegen (no UDF), and the layout write is one
+whole-stage codegen (no UDF).  Clustering a write on the key is one
 repartitionByRange (sampled range exchange) + in-partition sort, exactly
-the shuffle profile of a sort-based OPTIMIZE.
+the shuffle profile of a sort-based OPTIMIZE; q67 emits the key itself.
 
 The testdata has no reference twin for this (the reference engine has no
 layout optimizer); it exists for the training-data pipeline story: corpus
@@ -24,7 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-__all__ = ["interleave_bits", "add_zorder_key", "write_zordered"]
+__all__ = ["interleave_bits", "add_zorder_key"]
 
 
 def interleave_bits(quantized: list[Column], bits: int = 16) -> Column:
@@ -79,28 +79,3 @@ def add_zorder_key(
     return with_stats.withColumn(
         key_name, interleave_bits(quantized, bits)
     ).drop(*drop)
-
-
-def write_zordered(
-    df: DataFrame,
-    cols: list[str],
-    path: str,
-    n_files: int = 32,
-    bits: int = 16,
-) -> None:
-    """Write parquet clustered on the Z-order of `cols`.
-
-    repartitionByRange on the key gives globally disjoint key ranges per
-    file (sampled exchange, no single-partition sort); the in-partition
-    sort tightens row-group min-max stats inside each file.  Readers then
-    skip on the ORIGINAL columns' footer stats — no key column is needed
-    at read time, so it is dropped before the write.
-    """
-    keyed = add_zorder_key(df, cols, bits)
-    (
-        keyed.repartitionByRange(n_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -1073,19 +1073,3 @@ def extract_features(df: DataFrame, hist_bins: int = 16) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return df.mapInPandas(run, schema=FEATURES_SCHEMA)
-
-
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plumbing for video payloads: 1 row → N frame rows
-    via explode(sequence(...)).  For AVI/MJPEG, QuickTime/MOV, and y4m
-    payloads n_frames comes from the REAL demuxer (decode_avi /
-    decode_mov / decode_y4m); other payloads use the deterministic
-    fallback metadata."""
-    decoded = decode_batches(df)
-    return decoded.select(
-        "doc_id",
-        "n_frames",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))
-        ).alias("frame_idx"),
-    )

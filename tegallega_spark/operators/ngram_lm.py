@@ -33,6 +33,11 @@ from pyspark.sql import DataFrame
 __all__ = ["BigramLM", "train_bigram_lm", "perplexity_score"]
 
 UNK = "<unk>"
+# Largest pair space (K² for K token codes) the single-task counter counts
+# with a dense bincount: its int64 count array is 8·K² bytes, 128 MB here.
+# Above it the counter takes the sort-based np.unique path (same counts).
+DENSE_PAIR_LIMIT = 1 << 24
+
 
 class BigramLM(NamedTuple):
     """bigrams: (w1, w2, c12); contexts: (w1, c1); vocab: (word,);
@@ -225,7 +230,7 @@ def _single_task_bigram_counts(
         w2 = mapped[w1_idx + 1]
         K = len(uniques) + 1
         key = w1.astype(np.int64) * K + w2
-        if K * K <= (1 << 26):
+        if K * K <= DENSE_PAIR_LIMIT:
             # dense pair space: one bincount instead of a sort-based
             # np.unique (identical counts)
             c12_all = np.bincount(key, minlength=K * K)

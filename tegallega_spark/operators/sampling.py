@@ -30,14 +30,6 @@ def hash_bucket(key: Column) -> Column:
     return F.substring(F.md5(key.cast("string").cast("binary")), 1, 2)
 
 
-def hash_sample(df: DataFrame, key: str, threshold: str) -> DataFrame:
-    """Keep rows whose md5-prefix bucket sorts below `threshold`.
-
-    threshold: two lowercase hex chars; fraction kept = int(threshold,16)/256.
-    """
-    return df.filter(hash_bucket(F.col(key)) < threshold)
-
-
 def stratified_hash_sample(
     df: DataFrame,
     key: str,

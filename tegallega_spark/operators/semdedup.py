@@ -25,8 +25,9 @@ Spark-first composition — everything reuses existing pieces:
   row explodes into num_tables buckets there);
 - verification: exact cosine on every candidate (same falsifiable
   contract as minhash_near_duplicates_verified);
-- keeper selection: `operators/cc.dedup_cluster_assignments` (connected
-  components, min-id canonical).
+- keeper selection, in clean_corpus's semantic step:
+  `operators/cc.dedup_cluster_assignments` (connected components, min-id
+  canonical).
 
 Hot-cluster guard: a degenerate corpus (10⁶ copies of one template) puts
 everything in one cluster; all-pairs there is 10¹² join rows.  Clusters
@@ -48,7 +49,6 @@ import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inference
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from tegallega_spark.operators.cc import dedup_cluster_assignments
 from tegallega_spark.operators.ivf import (
     train_centroids_sampled,
     train_tree_quantizer_sampled,
@@ -56,7 +56,7 @@ from tegallega_spark.operators.ivf import (
 from tegallega_spark.operators.similarity import cosine
 from tegallega_spark.session import attach_intermediates
 
-__all__ = ["semantic_pairs", "semantic_dedup", "auto_k_clusters"]
+__all__ = ["semantic_pairs", "auto_k_clusters"]
 
 # above this many cells the blocking switches from the flat quantizer to
 # the two-level TreeQuantizer: flat probing is O(k·d) per vector, so with
@@ -232,7 +232,7 @@ def semantic_pairs(
     template spam.  None disables the check."""
     if seed != 42:
         warnings.warn(
-            "semantic_pairs/semantic_dedup: `seed` has been a no-op since "
+            "semantic_pairs: `seed` has been a no-op since "
             "the r8 sampled trainer (deterministic hash-ordered sample); "
             "varying it does not vary the blocking",
             stacklevel=2,
@@ -424,32 +424,3 @@ def semantic_pairs(
     if k_clusters > 1:
         scored = scored.dropDuplicates(["id_a", "id_b"])
     return attach_intermediates(scored, *handles)
-
-
-def semantic_dedup(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    min_cosine: float = 0.95,
-    k_clusters: int | None = None,
-    seed: int = 42,
-    max_cluster: int = 4096,
-    probes: int = 2,
-    target_cell_size: int = 512,
-    warn_star_fraction: float | None = 0.25,
-) -> DataFrame:
-    """Rows of `df` that survive semantic dedup: from every connected
-    component of the verified pair graph, the min-id member is kept.
-    One left-anti join against the (small) non-canonical set — the corpus
-    itself is never shuffled.  The persisted cluster assignment rides out
-    on the result (attach_intermediates) so callers can
-    release_intermediates(result) once their action has run."""
-    pairs = semantic_pairs(
-        df, id_col, vec_col, min_cosine, k_clusters, seed, max_cluster,
-        probes, target_cell_size, warn_star_fraction,
-    )
-    assign = dedup_cluster_assignments(pairs, "id_a", "id_b")
-    dupes = assign.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return attach_intermediates(df.join(dupes, id_col, "left_anti"), pairs, assign)

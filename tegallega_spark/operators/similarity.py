@@ -6,10 +6,10 @@ North-star extension (BASELINE.json): approximate-nearest-neighbor over the
 - brute-force cosine top-k: exact baseline; F.zip_with/F.aggregate dot
   product, JVM-side, no UDF.  O(N) per query but embarrassingly parallel
   and shuffle-free until the final top-k (a TakeOrdered, not a full sort).
-- LSH-bucketed (random hyperplane signs) variant: at 100 TB, brute force
-  per query is a full scan; bucketing by sign-pattern restricts candidates
-  to colliding buckets.  Deterministic hyperplanes derived from xxhash64 so
-  results are reproducible without a stored model.
+- LSH-bucketed (random hyperplane signs) all-pairs join: bucketing by
+  sign-pattern restricts candidate pairs to colliding buckets.
+  Deterministic hyperplanes (splitmix64 of the plane seed) make results
+  reproducible without a stored model.
 """
 
 from __future__ import annotations
@@ -98,56 +98,12 @@ def _plane_components(plane_seed: int, dim: int) -> list[float]:
     return comps
 
 
-def _hyperplane_sign(vec: Column, plane_seed: int, dim: int) -> Column:
-    """Sign bit of <vec, h> for the deterministic hyperplane `plane_seed`."""
-    h = F.array(*[F.lit(c) for c in _plane_components(plane_seed, dim)])
-    return F.when(dot(vec.cast("array<double>"), h) >= 0, F.lit(1)).otherwise(F.lit(0))
-
-
-def lsh_bucket(vec: Column, dim: int, num_planes: int = 8, table: int = 0) -> Column:
-    """Random-hyperplane LSH bucket id: the concatenated sign bits.  `table`
-    offsets the plane seeds so independent hash tables can be built."""
-    bucket = F.lit(0)
-    for p in range(num_planes):
-        bucket = bucket * 2 + _hyperplane_sign(vec, table * 1009 + p, dim)
-    return bucket
-
-
-def lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    num_planes: int = 6,
-) -> DataFrame:
-    """ANN top-k: score only rows whose LSH bucket matches the query's.
-
-    Bucket assignment is a pure column expression, so at scale it can also be
-    used as a parquet partition column making the candidate fetch a
-    partition-pruned scan instead of a full pass.
-    """
-    dim = len(query_vec)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    with_bucket = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        lsh_bucket(F.col(vec_col), dim, num_planes).alias("__bucket"),
-    )
-    query_bucket = lsh_bucket(q, dim, num_planes)
-    candidates = with_bucket.filter(F.col("__bucket") == query_bucket)
-    scored = candidates.select(
-        F.col(id_col),
-        cosine(F.col(vec_col).cast("array<double>"), q).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
-
-
 def make_bucket_udf(num_planes: int, num_tables: int, dim: int):
     """Arrow-vectorized vec→[bucket per table] pandas_udf: ONE numpy matmul
     against the (tables×planes, dim) plane matrix per batch, then sign-bit
     packing — replaces tables×planes interpreted HOF dot products per row.
-    Uses the same deterministic _plane_components as the column path."""
+    The planes are the deterministic _plane_components, the same ones
+    _single_task_all_pairs builds."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 

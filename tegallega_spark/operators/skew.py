@@ -1,22 +1,16 @@
-"""Skew- and layout-aware join utilities (BASELINE.json 100 TB constraint).
+"""Skew-aware join (BASELINE.json 100 TB constraint; q68).
 
-AQE's skew-join splitting handles most runtime skew; these helpers cover
-the two cases it can't:
-
-- `salted_join`: a priori known hot keys (e.g. one agency with 100× the
-  trips) — explode the small side over `salt` replicas, scatter the big
-  side uniformly, join on (key, salt).  Turns one straggler partition into
-  `salt` even ones at the cost of replicating the small side.
-- `write_bucketed` / co-located joins: pre-shuffle both fact tables into
-  the same bucket layout so repeated joins on the key skip the exchange
-  entirely — the batch analogue of the reference's
-  file-per-route partitioning (route-data/geojson/{relationId}/).
+AQE's skew-join splitting handles most runtime skew; `salted_join` covers
+the case it can't: a priori known hot keys (e.g. one agency with 100× the
+trips) — explode the small side over `salt` replicas, scatter the big
+side uniformly, join on (key, salt).  Turns one straggler partition into
+`salt` even ones at the cost of replicating the small side.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def salted_join(
@@ -38,26 +32,3 @@ def salted_join(
     ).withColumn("__salt", F.col("__salt").cast(b.schema["__salt"].dataType))
     joined = b.join(s, [key, "__salt"], how)
     return joined.select(*big_cols, *small_cols)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    key: str,
-    num_buckets: int = 16,
-    sort_by: str | None = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by the join key.
-    Subsequent equi-joins between tables bucketed identically on the key
-    run shuffle-free (SortMergeJoin over pre-bucketed scans)."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(num_buckets, key)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.saveAsTable(table_name)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str
-) -> DataFrame:
-    """Join two identically-bucketed saved tables on their bucket key."""
-    return spark.table(left_table).join(spark.table(right_table), key)

@@ -27,14 +27,6 @@ def _close(a: tuple[float, float], b: tuple[float, float]) -> bool:
     return abs(a[0] - b[0]) < COORD_TOL and abs(a[1] - b[1]) < COORD_TOL
 
 
-def _haversine_m(lon1: float, lat1: float, lon2: float, lat2: float) -> float:
-    r = 6371000.0
-    p1, p2 = math.radians(lat1), math.radians(lat2)
-    dp, dl = p2 - p1, math.radians(lon2 - lon1)
-    a = math.sin(dp / 2) ** 2 + math.cos(p1) * math.cos(p2) * math.sin(dl / 2) ** 2
-    return 2 * r * math.asin(math.sqrt(a))
-
-
 # ---------------------------------------------------------------------------
 # Way stitching
 # ---------------------------------------------------------------------------

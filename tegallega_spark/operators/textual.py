@@ -39,27 +39,6 @@ def token_count(text: Column) -> Column:
     return F.size(F.filter(F.split(text, r"\s+"), lambda t: t != ""))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish token estimate: count regex word pieces + non-space symbols.
-
-    A deterministic stand-in for a real tokenizer: words of ≤4 chars are one
-    token, longer words cost ceil(len/4).
-    """
-    words = tokens(text)
-    return F.aggregate(
-        words,
-        F.lit(0),
-        lambda acc, w: acc + F.ceil(F.length(w) / 4.0).cast("int"),
-    )
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    toks = tokens(text)
-    sw = F.array(*[F.lit(w) for w in _STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def language_scores(toks: Column) -> dict:
     """Per-language stopword hit counts (with multiplicity) over a token
     array.  Hot paths should stage these as STORED columns in a
@@ -232,25 +211,17 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.trim(normalized))
 
 
-def rolling_hash_fingerprints(
-    text: Column, window: int = 8, keep_every: int = 16
-) -> Column:
-    """Winnowing-style document fingerprints: hash every `window`-word
-    shingle, keep hashes ≡ 0 (mod keep_every).  array<bigint> sketch usable
-    for containment checks at scale.
-
-    Each shingle hash is the first 60 bits of md5 as a non-negative bigint
-    (sampling.md5_60) — bit-identical reproducible in any engine with an
-    md5 function, which is what the q62 DuckDB oracle does."""
-    return rolling_hash_fingerprints_from_tokens(
-        tokens(text), window=window, keep_every=keep_every
-    )
-
-
 def rolling_hash_fingerprints_from_tokens(
     toks: Column, window: int = 8, keep_every: int = 16
 ) -> Column:
-    """rolling_hash_fingerprints over a PRE-TOKENIZED array column.
+    """Winnowing-style document fingerprints over a PRE-TOKENIZED array
+    column (`tokens(text)`): hash every `window`-word shingle, keep hashes
+    ≡ 0 (mod keep_every).  array<bigint> sketch usable for containment
+    checks at scale.
+
+    Each shingle hash is the first 60 bits of md5 as a non-negative bigint
+    (sampling.md5_60) — bit-identical reproducible in any engine with an
+    md5 function, which is what the q62 DuckDB oracle does.
 
     Interpreted higher-order lambdas get no common-subexpression reuse:
     when `toks` is the tokens(text) EXPRESSION, the per-element

@@ -2429,7 +2429,8 @@ def q62(spark, sf_dir):
     """Winnowing-style document fingerprints (Schleimer et al., MOSS):
     hash every 8-word shingle, keep hashes ≡ 0 (mod 16) — a ~1/16-density
     sketch for containment/overlap checks at corpus scale
-    (operators/textual.rolling_hash_fingerprints).  Each shingle hash is
+    (operators/textual.rolling_hash_fingerprints_from_tokens).  Each
+    shingle hash is
     the first 60 bits of md5 (sampling.md5_60), which the oracle rebuilds
     hex-digit-by-digit with shift arithmetic — the sketch is
     engine-auditable, not a Spark-private hash."""

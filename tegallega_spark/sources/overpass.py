@@ -192,17 +192,20 @@ def fetch_bundles_distributed(
             out["lat"] = out["lat"].astype("float64")
             yield out
 
+    sc = spark.sparkContext
+    ids = [str(r) for r in relation_ids]
+    n_parts = max(1, num_partitions or min(len(ids), sc.defaultParallelism))
+    # relation i is placed in partition i % n_parts: parallelize hands the
+    # j-th element of an n_parts-long list to partition j.  A round-robin
+    # repartition of one-row input partitions (or a hash of the index) can
+    # put two relations in one task and leave another task empty.
+    slices = sc.parallelize(
+        [[(rid,) for rid in ids[j::n_parts]] for j in range(n_parts)], n_parts
+    )
     catalog = spark.createDataFrame(
-        [(str(r),) for r in relation_ids], "relation_id string"
+        slices.flatMap(lambda rows: rows), "relation_id string"
     )
-    n_parts = num_partitions or min(
-        len(relation_ids), spark.sparkContext.defaultParallelism
-    )
-    combined = (
-        catalog.repartition(max(1, n_parts))
-        .mapInPandas(fetch_partition, schema=combined_schema)
-        .persist()
-    )
+    combined = catalog.mapInPandas(fetch_partition, schema=combined_schema).persist()
     import pyspark.sql.functions as F
 
     ways_df = combined.filter(F.col("kind") == "way").select(

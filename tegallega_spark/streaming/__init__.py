@@ -10,7 +10,6 @@ applies; watermarks handle late data.
 from tegallega_spark.streaming.events import (  # noqa: F401
     read_events_stream,
     tumbling_counts,
-    sliding_sums,
     session_counts,
     run_available_now,
 )

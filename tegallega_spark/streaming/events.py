@@ -153,25 +153,6 @@ def tumbling_counts(
     )
 
 
-def sliding_sums(
-    events: DataFrame,
-    window: str = "30 minutes",
-    slide: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Sliding (hopping) window aggregation."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
-            "event_type",
-            "n",
-        )
-    )
-
-
 def session_counts(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
 ) -> DataFrame:

@@ -69,17 +69,6 @@ def test_decode_batches_dispatches_real_avi(spark):
     assert got[2].format == "corrupt"
 
 
-def test_frame_sample_uses_real_avi_frame_count(spark):
-    frames = _frames(9)
-    df = spark.createDataFrame(
-        [(7, bytearray(MM.encode_avi(frames, fps=3)))], "doc_id long, payload binary"
-    )
-    rows = MM.frame_sample(df, every_n=4).collect()
-    assert [(r.doc_id, r.n_frames, r.frame_idx) for r in rows] == [
-        (7, 9, 0), (7, 9, 4), (7, 9, 8),
-    ]
-
-
 def test_avi_strf_is_valid_bitmapinfoheader():
     """The strf chunk must be a 40-byte BITMAPINFOHEADER with matching
     dims and MJPG fourcc — what any third-party demuxer keys on."""

@@ -44,9 +44,6 @@ OPERATORS = {
     "semdedup_pairs": lambda spark: __import__(
         "tegallega_spark.operators.semdedup", fromlist=["x"]
     ).semantic_pairs(_emb(spark), min_cosine=0.9, k_clusters=4),
-    "semdedup_dedup": lambda spark: __import__(
-        "tegallega_spark.operators.semdedup", fromlist=["x"]
-    ).semantic_dedup(_emb(spark), min_cosine=0.9, k_clusters=4),
     "similarity_lsh": lambda spark: __import__(
         "tegallega_spark.operators.similarity", fromlist=["x"]
     ).all_pairs_above(_emb(spark), min_cosine=0.9),

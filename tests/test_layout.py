@@ -1,21 +1,12 @@
-"""Z-order layout: interleave correctness vs a Python reference, and the
-actual data-skipping win measured from parquet footer stats."""
+"""Z-order key: interleave correctness vs a Python reference, and the
+key's NULL and constant-column quantization."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
-from tegallega_spark.operators.layout import (
-    add_zorder_key,
-    interleave_bits,
-    write_zordered,
-)
-from tegallega_spark.session import load_table
-from tests.conftest import SF_SMOKE
+from tegallega_spark.operators.layout import add_zorder_key, interleave_bits
 
 
 def _py_interleave(vals, bits):
@@ -50,69 +41,3 @@ def test_zorder_key_null_and_constant(spark):
     # its key equals the key of the minimum
     assert rows[None] == rows[5] == 0
     assert rows[10] > 0
-
-
-def _files_overlapping_box(path, lo_a, hi_a, lo_b, hi_b, col_a, col_b):
-    hit = 0
-    files = sorted(glob.glob(f"{path}/part-*.parquet"))
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        mins = {col_a: None, col_b: None}
-        maxs = {col_a: None, col_b: None}
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                name = col.path_in_schema
-                if name in mins and col.statistics is not None:
-                    s = col.statistics
-                    mins[name] = s.min if mins[name] is None else min(mins[name], s.min)
-                    maxs[name] = s.max if maxs[name] is None else max(maxs[name], s.max)
-        if mins[col_a] is None or mins[col_b] is None:
-            hit += 1  # no stats → reader must scan it
-        elif not (maxs[col_a] < lo_a or mins[col_a] > hi_a
-                  or maxs[col_b] < lo_b or mins[col_b] > hi_b):
-            hit += 1
-    return hit, len(files)
-
-
-def test_zorder_layout_skips_files(spark, tmp_path):
-    """A 2-D box predicate must touch strictly fewer z-ordered files than
-    naively-partitioned files — that's the whole point of the layout."""
-    ev = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id", "value")
-
-    naive = str(tmp_path / "naive")
-    ev.repartition(8).write.mode("overwrite").parquet(naive)
-    zo = str(tmp_path / "zo")
-    write_zordered(ev, ["user_id", "value"], zo, n_files=8)
-
-    stats = ev.agg(
-        F.min("user_id"), F.max("user_id"), F.min("value"), F.max("value")
-    ).first()
-    ulo, uhi, vlo, vhi = stats
-    # a box covering the low ~quarter of each dimension
-    box = (ulo, ulo + (uhi - ulo) * 0.25, vlo, vlo + (vhi - vlo) * 0.25)
-
-    n_hit, n_files = _files_overlapping_box(naive, *box, "user_id", "value")
-    z_hit, z_files = _files_overlapping_box(zo, *box, "user_id", "value")
-    assert n_files == z_files == 8
-    assert n_hit == 8  # hash layout: every file spans the whole range
-    assert z_hit < n_hit, f"z-order must skip files: {z_hit} vs {n_hit}"
-
-    # and the data is intact
-    back = spark.read.parquet(zo)
-    assert back.count() == ev.count()
-    assert sorted(back.columns) == sorted(ev.columns)
-
-
-def test_zorder_write_plan_has_range_exchange(spark, tmp_path):
-    """The layout pass must be a sampled range exchange + in-partition sort
-    — never a global single-partition sort."""
-    ev = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id", "value")
-    keyed = add_zorder_key(ev, ["user_id", "value"]).repartitionByRange(
-        8, "__zkey"
-    ).sortWithinPartitions("__zkey")
-    plan = keyed._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower()
-    # the sort is in-partition (global=false); the only SinglePartition
-    # exchange allowed is the one-row min/max stats aggregate
-    assert "Sort [__zkey" in plan and "ASC NULLS FIRST], false" in plan

@@ -157,17 +157,6 @@ def test_decode_batches_dispatches_real_mov(spark):
     assert got[2].format == "corrupt"
 
 
-def test_frame_sample_uses_real_mov_frame_count(spark):
-    df = spark.createDataFrame(
-        [(3, bytearray(MM.encode_mov(_frames(7, h=8, w=8), fps=2)))],
-        "doc_id long, payload binary",
-    )
-    rows = MM.frame_sample(df, every_n=3).collect()
-    assert [(r.doc_id, r.n_frames, r.frame_idx) for r in rows] == [
-        (3, 7, 0), (3, 7, 3), (3, 7, 6),
-    ]
-
-
 def test_encode_mov_hdlr_tkhd_are_spec_correct():
     """r8 advice fix: the in-repo decoder ignores hdlr/tkhd, but real
     QuickTime parsers don't — hdlr must lead with a 4-byte version/flags

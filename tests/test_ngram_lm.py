@@ -184,6 +184,32 @@ def test_single_task_matches_distributed_bitwise(spark, force_shape):
     assert dist and dist == single
 
 
+def test_single_task_sparse_pair_counts_match_reference(spark, force_shape):
+    """More distinct tokens in the one counting task than the dense pair
+    space allows (K² > DENSE_PAIR_LIMIT) sends the bigram counts through
+    the sort-based np.unique path; scores must still match the plain-Python
+    reference."""
+    import random
+
+    from tegallega_spark.operators.ngram_lm import DENSE_PAIR_LIMIT
+
+    rng = random.Random(11)
+    texts = {
+        i: " ".join(f"w{rng.randrange(9000)}" for _ in range(40))
+        for i in range(300)
+    }
+    distinct = {w for t in texts.values() for w in t.split()}
+    assert (len(distinct) + 1) ** 2 > DENSE_PAIR_LIMIT
+    force_shape("single")
+    got, lm = _score(spark, texts)
+    assert lm.small_gate
+    want = ref_scores(texts)
+    assert set(got) == set(want) and want
+    for i in want:
+        assert got[i][0] == want[i][0]
+        assert got[i][1] == pytest.approx(want[i][1], rel=1e-12)
+
+
 def test_single_task_gate_scan_rooted_only(spark, sf_dir):
     """The auto gate must NOT fire for shuffle-origin inputs (their size
     estimates are unreliable) and must fire for a small scan-rooted one."""

@@ -173,21 +173,6 @@ def test_pq_adc_scan_reads_codes_only(spark, tmp_path):
     assert "BroadcastExchange" in plan
 
 
-def test_shuffled_shards_plan_is_one_hash_exchange(spark):
-    """Training export must be exactly one hash exchange on the
-    deterministic shard column + in-partition sort — no sampled range
-    exchange (layout-dependent boundaries), no single-partition sort."""
-    from tegallega_spark.operators.export import shuffled_shards
-    from tegallega_spark.session import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id")
-    plan = plan_of(shuffled_shards(docs, "doc_id", 8), "simple")
-    assert plan.lower().count("exchange") == 1
-    assert "hashpartitioning(__shard" in plan
-    assert "rangepartitioning" not in plan.lower()
-    assert "SinglePartition" not in plan
-
-
 def test_boilerplate_line_dedup_shuffles_hashes_not_text(spark):
     """The frequency agg and the blocked-set join must key on the 8-byte
     line hash; the only plan node allowed to carry the line TEXT through

@@ -81,10 +81,10 @@ def test_ivfpq_composition(spark, emb, codebooks):
     """IVF pruning + PQ ADC + exact re-rank: with all lists probed and a
     full re-rank this must equal brute force; with real pruning it must
     keep usable recall."""
-    from tegallega_spark.operators.ivf import train_ivf_index
+    from tegallega_spark.operators.ivf import train_ivf_index_sampled
     from tegallega_spark.operators.pq import ivfpq_topk
 
-    idx = train_ivf_index(emb, k=8).encode(codebooks, normalize=True)
+    idx = train_ivf_index_sampled(emb, k=8).encode(codebooks, normalize=True)
     n = emb.count()
     query = emb.orderBy("vec_id").first().embedding
 
@@ -113,10 +113,10 @@ def test_ivfpq_batch_matches_per_query(spark, emb, codebooks):
     both full-probe/full-rerank (≡ brute force) and the pruned
     production shape; tie-breaks are (dist, id) on both paths, so the
     match is deterministic equality, not set overlap."""
-    from tegallega_spark.operators.ivf import train_ivf_index
+    from tegallega_spark.operators.ivf import train_ivf_index_sampled
     from tegallega_spark.operators.pq import ivfpq_topk, ivfpq_topk_batch
 
-    idx = train_ivf_index(emb, k=8).encode(codebooks, normalize=True)
+    idx = train_ivf_index_sampled(emb, k=8).encode(codebooks, normalize=True)
     n = emb.count()
     queries = [list(r.embedding) for r in emb.orderBy("vec_id").limit(3).collect()]
 
@@ -181,6 +181,23 @@ def test_sampled_ivf_trainer_raises_when_sample_below_k(emb):
 
     with pytest.raises(ValueError, match="rows < k"):
         train_ivf_index_sampled(emb, k=64, sample=8)
+
+
+def test_short_sample_draw_raises_without_corpus_size(emb):
+    """A caller-supplied draw shorter than `sample` trains on a different
+    sample than the documented one unless it is the whole corpus; with
+    `n` unknown that cannot be shown, so it must raise, not train."""
+    from tegallega_spark.operators.ivf import train_centroids_sampled
+
+    short = np.zeros((10, 8))
+    with pytest.raises(ValueError, match="sample_x has 10 rows < sample=32"):
+        train_centroids_sampled(emb, k=4, sample=32, sample_x=short)
+    # the whole-corpus draw stays accepted when `n` says so
+    rng = np.random.default_rng(0)
+    whole = rng.normal(size=(10, 8))
+    assert train_centroids_sampled(
+        emb, k=4, sample=32, sample_x=whole, n=10
+    ).shape == (4, 8)
 
 
 def test_sample_prefilter_bit_identical(spark, emb):

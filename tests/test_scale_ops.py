@@ -1,17 +1,14 @@
-"""Scale-path operators: salted joins, bucketed co-located joins, IVF ANN,
-and the custom stateful streaming operator."""
+"""Scale-path operators: salted joins, IVF ANN, q41's thinning exchange
+sizing and incremental partition overwrite."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 
-from tegallega_spark.operators.ivf import train_ivf_index
-from tegallega_spark.operators.skew import bucketed_join, salted_join, write_bucketed
+from tegallega_spark.operators.ivf import train_ivf_index_sampled
+from tegallega_spark.operators.skew import salted_join
 from tegallega_spark.session import load_table
 from tests.conftest import SF_SMOKE
-from tests.test_plan_quality import plan_of
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -93,26 +90,9 @@ def test_salted_join_balances_planted_hot_key(spark):
             conf.set(k, v)
 
 
-def test_bucketed_join_skips_shuffle(spark):
-    # uses the session's default warehouse dir (spark-warehouse/, gitignored)
-    orders = load_table(spark, SF_SMOKE, "orders")
-    lineitem = load_table(spark, SF_SMOKE, "lineitem").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    write_bucketed(orders, "b_orders", "o_orderkey", num_buckets=8)
-    write_bucketed(lineitem, "b_lineitem", "o_orderkey", num_buckets=8)
-    joined = bucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey")
-    plan = plan_of(joined, "simple")
-    # co-located buckets: no Exchange feeding the join
-    assert "Exchange hashpartitioning" not in plan
-    assert joined.count() == lineitem.count()
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_ivf_search_recall(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    index = train_ivf_index(emb, "embedding", k=8)
+    index = train_ivf_index_sampled(emb, "embedding", k=8)
     qrow = emb.orderBy("vec_id").first()
     qv = [float(x) for x in qrow["embedding"]]
     # probing all lists must equal brute force exactly
@@ -122,35 +102,6 @@ def test_ivf_search_recall(spark):
     assert recall >= 0.5
     top = index.search(qv, k=3, nprobe=8).collect()
     assert top[0]["vec_id"] == qrow["vec_id"]  # the query vector itself
-
-
-def test_stateful_stream_thinning_matches_batch(spark, sf_dir):
-    """applyInPandasWithState over AvailableNow equals the batch q46 fold."""
-    from tegallega_spark.queries import SPARK_QUERIES
-    from tegallega_spark.streaming.events import read_events_stream
-    from tegallega_spark.streaming.stateful import thin_events_stream
-
-    stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    thinned = thin_events_stream(stream)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            thinned.writeStream.format("memory")
-            .queryName("thin_stream_test")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    got = {
-        (r.user_id, r.event_id)
-        for r in spark.sql("SELECT * FROM thin_stream_test").collect()
-    }
-    want = {
-        (r.user_id, r.event_id)
-        for r in SPARK_QUERIES["q41_stateful_thinning"](spark, sf_dir).collect()
-    }
-    assert got == want
 
 
 def test_thinning_exchange_sized_from_input_bytes(spark, sf_dir, monkeypatch):
@@ -247,29 +198,3 @@ def test_fingerprint_detects_even_multiplicity_swap(spark):
     )
     changed = {r.relation_id for r in changed_partitions(v2, v1).collect()}
     assert changed == {"r1"}
-
-
-def test_stream_thinning_honors_min_gap(spark, sf_dir):
-    """min_gap_s is threaded into the state function: a huge gap keeps only
-    the first event per user."""
-    from tegallega_spark.streaming.events import read_events_stream
-    from tegallega_spark.streaming.stateful import thin_events_stream
-
-    stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    thinned = thin_events_stream(stream, min_gap_s=10**9)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            thinned.writeStream.format("memory")
-            .queryName("thin_stream_gap_test")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    got = spark.sql("SELECT * FROM thin_stream_gap_test")
-    from tegallega_spark.session import load_table
-
-    n_users = load_table(spark, sf_dir, "events").select("user_id").distinct().count()
-    assert got.count() == n_users
-    assert got.select("user_id").distinct().count() == n_users

@@ -12,11 +12,8 @@ import pytest
 
 import pyspark.sql.functions as F
 
-from tegallega_spark.operators.semdedup import (
-    auto_k_clusters,
-    semantic_dedup,
-    semantic_pairs,
-)
+from tegallega_spark.operators.cc import dedup_cluster_assignments
+from tegallega_spark.operators.semdedup import auto_k_clusters, semantic_pairs
 from tegallega_spark.operators.similarity import cosine
 from tegallega_spark.session import load_table, release_intermediates
 
@@ -35,6 +32,18 @@ def _exact_pairs(df, min_cosine):
         .filter(F.col("c") >= min_cosine)
         .collect()
     }
+
+
+def _keepers(df, pairs_df):
+    """Ids that survive semantic dedup (clean_corpus's semantic step):
+    every row outside the pair graph plus each component's min id."""
+    assign = dedup_cluster_assignments(pairs_df, "id_a", "id_b")
+    dupes = {
+        r.doc_id
+        for r in assign.filter(F.col("doc_id") != F.col("cluster_id")).collect()
+    }
+    release_intermediates(assign)
+    return sorted(r.vec_id for r in df.select("vec_id").collect() if r.vec_id not in dupes)
 
 
 def test_single_cluster_matches_exact_all_pairs(spark, sf_dir):
@@ -80,7 +89,6 @@ def test_planted_duplicates_all_found_and_one_keeper_per_group(spark):
     df = _planted(spark)
     pairs_df = semantic_pairs(df, min_cosine=0.999, k_clusters=8)
     pairs = {(r.id_a, r.id_b) for r in pairs_df.collect()}
-    release_intermediates(pairs_df)
     # near-identical copies always share a k-means cell → full recall
     for g in range(30):
         ids = [g * 3, g * 3 + 1, g * 3 + 2]
@@ -89,8 +97,8 @@ def test_planted_duplicates_all_found_and_one_keeper_per_group(spark):
     # no cross-group false positives at this threshold
     assert all(a // 3 == b // 3 for a, b in pairs)
 
-    kept = semantic_dedup(df, min_cosine=0.999, k_clusters=8)
-    ids = sorted(r.vec_id for r in kept.select("vec_id").collect())
+    ids = _keepers(df, pairs_df)
+    release_intermediates(pairs_df)
     assert ids == [g * 3 for g in range(30)]  # min id of each group
 
 
@@ -107,12 +115,11 @@ def test_hot_cluster_star_guard_bounds_pairs(spark):
         df, min_cosine=0.99, k_clusters=2, max_cluster=50
     )
     pairs = pairs_df.collect()
-    release_intermediates(pairs_df)
     assert len(pairs) == n - 1
     assert {r.id_a for r in pairs} == {0}
 
-    kept = semantic_dedup(df, min_cosine=0.99, k_clusters=2, max_cluster=50)
-    assert kept.count() == 1
+    assert _keepers(df, pairs_df) == [0]
+    release_intermediates(pairs_df)
 
 
 def test_release_frees_cached_cluster_assignment(spark):
@@ -122,16 +129,6 @@ def test_release_frees_cached_cluster_assignment(spark):
     handles = getattr(pairs_df, "_tegallega_persisted", [])
     assert handles and all(h.is_cached for h in handles)
     release_intermediates(pairs_df)
-    assert all(not h.is_cached for h in handles)
-
-
-def test_semantic_dedup_release_frees_cached_cluster_assignment(spark):
-    df = _planted(spark, n_groups=5)
-    kept = semantic_dedup(df, min_cosine=0.999, k_clusters=2)
-    kept.collect()
-    handles = getattr(kept, "_tegallega_persisted", [])
-    assert handles and all(h.is_cached for h in handles)
-    release_intermediates(kept)
     assert all(not h.is_cached for h in handles)
 
 
@@ -247,7 +244,6 @@ def test_tree_quantizer_path_full_recall_on_planted(spark):
     df = _planted(spark, n_groups=120, copies=3)
     pairs_df = semantic_pairs(df, min_cosine=0.999, k_clusters=k)
     pairs = {(r.id_a, r.id_b) for r in pairs_df.collect()}
-    release_intermediates(pairs_df)
     for g in range(120):
         ids = [g * 3, g * 3 + 1, g * 3 + 2]
         assert {(a, b) for a in ids for b in ids if a < b} <= pairs, (
@@ -255,9 +251,8 @@ def test_tree_quantizer_path_full_recall_on_planted(spark):
         )
     assert all(a // 3 == b // 3 for a, b in pairs)
 
-    kept = semantic_dedup(df, min_cosine=0.999, k_clusters=k)
-    ids = sorted(r.vec_id for r in kept.select("vec_id").collect())
-    release_intermediates(kept)
+    ids = _keepers(df, pairs_df)
+    release_intermediates(pairs_df)
     assert ids == [g * 3 for g in range(120)]
 
 

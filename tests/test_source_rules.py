@@ -8,7 +8,8 @@ reads the five settings that size the session to its host or cluster.
 Likewise the one auditable text hash and the one shingle word hash are
 each defined in one place, so every operator and oracle agree on them,
 and the feed's trip and shape id grammar is written only in
-functions/ids.py."""
+functions/ids.py.  Every package function is run by a query, pipeline,
+race or tool, or is named in KEEP with the reason it stays."""
 
 from __future__ import annotations
 
@@ -148,3 +149,132 @@ def test_gtfs_id_prefixes_live_in_ids_module():
     stray = [h for h in hits if h[0] != "functions/ids.py"]
     assert not stray, f"id prefixes written outside functions/ids.py: {stray}"
     assert {h[2] for h in hits} == ID_PREFIXES
+
+
+# ---------------------------------------------------------------------------
+# Reachability: every package function has a caller that is not a test
+# ---------------------------------------------------------------------------
+
+REPO = PACKAGE.parent
+# What runs the package: the query entry points in __spark_entry__.py,
+# bench.py, and every race and tool under scripts/ and perfbench/.  Package
+# module top-level code is a root too (it builds the query registry), and so
+# is every `@register`ed query.
+ROOT_FILES = ("__spark_entry__.py", "bench.py", "scripts/*.py", "perfbench/*.py")
+
+# Functions kept although nothing above runs them, each with its reason.
+KEEP = {
+    # (a) the reference's own surface (COVERAGE.md rows)
+    "pipeline.convert_routes.convert_old_routes": "convert.py old-routes conversion (convert golden)",
+    "pipeline.convert_routes.to_nested_json": "convert.py routes.json writer (F15 / A3)",
+    "sources.kml.write_route_kml": "K4 KML sink",
+    "sources.kml.write_route_shapefile": "K5 shapefile sink, single file",
+    "sources.shapefile.write_route_shapefiles": "K5 shapefile sink, per-route layout",
+    "sources.git_sink.publish_gtfs_feed": "K6 git-as-sink",
+    "sources.git_sink.lfs_smudge": "K6 LFS pointer read-back",
+    "sources.osm_pbf.osm_xml_to_pbf": "S8 osm→pbf conversion",
+    "sources.osm_pbf.read_osm_pbf": "S8 parallel blob-split PBF source",
+    "sources.osm_pbf.osm_entity_tables": "S8 typed tables over read_osm_pbf",
+    "pipeline.pbf_extract.gtfs_from_pbf": "osm-pbf-to-gtfs workflow, offline OSM→GTFS path",
+    "pipeline.incremental.incremental_update": "the reference's path-filtered incremental rebuild",
+    "operators.spatial.slice_path_geojson": "index.html Q5 path slicing",
+    "operators.graph.build_edges": "index.html Q1 graph build (J10 route labels)",
+    "operators.graph.build_vertices": "index.html Q1 graph build",
+    "operators.graph.nearest_vertex": "index.html Q3 nearest vertex",
+    "operators.graph.dijkstra_local": "index.html Q4 shortest path, single-task",
+    # (b) references that tests compare the running code against
+    "operators.multimodal.resize_pixels": "reference resampler resize_batches is compared against",
+    "operators.stateful._thin_group": "per-group W9 thinning reference for thin_stops",
+    "operators.stateful._stitch_group": "per-group W8 stitching reference for stitch_ways",
+    # (c) the streaming surface that the streaming rework builds on
+    "streaming.events.read_events_stream": "events file-source stream",
+    "streaming.events.tumbling_counts": "windowed streaming aggregate",
+    "streaming.events.session_counts": "session-window streaming aggregate",
+    "streaming.events.run_available_now": "AvailableNow incremental trigger",
+    "streaming.dedup_stream.dedup_stream": "streaming ingest dedup",
+    "streaming.neardup_stream.verified_neardup_sink": "verified streaming near-dup sink",
+}
+
+
+def _loaded_names(nodes) -> set[str]:
+    """Every name read under `nodes`: bare names and attribute names
+    (`F.col` reads "col"), so a call through a module alias counts."""
+    out = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+                out.add(n.attr)
+    return out
+
+
+def _is_registered(node) -> bool:
+    return any(
+        isinstance(n, ast.Name) and n.id == "register"
+        for dec in node.decorator_list for n in ast.walk(dec)
+    )
+
+
+def _package_defs() -> tuple[dict[str, ast.AST], set[str], set[str]]:
+    """(module-level defs by dotted name, names read by root code,
+    registered queries).  Module-level classes count as defs; nested
+    functions and methods belong to their enclosing def."""
+    defs: dict[str, ast.AST] = {}
+    root_names: set[str] = set()
+    registered: set[str] = set()
+    for f in sorted(PACKAGE.rglob("*.py")):
+        mod = ".".join(f.relative_to(PACKAGE).with_suffix("").parts)
+        top = []
+        for node in ast.parse(f.read_text(), filename=str(f)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                key = f"{mod}.{node.name}"
+                defs[key] = node
+                top.extend(node.decorator_list)
+                if _is_registered(node):
+                    registered.add(key)
+            else:
+                top.append(node)
+        root_names |= _loaded_names(top)
+    for pattern in ROOT_FILES:
+        for f in sorted(REPO.glob(pattern)):
+            root_names |= _loaded_names([ast.parse(f.read_text(), filename=str(f))])
+    return defs, root_names, registered
+
+
+def _reachable(defs, names: set[str], seeds: set[str]) -> set[str]:
+    """Defs reached from `seeds` and from any def named in `names`.  A
+    name resolves to every def of that name in any module: the rule may
+    keep a dead def alive by a name clash, never call a live one dead."""
+    by_name: dict[str, list[str]] = {}
+    for key in defs:
+        by_name.setdefault(key.rsplit(".", 1)[1], []).append(key)
+    live: set[str] = set()
+    todo = set(seeds) | {k for n in names for k in by_name.get(n, ())}
+    while todo:
+        key = todo.pop()
+        if key in live:
+            continue
+        live.add(key)
+        todo |= {k for n in _loaded_names([defs[key]]) for k in by_name.get(n, ())}
+    return live
+
+
+def test_every_package_def_runs_outside_tests_or_is_kept():
+    """A function only tests call is code nothing ships: delete it with
+    its tests, or name it in KEEP with the reason it stays."""
+    defs, names, registered = _package_defs()
+    assert len(registered) == 74, f"{len(registered)} registered queries"
+    live = _reachable(defs, names, registered | set(KEEP))
+    dead = sorted(set(defs) - live)
+    assert not dead, f"package defs that only tests reach: {dead}"
+
+
+def test_keep_list_names_only_unreached_defs():
+    """Each KEEP entry is a def that nothing but KEEP reaches; once a query,
+    pipeline or race calls it, it leaves the list."""
+    defs, names, registered = _package_defs()
+    missing = sorted(k for k in KEEP if k not in defs)
+    assert not missing, f"KEEP names defs that do not exist: {missing}"
+    reached = sorted(set(KEEP) & _reachable(defs, names, registered))
+    assert not reached, f"KEEP entries that run outside tests: {reached}"

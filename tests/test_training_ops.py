@@ -16,7 +16,7 @@ import pyspark.sql.functions as F
 from tegallega_spark.operators.cc import connected_components, dedup_cluster_assignments
 from tegallega_spark.operators.dedup import contamination_report, exact_shingle_jaccard_pairs
 from tegallega_spark.operators.packing import pack_sequences
-from tegallega_spark.operators.sampling import hash_sample, stratified_hash_sample
+from tegallega_spark.operators.sampling import stratified_hash_sample
 from tegallega_spark.operators.textual import pii_counts, redact_pii
 
 
@@ -112,9 +112,15 @@ def test_redact_pii_ssn_not_eaten_by_phone(spark):
 # ---------------------------------------------------------------------------
 
 def test_hash_sample_deterministic_and_fractional(spark):
-    df = spark.range(0, 2000).withColumnRenamed("id", "k")
-    s1 = sorted(r["k"] for r in hash_sample(df, "k", "40").collect())
-    s2 = sorted(r["k"] for r in hash_sample(df.repartition(7), "k", "40").collect())
+    df = spark.range(0, 2000).select(
+        F.col("id").alias("k"), (F.col("id") % 2 == 0).cast("string").alias("s")
+    )
+
+    def keys(d):
+        out = stratified_hash_sample(d, "k", "s", {"true": "40"}, "40")
+        return sorted(r["k"] for r in out.collect())
+
+    s1, s2 = keys(df), keys(df.repartition(7))
     assert s1 == s2  # partition-layout independent
     assert 0.18 < len(s1) / 2000 < 0.32  # ~25% +- slack
 
@@ -518,7 +524,10 @@ def test_rolling_hash_fingerprints_short_doc_regression(spark):
     descending sequence(1, 0) used to reach slice(start=0) and throw."""
     import pyspark.sql.functions as F2
 
-    from tegallega_spark.operators.textual import rolling_hash_fingerprints
+    from tegallega_spark.operators.textual import (
+        rolling_hash_fingerprints_from_tokens,
+        tokens,
+    )
 
     df = spark.createDataFrame(
         [(1, "only three words"), (2, "a much longer document " * 8)],
@@ -527,7 +536,10 @@ def test_rolling_hash_fingerprints_short_doc_regression(spark):
     rows = {
         r.doc_id: r.f
         for r in df.select(
-            "doc_id", rolling_hash_fingerprints(F2.col("text"), window=8).alias("f")
+            "doc_id",
+            rolling_hash_fingerprints_from_tokens(
+                tokens(F2.col("text")), window=8
+            ).alias("f"),
         ).collect()
     }
     assert rows[1] == []
@@ -761,7 +773,10 @@ def test_rolling_fingerprints_md5_hasher_matches_reference_hash(spark):
     import hashlib
 
     from tegallega_spark.operators.sampling import hash_frac
-    from tegallega_spark.operators.textual import rolling_hash_fingerprints
+    from tegallega_spark.operators.textual import (
+        rolling_hash_fingerprints_from_tokens,
+        tokens,
+    )
 
     def md5_60(s):
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
@@ -775,8 +790,9 @@ def test_rolling_fingerprints_md5_hasher_matches_reference_hash(spark):
         r.doc_id: r.fps
         for r in df.select(
             "doc_id",
-            rolling_hash_fingerprints(F.col("text"), window=8, keep_every=1)
-            .alias("fps"),
+            rolling_hash_fingerprints_from_tokens(
+                tokens(F.col("text")), window=8, keep_every=1
+            ).alias("fps"),
         ).collect()
     }
     assert out == {1: [md5_60(ascii_text)], 2: [md5_60(utf8_text)]}
@@ -830,7 +846,7 @@ def test_mixture_sample_independent_of_stratified_sampler(spark):
     UNSALTED md5 fraction, so unsalted mixture survivors would all sit
     below any bucket threshold above their rate).  Zero caller-supplied
     counts raise the designed ValueError, not ZeroDivisionError."""
-    from tegallega_spark.operators.sampling import hash_sample, mixture_sample
+    from tegallega_spark.operators.sampling import mixture_sample
 
     df = spark.range(8000).select(
         F.col("id").alias("doc_id"),
@@ -843,7 +859,9 @@ def test_mixture_sample_independent_of_stratified_sampler(spark):
     web = mixed.filter(F.col("source") == "web")
     n_web = web.count()
     assert abs(n_web - 1000) < 150
-    after_cut = hash_sample(web, key="doc_id", threshold="80").count()
+    after_cut = stratified_hash_sample(
+        web, key="doc_id", stratum="source", thresholds={}, default_threshold="80"
+    ).count()
     assert abs(after_cut - n_web / 2) < 120, (
         f"bucket cut kept {after_cut}/{n_web} — correlated hash streams"
     )

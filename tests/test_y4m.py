@@ -95,14 +95,3 @@ def test_decode_batches_dispatches_real_y4m(spark):
         "y4m", 16, 24, 4,
     )
     assert got[2].format == "corrupt"
-
-
-def test_frame_sample_uses_real_y4m_frame_count(spark):
-    df = spark.createDataFrame(
-        [(3, bytearray(MM.encode_y4m(_frames(7), fps=2)))],
-        "doc_id long, payload binary",
-    )
-    rows = MM.frame_sample(df, every_n=3).collect()
-    assert [(r.doc_id, r.n_frames, r.frame_idx) for r in rows] == [
-        (3, 7, 0), (3, 7, 3), (3, 7, 6),
-    ]
