@@ -12,6 +12,27 @@ from tegallega_spark.session import get_spark  # noqa: E402
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
+# The Tegallega snapshot the parity tests compare against.  It is not part
+# of this repo; tests that read it skip wherever it is not mounted.
+REF = "/root/reference"
+
+
+def reference_missing(*relpaths: str) -> str | None:
+    """Why a test that reads these files of the snapshot (paths relative to
+    REF) cannot run here: a reason naming the first one that is not on
+    disk, or None when all of them are."""
+    for rel in relpaths:
+        path = os.path.join(REF, rel)
+        if not os.path.exists(path):
+            return f"reference checkout absent: {path} not found"
+    return None
+
+
+def needs_reference(*relpaths: str):
+    """skipif mark for a test that reads these files of the snapshot."""
+    why = reference_missing(*relpaths)
+    return pytest.mark.skipif(why is not None, reason=why or "")
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -41,3 +62,15 @@ def force_shape(monkeypatch):
         monkeypatch.setattr(S, "SMALL_INPUT_BYTES", limits[shape])
 
     return force
+
+
+@pytest.fixture(scope="session")
+def gtfs_root(tmp_path_factory):
+    """Input root for tests whose assertions hold on any GTFS build: the
+    reference snapshot when it is mounted, else the hand-written offline
+    fixture of tests/test_gtfs_build.py."""
+    if reference_missing("routes.json", "route-data") is None:
+        return REF
+    from test_gtfs_build import _write_fixture
+
+    return _write_fixture(tmp_path_factory.mktemp("ref"))

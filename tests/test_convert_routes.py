@@ -10,8 +10,13 @@ import subprocess
 
 import pytest
 
-REF = "/root/reference"
+from tests.conftest import REF, needs_reference
+
 CACHE = "/tmp/tegallega_convert_golden"
+
+pytestmark = needs_reference(
+    "convert-routes-json/convert.py", "convert-routes-json/routes.json"
+)
 
 
 def _fresh_golden() -> dict:

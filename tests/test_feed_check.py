@@ -3,11 +3,13 @@
 the reference's otp-deploy/graph.obj is a 134-byte LFS pointer).  What
 OTP's GTFS loader enforces first is the GTFS static spec's referential
 rules; pipeline/feed_check.py implements them as Spark aggregates, and
-each test runs them twice: over the FULL feed our pipeline generates from
-the reference's real inputs — so the gtfs.zip we'd hand OTP is known
-resolvable before it leaves the repo — and over the offline feed built
-from tests/test_gtfs_build.py's hand-written fixture, which needs no
-reference checkout.  test_report_equals_python_recount recounts every rule
+each test runs them over two feeds: `[reference]`, the FULL feed our
+pipeline generates from the reference's real inputs — so the gtfs.zip we'd
+hand OTP is known resolvable before it leaves the repo — and `[offline]`,
+the feed built from tests/test_gtfs_build.py's hand-written fixture, which
+needs no reference checkout.  The `[reference]` cases skip, naming the
+missing path, wherever the checkout at /root/reference is not mounted.
+test_report_equals_python_recount recounts every rule
 in plain Python on planted offline feeds.  See FIXTURES.md §OTP for the
 acquisition attempt log."""
 
@@ -21,8 +23,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tegallega_spark.pipeline.feed_check import validate_gtfs_feed  # noqa: E402
-
-REF = "/root/reference"
+from tests.conftest import REF, reference_missing  # noqa: E402
 
 
 @pytest.fixture(scope="module", params=["reference", "offline"])
@@ -31,6 +32,9 @@ def feed_dir(request, spark, tmp_path_factory):
     from tegallega_spark.sources.gtfs import write_gtfs_feed
 
     if request.param == "reference":
+        why = reference_missing("routes.json", "route-data")
+        if why:
+            pytest.skip(why)
         root = REF
     else:
         from test_gtfs_build import _write_fixture

@@ -14,6 +14,7 @@ from tegallega_spark.operators.graph import (
     nearest_vertex,
     shortest_paths_distributed,
 )
+from tests.conftest import REF, needs_reference
 
 
 @pytest.fixture(scope="module")
@@ -79,12 +80,13 @@ def test_nearest_vertex(spark, toy_graph):
     assert nearest_vertex(v, lon=0.011, lat=0.009) == "s4"
 
 
+@needs_reference("routes.json", "route-data")
 def test_real_gtfs_graph_route(spark):
     """End-to-end: build the routing graph from the generated GTFS tables
     and route between two stops of the same line (index.html use case)."""
     from tegallega_spark.pipeline.gtfs_build import build_gtfs
 
-    t = build_gtfs(spark, "/root/reference")
+    t = build_gtfs(spark, REF)
     edges = build_edges(t["stop_times"], t["stops"], t["trips"])
     assert edges.count() > 1000
     # pick two consecutive stops of some edge → path must exist

@@ -97,14 +97,19 @@ def test_extract_chain_plan_shape(spark):
         assert "SinglePartition" not in plan
 
 
-def test_gtfs_argmin_join_no_cartesian(spark):
+def test_gtfs_argmin_join_no_cartesian(spark, gtfs_root):
     """The stop→shape argmin is an equi-join on relation_id + min_by, never
-    a cartesian product (SURVEY §4.2 watch-out)."""
+    a cartesian product (SURVEY §4.2 watch-out).  On small inputs Spark
+    plans a cross join as a BroadcastNestedLoopJoin instead of a
+    CartesianProduct, and an equi-join never plans as a nested loop, so
+    both are ruled out whatever the input size."""
     from tegallega_spark.pipeline.gtfs_build import build_gtfs
 
-    tables = build_gtfs(spark, "/root/reference")
+    tables = build_gtfs(spark, gtfs_root)
     plan = plan_of(tables["stop_times"], "simple")
+    spark.catalog.clearCache()
     assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_decontaminate_broadcasts_blocklist(spark):
