@@ -18,9 +18,12 @@ supplies it:
   candidate set (exact set equality, not counts);
 - exact-verifying the streamed candidates must reproduce the batch
   minhash_near_duplicates_verified pair set (the falsifiable contract);
-- reported: stream wall-clock + docs/s, per-trigger count, state rows
-  (from the final StreamingQueryProgress), batch wall-clock for the same
-  corpus — the throughput row the README publishes.
+- reported: stream wall-clock + docs/s, trigger count, per-trigger
+  medians of the triggerExecution / addBatch / queryPlanning durations,
+  state rows and memory (from the final StreamingQueryProgress), the
+  state layout's shard count and group cap (bands × STATE_SHARDS), and
+  the batch wall-clock for the same corpus — the throughput row the
+  README publishes.
 
 Usage: python scripts/stress_stream.py [N[:CAP] ...]   (default 8 16 32)
         N is the sf0.1 replication factor: N=8 → 40 k docs, 32 → 160 k,
@@ -38,6 +41,7 @@ import importlib.util
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -114,16 +118,33 @@ def run_stream(spark, feed: str, max_ids: int | None = None) -> tuple[float, set
     )
     q.awaitTermination()
     wall = time.perf_counter() - t0
-    progress = [p for p in q.recentProgress if p.get("stateOperators")]
-    n_triggers = len(q.recentProgress)
-    state_rows = (
-        progress[-1]["stateOperators"][0]["numRowsTotal"] if progress else None
-    )
     got = {
         (r.id_a, r.id_b)
         for r in spark.read.parquet(sink).select("id_a", "id_b").distinct().collect()
     }
-    return wall, got, {"triggers": n_triggers, "state_rows": state_rows}
+    return wall, got, progress_metrics(q.recentProgress)
+
+
+def progress_metrics(prog: list) -> dict:
+    """Per-trigger medians of the progress durations, the final state
+    store's size, and the state layout's group cap."""
+    from tegallega_spark.streaming.neardup_stream import STATE_SHARDS
+
+    def med(key):
+        return statistics.median(p["durationMs"].get(key, 0) for p in prog) if prog else 0
+
+    with_state = [p for p in prog if p.get("stateOperators")]
+    state = with_state[-1]["stateOperators"][0] if with_state else {}
+    return {
+        "triggers": len(prog),
+        "trigger_ms": med("triggerExecution"),
+        "add_batch_ms": med("addBatch"),
+        "query_planning_ms": med("queryPlanning"),
+        "state_rows": state.get("numRowsTotal"),
+        "state_mem_mb": round(state.get("memoryUsedBytes", 0) / 1e6, 1),
+        "state_shards": STATE_SHARDS,
+        "state_groups_cap": BANDS * STATE_SHARDS,
+    }
 
 
 def batch_answers(spark, feed: str) -> tuple[float, set, set]:
@@ -200,13 +221,12 @@ def main() -> None:
         row = {
             "replication": n,
             "docs": total,
-            "triggers": metrics["triggers"],
             "candidates": len(stream_cands),
             "verified_pairs": len(batch_verified),
             "stream_s": round(stream_s, 2),
             "docs_per_s": round(total / stream_s, 1),
-            "state_rows": metrics["state_rows"],
             "batch_s": round(batch_s, 2),
+            **metrics,
         }
         if cap is None:
             assert stream_cands == batch_cands, (

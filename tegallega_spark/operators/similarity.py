@@ -98,14 +98,12 @@ def _plane_components(plane_seed: int, dim: int) -> list[float]:
     return comps
 
 
-def make_bucket_udf(num_planes: int, num_tables: int, dim: int):
-    """Arrow-vectorized vec→[bucket per table] pandas_udf: ONE numpy matmul
-    against the (tables×planes, dim) plane matrix per batch, then sign-bit
-    packing — replaces tables×planes interpreted HOF dot products per row.
-    The planes are the deterministic _plane_components, the same ones
-    _single_task_all_pairs builds."""
+def _bucketer(num_planes: int, num_tables: int, dim: int):
+    """The LSH bucket definition both all-pairs shapes share: a function
+    from an (n, dim) float64 matrix to its (n, tables) bucket ids — ONE
+    matmul against the (tables×planes, dim) matrix of deterministic
+    _plane_components, then each table's sign bits packed big-endian."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
     planes = np.array(
         [
@@ -119,13 +117,27 @@ def make_bucket_udf(num_planes: int, num_tables: int, dim: int):
         [1 << (num_planes - 1 - p) for p in range(num_planes)], dtype=np.int64
     )
 
-    @pandas_udf("array<long>")
-    def buckets(vecs: pd.Series) -> pd.Series:
-        V = np.array(vecs.tolist(), dtype=np.float64)          # (n, dim)
+    def bucket_ids(V):
         signs = (V @ planes.T >= 0).astype(np.int64)           # (n, t*p)
         signs = signs.reshape(len(V), num_tables, num_planes)  # (n, t, p)
-        ids = (signs * weights).sum(axis=2)                    # (n, t)
-        return pd.Series(list(ids))
+        return (signs * weights).sum(axis=2)                   # (n, t)
+
+    return bucket_ids
+
+
+def make_bucket_udf(num_planes: int, num_tables: int, dim: int):
+    """Arrow-vectorized vec→[bucket per table] pandas_udf over _bucketer:
+    one numpy matmul per batch replaces tables×planes interpreted HOF dot
+    products per row."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    bucket_ids = _bucketer(num_planes, num_tables, dim)
+
+    @pandas_udf("array<long>")
+    def buckets(vecs: pd.Series) -> pd.Series:
+        V = np.array(vecs.tolist(), dtype=np.float64)  # (n, dim)
+        return pd.Series(list(bucket_ids(V)))
 
     return buckets
 
@@ -167,24 +179,14 @@ def _single_task_all_pairs(
     M,
 ) -> DataFrame:
     """One-task profile of all_pairs_above for collected (idx, M): bucket
-    signs via the same plane matmul as make_bucket_udf, candidate pairs
-    via an (n, n) mask over shared (table, bucket) groups, rescore via
-    the same chunked einsum as cosine_pairs_udf.  Ships (ids, M) to the
-    task as a broadcast; the 1-row trigger frame carries no data."""
+    ids via the same _bucketer as make_bucket_udf, candidate pairs via an
+    (n, n) mask over shared (table, bucket) groups, rescore via the same
+    chunked einsum as cosine_pairs_udf.  Ships (ids, M) to the task as a
+    broadcast; the 1-row trigger frame carries no data."""
     import numpy as np
     import pyspark.sql.types as T
 
-    planes = np.array(
-        [
-            _plane_components(t * 1009 + p, dim)
-            for t in range(num_tables)
-            for p in range(num_planes)
-        ],
-        dtype=np.float64,
-    )
-    weights = np.array(
-        [1 << (num_planes - 1 - p) for p in range(num_planes)], dtype=np.int64
-    )
+    bucket_ids = _bucketer(num_planes, num_tables, dim)
     spark = df.sparkSession
     bcast = spark.sparkContext.broadcast((list(idx), M))
     id_t = df.schema[id_col].dataType
@@ -205,8 +207,7 @@ def _single_task_all_pairs(
         n = len(mat)
         if n < 2:
             return
-        signs = (mat @ planes.T >= 0).astype(np.int64)
-        buckets = (signs.reshape(n, num_tables, num_planes) * weights).sum(axis=2)
+        buckets = bucket_ids(mat)
         mask = np.zeros((n, n), dtype=bool)
         for t in range(num_tables):
             col = buckets[:, t]

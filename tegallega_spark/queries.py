@@ -313,10 +313,31 @@ def q08(spark, sf_dir):
     2-decimal by construction (probe: round(price,2) == round(price*100)
     / 100.0 on EVERY row at all SFs), so cents/100.0 reproduces the old
     round(price, 2) double bit-for-bit (both are the correctly-rounded
-    double of the same 2-decimal value)."""
+    double of the same 2-decimal value).
+
+    The packing's preconditions are checked in the same aggregate, so no
+    extra job: a row whose price is negative, not exactly 2-decimal or
+    at least 2^27 cents, or whose line number is outside [0, 2^32),
+    raises instead of decoding to a wrong (price, line)."""
     l = T(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
-    packed = cents * F.lit(1 << 32).cast("long") + F.col("l_linenumber").cast("long")
+    price = F.col("l_extendedprice")
+    cents = F.round(price * 100, 0).cast("long")
+    line = F.col("l_linenumber").cast("long")
+    unpackable = (
+        (price < 0)
+        | (cents.cast("double") / F.lit(100.0) != price)
+        | (cents >= F.lit(1 << 27))
+        | (line < 0)
+        | (line >= F.lit(1 << 32))
+    )
+    packed = F.when(
+        unpackable,
+        F.raise_error(F.format_string(
+            "q08 cannot pack (cents, line) into one long: l_extendedprice=%s "
+            "l_linenumber=%s (needs a non-negative 2-decimal price below "
+            "2^27 cents and a line number in [0, 2^32))", price, line,
+        )),
+    ).otherwise(cents * F.lit(1 << 32).cast("long") + line)
     g = l.groupBy("l_orderkey").agg(
         F.min(packed).alias("__mn"), F.max(packed).alias("__mx")
     )

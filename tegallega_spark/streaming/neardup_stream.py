@@ -17,6 +17,35 @@ ingestion, where a near-dup beyond the horizon is someone else's
 compaction problem (same trade as dedup_stream's watermark).  Hot buckets
 (template shingles) cap at max_ids, turning the O(bucket²) pair blowup the
 batch path also guards against into a hard bound.
+
+State sharding: state is keyed by (band_idx, band_hash mod STATE_SHARDS),
+not by raw bucket.  Each shard's state cell holds its buckets' id lists,
+so per-bucket matching is unchanged, but a trigger calls the Python state
+function once per touched (band, shard) group instead of once per
+distinct bucket.  The group count is capped at bands × STATE_SHARDS
+(16 × 8 = 128 at the defaults), so the stateful stage runs at most 128
+busy tasks however many shuffle partitions it has.
+
+Why 8 (4-core host).  Each group costs about 1.5 ms of task time, and a
+trigger of a few hundred documents already touches nearly every shard,
+so it rewrites the whole state at any shard count; the count only sets
+how many Python calls it makes.  Measured steady-state addBatch on a
+6-trigger drain of 500 documents: 1.85 s at 128 shards, 1.6 s at 32,
+1.35 s at 16, 1.3 s at 8.  The 40k-document race (stress_stream.py 8):
+660 docs/s at 128, 877 at 16, 930 at 8, 954 at 4 in one sweep, and
+576-599 at 128 against 1,089 at 8 in a later pair, with identical pair
+sets in every run.  At 640k documents (20k-document triggers against a
+large state) 8 shards gave up a little: 2,135-2,340 docs/s at 128 and
+2,014-2,107 at 8, stream wall +8% in the median, partly because 128
+cells hash less evenly onto the shuffle partitions than 2,048 do.  The
+count is fixed at a checkpoint's first trigger, while trigger volume is
+not known when the plan is built, so it is a constant rather than a
+rule over trigger volume.
+
+Checkpoint layout: the shard count and the banding parameters
+(shingle_n, num_hashes, bands) decide which state cell a bucket lives
+in.  Every state value records that layout, and a restart under another
+layout raises an error naming both instead of silently missing pairs.
 """
 
 from __future__ import annotations
@@ -38,33 +67,39 @@ from tegallega_spark.session import release_intermediates
 PAIR_SCHEMA = "id_a bigint, id_b bigint, band_idx int"
 # Shard state: the shard's buckets as parallel arrays — bucket band
 # hashes, all bucket id lists flattened, and offsets delimiting each
-# bucket's slice of the flat list (len(offsets) == len(hashes) + 1).
-STATE_SCHEMA = "hashes array<bigint>, flat_ids array<bigint>, offsets array<int>"
-# State is keyed by (band_idx, band_hash mod STATE_SHARDS); see
-# neardup_candidates_stream.  Part of the checkpoint's grouping key:
-# changing it invalidates existing checkpoints.
-STATE_SHARDS = 128
+# bucket's slice of the flat list (len(offsets) == len(hashes) + 1) —
+# plus the layout (shingle_n, num_hashes, bands, shards) that wrote it.
+STATE_SCHEMA = (
+    "hashes array<bigint>, flat_ids array<bigint>, offsets array<int>, "
+    "layout array<int>"
+)
+# State is keyed by (band_idx, band_hash mod STATE_SHARDS); see the module
+# docstring for the measured choice.
+STATE_SHARDS = 8
 
 
-def _make_shard_matcher(max_ids: int):
+def _make_shard_matcher(max_ids: int, layout: tuple[int, int, int, int]):
     """Per-(band, hash-shard) stateful matcher.  The state cell holds the
-    SHARD's bucket table (hash -> retained ids); per-bucket matching
-    semantics are identical to the old per-(band, hash) keying — each
-    bucket's arrivals are processed in sorted-doc-id order per delivered
-    chunk, emit one pair per retained id, and evict beyond `max_ids`.
+    SHARD's bucket table (hash -> retained ids): each bucket's arrivals
+    are processed in sorted-doc-id order per delivered chunk, emit one
+    pair per retained id, and evict beyond `max_ids`.
 
-    Why shards (r14): keying state by (band, band_hash) made every
-    distinct bucket a separate applyInPandasWithState GROUP — ~19k
-    Python calls + pandas frame constructions per ~1k-doc trigger at
-    ~3.7 ms each (the stress race's measured wall, 92 s for 40k docs).
-    Sharding the hash space bounds the per-trigger group count at
-    bands × STATE_SHARDS while keeping bucket semantics bit-identical."""
+    `layout` is (shingle_n, num_hashes, bands, shards), the same tuple
+    the caller keys state by; a state cell written under another layout
+    raises instead of being matched against."""
 
     def _match(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
         if state.exists:
-            hs, flat, offs = state.get
+            hs, flat, offs, written = state.get
+            written = tuple(int(x) for x in written)
+            if written != layout:
+                raise ValueError(
+                    "near-dup stream checkpoint was written under state layout "
+                    f"(shingle_n, num_hashes, bands, shards)={written}, but this "
+                    f"query runs {layout}; start it on a new checkpoint"
+                )
             table: dict[int, list[int]] = {
                 int(h): [int(x) for x in flat[offs[i]:offs[i + 1]]]
                 for i, h in enumerate(hs)
@@ -100,7 +135,7 @@ def _make_shard_matcher(max_ids: int):
             hs_out.append(h)
             flat_out.extend(ids)
             offs_out.append(len(flat_out))
-        state.update((hs_out, flat_out, offs_out))
+        state.update((hs_out, flat_out, offs_out, list(layout)))
         if out:
             yield pd.DataFrame(out, columns=["id_a", "id_b", "band_idx"])
 
@@ -119,30 +154,19 @@ def neardup_candidates_stream(
     """(id_a, id_b, band_idx) candidate pairs; distinct (id_a, id_b) over
     the stream equals the batch `_pairs_from_band_hashes` candidate set for
     the same corpus (while bucket state stays within max_ids_per_bucket).
-
-    State sharding (r14): state is keyed by (band_idx, band_hash mod
-    STATE_SHARDS), not by raw bucket — per-bucket matching semantics are
-    unchanged (each shard's state holds its buckets' id lists), but the
-    per-trigger applyInPandasWithState GROUP count is bounded at
-    bands × STATE_SHARDS instead of one group per distinct bucket.  The
-    old keying paid ~3.7 ms of Python-call + pandas-construction overhead
-    per bucket per trigger (the stress race's measured wall).  A shard's
-    state value stays comfortably row-sized while expected buckets /
-    (bands × STATE_SHARDS) ≈ tens of buckets per shard (the per-shard
-    value grows linearly with corpus buckets).  128 is the measured knee
-    of the 40k-doc stress race (433 → 819 docs/s; 1024 shards measured
-    526 — with ~19k distinct buckets per trigger nearly every shard was
-    still hit, so the group count barely dropped).
+    State is keyed by (band_idx, band_hash mod STATE_SHARDS) and stamped
+    with its layout; see the module docstring.
     """
+    layout = (shingle_n, num_hashes, bands, STATE_SHARDS)
     bh_udf = make_band_hash_udf(shingle_n, num_hashes, bands)
     banded = docs.select(
         F.col(id_col).alias("doc_id"), bh_udf(F.col(text_col)).alias("__bh")
     ).select("doc_id", F.posexplode("__bh").alias("band_idx", "band_hash"))
     banded = banded.withColumn(
-        "__shard", F.pmod(F.col("band_hash"), F.lit(STATE_SHARDS))
+        "__shard", F.pmod(F.col("band_hash"), F.lit(layout[3]))
     )
     return banded.groupBy("band_idx", "__shard").applyInPandasWithState(
-        _make_shard_matcher(max_ids_per_bucket),
+        _make_shard_matcher(max_ids_per_bucket, layout),
         outputStructType=PAIR_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

@@ -10,7 +10,11 @@ import pyspark.sql.functions as F
 from tegallega_spark.operators.dedup import make_band_hash_udf, _pairs_from_band_hashes
 from tegallega_spark.session import load_table
 from tegallega_spark.streaming.events import run_available_now
-from tegallega_spark.streaming.neardup_stream import neardup_candidates_stream
+from tegallega_spark.streaming import neardup_stream
+from tegallega_spark.streaming.neardup_stream import (
+    STATE_SHARDS,
+    neardup_candidates_stream,
+)
 from tests.conftest import SF_SMOKE
 
 DOC_SCHEMA = "doc_id bigint, text string"
@@ -23,6 +27,43 @@ def _batch_candidates(spark, docs):
     )
     return {
         (r.id_a, r.id_b) for r in _pairs_from_band_hashes(bh).collect()
+    }
+
+
+def _deliver_halves(spark, feed, halves=(0, 1)):
+    """Write the smoke corpus's doc-id-parity halves named in `halves` as
+    one parquet file each under `feed`; a maxFilesPerTrigger=1 stream reads
+    each file as its own micro-batch.  Returns the whole corpus."""
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    feed.mkdir(exist_ok=True)
+    for k in halves:
+        docs.filter(F.col("doc_id") % 2 == k).coalesce(1).write.parquet(
+            str(feed / f"d{k}.parquet")
+        )
+    return docs
+
+
+def _drain(spark, files, ckpt, sink, **kw):
+    """Run the candidate stream over `files` to completion (one trigger per
+    file) into a parquet sink; returns the distinct pairs in the sink."""
+    stream = (
+        spark.readStream.schema(DOC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(files)
+    )
+    q = (
+        neardup_candidates_stream(stream, **kw)
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return {
+        (r.id_a, r.id_b)
+        for r in spark.read.parquet(sink).select("id_a", "id_b").distinct().collect()
     }
 
 
@@ -68,21 +109,7 @@ def test_cross_delivery_pairs_found(spark, tmp_path):
         # memory sinks can't recover a checkpoint; the file sink is the
         # recoverable one, matching a real incremental deployment
         df.coalesce(1).write.mode("overwrite").parquet(str(feed / f"d{n}.parquet"))
-        stream = spark.readStream.schema(DOC_SCHEMA).parquet(f"{feed}/*.parquet")
-        result = neardup_candidates_stream(stream)
-        q = (
-            result.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {
-            (r.id_a, r.id_b)
-            for r in spark.read.parquet(sink).select("id_a", "id_b").distinct().collect()
-        }
+        return _drain(spark, f"{feed}/*.parquet", ckpt, sink)
 
     got1 = deliver(first, 1)
     assert key not in got1
@@ -258,3 +285,56 @@ def test_stream_race_replay_at_scale(spark):
     assert stream_cands == batch_cands
     assert ss.verify_stream_pairs(spark, feed, stream_cands) == batch_verified
     assert metrics["triggers"] > 10  # genuinely incremental, not one batch
+    assert metrics["state_rows"] <= ss.BANDS * STATE_SHARDS
+
+
+def test_bucket_eviction_loses_pairs_never_invents_them(spark, tmp_path):
+    """max_ids_per_bucket=1 keeps one id per bucket, so a bucket's third
+    arrival no longer pairs with its first: the streamed candidates are a
+    STRICT subset of the batch set (the retention horizon binds on the
+    smoke corpus).  The default cap over the same two deliveries still
+    gives the batch set exactly."""
+    docs = _deliver_halves(spark, tmp_path / "efeed")
+    want = _batch_candidates(spark, docs)
+    files = f"{tmp_path / 'efeed'}/*.parquet"
+
+    capped = _drain(spark, files, str(tmp_path / "c1"), str(tmp_path / "s1"),
+                    max_ids_per_bucket=1)
+    assert capped < want
+
+    full = _drain(spark, files, str(tmp_path / "c2"), str(tmp_path / "s2"))
+    assert full == want
+
+
+@pytest.mark.parametrize(
+    "change", ["shards", "shingle_n"], ids=["state_shards", "shingle_n"]
+)
+def test_checkpoint_under_another_layout_fails_loudly(
+    spark, tmp_path, monkeypatch, change
+):
+    """A checkpoint's state cells are keyed by (band, band_hash mod
+    STATE_SHARDS) under one banding; restarting it under another shard
+    count or shingle size would match buckets against the wrong cells and
+    silently miss pairs.  The restart must raise, naming both layouts."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    feed = tmp_path / "lfeed"
+    files = f"{feed}/*.parquet"
+    ckpt, sink = str(tmp_path / "lckpt"), str(tmp_path / "lsink")
+    _deliver_halves(spark, feed, halves=(0,))
+    _drain(spark, files, ckpt, sink)
+    _deliver_halves(spark, feed, halves=(1,))
+
+    written = (3, 32, 16, STATE_SHARDS)
+    kw = {}
+    if change == "shards":
+        monkeypatch.setattr(neardup_stream, "STATE_SHARDS", STATE_SHARDS // 2)
+        running = (3, 32, 16, STATE_SHARDS // 2)
+    else:
+        kw["shingle_n"] = 4
+        running = (4, 32, 16, STATE_SHARDS)
+    with pytest.raises(StreamingQueryException) as err:
+        _drain(spark, files, ckpt, sink, **kw)
+    msg = str(err.value)
+    assert "state layout" in msg
+    assert str(written) in msg and str(running) in msg

@@ -6,6 +6,7 @@ from __future__ import annotations
 import math
 
 import pyspark.sql.functions as F
+import pytest
 
 
 from tegallega_spark.operators import multimodal as MM
@@ -467,3 +468,35 @@ def test_decode_batches_dispatches_real_png(spark):
     assert got[1].feature_hash == got[2].feature_hash  # content, not bytes
     assert got[1].byte_len == len(plain) and got[2].byte_len == len(filtered)
     assert got[3].format in ("png", "jpg") and got[3].width == len(b"not a png") % 640 + 16
+
+
+@pytest.mark.parametrize(
+    "line, price",
+    [
+        (1, -5.0),           # negative price
+        (1, 12.345),         # not exactly 2-decimal
+        (1, 1342177.28),     # 2^27 cents
+        (-1, 10.0),          # line number below 0
+    ],
+    ids=["negative", "three_decimals", "cents_2_27", "negative_line"],
+)
+def test_q08_packing_guard_raises_on_unpackable_row(spark, tmp_path, line, price):
+    """q08 packs (cents, line) into one long; a row outside the packing's
+    preconditions must fail the query, not decode to a wrong argmin.  The
+    same table without that row, with a price one cent under the cap,
+    still answers."""
+    from tegallega_spark.queries import SPARK_QUERIES
+
+    schema = "l_orderkey bigint, l_linenumber int, l_extendedprice double"
+    good = [(1, 2, 1342177.27), (1, 3, 10.5), (2, 1, 7.25)]
+    q08 = SPARK_QUERIES["q08_argminmax_join"]
+
+    spark.createDataFrame(good, schema).write.parquet(str(tmp_path / "ok" / "lineitem.parquet"))
+    rows = sorted(tuple(r) for r in q08(spark, str(tmp_path / "ok")).collect())
+    assert rows == [(1, 3, 10.5, 2, 1342177.27), (2, 1, 7.25, 1, 7.25)]
+
+    bad = good + [(2, line, price)]
+    spark.createDataFrame(bad, schema).write.parquet(str(tmp_path / "bad" / "lineitem.parquet"))
+    with pytest.raises(Exception, match="q08 cannot pack") as err:
+        q08(spark, str(tmp_path / "bad")).collect()
+    assert f"l_linenumber={line}" in str(err.value)
