@@ -28,8 +28,6 @@ import re
 import sys
 import time
 
-import pandas as pd  # module-level so pandas_udf type hints resolve
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SRC = "/root/testdata/sf0.1/documents.parquet"
@@ -109,16 +107,6 @@ def time_spark(path: str) -> tuple[float, int]:
     spark = get_spark("docs-stress")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1).count()
-    # fork the Python/Arrow worker pool before the clock starts — one-time
-    # session setup, same warmup bench.py applies (a long-lived cluster
-    # amortizes this to zero; DuckDB in-process has no analogous cost)
-    from pyspark.sql.functions import pandas_udf as _pudf
-
-    @_pudf("long")
-    def _warm(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(256).repartition(32).select(_warm("id")).collect()
     t0 = time.time()
     docs = spark.read.parquet(path)
     pairs = minhash_near_duplicates_verified(

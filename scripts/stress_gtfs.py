@@ -176,27 +176,8 @@ def time_spark(root: str, spark=None, sink_dir: str | None = None
         spark = make_session(root)
     else:
         spark.catalog.clearCache()  # every run recomputes the full DAG
-    from concurrent.futures import ThreadPoolExecutor
-
     t0 = time.time()
-    # materialize ALL shared persisted upstreams (catalog, stops_raw,
-    # shapes) CONCURRENTLY with the construction of the remaining table
-    # plans: those jobs are cluster work, plan construction is driver/py4j
-    # work — serializing them (the old flow) wasted the cache-warm jobs'
-    # wall-clock inside whichever output job touched each cache first
-    pre = ThreadPoolExecutor(max_workers=3)
-    warm = []
-    tables = build_gtfs(
-        spark, root,
-        on_cached=lambda _name, df: warm.append(pre.submit(df.count)),
-    )
-    # the 7 sinks are independent outputs — run them as concurrent jobs
-    # (Spark's scheduler interleaves them; the shared persisted upstreams
-    # are computed once by whichever job touches them first).  The
-    # reference writes its 7 files sequentially because it is a single
-    # Python process; concurrent actions are part of the engine.
-    for f in warm:  # caches ready before concurrent first-touch
-        f.result()
+    tables = build_gtfs(spark, root)
 
     if sink_dir is not None:
         from tegallega_spark.sources.gtfs import write_gtfs_feed
@@ -208,6 +189,12 @@ def time_spark(root: str, spark=None, sink_dir: str | None = None
         with open(os.path.join(sink_dir, "stop_times.txt")) as f:
             n = sum(1 for _ in f) - 1
     else:
+        from concurrent.futures import ThreadPoolExecutor
+
+        # the 7 sinks are independent outputs — run them as concurrent
+        # jobs, as write_gtfs_feed does.  The reference writes its 7
+        # files sequentially because it is a single Python process;
+        # concurrent actions are part of the engine.
         def write(item):
             name, df = item
             if name == "stop_times":

@@ -22,7 +22,6 @@ import sys
 import time
 
 import numpy as np
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -213,17 +212,6 @@ def main() -> None:
     spark = get_spark("spans-stress")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1).count()
-
-    # warm the Python/Arrow UDF worker pool (same untimed one-time session
-    # setup bench.py performs): daemon fork + Arrow serializer init
-    # otherwise land entirely inside the FIRST size's timed run
-    from pyspark.sql.functions import pandas_udf as _pudf
-
-    @_pudf("long")
-    def _warm(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(256).repartition(32).select(_warm("id")).collect()
 
     import statistics
 

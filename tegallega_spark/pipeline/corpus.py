@@ -499,57 +499,10 @@ def _clean_corpus_impl(
     # when a strategy was passed explicitly (only 'auto'/'semantic'
     # persisted before r6).
     strategy = dedup_strategy
-    warm_thread = None
     kept = corpus_handle = kept.persist()
     if strategy == "auto":
         # stages 1-2 are scan-side, so this count is one fused pass
         strategy = "exact" if kept.count() <= exact_dedup_limit else "minhash"
-    else:
-        # With an explicit strategy nothing forces the corpus until the
-        # cluster-assignment checkpoint — the executors sit IDLE while the
-        # driver spends seconds of py4j round trips building the pair/CC
-        # plans (r7 profiling: ~10 s of pure construction at 5 k docs with
-        # no job running).  Fire the cache fill on a background thread so
-        # materialization overlaps construction; Spark's per-partition
-        # cache locking makes the later consumers wait on (not recompute)
-        # in-flight partitions.  Best-effort: any error surfaces on the
-        # caller's own action, not here.
-        #
-        # ONLY while AQE is off (the small-input window this optimization
-        # was built for).  Under AQE, `kept`'s plan nests upstream
-        # persisted frames, and two threads concurrently materializing
-        # overlapping cached plans take the CachedRDDBuilder monitors in
-        # opposite orders inside TableCacheQueryStageExec — a true JVM
-        # deadlock (jstack-confirmed at 3.2 M docs, where the input size
-        # crossed the AQE-off gate's threshold for the first time).  With
-        # AQE on, the first consumer materializes the cache lazily on one
-        # thread — the pre-r7 behavior, and at that scale the executors
-        # are saturated anyway, so the overlap saves nothing.
-        if kept.sparkSession.conf.get("spark.sql.adaptive.enabled") == "false":
-            import threading
-
-            def _warm(df=kept):
-                try:
-                    # Re-check at execution time, not just spawn time: the
-                    # daemon plans/executes asynchronously, and if the
-                    # caller's aqe_off window were already restored the
-                    # warm count would overlap an AQE-on action on the
-                    # same nested cached plans — the b03b0fa deadlock as a
-                    # timing race.  Belt to the join()-before-return
-                    # suspenders below, which guarantees the count runs
-                    # entirely inside the still-open window.
-                    if (
-                        df.sparkSession.conf.get("spark.sql.adaptive.enabled")
-                        == "false"
-                    ):
-                        df.count()
-                except Exception:
-                    pass
-
-            warm_thread = threading.Thread(
-                target=_warm, name="corpus-cache-warm", daemon=True
-            )
-            warm_thread.start()
     if strategy == "exact":
         pairs = exact_shingle_jaccard_pairs(
             kept, id_col, text_col, shingle_n, jaccard_threshold,
@@ -615,32 +568,6 @@ def _clean_corpus_impl(
         kept, token_col="n_tokens", order_col=id_col, shard_col="shard",
         budget=pack_budget,
     )
-    # The cache-warm daemon must not outlive this frame: clean_corpus's
-    # aqe_off window closes when this impl returns, and a warm count
-    # still materializing cached partitions under the caller's restored
-    # AQE-on setting races the caller's first action into the b03b0fa
-    # CachedRDDBuilder deadlock.  Joining HERE keeps the stated win — the
-    # count overlapped all of the pair/CC/packing plan construction above
-    # — while guaranteeing it finishes inside the window.
-    # join with a timeout (ADVICE r8): if the warm count itself wedges
-    # (an executor stall, or the very deadlock family this code defends
-    # against), an unbounded join would hang the whole pipeline where the
-    # old fire-and-forget daemon let it finish.  300 s is a generous
-    # multiple of any measured warm time (sub-second to a few seconds);
-    # on timeout warn and proceed — the thread is a daemon and only READS
-    # conf, so the remaining risk is the pre-r8 race, now loudly flagged.
-    if warm_thread is not None:
-        warm_thread.join(timeout=300)
-        if warm_thread.is_alive():
-            import warnings
-
-            warnings.warn(
-                "corpus cache-warm thread did not finish within 300 s; "
-                "proceeding without it (it is a read-only daemon, but the "
-                "caller's first action may race its cache materialization)",
-                stacklevel=2,
-            )
-
     # pairs' persisted LSH/postings intermediates, the cluster-assignment
     # checkpoint, and the auto/semantic-mode corpus persist all ride out
     # on the result for release_intermediates(out)
@@ -653,5 +580,5 @@ def _clean_corpus_impl(
         assignments,
         *line_cut_handles,
         *mixture_handles,
-        *([corpus_handle] if corpus_handle is not None else []),
+        corpus_handle,
     )

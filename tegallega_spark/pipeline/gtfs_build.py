@@ -361,20 +361,13 @@ def calendar_table(spark: SparkSession) -> DataFrame:
     )
 
 
-def build_gtfs(
-    spark: SparkSession, ref_root: str, on_cached=None
-) -> dict[str, DataFrame]:
+def build_gtfs(spark: SparkSession, ref_root: str) -> dict[str, DataFrame]:
     """The full DAG: routes.json + geojson + schedule CSVs → seven GTFS
     tables (generate_gtfs.py:477-521).
 
-    `on_cached` (optional callback) receives (name, frame) for each
-    persisted upstream — "catalog", "stops_raw" and "shapes" — as soon as
-    its plan exists.  A driver can submit each materialization job there,
-    so the three shared caches warm concurrently with the (driver-side,
-    py4j-bound) construction of the remaining table plans instead of
-    inside whichever output job touches them first.  Plan construction and
-    cluster execution are independent resources; overlapping them is free
-    latency.
+    Only plans are built here, in sequence on the driver; no job runs.
+    The three shared upstreams ("catalog", "stops_raw", "shapes") are
+    persisted and fill on the first output job that reads them.
     """
     # construct each unnest level ONCE and thread it through — rebuilding
     # categories/fixed_groups per consumer triples the driver-side plan
@@ -386,11 +379,7 @@ def build_gtfs(
     # the common upstream (at scale these are exactly the datasets worth
     # caching: small dims + the reused shape fact)
     catalog = route_catalog(grps).persist()
-    if on_cached is not None:
-        on_cached("catalog", catalog)
     stops_raw = read_stops(spark, f"{ref_root}/route-data/geojson").persist()
-    if on_cached is not None:
-        on_cached("stops_raw", stops_raw)
     vertices = read_way_vertices(spark, f"{ref_root}/route-data/geojson")
     schedule = read_schedule_long(spark, f"{ref_root}/route-data/schedule")
 
@@ -400,33 +389,15 @@ def build_gtfs(
     shapes = shape_points(
         vertices.join(rels, "relation_id"), ("feature_idx", "line_idx", "vertex_idx")
     ).persist()
-    if on_cached is not None:
-        on_cached("shapes", shapes)
     shaped_rels = shapes.select("relation_id", "shape_id").distinct()
 
-    # The remaining table plans are independent of one another — construct
-    # them in threads.  Plan construction is driver-side py4j round-trips
-    # (each expression is a gateway call); py4j gives every thread its own
-    # gateway connection, so four independent builders overlap their
-    # socket latency (~0.5 s of the ~1.8 s single-threaded construction at
-    # 1×).  The resulting plans are identical — only the order in which
-    # the driver assembles them changes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        f_train = ex.submit(_train_trips_and_times, catalog, schedule, shaped_rels)
-        f_bus = ex.submit(_bus_trips_and_times, catalog, stops_raw, shapes)
-        f_stops = ex.submit(build_stops_table, catalog, stops_raw)
-        f_agency = ex.submit(agencies_table, cats)
-        routes = route_groups_table(grps)
-        train_trips, train_times = f_train.result()
-        bus_trips, bus_times = f_bus.result()
-
+    train_trips, train_times = _train_trips_and_times(catalog, schedule, shaped_rels)
+    bus_trips, bus_times = _bus_trips_and_times(catalog, stops_raw, shapes)
     return {
-        "agency": f_agency.result(),
-        "routes": routes,
+        "agency": agencies_table(cats),
+        "routes": route_groups_table(grps),
         "trips": train_trips.unionByName(bus_trips),
-        "stops": f_stops.result(),
+        "stops": build_stops_table(catalog, stops_raw),
         "stop_times": train_times.unionByName(bus_times),
         "shapes": shapes.drop("relation_id"),
         "calendar": calendar_table(spark),

@@ -11,6 +11,12 @@ sense on a 1000-executor cluster reading 100 TB:
 - shuffle.partitions defaults to cores locally; on a real cluster AQE's
   coalescing makes the initial number mostly irrelevant as long as it is
   high enough, so we leave it overridable via SPARK_GRAFT_CPUS.
+- Python call-site capture off: with spark.python.sql.dataFrameDebugging
+  on (PySpark 4.1's default) every DataFrame/Column call walks the Python
+  stack and makes ~4 extra py4j round trips to record where it was called;
+  plan construction is driver-side py4j work, so that doubled it.
+  Analysis errors still raise, naming the column or table — only the
+  Python file/line context is gone from their message.
 - get_spark is the package's only reader of the process environment: five
   SPARK_GRAFT_* settings size the session to its host or cluster (README
   "Run"); every other execution choice comes from the input.
@@ -114,6 +120,8 @@ def get_spark(app_name: str = "tegallega-spark", cpus: int | None = None) -> Spa
             os.environ.get("SPARK_GRAFT_PARALLEL_DISCOVERY_THRESHOLD", "4096"),
         )
         .config("spark.ui.enabled", "false")
+        # no per-call Python origin capture (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     _prefork_python_workers(spark, cpus)
@@ -270,8 +278,7 @@ class aqe_off_for_small_input:
     outermost prior.  The gate must still only be ENTERED from the single
     driver thread that owns the pipeline (it flips a session-wide conf;
     unrelated concurrent queries planned inside the window would lose
-    AQE) — background threads may only READ the conf, as the corpus
-    cache-warm does."""
+    AQE)."""
 
     _KEY = "spark.sql.adaptive.enabled"
     _SHUF = "spark.sql.shuffle.partitions"

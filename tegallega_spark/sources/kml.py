@@ -1,13 +1,11 @@
-"""Presentation sinks: KML (K4) and Shapefile (K5).
+"""Presentation sink: KML (K4).
 
 Reference: convert-geojson-kml.py:54-88 (styled KML per route, color
-converted from '#rrggbb' to KML 'aabbggrr') and convert-geojson-shp.py:63-73
-(GeoPandas, EPSG:4326).
+converted from '#rrggbb' to KML 'aabbggrr').
 
 KML is emitted as plain XML on the driver over collected per-route rows —
-presentation sinks are inherently small (one doc per route).  The Shapefile
-sink writes the ESRI binary format directly (sources/shapefile.py) — no
-geopandas dependency.
+presentation sinks are inherently small (one doc per route).  The K5
+Shapefile sink is sources/shapefile.py.
 """
 
 from __future__ import annotations
@@ -71,25 +69,3 @@ def write_route_kml(
         written.append(path)
     return written
 
-
-def write_route_shapefile(stitched: DataFrame, out_path: str) -> str:
-    """K5: one PolyLine per relation_id, EPSG:4326 — pure-stdlib ESRI
-    writer, no geopandas needed (convert-geojson-shp.py:63-73; per-route
-    layout lives in sources.shapefile.write_route_shapefiles)."""
-    from tegallega_spark.sources.shapefile import (
-        SHAPE_POLYLINE,
-        write_shapefile,
-    )
-
-    rows = stitched.orderBy("relation_id", "vertex_idx").collect()
-    lines: dict[str, list] = {}
-    for r in rows:
-        lines.setdefault(r.relation_id, []).append((r.lon, r.lat))
-    base = out_path[:-4] if out_path.endswith(".shp") else out_path
-    return write_shapefile(
-        base,
-        SHAPE_POLYLINE,
-        list(lines.values()),
-        [("relation_id", 32)],
-        [(rel,) for rel in lines],
-    )

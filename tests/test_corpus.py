@@ -355,36 +355,19 @@ def test_clean_corpus_mixture_and_paragraph_stages(spark):
     assert cached_ids() <= before_cached
 
 
-def test_cache_warm_thread_gated_to_aqe_off_window(spark, monkeypatch):
-    """The explicit-strategy background cache-warm must spawn ONLY while
-    the AQE-off small-input window is active.  Under AQE the corpus
-    cache's plan nests upstream persisted frames, and a second thread
-    materializing it concurrently with the main thread's next action
-    deadlocks the JVM on the CachedRDDBuilder monitors inside
-    TableCacheQueryStageExec (jstack-confirmed at 3.2 M docs — the first
-    composed-race size past the gate's threshold).  Pin both regimes:
-    small input spawns the warm; AQE-on (simulated big input by patching
-    the gate's size probe) must not, and the run still completes with
-    identical survivors via lazy single-thread materialization."""
-    import threading
-
+def test_clean_corpus_survivors_same_with_and_without_aqe_off_window(spark, monkeypatch):
+    """The small-input AQE-off window is an execution profile, not a
+    semantic switch: the same corpus gives the same survivors when the
+    window fires and when the size probe reports a big input and AQE
+    stays on."""
     from tegallega_spark import session as S
+    from tegallega_spark.session import release_intermediates
 
     docs = (
         load_table(spark, SF_SMOKE, "documents")
         .select("doc_id", "text", "lang")
         .limit(60)
     )
-
-    spawned: list[str | None] = []
-    real_thread = threading.Thread
-
-    class Recording(real_thread):
-        def __init__(self, *a, **k):
-            spawned.append(k.get("name"))
-            super().__init__(*a, **k)
-
-    monkeypatch.setattr(threading, "Thread", Recording)
 
     def run():
         out = clean_corpus(
@@ -392,61 +375,13 @@ def test_cache_warm_thread_gated_to_aqe_off_window(spark, monkeypatch):
             dedup_strategy="exact",
         )
         rows = sorted(r.doc_id for r in out.collect())
-        from tegallega_spark.session import release_intermediates
-
         release_intermediates(out)
         return rows
 
-    # small input: the gate fires, AQE is off inside, warm spawns
     small_rows = run()
-    assert "corpus-cache-warm" in spawned
-
-    # big-input regime: the size probe reports over-threshold, the gate
-    # no-ops, AQE stays on -> the warm must NOT spawn
-    spawned.clear()
     monkeypatch.setattr(S, "plan_size_bytes", lambda df: 2 << 30)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    big_rows = run()
-    assert "corpus-cache-warm" not in spawned
-    assert big_rows == small_rows
-
-
-def test_cache_warm_thread_joined_before_clean_corpus_returns(spark, monkeypatch):
-    """r8 advice fix: the warm daemon must not outlive _clean_corpus_impl —
-    the aqe_off window closes when clean_corpus returns, and a still-running
-    warm count overlapping the caller's AQE-on action on the same nested
-    cached plans is the b03b0fa deadlock as a timing race.  Pin: every
-    spawned corpus-cache-warm thread is dead by the time clean_corpus
-    returns (i.e. it was join()ed inside the window)."""
-    import threading
-
-    docs = (
-        load_table(spark, SF_SMOKE, "documents")
-        .select("doc_id", "text", "lang")
-        .limit(60)
-    )
-
-    spawned: list[threading.Thread] = []
-    real_thread = threading.Thread
-
-    class Recording(real_thread):
-        def __init__(self, *a, **k):
-            super().__init__(*a, **k)
-            if k.get("name") == "corpus-cache-warm":
-                spawned.append(self)
-
-    monkeypatch.setattr(threading, "Thread", Recording)
-    out = clean_corpus(
-        docs, min_quality=0.0, max_dup_ngram_frac=1.0, dedup_strategy="exact",
-    )
-    assert spawned, "small input under AQE-off gate should spawn the warm"
-    assert all(not t.is_alive() for t in spawned), (
-        "warm thread must be joined before clean_corpus returns"
-    )
-    out.collect()
-    from tegallega_spark.session import release_intermediates
-
-    release_intermediates(out)
+    assert run() == small_rows
 
 
 def test_stage_boundary_output_identical_and_releases_upstream(spark, tmp_path):

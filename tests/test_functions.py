@@ -213,7 +213,9 @@ def _read_dbf(path):
 
 
 def test_shapefile_sink_roundtrip(spark, tmp_path):
-    from tegallega_spark.sources.kml import write_route_shapefile
+    """Two routes' route_lines written by the per-route K5 sink read back
+    through the independent spec reader: vertices, bbox, .prj, .shx."""
+    from tegallega_spark.sources.shapefile import write_route_shapefiles
 
     stitched = spark.createDataFrame(
         [
@@ -225,23 +227,33 @@ def test_shapefile_sink_roundtrip(spark, tmp_path):
         ],
         "relation_id string, vertex_idx int, lon double, lat double",
     )
-    shp = write_route_shapefile(stitched, str(tmp_path / "routes.shp"))
+    stops = spark.createDataFrame(
+        [], "relation_id string, stop_id string, name string, lon double, lat double"
+    )
+    meta = {"r1": ("Route One", "#ff0000"), "r2": ("Route Two", "#00ff00")}
+    written = write_route_shapefiles(stitched, stops, meta, str(tmp_path))
+    assert written == [
+        str(tmp_path / "Route One" / "route_lines.shp"),
+        str(tmp_path / "Route Two" / "route_lines.shp"),
+    ]
 
-    shape_type, bbox, shapes = _read_shp(shp)
-    assert shape_type == 3
-    assert len(shapes) == 2
-    assert [len(s) for s in shapes] == [2, 3]
-    assert shapes[0][0] == (107.60, -6.90)
-    assert bbox == (107.60, -6.96, 107.72, -6.90)
-
-    names, recs = _read_dbf(str(tmp_path / "routes.dbf"))
-    assert names == ["relation_id"[:10]]
-    assert recs == [("r1",), ("r2",)]
-
-    prj = (tmp_path / "routes.prj").read_text()
-    assert "GCS_WGS_1984" in prj and "WGS_1984" in prj
-    # .shx index must address every record
-    assert (tmp_path / "routes.shx").stat().st_size == 100 + 8 * 2
+    expect = {
+        "Route One": ([(107.60, -6.90), (107.61, -6.91)], (107.60, -6.91, 107.61, -6.90)),
+        "Route Two": (
+            [(107.70, -6.95), (107.71, -6.96), (107.72, -6.94)],
+            (107.70, -6.96, 107.72, -6.94),
+        ),
+    }
+    for route, (vertices, box) in expect.items():
+        base = tmp_path / route / "route_lines"
+        shape_type, bbox, shapes = _read_shp(str(base) + ".shp")
+        assert shape_type == 3
+        assert shapes == [vertices]
+        assert bbox == box
+        prj = (tmp_path / route / "route_lines.prj").read_text()
+        assert "GCS_WGS_1984" in prj and "WGS_1984" in prj
+        # .shx index must address every record
+        assert (tmp_path / route / "route_lines.shx").stat().st_size == 100 + 8 * 1
 
 
 def test_per_route_shapefile_layout(spark, tmp_path):

@@ -50,29 +50,33 @@ def _setting_read(node: ast.Attribute, parents: dict) -> str | None:
     return arg.value if isinstance(arg, ast.Constant) else None
 
 
+def _parents(tree: ast.AST) -> dict:
+    return {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+
+
+def _enclosing_function(node, parents: dict) -> str | None:
+    while node in parents:
+        node = parents[node]
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            return node.name
+    return None
+
+
 def _env_reads(path: Path) -> list[tuple[str, str | None, str | None, int]]:
     """Every `os.environ` / `os.getenv` access under any alias of `os`, and
     every `from os import environ/getenv`, as
     (module path, enclosing function, setting name, line)."""
     tree = ast.parse(path.read_text(), filename=str(path))
     rel = path.relative_to(PACKAGE).as_posix()
-    parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
-
-    def enclosing_function(node):
-        while node in parents:
-            node = parents[node]
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                return node.name
-        return None
-
+    parents = _parents(tree)
     hits = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Attribute) and node.attr in _ENV_NAMES:
-            hits.append((rel, enclosing_function(node),
+            hits.append((rel, _enclosing_function(node, parents),
                          _setting_read(node, parents), node.lineno))
         elif isinstance(node, ast.ImportFrom) and node.module == "os":
             if any(a.name in _ENV_NAMES for a in node.names):
-                hits.append((rel, enclosing_function(node), None, node.lineno))
+                hits.append((rel, _enclosing_function(node, parents), None, node.lineno))
     return hits
 
 
@@ -151,6 +155,39 @@ def test_gtfs_id_prefixes_live_in_ids_module():
     assert {h[2] for h in hits} == ID_PREFIXES
 
 
+# The only places the package starts threads: the feed sink and the feed
+# validator submit independent Spark jobs concurrently, so the cluster runs
+# them side by side.  Driver-side plan construction is cheap enough in
+# sequence (get_spark turns off per-call origin capture), so no other
+# thread is needed to hide it.
+THREAD_NAMES = {"ThreadPoolExecutor", "Thread"}
+ALLOWED_THREADS = {
+    ("sources/gtfs.py", "write_gtfs_feed"),
+    ("pipeline/feed_check.py", "validate_gtfs_feed"),
+}
+
+
+def _thread_starts(path: Path) -> list[tuple[str, str | None, int]]:
+    """Every `ThreadPoolExecutor(...)` / `threading.Thread(...)` call, as
+    (module path, enclosing function, line).  `threading.Lock` and the
+    like are not threads."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+    rel = path.relative_to(PACKAGE).as_posix()
+    parents = _parents(tree)
+    return [
+        (rel, _enclosing_function(node, parents), node.lineno)
+        for node in ast.walk(tree)
+        if _call_name(node) in THREAD_NAMES
+    ]
+
+
+def test_threads_only_in_feed_sink_and_validator():
+    hits = [h for f in sorted(PACKAGE.rglob("*.py")) for h in _thread_starts(f)]
+    stray = [h for h in hits if h[:2] not in ALLOWED_THREADS]
+    assert not stray, f"threads started outside the feed sink and validator: {stray}"
+    assert {h[:2] for h in hits} == ALLOWED_THREADS
+
+
 # ---------------------------------------------------------------------------
 # Reachability: every package function has a caller that is not a test
 # ---------------------------------------------------------------------------
@@ -168,8 +205,7 @@ KEEP = {
     "pipeline.convert_routes.convert_old_routes": "convert.py old-routes conversion (convert golden)",
     "pipeline.convert_routes.to_nested_json": "convert.py routes.json writer (F15 / A3)",
     "sources.kml.write_route_kml": "K4 KML sink",
-    "sources.kml.write_route_shapefile": "K5 shapefile sink, single file",
-    "sources.shapefile.write_route_shapefiles": "K5 shapefile sink, per-route layout",
+    "sources.shapefile.write_route_shapefiles": "K5 shapefile sink",
     "sources.git_sink.publish_gtfs_feed": "K6 git-as-sink",
     "sources.git_sink.lfs_smudge": "K6 LFS pointer read-back",
     "sources.osm_pbf.osm_xml_to_pbf": "S8 osm→pbf conversion",
