@@ -112,8 +112,8 @@ def run_spark(spark, path: str, n: int) -> tuple[float, set[tuple[int, int]]]:
     from tegallega_spark.operators.semdedup import semantic_pairs
     from tegallega_spark.session import release_intermediates
 
-    # no explicit k: the operator's auto_k_clusters default (k ∝ N,
-    # target_cell_size=512) must be exact on its own
+    # the operator's own cell count, auto_k_clusters (k ∝ N,
+    # target_cell_size=512), must be exact on its own
     probes = int(os.environ.get("TEGALLEGA_SEMDEDUP_PROBES", "2"))
     t0 = time.perf_counter()
     df = spark.read.parquet(path)

@@ -129,7 +129,6 @@ def train_centroids_sampled(
     df: DataFrame,
     vec_col: str = "embedding",
     k: int = 16,
-    sample: int | None = None,
     iters: int = 8,
     sample_salt: int = 0,
     n: int | None = None,
@@ -146,9 +145,8 @@ def train_centroids_sampled(
     prefix IS what this function's own collect would return, so a caller
     training several quantizers from the same salt-0 draw (q69: PQ
     codebooks + IVF coarse lists) pays ONE sample scan instead of one
-    per trainer, result-identical."""
-    if sample is None:
-        sample = max(32 * k, 8192)
+    per trainer, result-identical.  The draw is `max(32·k, 8192)` rows."""
+    sample = max(32 * k, 8192)
     if sample_x is not None:
         # A draw SHORTER than `sample` is only result-identical when it
         # holds the whole corpus (the _ann_setup under-fill case); a
@@ -168,8 +166,7 @@ def train_centroids_sampled(
         x = _sample_vectors(df, vec_col, sample, sample_salt, n=n)
     if len(x) < k:
         raise ValueError(
-            f"IVF training sample has {len(x)} rows < k={k} lists; "
-            "raise `sample` or lower k"
+            f"IVF training sample has {len(x)} rows < k={k} lists; lower k"
         )
     return _kmeans_blas(x, k, iters)
 
@@ -179,7 +176,6 @@ def train_ivf_index_sampled(
     vec_col: str = "embedding",
     k: int | None = None,
     n: int | None = None,
-    sample: int | None = None,
     iters: int = 8,
     sample_salt: int = 0,
     sample_x: "np.ndarray | None" = None,
@@ -212,8 +208,8 @@ def train_ivf_index_sampled(
             n = df.count()
         k = auto_k_lists(n)
     centroids = train_centroids_sampled(
-        df, vec_col, k, sample=sample, iters=iters, sample_salt=sample_salt,
-        n=n, sample_x=sample_x,
+        df, vec_col, k, iters=iters, sample_salt=sample_salt, n=n,
+        sample_x=sample_x,
     )
     assigned = assign_ivf_lists(df, centroids, vec_col)
     return IVFIndex(assigned, [c.tolist() for c in centroids], vec_col)
@@ -315,7 +311,6 @@ def train_tree_quantizer_sampled(
     df: DataFrame,
     vec_col: str = "embedding",
     k: int = 4096,
-    sample: int | None = None,
     iters: int = 8,
     sample_salt: int = 0,
     chunk: int = 65536,
@@ -332,13 +327,11 @@ def train_tree_quantizer_sampled(
 
     k1 = max(2, math.isqrt(k - 1) + 1)  # ceil(sqrt(k)), ≥2
     k2 = (k + k1 - 1) // k1
-    if sample is None:
-        sample = max(32 * k, 8192)
-    x = _sample_vectors(df, vec_col, sample, sample_salt, n=n)
+    x = _sample_vectors(df, vec_col, max(32 * k, 8192), sample_salt, n=n)
     if len(x) < k1:
         raise ValueError(
             f"tree-quantizer training sample has {len(x)} rows < k1={k1}; "
-            "raise `sample` or lower k"
+            "lower k"
         )
     c1 = _kmeans_blas(x, k1, iters, chunk=chunk)
     # assign the sample to its top cell (chunked — same memory bound)
@@ -395,7 +388,6 @@ class IVFIndex:
         self,
         codebooks,
         code_col: str = "pq_code",
-        normalize: bool = False,
     ) -> "IVFIndex":
         """Attach PQ codes to the inverted lists in place (one call, no
         manual reassignment ritual) and return self so
@@ -405,7 +397,7 @@ class IVFIndex:
 
         old = self.assigned
         self.assigned = encode_pq(
-            old, codebooks, vec_col=self.vec_col, code_col=code_col, normalize=normalize
+            old, codebooks, vec_col=self.vec_col, code_col=code_col
         ).persist()
         old.unpersist()
         return self

@@ -22,7 +22,7 @@ Spark mapping:
 
 Distances are squared-L2, the PQ-native metric; for cosine over
 unit-normalized embeddings the two rankings agree (||a-b||² = 2-2cosθ),
-which `pq_topk(..., normalize=True)` exploits.
+so a caller wanting cosine candidates normalizes its vectors first.
 """
 
 from __future__ import annotations
@@ -61,7 +61,6 @@ def train_pq_codebooks(
     k: int = 16,
     iters: int = 8,
     sample: int = 4096,
-    normalize: bool = False,
     sample_x: "np.ndarray | None" = None,
 ) -> np.ndarray:
     """(m, k, d/m) codebooks trained on a deterministic hash-ordered sample.
@@ -95,8 +94,6 @@ def train_pq_codebooks(
             f"PQ training sample has {len(x)} rows < k={k} centroids; "
             "raise `sample` or lower k"
         )
-    if normalize:
-        x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     d = x.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -111,7 +108,6 @@ def encode_pq(
     codebooks: np.ndarray,
     vec_col: str = "embedding",
     code_col: str = "pq_code",
-    normalize: bool = False,
 ) -> DataFrame:
     """Append the m-byte PQ code (array<smallint>, one entry per subspace).
 
@@ -135,8 +131,6 @@ def encode_pq(
             # loop returned an empty Series (ADVICE r13)
             return pd.Series([], dtype=object)
         x = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        if normalize:
-            x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
         xs = x.reshape(len(x), m, 1, dsub)
         d2 = ((xs - cb[None]) ** 2).sum(axis=3)  # (batch, m, k)
         codes = d2.argmin(axis=2).astype(np.int16)
@@ -154,7 +148,6 @@ def pq_topk(
     code_col: str = "pq_code",
     k: int = 10,
     rerank: int = 0,
-    normalize: bool = False,
 ) -> DataFrame:
     """ADC top-k: m×k query distance table (driver), one Arrow gather-sum
     pass over the codes, TakeOrdered.  With rerank=R > k, the top-R ADC
@@ -165,8 +158,6 @@ def pq_topk(
     cb = codebooks.astype(np.float64)
     m, kk, dsub = cb.shape
     q = np.asarray(query_vec, dtype=np.float64)
-    if normalize:
-        q = q / max(np.linalg.norm(q), 1e-12)
     table = np.stack(
         [((cb[i] - q[i * dsub : (i + 1) * dsub]) ** 2).sum(axis=1) for i in range(m)]
     )  # (m, k) query→centroid squared distances
@@ -207,7 +198,6 @@ def ivfpq_topk(
     k: int = 10,
     nprobe: int = 4,
     rerank: int = 50,
-    normalize: bool = False,
 ) -> DataFrame:
     """IVF-PQ composition (the standard coarse-quantizer + PQ layout):
     prune to the `nprobe` nearest inverted lists — `ivf_list` is a plain
@@ -233,7 +223,6 @@ def ivfpq_topk(
         code_col=code_col,
         k=k,
         rerank=rerank,
-        normalize=normalize,
     )
 
 
@@ -246,7 +235,6 @@ def ivfpq_topk_batch(
     k: int = 10,
     nprobe: int = 4,
     rerank: int = 50,
-    normalize: bool = False,
 ) -> DataFrame:
     """Batched IVF-PQ top-k: answer a whole query set in ONE plan.
 
@@ -274,8 +262,6 @@ def ivfpq_topk_batch(
     from tegallega_spark.operators.similarity import cosine
 
     q = np.asarray(queries, dtype=np.float64)
-    if normalize:
-        q = q / np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
     nq = len(q)
     cb = codebooks.astype(np.float64)
     m, kk, dsub = cb.shape

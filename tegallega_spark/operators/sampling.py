@@ -77,7 +77,6 @@ def mixture_sample(
     key: str,
     stratum: str,
     targets: dict[str, float],
-    counts: dict[str, int] | None = None,
 ) -> DataFrame:
     """Rebalance a corpus to TARGET domain proportions (The Pile /
     MassiveText-style mixture weighting: the training set is specified as
@@ -92,19 +91,17 @@ def mixture_sample(
     Selection is `hash_frac(key) < r_s` — a pure function of the row key, so
     the identical mixture comes back on every rerun and on any engine that
     can evaluate md5 (the DuckDB oracle for q63 recomputes it bit-for-bit).
-    At 100 TB the per-stratum counts are one cheap agg over table metadata
-    or a catalog stat; pass `counts` to skip the counting scan entirely.
-    The filter itself stays scan-side: no shuffle, no RNG state.
+    The per-stratum counts are one aggregate over the targeted strata; the
+    filter itself stays scan-side: no shuffle, no RNG state.
     """
     total_w = sum(targets.values())
     if not math.isclose(total_w, 1.0, rel_tol=1e-6):
         raise ValueError(f"target shares must sum to 1, got {total_w}")
-    if counts is None:
-        rows = (
-            df.filter(F.col(stratum).isin(list(targets)))
-            .groupBy(stratum).count().collect()
-        )
-        counts = {r[stratum]: r["count"] for r in rows}
+    rows = (
+        df.filter(F.col(stratum).isin(list(targets)))
+        .groupBy(stratum).count().collect()
+    )
+    counts = {r[stratum]: r["count"] for r in rows}
     missing = sorted(set(targets) - {s for s in counts if counts.get(s)})
     if missing:
         raise ValueError(f"strata with target weight but no rows: {missing}")

@@ -7,7 +7,7 @@ near-duplicate pairs ONLY within each cluster.  The cluster id plays the
 same blocking-key role the band hash plays in MinHash-LSH
 (operators/dedup.py) — it turns the O(N²) all-pairs search into
 sum-of-squares over bounded buckets, at the documented cost of missing
-pairs that straddle a cluster boundary (k_clusters is the recall knob;
+pairs that straddle a cluster boundary (the cell count is the recall knob;
 SemDeDup uses k ∝ N so clusters stay small).
 
 Spark-first composition — everything reuses existing pieces:
@@ -78,30 +78,16 @@ def auto_k_clusters(n: int, target_cell_size: int = 512) -> int:
     return max(1, math.ceil(n / target_cell_size))
 
 
-def _probe_cells_udf(
-    centroids: list[list[float]],
-    probes: int,
-    margin: float | None = None,
-    max_probes: int = 16,
-):
-    """Arrow-vectorized vector → its probed centroid ids.
+def _probe_cells_udf(centroids: list[list[float]], probes: int):
+    """Arrow-vectorized vector → its `probes` nearest centroid ids,
+    ordered by distance (FAISS-style top-p multi-probe).
     One numpy matmul per batch against the (tiny, closure-captured)
     centroid matrix — the same shape as similarity.make_bucket_udf.
-
-    `probes` is the fixed floor (FAISS-style top-p multi-probe).  With
-    `margin` = r set (r8), the set EXTENDS to every centroid within
-    d_min + r of the vector, capped at max_probes — the radius rule that
-    makes blocking PROVABLY lossless for pairs within distance r: for a
-    pair (a, b) with ‖a−b‖ ≤ r, take WLOG d_min(b) ≤ d_min(a); b's
-    nearest centroid c* satisfies d_a(c*) ≤ d_b(c*) + r = d_min(b) + r ≤
-    d_min(a) + r, so c* is in a's probe ball and in b's trivially — they
-    share a cell.  Fixed top-p has no such guarantee: near a q-way
-    centroid tie, two near-identical vectors can rank the tied centroids
-    differently and probe disjoint sets (measured: 2 of 110 961 planted
-    pairs at cosine ≥ 0.99 missed at N=1 M with p=2).  The margin only
-    adds cells near ties, so the expected probe count stays ≈ p; the cap
-    bounds worst-case work (a cap hit degrades to top-max_probes, never
-    below top-p)."""
+    Fixed top-p has no lossless guarantee: near a q-way centroid tie,
+    two near-identical vectors can rank the tied centroids differently
+    and probe disjoint sets (measured: 2 of 110 961 planted pairs at
+    cosine ≥ 0.99 missed at N=1 M with p=2) — semantic_pairs' dual
+    quantizers multiply that event away."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -110,33 +96,21 @@ def _probe_cells_udf(
     # KMeans may converge to fewer distinct centers than k (e.g. identical
     # inputs) — never ask for more probes than centers exist
     p = min(probes, C.shape[0])
-    cap = min(max(max_probes, p), C.shape[0])
 
     @pandas_udf("array<int>")
     def probe(vs: pd.Series) -> pd.Series:
         X = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
         x2 = (X * X).sum(axis=1)
-        # TRUE squared distance — the margin rule needs absolute values,
-        # not the rank-invariant form
         d2 = np.maximum(x2[:, None] + c2[None, :] - 2.0 * (X @ C.T), 0.0)
-        take = cap if margin is not None else p
-        if take >= d2.shape[1]:
+        if p >= d2.shape[1]:
             idx = np.argsort(d2, axis=1)
         else:
-            idx = np.argpartition(d2, take - 1, axis=1)[:, :take]
+            idx = np.argpartition(d2, p - 1, axis=1)[:, :p]
         # order within the candidate set by actual distance (stable output)
         ordered = np.take_along_axis(
             idx, np.argsort(np.take_along_axis(d2, idx, 1), axis=1), axis=1
         )
-        if margin is None:
-            return pd.Series([row.tolist() for row in ordered])
-        od2 = np.take_along_axis(d2, ordered, axis=1)
-        lim = (np.sqrt(od2[:, :1]) + margin) ** 2
-        out = []
-        for row, rd2, rl in zip(ordered, od2, lim):
-            n = max(p, int((rd2 <= rl).sum()))
-            out.append(row[:n].tolist())
-        return pd.Series(out)
+        return pd.Series([row.tolist() for row in ordered])
 
     return probe
 
@@ -177,7 +151,6 @@ def semantic_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     min_cosine: float = 0.95,
-    k_clusters: int | None = None,
     seed: int = 42,
     max_cluster: int = 4096,
     probes: int = 2,
@@ -187,11 +160,10 @@ def semantic_pairs(
     """Verified near-duplicate pairs (id_a, id_b, cos_sim) with
     cos_sim >= min_cosine, searched within k-means cells only.
 
-    `k_clusters=None` (default) sizes the blocking to the corpus:
-    auto_k_clusters(count, target_cell_size) — one cheap parquet
-    count() buys the k ∝ N scaling the method requires.  Pass an
-    explicit k only to pin a specific configuration (k=1 degenerates
-    to exact all-pairs — the oracle-parity configuration the tests pin).
+    The blocking is sized to the corpus: auto_k_clusters(count,
+    target_cell_size) cells — one cheap parquet count() buys the k ∝ N
+    scaling the method requires.  A corpus of at most `target_cell_size`
+    rows gets one cell, which degenerates to exact all-pairs.
 
     `seed` is a NO-OP since r8: the sampled trainer
     (train_ivf_index_sampled) is deterministic by construction
@@ -238,10 +210,8 @@ def semantic_pairs(
             stacklevel=2,
         )
     base = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-    n_count = None
-    if k_clusters is None:
-        n_count = df.count()
-        k_clusters = auto_k_clusters(n_count, target_cell_size)
+    n_count = df.count()
+    k_clusters = auto_k_clusters(n_count, target_cell_size)
     p = 1
     if k_clusters == 1:
         # degenerate blocking (exact all-pairs); pyspark.ml KMeans needs k>=2
@@ -267,11 +237,13 @@ def semantic_pairs(
         # ~2·10⁻⁵); with independent boundary systems the events
         # multiply (~10⁻¹⁰ per pair) — the same ε-stance as minhash
         # banding, which the exact-parity races then falsify.  (The
-        # provably-lossless d_min+r margin probe was measured first and
+        # provably-lossless margin probe — every centroid within
+        # d_min + r of the vector, so any pair within distance r shares
+        # its nearer member's nearest cell — was measured first and
         # rejected: 64-d distance concentration puts ~70% of ALL
         # centroids inside the margin ball, inflating cells past the
-        # star-link guard — see _probe_cells_udf.)  Composite cell id
-        # q·width + cell keeps every downstream stage single-key.
+        # star-link guard.)  Composite cell id q·width + cell keeps every
+        # downstream stage single-key.
         #
         # r9: ONE Arrow pass per quantizer.  The probe output is ordered
         # by distance, so element 1 IS the nearest-cell assignment the
@@ -370,9 +342,9 @@ def semantic_pairs(
                 f"semantic_pairs: {frac:.0%} of blocked rows fall in cells "
                 f"larger than max_cluster={max_cluster} and will STAR-link "
                 "(pair recall degrades to similarity-to-representative in "
-                f"those cells). k_clusters={k_clusters} is too coarse for "
-                "this corpus — raise it (or lower target_cell_size), or "
-                "raise max_cluster if the quadratic work is acceptable.",
+                f"those cells). {k_clusters} cells are too coarse for "
+                "this corpus — lower target_cell_size, or raise "
+                "max_cluster if the quadratic work is acceptable.",
                 stacklevel=2,
             )
     tagged = cells.join(F.broadcast(sizes), "__cell")

@@ -262,8 +262,6 @@ def all_pairs_above(
     min_cosine: float = 0.9,
     num_planes: int = 6,
     num_tables: int = 1,
-    dim: int | None = None,
-    broadcast_rescore: bool | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs: multi-table LSH-bucket self-join, bare-pair
     dedup, then exact cosine recomputed per candidate.  Returns
@@ -274,8 +272,8 @@ def all_pairs_above(
     the recall knob, planes the candidate-sparsity knob.  The band join
     shuffles only (id, table, bucket) rows; vectors are joined back for the
     deduped candidate set only — or, when the vector table is small enough
-    to broadcast (`broadcast_rescore`, auto-gated on the analyzed scan
-    size), gathered from a broadcast (id -> row) matrix inside the SAME
+    to broadcast (gated on the analyzed scan size), gathered from a
+    broadcast (id -> row) matrix inside the SAME
     einsum rescore, so the candidate pairs shuffle as bare id pairs and
     the vector payload never moves at all (float64 widening is identical
     on both routes, so cos_sim is bit-identical).
@@ -297,29 +295,27 @@ def all_pairs_above(
     payload per run at bench scale).  The estimate counts compressed scan
     bytes, which can understate the decoded float64 footprint several-fold
     — at 32 MiB the decoded matrix is still ≤ a few hundred MB, within
-    broadcast practice.  A caller whose executors are memory-tight passes
-    broadcast_rescore=False to keep the join shape at any size."""
+    broadcast practice.  The vector width comes from the data."""
     from tegallega_spark.session import attach_intermediates, small_scan_input
 
-    if broadcast_rescore is None:
-        broadcast_rescore = small_scan_input(df)
-
-    if broadcast_rescore:
+    dim = None
+    broadcast_vectors = small_scan_input(df)
+    if broadcast_vectors:
         import numpy as np
         from pyspark.sql.functions import pandas_udf
 
         rows = df.select(id_col, vec_col).collect()
         M = np.array([list(r[1]) for r in rows], dtype=np.float64)
         idx = pd.Index([r[0] for r in rows])
-        if dim is None and M.ndim == 2 and len(M):
+        if M.ndim == 2 and len(M):
             dim = M.shape[1]  # saves the dim-probe action below
         if not idx.is_unique:
             # duplicate ids need the join semantics (one rescore row per
             # row-pair) — the gather can't represent that
-            broadcast_rescore = False
+            broadcast_vectors = False
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
-    if broadcast_rescore and len(M) <= SMALL_ALLPAIRS_TASK_N:
+    if broadcast_vectors and len(M) <= SMALL_ALLPAIRS_TASK_N:
         # With the vectors in hand and at weak-LSH parameters where the
         # candidate set approaches ALL pairs, the distributed shape's
         # cost is the 8M-row band self-join + pair-dedup exchange —
@@ -350,7 +346,7 @@ def all_pairs_above(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    if broadcast_rescore:
+    if broadcast_vectors:
         bcast = df.sparkSession.sparkContext.broadcast((idx, M))
 
         @pandas_udf("double")

@@ -372,7 +372,15 @@ def interpolate_virtual_stops(
     max_gap_km: float = 0.25,
 ) -> DataFrame:
     """Insert ⌊d/max_gap⌋ evenly spaced virtual stops between consecutive
-    real stops further than max_gap apart (reference update-routes.js:281-333).
+    real stops at least max_gap apart, ON THE STRAIGHT LINE between the
+    two stops, with d the km-radius haversine gap (haversine_km).
+
+    This is a simplification of the reference's W10, not a copy of it:
+    update-routes.js:281-333 measures the gap in meters ÷ 1000, keeps
+    only gaps strictly above max_gap, and places each virtual stop along
+    the route POLYLINE.  The reference-faithful W10 is
+    interpolate_virtual_stops_along_polyline, which the extract runs;
+    this form serves q61.
 
     lag-pair consecutive stops → explode(sequence(1, n)) → linear
     interpolation.  1-row→N-rows generation without a UDTF.

@@ -668,12 +668,11 @@ def _single_task_duplicated_spans(
     text_col: str,
     k: int,
     min_count: int,
-    keep_first: bool,
 ) -> DataFrame:
     """One-job small-corpus profile for duplicated_spans (the pair-gen /
     cc.py small-input discipline): the SAME batch-vectorized window
-    hashing (_span_window_hashes), corpus-wide window counts, keep-first
-    arbitration and interval merge run inside a single executor task.
+    hashing (_span_window_hashes), corpus-wide window counts and interval
+    merge run inside a single executor task.
     Every quantity is an integer (hashes, counts, token positions), so
     the output is exactly the distributed result — no float boundary at
     all.  At bench scale the distributed shape schedules ~5 AQE stage
@@ -708,8 +707,8 @@ def _single_task_duplicated_spans(
         # are duplicated, so the per-position Python loops below were
         # ~0.5 s and np.unique's inverse+counts another 0.5 s): ONE
         # argsort groups equal hashes; duplication flags scatter back to
-        # flat positions; the keep-first arbitration and the interval
-        # merge run as grouped numpy scans.  Every quantity is the same
+        # flat positions; the interval merge runs as a grouped numpy
+        # scan.  Every quantity is the same
         # integer the loops produced (np.array_equal-pinned by the
         # single-task-vs-distributed parity tests).
         o = np.argsort(all_h, kind="stable")
@@ -736,30 +735,12 @@ def _single_task_duplicated_spans(
         row_of = np.searchsorted(offs, dup_pos, side="right") - 1
         code_of = codes_row[row_of]
         local = dup_pos - offs[row_of]
-        if keep_first:
-            # exempt each duplicated hash's min (doc, pos) occurrence —
-            # ALL copies of that exact (doc, pos), as the dict-equality
-            # form did for duplicate-id rows
-            g = np.empty(len(all_h), dtype=np.int64)
-            g[o] = gid_sorted
-            gd = g[dup_pos]
-            o2 = np.lexsort((local, code_of, gd))
-            gs, cs, ls = gd[o2], code_of[o2], local[o2]
-            first_in_g = np.concatenate([[True], gs[1:] != gs[:-1]])
-            grp_no = np.cumsum(first_in_g) - 1
-            idx_first = np.flatnonzero(first_in_g)
-            exempt = (cs == cs[idx_first][grp_no]) & (ls == ls[idx_first][grp_no])
-            code_l, local_l = cs[~exempt], ls[~exempt]
-        else:
-            code_l, local_l = code_of, local
-        if len(code_l) == 0:
-            return
         # interval merge, grouped by id code: with starts sorted, ends
         # (s + k) are monotone too, so a new span begins exactly when the
         # start exceeds the previous window's end — the same running-max
         # rule the per-doc loop applied
-        o3 = np.lexsort((local_l, code_l))
-        c_s, p_s = code_l[o3], local_l[o3]
+        o3 = np.lexsort((local, code_of))
+        c_s, p_s = code_of[o3], local[o3]
         brk = np.concatenate(
             [[True], (c_s[1:] != c_s[:-1]) | (p_s[1:] > p_s[:-1] + k)]
         )
@@ -782,7 +763,6 @@ def duplicated_spans(
     text_col: str = "text",
     k: int = 8,
     min_count: int = 2,
-    keep_first: bool = False,
 ) -> DataFrame:
     """Maximal duplicated token spans per document: every span of ≥ k
     whitespace tokens whose every k-token window occurs ≥ `min_count`
@@ -792,21 +772,14 @@ def duplicated_spans(
     duplicated windows reconstructs the maximal span; spans shorter than
     k are below the operator's resolution and not reported).
 
-    `keep_first=True` exempts each duplicated window's globally FIRST
-    occurrence — min (doc, pos) struct order — from the result (the
-    ExactSubstr keep-one arbitration): the first document containing a
-    boilerplate block reports no span for it, every later occurrence
-    does.
-
     Returns (id_col, start_tok, end_tok) with end exclusive, in token
     coordinates of the whitespace tokenization.
 
     Scale shape: shingle hashing is ONE Arrow pass over the corpus
     (memoized word hashes + a numpy polynomial, _span_shingle_udf); then
     ONE wide exchange of (doc, pos, 8-byte hash) keyed on the hash, over
-    which the occurrence count — and, for keep_first, the min-(doc,pos)
-    arbitration — are window aggregates sharing the same partition spec
-    (one sort, both computed in a single WindowExec).  An earlier
+    which the occurrence count is a window aggregate (one sort, one
+    WindowExec).  An earlier
     formulation persisted the shingle frame and ran groupBy-count + a
     semi-join back — two wide shuffles of the same rows plus cache
     memory; on mostly-singleton window hashes (the measured common case:
@@ -825,9 +798,7 @@ def duplicated_spans(
     from tegallega_spark.session import plan_size_bytes, small_scan_input
 
     if small_scan_input(df):
-        return _single_task_duplicated_spans(
-            df, id_col, text_col, k, min_count, keep_first
-        )
+        return _single_task_duplicated_spans(df, id_col, text_col, k, min_count)
     sh = _token_shingle_positions(df, id_col, text_col, k)
     # Size the wide exchange for the sort-based WindowExec behind it from
     # the INPUT size, not the core count: the shingle frame carries ~one
@@ -853,15 +824,7 @@ def duplicated_spans(
         sh = sh.repartition("__h")
     w = Window.partitionBy("__h")
     counted = sh.withColumn("__n", F.count("*").over(w))
-    cond = F.col("__n") >= min_count
-    if keep_first:
-        first = F.min(F.struct("__doc", "__pos")).over(w)
-        counted = counted.withColumn("__c", first)
-        cond = cond & (
-            (F.col("__doc") != F.col("__c.__doc"))
-            | (F.col("__pos") != F.col("__c.__pos"))
-        )
-    hits = counted.filter(cond).select(
+    hits = counted.filter(F.col("__n") >= min_count).select(
         "__doc", F.col("__pos").alias("__start"), (F.col("__pos") + k).alias("__end")
     )
     return _merge_window_hits(hits, id_col)
@@ -954,22 +917,11 @@ def remove_duplicate_spans(
     text_col: str = "text",
     k: int = 8,
     min_count: int = 2,
-    keep_first: bool = False,
 ) -> DataFrame:
     """Drop duplicated spans (per duplicated_spans) and rebuild the text,
-    byte-identical outside the cut spans.
-
-    keep_first=False (default): drop ALL occurrences once a span crosses
-    the `min_count` threshold — the C4 stance, mirroring
+    byte-identical outside the cut spans: ALL occurrences go once a span
+    crosses the `min_count` threshold — the C4 stance, mirroring
     remove_boilerplate_lines.
-
-    keep_first=True: the paper's all-but-one removal (ExactSubstr keeps
-    one copy of every duplicated substring): each duplicated k-window's
-    globally FIRST occurrence — min (doc id, position) — is exempt, so
-    the first document containing a boilerplate block keeps it and every
-    later occurrence is cut.  The arbitration is fused into the same
-    window pass as the occurrence count (duplicated_spans) — no extra
-    shuffle.
 
     NULL text stays NULL; a fully duplicated doc becomes the empty
     string (plus any surrounding whitespace, which is outside every
@@ -983,7 +935,7 @@ def remove_duplicate_spans(
     anti-join and a collect_list — two corpus-sized token shuffles that
     this formulation replaces with one doc-keyed join of a small frame.
     Nothing persists, so there is nothing for callers to release."""
-    spans = duplicated_spans(df, id_col, text_col, k, min_count, keep_first)
+    spans = duplicated_spans(df, id_col, text_col, k, min_count)
     per_doc = spans.groupBy(id_col).agg(
         F.array_sort(F.collect_list(F.struct("start_tok", "end_tok"))).alias("__spans")
     ).withColumnRenamed(id_col, "__doc")

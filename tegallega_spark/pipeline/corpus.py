@@ -85,7 +85,7 @@ class _StageBoundaryDirHandle:
 
 
 def _auto_stage_boundary_dir(docs: DataFrame) -> tuple[str | None, object]:
-    """Size-gated default for `stage_boundary_dir` (same pattern as
+    """Size gate for clean_corpus's stage boundaries (same pattern as
     aqe_off_for_small_input: estimate the input with Catalyst's analyzed
     sizeInBytes, compare against the free scratch disk, no-op outside the
     regime).  Returns (dir_or_None, release_handle_or_None); the dir is a
@@ -137,10 +137,9 @@ def _stage_boundary(df: DataFrame, path: str, handles=()) -> DataFrame:
     the wave instead of accumulating across the job chain.
 
     Costs one corpus write+read — only sensible where spill, not
-    latency, is the binding constraint.  Since r10, clean_corpus gates
-    this automatically (stage_boundaries_needed: projected spill vs free
-    disk) when the text-cut stages are enabled and no explicit dir is
-    passed; an explicit `stage_boundary_dir` always forces it."""
+    latency, is the binding constraint.  clean_corpus gates this
+    automatically (stage_boundaries_needed: projected spill vs free disk)
+    when the text-cut stages are enabled."""
     spark = df.sparkSession
     df.write.mode("overwrite").option("compression", "zstd").parquet(path)
     for h in handles:
@@ -167,7 +166,7 @@ def mini_clean_corpus(
     (persist lifecycle, text rewrites feeding later gates) harbor defects
     no per-stage test sees; this function puts that regime on the driver's
     CORRECTNESS/BENCH record (registry q72).  It is clean_corpus with the
-    optional middle stages (line/span cut, LM gate) and the tail stages
+    optional middle stages (line/span cut) and the tail stages
     (near-dup clustering, stratified sample, packing) disabled — the
     remaining four stages run in the identical order with the identical
     composition idioms: in-place text_col rewrite, left-semi gate join,
@@ -219,21 +218,16 @@ def clean_corpus(
     default_sample_threshold: str = "ff",
     pack_budget: int = 2048,
     n_shards: int = 256,
-    dedup_strategy: str = "auto",
+    dedup_strategy: str = "exact",
     max_shingle_df: int | None = 1000,
-    exact_dedup_limit: int = 20_000,
     normalize: bool = False,
     line_dedup_max_df: int | None = None,
     span_dedup_k: int | None = None,
     span_dedup_min_count: int = 2,
-    embedding_col: str = "embedding",
-    min_cosine: float = 0.95,
     gopher_rules: bool = False,
-    max_perplexity: float | None = None,
     paragraph_dedup: bool = False,
     mixture_targets: dict[str, float] | None = None,
     mixture_stratum: str = "source",
-    stage_boundary_dir: str | None = None,
 ) -> DataFrame:
     """Clean, dedup, sample, and pack a document corpus.
 
@@ -248,14 +242,7 @@ def clean_corpus(
                   protection; None disables the guard);
     - 'minhash' — banded MinHash-LSH candidates re-scored with exact
                   Jaccard (the 100 TB path: bounded-width band joins,
-                  hot-bucket caps, identical output contract);
-    - 'semantic' — SemDeDup-style k-means-blocked exact-cosine pairs over
-                  `embedding_col` (requires the column and an INTEGRAL
-                  `id_col` — the pairwise kernel emits long ids; threshold
-                  `min_cosine`).  Auto-scaled blocking (k ∝ N) — the
-                  embedding-space dual of 'minhash', same keeper contract;
-    - 'auto'    — exact below `exact_dedup_limit` surviving docs (one
-                  cheap count of the post-filter corpus), minhash above.
+                  hot-bucket caps, identical output contract).
 
     `normalize` (opt-in): unicode NFC + control-character strip +
     whitespace collapse (textual.normalize_text_udf) before EVERYTHING
@@ -276,12 +263,6 @@ def clean_corpus(
     `gopher_rules` (opt-in): drop docs failing any of the 7 MassiveText
     rules (textual.gopher_quality_flags) before the heuristic gate.
 
-    `max_perplexity` (opt-in): CCNet-style LM filter — train an add-alpha
-    bigram LM on the corpus itself and drop docs whose mean negative
-    log-probability exceeds the threshold (operators/ngram_lm).  Docs
-    with fewer than 2 tokens have no bigrams and are dropped too (the
-    CCNet convention).
-
     `paragraph_dedup` (opt-in): WITHIN-document exact paragraph dedup
     (textual.dedupe_paragraphs — RefinedWeb-style intra-doc cleanup),
     right after normalization so repeated nav blocks/footers never feed
@@ -295,26 +276,21 @@ def clean_corpus(
     packed shards carry the final mixture.  Strata not in the map are
     dropped.
 
-    `stage_boundary_dir`: directory for hard parquet stage boundaries
-    between the heavy text-cut waves (see _stage_boundary).  None (the
-    default) is AUTO since r10: when the line/span cut stages are enabled,
-    boundaries turn on by themselves if the projected concurrent spill
-    (input bytes × measured 64× amplification) exceeds half the free
-    scratch disk — the regime where the 3.2 M-doc race hit ENOSPC with
-    the old opt-in default.  The auto directory is temp-created and
-    removed by release_intermediates(result).  An explicit path always
-    forces boundaries on.
+    Stage boundaries: when the line/span cut stages are enabled, hard
+    parquet boundaries between the heavy text-cut waves (see
+    _stage_boundary) turn on by themselves if the projected concurrent
+    spill (input bytes × measured 64× amplification) exceeds half the
+    free scratch disk — the regime where the 3.2 M-doc race hit ENOSPC.
+    Their directory is temp-created and removed by
+    release_intermediates(result).
     """
-    # Auto stage boundaries (r9 verdict #6): when the caller passes no
-    # explicit dir AND the pipeline has the multi-wave text-cut stages
-    # (the only ones boundaries separate), gate them on projected spill
-    # vs free disk — the 3.2 M race died on ENOSPC precisely because the
-    # knob was opt-in.  An explicit dir still always wins; the auto dir's
-    # files are released via the result's intermediates handles.
-    boundary_handle = None
-    if stage_boundary_dir is None and (
-        line_dedup_max_df is not None or span_dedup_k is not None
-    ):
+    # Auto stage boundaries (r9 verdict #6): when the pipeline has the
+    # multi-wave text-cut stages (the only ones boundaries separate), gate
+    # them on projected spill vs free disk — the 3.2 M race died on ENOSPC
+    # precisely because the knob was opt-in.  The dir's files are released
+    # via the result's intermediates handles.
+    stage_boundary_dir = boundary_handle = None
+    if line_dedup_max_df is not None or span_dedup_k is not None:
         stage_boundary_dir, boundary_handle = _auto_stage_boundary_dir(docs)
 
     # The composed run triggers many interior actions (gate counts, the
@@ -333,11 +309,10 @@ def clean_corpus(
                 default_sample_threshold=default_sample_threshold,
                 pack_budget=pack_budget, n_shards=n_shards,
                 dedup_strategy=dedup_strategy, max_shingle_df=max_shingle_df,
-                exact_dedup_limit=exact_dedup_limit, normalize=normalize,
+                normalize=normalize,
                 line_dedup_max_df=line_dedup_max_df, span_dedup_k=span_dedup_k,
                 span_dedup_min_count=span_dedup_min_count,
-                embedding_col=embedding_col, min_cosine=min_cosine,
-                gopher_rules=gopher_rules, max_perplexity=max_perplexity,
+                gopher_rules=gopher_rules,
                 paragraph_dedup=paragraph_dedup, mixture_targets=mixture_targets,
                 mixture_stratum=mixture_stratum,
                 stage_boundary_dir=stage_boundary_dir,
@@ -372,19 +347,15 @@ def _clean_corpus_impl(
     n_shards: int,
     dedup_strategy: str,
     max_shingle_df: int | None,
-    exact_dedup_limit: int,
     normalize: bool,
     line_dedup_max_df: int | None,
     span_dedup_k: int | None,
     span_dedup_min_count: int,
-    embedding_col: str,
-    min_cosine: float,
     gopher_rules: bool,
-    max_perplexity: float | None,
     paragraph_dedup: bool,
     mixture_targets: dict[str, float] | None,
     mixture_stratum: str,
-    stage_boundary_dir: str | None = None,
+    stage_boundary_dir: str | None,
 ) -> DataFrame:
     # 0. optional C4/CCNet-style cross-document line dedup — rewrite the
     # text BEFORE anything scores or shingles it, so boilerplate lines
@@ -443,8 +414,8 @@ def _clean_corpus_impl(
             # before the pair/CC waves stack their own spill on top
             docs = _stage_boundary(docs, f"{stage_boundary_dir}/post_span_cut")
 
-    # 0.5 optional rule/model quality gates — both scan-shaped, both
-    # BEFORE the near-dup stages so junk never pays for shingling:
+    # 0.5 optional rule quality gate — scan-shaped, BEFORE the near-dup
+    # stages so junk never pays for shingling:
     if gopher_rules:
         # the 7 MassiveText rules (scan-side column math, no shuffle),
         # gated in place: the old flags-frame + left-semi-join shape ran
@@ -452,21 +423,6 @@ def _clean_corpus_impl(
         # plus a join exchange — gopher_pass_filter is one pass and the
         # identical survivor set (q72 evidence: 5.2 s -> 1.8 s)
         docs = TXT.gopher_pass_filter(docs, text_col)
-    if max_perplexity is not None:
-        # CCNet-style LM filter: the model is trained on THIS corpus (the
-        # in-domain convention when no external reference corpus is
-        # given); scoring joins are broadcast (vocabulary-bounded)
-        from tegallega_spark.operators.ngram_lm import (
-            perplexity_score,
-            train_bigram_lm,
-        )
-
-        lm = train_bigram_lm(docs, id_col, text_col)
-        _scored = perplexity_score(docs, lm, id_col, text_col)
-        ok = _scored.filter(F.col("avg_nll") <= max_perplexity).select(id_col)
-        docs = docs.join(ok, id_col, "left_semi")
-        # the persisted model tables ride out through the final attach
-        line_cut_handles += tuple(getattr(_scored, "_tegallega_persisted", ()))
 
     # 1. quality + repetition gate (scan-side)
     scored = docs.withColumn("quality", TXT.quality_score(F.col(text_col)))
@@ -489,49 +445,23 @@ def _clean_corpus_impl(
 
     # 3. near-dup clustering; keep the canonical (min-id) doc per cluster
     #
-    # Persist the post-filter corpus REGARDLESS of strategy: at least three
-    # downstream actions traverse it — the pair generator's shingle pass,
-    # the connected-components edge checkpoint, and the final output (plus
-    # the auto-mode count and the mixture stage's stratum counts).  Without
-    # the persist each action re-executes the ENTIRE text-rewrite upstream
-    # (normalize → paragraph → line cut → span cut → gates), which the
-    # composed-pipeline race measured as ~2× the whole run's wall-clock
-    # when a strategy was passed explicitly (only 'auto'/'semantic'
-    # persisted before r6).
-    strategy = dedup_strategy
+    # Persist the post-filter corpus: at least three downstream actions
+    # traverse it — the pair generator's shingle pass, the
+    # connected-components edge checkpoint, and the final output (plus the
+    # mixture stage's stratum counts).  Without the persist each action
+    # re-executes the ENTIRE text-rewrite upstream (normalize → paragraph
+    # → line cut → span cut → gate), which the composed-pipeline race
+    # measured as ~2× the whole run's wall-clock.
     kept = corpus_handle = kept.persist()
-    if strategy == "auto":
-        # stages 1-2 are scan-side, so this count is one fused pass
-        strategy = "exact" if kept.count() <= exact_dedup_limit else "minhash"
-    if strategy == "exact":
+    if dedup_strategy == "exact":
         pairs = exact_shingle_jaccard_pairs(
             kept, id_col, text_col, shingle_n, jaccard_threshold,
             max_df=max_shingle_df,
         )
-    elif strategy == "minhash":
+    elif dedup_strategy == "minhash":
         pairs = minhash_near_duplicates_verified(
             kept, id_col, text_col, shingle_n=shingle_n,
             jaccard_threshold=jaccard_threshold, max_bucket=max_shingle_df,
-        )
-    elif strategy == "semantic":
-        if embedding_col not in kept.columns:
-            raise ValueError(
-                f"dedup_strategy='semantic' needs column {embedding_col!r} "
-                f"on the corpus; have {kept.columns}"
-            )
-        from tegallega_spark.operators.semdedup import semantic_pairs
-
-        # kept is already persisted above — semantic_pairs' k_clusters=None
-        # auto-sizing count and the KMeans scan both hit the cache
-        _sem = semantic_pairs(
-            kept, id_col=id_col, vec_col=embedding_col, min_cosine=min_cosine
-        )
-        # withColumnRenamed returns a NEW DataFrame without the
-        # _tegallega_persisted attribute — re-attach _sem's handles
-        # (the persisted IVF assignment) or release_intermediates(out)
-        # could never free them
-        pairs = attach_intermediates(
-            _sem.withColumnRenamed("cos_sim", "similarity"), _sem
         )
     else:
         raise ValueError(f"unknown dedup_strategy {dedup_strategy!r}")
@@ -569,8 +499,8 @@ def _clean_corpus_impl(
         budget=pack_budget,
     )
     # pairs' persisted LSH/postings intermediates, the cluster-assignment
-    # checkpoint, and the auto/semantic-mode corpus persist all ride out
-    # on the result for release_intermediates(out)
+    # checkpoint, and the corpus persist all ride out on the result for
+    # release_intermediates(out)
     return attach_intermediates(
         packed.select(
             id_col, stratum_col, "bucket", "quality", "dup_ngram_frac", "cluster_id",

@@ -64,16 +64,12 @@ def _index_pbf(pbf_path: str) -> tuple[dict, dict, dict]:
     return nodes, ways, rels
 
 
-def pbf_fetch_fn(
-    pbf_path: str | None = None,
-    index: tuple[dict, dict, dict] | None = None,
-) -> FetchFn:
+def pbf_fetch_fn(index: tuple[dict, dict, dict]) -> FetchFn:
     """An offline FetchFn answering the extract chain's three Overpass
     query shapes (relation / way-geom / node) from one parse of a PBF
-    file (or a prebuilt _index_pbf result).  Way geometry is resolved
-    ref-by-ref against the node index — the PBF equivalent of Overpass
-    `out geom`."""
-    nodes, ways, rels = index if index is not None else _index_pbf(pbf_path)
+    file (the _index_pbf result).  Way geometry is resolved ref-by-ref
+    against the node index — the PBF equivalent of Overpass `out geom`."""
+    nodes, ways, rels = index
 
     def fetch(query: str) -> list[dict]:
         m = _REL_Q.search(query)
@@ -143,7 +139,7 @@ def gtfs_from_pbf(
     file alone.  relation_ids=None processes every type=route relation."""
     index = _index_pbf(pbf_path)
     _, _, rels = index
-    fetch = pbf_fetch_fn(index=index)
+    fetch = pbf_fetch_fn(index)
     if relation_ids is None:
         relation_ids = sorted(
             (str(i) for i, r in rels.items() if r["tags"].get("type") == "route"),

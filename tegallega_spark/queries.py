@@ -2398,11 +2398,16 @@ def q60(spark, sf_dir):
     """,
 )
 def q61(spark, sf_dir):
-    """Virtual-stop interpolation (reference W10, update-routes.js:281-333)
-    through operators/spatial.interpolate_virtual_stops: lag-pair consecutive
-    stops, explode(sequence(1, floor(gap/max_gap))), linear interpolation —
-    1-row-to-N generation with no UDTF.  Four synthetic routes derived from
-    supplier; the oracle replays lead-window + unnest(range) + lerp."""
+    """Virtual-stop interpolation through
+    operators/spatial.interpolate_virtual_stops: lag-pair consecutive stops,
+    explode(sequence(1, floor(gap/max_gap))) over the km haversine gap,
+    linear interpolation on the straight line between the two stops —
+    1-row-to-N generation with no UDTF.  A straight-line simplification of
+    the reference's W10 (update-routes.js:281-333 interpolates along the
+    route polyline); the reference-faithful form is
+    spatial.interpolate_virtual_stops_along_polyline, which the extract
+    runs.  Four synthetic routes derived from supplier; the oracle replays
+    lead-window + unnest(range) + lerp."""
     sup = T(spark, sf_dir, "supplier")
     stops = sup.select(
         F.concat(F.lit("r"), (F.col("s_suppkey") % 4).cast("string")).alias("rel"),

@@ -25,7 +25,6 @@ sense on a 1000-executor cluster reading 100 TB:
 from __future__ import annotations
 
 import os
-import threading
 
 import pandas as pd  # module-level: pandas_udf type hints resolve via
 # get_type_hints against module globals (PEP 563 strings under
@@ -268,66 +267,43 @@ class aqe_off_for_small_input:
     That is the intended split: the pipeline's interior stage-waves are
     the measured cost; the caller's single final action keeps AQE.
 
-    Reentrancy: the gate keeps a module-level depth counter (guarded by a
-    lock) recording the OUTERMOST firing instance's prior value; only the
-    exit that brings the depth back to 0 restores it.  Per-instance
-    save/restore would mis-restore under interleaved (non-nested)
-    lifetimes — A-enter(prior=true), B-enter(prior=false),
-    A-exit(restore true), B-exit(restore false) leaves AQE permanently
-    off session-wide.  The counter makes any interleaving converge to the
-    outermost prior.  The gate must still only be ENTERED from the single
-    driver thread that owns the pipeline (it flips a session-wide conf;
-    unrelated concurrent queries planned inside the window would lose
-    AQE)."""
+    Reentrancy: each firing instance saves its own session's two priors
+    on enter and restores them on exit, so nested windows unwind in LIFO
+    order back to the outermost prior.  The gate must only be entered
+    from the single driver thread that owns the pipeline (it flips a
+    session-wide conf; unrelated concurrent queries planned inside the
+    window would lose AQE, and interleaved non-nested lifetimes would
+    restore out of order).  The package starts threads only in the feed
+    sink and the feed validator, neither of which enters the window."""
 
     _KEY = "spark.sql.adaptive.enabled"
     _SHUF = "spark.sql.shuffle.partitions"
     SMALL_PLAN_BYTES = 1 << 30
     NARROW_SHUFFLE = 8
-    _lock = threading.Lock()
-    _depth = 0
-    # (owning SparkSession, saved priors): restore targets the session the
-    # priors were READ from, not whichever instance exits last — with two
-    # sessions interleaving, per-exit `self._spark` would write session A's
-    # priors onto session B (ADVICE r8)
-    _outermost: tuple | None = None
 
     def __init__(self, df) -> None:
         self._spark = df.sparkSession
         self._fires = plan_size_bytes(df) < self.SMALL_PLAN_BYTES
-        self._entered = False
+        self._priors: dict | None = None
 
     def __enter__(self) -> "aqe_off_for_small_input":
         if self._fires:
-            cls = aqe_off_for_small_input
-            with cls._lock:
-                if cls._depth == 0:
-                    conf = self._spark.conf
-                    priors = {
-                        self._KEY: conf.get(self._KEY, "true"),
-                        self._SHUF: conf.get(self._SHUF, "200"),
-                    }
-                    cls._outermost = (self._spark, priors)
-                    conf.set(self._KEY, "false")
-                    # never WIDEN: a caller who already set it narrower
-                    # knows better
-                    if int(priors[self._SHUF]) > cls.NARROW_SHUFFLE:
-                        conf.set(self._SHUF, str(cls.NARROW_SHUFFLE))
-                cls._depth += 1
-            self._entered = True
+            conf = self._spark.conf
+            self._priors = {
+                self._KEY: conf.get(self._KEY, "true"),
+                self._SHUF: conf.get(self._SHUF, "200"),
+            }
+            conf.set(self._KEY, "false")
+            # never WIDEN: a caller who already set it narrower knows better
+            if int(self._priors[self._SHUF]) > self.NARROW_SHUFFLE:
+                conf.set(self._SHUF, str(self.NARROW_SHUFFLE))
         return self
 
     def __exit__(self, *exc) -> None:
-        if self._entered:
-            cls = aqe_off_for_small_input
-            with cls._lock:
-                cls._depth -= 1
-                if cls._depth == 0:
-                    owner, priors = cls._outermost
-                    for k, v in priors.items():
-                        owner.conf.set(k, v)
-                    cls._outermost = None
-            self._entered = False
+        if self._priors is not None:
+            for k, v in self._priors.items():
+                self._spark.conf.set(k, v)
+            self._priors = None
 
 
 def attach_intermediates(out, *sources):
@@ -395,7 +371,7 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str, fresh: bool = False):
+def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one synthetic table. Parquet → full predicate/column pushdown.
 
     events.ts is TIMESTAMP(NANOS) in the source parquet, which Spark's
@@ -411,14 +387,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, fresh: bool = False)
     On a real deployment tables are registered once in a catalog and
     queries resolve against it; the memo gives local mode the same
     treatment.  This caches the lazy PLAN only — every action still scans
-    the parquet — and `invalidate_table_cache` (or fresh=True) drops the
-    entry for paths a caller rewrites mid-session (scale_data does this
-    after replicating)."""
+    the parquet — and `invalidate_table_cache` drops the entry for paths
+    a caller rewrites mid-session (scale_data does this after
+    replicating)."""
     memo = getattr(spark, "_tegallega_table_memo", None)
     if memo is None:
         memo = spark._tegallega_table_memo = {}
     key = (sf_dir, name)
-    if not fresh and key in memo:
+    if key in memo:
         return memo[key]
     if name == "events":
         from pyspark.sql import functions as F

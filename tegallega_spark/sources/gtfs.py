@@ -71,12 +71,25 @@ def write_gtfs_feed(tables: dict[str, DataFrame], out_dir: str) -> list[str]:
         return [f.result() for f in futures]
 
 
+# Every gtfs.zip entry carries this timestamp and mode instead of its
+# file's mtime and permissions, so the zip's bytes depend only on the
+# tables: a rebuild that writes the same rows writes the same zip.
+_ZIP_DATE_TIME = (1980, 1, 1, 0, 0, 0)
+_ZIP_MODE = 0o100644  # regular file, rw-r--r--
+
+
 def make_gtfs_zip(feed_dir: str, zip_path: str) -> str:
     """Package {feed_dir}/*.txt into a flat gtfs.zip (K3 —
-    direct-graphs-generation.yml:92-95)."""
+    direct-graphs-generation.yml:92-95), entries in name order with a
+    fixed timestamp and mode."""
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
         for txt in sorted(glob.glob(os.path.join(feed_dir, "*.txt"))):
-            z.write(txt, os.path.basename(txt))
+            info = zipfile.ZipInfo(os.path.basename(txt), _ZIP_DATE_TIME)
+            info.compress_type = zipfile.ZIP_DEFLATED
+            info.external_attr = _ZIP_MODE << 16
+            info.file_size = os.path.getsize(txt)  # picks zip64 when needed
+            with open(txt, "rb") as src, z.open(info, "w") as dst:
+                shutil.copyfileobj(src, dst, 1 << 20)
     return zip_path
 
 

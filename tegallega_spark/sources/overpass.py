@@ -139,10 +139,10 @@ def fetch_bundles_distributed(
     spark: SparkSession,
     relation_ids: list[int | str],
     fetch_fn: FetchFn = default_fetch,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """S5-S7 EXECUTOR-SIDE mode: partition the relation catalog and run
-    the (injectable) fetch + parse per partition, N-way concurrent.
+    the (injectable) fetch + parse per partition, N-way concurrent, with
+    N = min(#relations, the session's default parallelism).
 
     The driver-side loop (`fetch_relation_bundle` per relation) matches
     the reference's sequential shape and is the right choice against the
@@ -194,7 +194,7 @@ def fetch_bundles_distributed(
 
     sc = spark.sparkContext
     ids = [str(r) for r in relation_ids]
-    n_parts = max(1, num_partitions or min(len(ids), sc.defaultParallelism))
+    n_parts = max(1, min(len(ids), sc.defaultParallelism))
     # relation i is placed in partition i % n_parts: parallelize hands the
     # j-th element of an n_parts-long list to partition j.  A round-robin
     # repartition of one-row input partitions (or a hash of the index) can

@@ -43,18 +43,19 @@ OPERATORS = {
     ).simhash_near_duplicates_verified(_docs(spark), "doc_id", "text"),
     "semdedup_pairs": lambda spark: __import__(
         "tegallega_spark.operators.semdedup", fromlist=["x"]
-    ).semantic_pairs(_emb(spark), min_cosine=0.9, k_clusters=4),
+    ).semantic_pairs(_emb(spark), min_cosine=0.9, target_cell_size=38),  # 4 cells
     "similarity_lsh": lambda spark: __import__(
         "tegallega_spark.operators.similarity", fromlist=["x"]
     ).all_pairs_above(_emb(spark), min_cosine=0.9),
+    # the default dedup strategy ('exact')
     "clean_corpus_auto": lambda spark: __import__(
         "tegallega_spark.pipeline.corpus", fromlist=["x"]
     ).clean_corpus(
         _docs(spark).withColumn("lang", F.lit("en")),
         min_quality=0.0, max_dup_ngram_frac=1.0,
     ),
-    # explicit strategy: r6 made the corpus persist unconditional (it was
-    # auto/semantic-only), so the release path must free it here too
+    # explicit strategy: the corpus persist is unconditional, so the
+    # release path must free it here too
     "clean_corpus_exact": lambda spark: __import__(
         "tegallega_spark.pipeline.corpus", fromlist=["x"]
     ).clean_corpus(
@@ -73,12 +74,13 @@ OPERATORS = {
             "tegallega_spark.operators.ngram_lm", fromlist=["x"]
         ).train_bigram_lm(_docs(spark)),
     ),
+    # the quality-gated pipeline (the Gopher rules)
     "clean_corpus_lm_gate": lambda spark: __import__(
         "tegallega_spark.pipeline.corpus", fromlist=["x"]
     ).clean_corpus(
         _docs(spark).withColumn("lang", F.lit("en")),
         min_quality=0.0, max_dup_ngram_frac=1.0,
-        gopher_rules=True, max_perplexity=50.0,
+        gopher_rules=True,
     ),
 }
 

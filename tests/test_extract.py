@@ -112,9 +112,8 @@ def test_non_angkot_keeps_raw_stops(spark):
 def test_geojson_sink_roundtrip(extracted, tmp_path):
     stitched, stops = extracted
     n = write_route_geojson(stitched, stops, str(tmp_path))
-    assert n == 1  # default contract: a count, no per-relation collect
-    dirs = write_route_geojson(stitched, stops, str(tmp_path),
-                               return_paths=True)
+    assert n == 1  # a count, no per-relation collect
+    dirs = [os.path.join(tmp_path, d) for d in sorted(os.listdir(tmp_path))]
     assert len(dirs) == 1
     with open(os.path.join(dirs[0], "ways.geojson")) as f:
         ways = json.load(f)
@@ -138,10 +137,9 @@ def test_geojson_sink_is_distributed_and_exact(extracted, tmp_path, spark):
         "'999' as relation_id", "stop_id", "name", "role", "is_real",
         "lon", "lat", "frac_idx",
     )
-    dirs = write_route_geojson(
-        stitched, stops.unionByName(extra), str(tmp_path), return_paths=True
-    )
-    assert [os.path.basename(d) for d in dirs] == ["900"]
+    n = write_route_geojson(stitched, stops.unionByName(extra), str(tmp_path))
+    assert n == 1 and sorted(os.listdir(tmp_path)) == ["900"]
+    dirs = [os.path.join(tmp_path, "900")]
 
     # expected bytes, rendered driver-side from the same collected rows
     coords = [
@@ -245,22 +243,24 @@ def test_distributed_fetch_matches_driver_loop(spark, tmp_path):
     multi_fetch = _make_multi_fetch()
 
     def marking_fetch(query: str) -> list[dict]:
-        # records the Spark partition id of every executor-side call so
-        # the test can prove the fetches ran distributed across tasks,
-        # not in one driver loop (closure-captured path: env vars set
-        # after JVM start don't reach the Python workers)
+        # records the Spark partition id of every executor-side relation
+        # fetch so the test can prove the fetches ran distributed across
+        # tasks, not in one driver loop (closure-captured path: env vars
+        # set after JVM start don't reach the Python workers)
+        import re
+
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
-        if ctx is not None:
-            with open(os.path.join(marker_dir, f"p{ctx.partitionId()}"), "w") as f:
+        m = re.search(r"relation\((\d+)\)", query)
+        if ctx is not None and m:
+            name = f"p{ctx.partitionId()}_{m.group(1)}"
+            with open(os.path.join(marker_dir, name), "w") as f:
                 f.write("1")
         return multi_fetch(query)
 
     rids = ["900", "901", "902", "903"]
-    ways_d, nodes_d = fetch_bundles_distributed(
-        spark, rids, marking_fetch, num_partitions=4
-    )
+    ways_d, nodes_d = fetch_bundles_distributed(spark, rids, marking_fetch)
     exp_w, exp_n = [], []
     for rid in rids:
         w, n = bundle_to_rows(rid, fetch_relation_bundle(rid, multi_fetch))
@@ -268,10 +268,12 @@ def test_distributed_fetch_matches_driver_loop(spark, tmp_path):
         exp_n.extend(n)
     assert sorted(tuple(r) for r in ways_d.collect()) == sorted(exp_w)
     assert sorted(tuple(r) for r in nodes_d.collect()) == sorted(exp_n)
-    # the fetches ran N-way across distinct tasks (one marker per
-    # partition id), not funneled through the driver
+    # the fetches ran N-way across distinct tasks, not funneled through
+    # the driver: relation i in partition i % n, n = min(#relations,
+    # default parallelism)
+    n = min(len(rids), spark.sparkContext.defaultParallelism)
     markers = {p for p in os.listdir(tmp_path) if p.startswith("p")}
-    assert len(markers) == 4, markers
+    assert markers == {f"p{i % n}_{rid}" for i, rid in enumerate(rids)}, markers
     assert release_intermediates(ways_d) == 1  # the shared persisted frame
 
 

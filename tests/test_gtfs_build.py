@@ -338,3 +338,26 @@ def test_feed_sink_raises_when_a_table_fails(spark, tables, tmp_path):
             str(out),
         )
     assert sorted(os.listdir(out)) == ["agency.txt", "routes.txt"]
+
+
+def test_gtfs_zip_bytes_do_not_depend_on_file_mtimes(tables, tmp_path):
+    """gtfs.zip is a function of the tables alone: zipping the same feed
+    after every file's mtime moved gives byte-identical zips, with one
+    entry per table under its file name holding the file's bytes."""
+    import zipfile
+
+    from tegallega_spark.sources.gtfs import make_gtfs_zip, write_gtfs_feed
+
+    paths = write_gtfs_feed(tables, str(tmp_path / "feed"))
+    first = make_gtfs_zip(str(tmp_path / "feed"), str(tmp_path / "a.zip"))
+    for i, p in enumerate(paths):
+        st = os.stat(p)
+        os.utime(p, (st.st_atime + 86_400 + i, st.st_mtime + 86_400 + i))
+    second = make_gtfs_zip(str(tmp_path / "feed"), str(tmp_path / "b.zip"))
+    with open(first, "rb") as a, open(second, "rb") as b:
+        assert a.read() == b.read()
+    with zipfile.ZipFile(second) as z:
+        assert z.namelist() == sorted(os.path.basename(p) for p in paths)
+        for p in paths:
+            with open(p, "rb") as f:
+                assert z.read(os.path.basename(p)) == f.read()

@@ -57,14 +57,14 @@ def _write_synthetic_pbf(tmp_path) -> str:
 
 
 def test_pbf_fetch_fn_answers_overpass_query_shapes(tmp_path):
-    from tegallega_spark.pipeline.pbf_extract import pbf_fetch_fn
+    from tegallega_spark.pipeline.pbf_extract import _index_pbf, pbf_fetch_fn
     from tegallega_spark.sources.overpass import (
         nodes_query,
         relation_query,
         ways_query,
     )
 
-    fetch = pbf_fetch_fn(_write_synthetic_pbf(tmp_path))
+    fetch = pbf_fetch_fn(_index_pbf(_write_synthetic_pbf(tmp_path)))
     rel = fetch(relation_query("900"))
     assert len(rel) == 1 and rel[0]["type"] == "relation"
     assert [m["role"] for m in rel[0]["members"][:2]] == ["stop", "stop_exit_only"]

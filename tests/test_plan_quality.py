@@ -217,32 +217,29 @@ def test_duplicated_spans_plan_shape(spark, force_shape):
     Arrow-batched pass (never row-at-a-time Python, never evaluated
     twice — the single-exchange window formulation replaced the old
     persist + groupBy + join-back, so no cache appears either), the
-    count/arbitration and interval-merge windows partitioned by hash/doc
-    (never SinglePartition), no cartesian join."""
+    count and interval-merge windows partitioned by hash/doc (never
+    SinglePartition), no cartesian join."""
     from tegallega_spark.operators.textual import duplicated_spans
     from tegallega_spark.session import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    for kf in (False, True):
-        # audit the DISTRIBUTED (scale) shape — the r13 auto gate would
-        # take the one-task profile at this size
-        force_shape("distributed")
-        plan = plan_of(duplicated_spans(docs, keep_first=kf), "simple")
-        assert "Window" in plan
-        assert "SinglePartition" not in plan
-        assert "CartesianProduct" not in plan
-        assert plan.count("ArrowEvalPython") == 1  # the one shingle pass
-        assert "BatchEvalPython" not in plan  # no row-at-a-time Python
-        assert "InMemoryTableScan" not in plan  # nothing persists
-        # keep_first's min-(doc,pos) arbitration must FUSE into the same
-        # exchange as the occurrence count — exactly one hash-keyed
-        # exchange feeding the window stage, not a second shuffle
-        assert plan.count("Exchange hashpartitioning(__h") == 1
-        # and the gated single-task shape: one MapInPandas, no exchange
-        force_shape("single")
-        st = plan_of(duplicated_spans(docs, keep_first=kf), "simple")
-        assert "MapInPandas" in st
-        assert "Exchange" not in st
+    # audit the DISTRIBUTED (scale) shape — the r13 auto gate would take
+    # the one-task profile at this size
+    force_shape("distributed")
+    plan = plan_of(duplicated_spans(docs), "simple")
+    assert "Window" in plan
+    assert "SinglePartition" not in plan
+    assert "CartesianProduct" not in plan
+    assert plan.count("ArrowEvalPython") == 1  # the one shingle pass
+    assert "BatchEvalPython" not in plan  # no row-at-a-time Python
+    assert "InMemoryTableScan" not in plan  # nothing persists
+    # exactly one hash-keyed exchange feeding the window stage
+    assert plan.count("Exchange hashpartitioning(__h") == 1
+    # and the gated single-task shape: one MapInPandas, no exchange
+    force_shape("single")
+    st = plan_of(duplicated_spans(docs), "simple")
+    assert "MapInPandas" in st
+    assert "Exchange" not in st
 
 
 def test_semantic_dedup_no_cartesian_and_bounded_exchanges(spark):
@@ -257,7 +254,8 @@ def test_semantic_dedup_no_cartesian_and_bounded_exchanges(spark):
         (i, [float(x) for x in rng.standard_normal(8)]) for i in range(64)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    plan = plan_of(semantic_pairs(df, k_clusters=4, min_cosine=0.9))
+    # 64 rows at 16 per cell: 4 cells
+    plan = plan_of(semantic_pairs(df, target_cell_size=16, min_cosine=0.9))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -354,12 +352,10 @@ def test_aqe_gate_fires_small_restores_and_ignores_large(spark, monkeypatch):
 
 
 def test_aqe_gate_interleaved_instances_restore_outermost_prior(spark, monkeypatch):
-    """r8 advice fix: per-instance save/restore mis-restores under
-    interleaved (non-nested) lifetimes — A-enter(prior=true),
-    B-enter(prior=false), A-exit, B-exit used to leave AQE permanently
-    off session-wide.  The module-level depth counter must restore the
-    OUTERMOST prior when the last instance exits, for both the
-    interleaved and the properly nested orders."""
+    """Nested windows unwind to the outermost prior (each firing instance
+    restores what it saved), and a non-firing instance whose lifetime
+    overlaps a firing one is inert.  Interleaved firing lifetimes would
+    need threads, and no package thread enters the window."""
     from tegallega_spark.session import aqe_off_for_small_input
 
     key = "spark.sql.adaptive.enabled"
@@ -368,18 +364,7 @@ def test_aqe_gate_interleaved_instances_restore_outermost_prior(spark, monkeypat
     try:
         small = spark.range(10).toDF("n")
 
-        # interleaved: A enter, B enter, A exit, B exit
-        a = aqe_off_for_small_input(small)
-        b = aqe_off_for_small_input(small)
-        a.__enter__()
-        assert spark.conf.get(key) == "false"
-        b.__enter__()
-        a.__exit__(None, None, None)
-        assert spark.conf.get(key) == "false"  # B still open
-        b.__exit__(None, None, None)
-        assert spark.conf.get(key) == "true"   # outermost prior restored
-
-        # nested: same invariant
+        # nested
         with aqe_off_for_small_input(small):
             with aqe_off_for_small_input(small):
                 assert spark.conf.get(key) == "false"
@@ -597,7 +582,7 @@ def test_exact_jaccard_pair_gen_no_cartesian(spark, force_shape):
     assert "CartesianProduct" not in small_plan
 
 
-def test_all_pairs_above_band_join_shuffles_ids_not_vectors(spark):
+def test_all_pairs_above_band_join_shuffles_ids_not_vectors(spark, force_shape):
     """q39's LSH candidate join must shuffle only (id, table, bucket)
     rows; the embedding vectors join back AFTER the bare-pair dedup.  A
     plan where the vector column reaches the band-join exchange would
@@ -616,20 +601,15 @@ def test_all_pairs_above_band_join_shuffles_ids_not_vectors(spark):
     rng = np.random.default_rng(7)
     rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(48)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    # broadcast_rescore=False: audit the DISTRIBUTED (scale) shape — the
-    # r13 auto gate would broadcast the vectors at this input size
-    pairs = all_pairs_above(
-        df, min_cosine=0.5, num_planes=2, num_tables=4, broadcast_rescore=False
-    )
+    # audit the DISTRIBUTED (scale) shape — the small-input gate would
+    # broadcast the vectors at this input size
+    force_shape("distributed")
+    pairs = all_pairs_above(df, min_cosine=0.5, num_planes=2, num_tables=4)
     plan = plan_of(pairs)
     # and the gated shapes.  (a) small row count -> the whole operator is
     # one MapInPandas task fed by a broadcast, no join anywhere:
-    gated = plan_of(
-        all_pairs_above(
-            df, min_cosine=0.5, num_planes=2, num_tables=4,
-            broadcast_rescore=True,
-        )
-    )
+    force_shape("single")
+    gated = plan_of(all_pairs_above(df, min_cosine=0.5, num_planes=2, num_tables=4))
     assert "MapInPandas" in gated and "Join" not in gated
     # (b) mid-size (row gate exceeded, byte gate not): candidate pairs
     # rescore from the broadcast matrix — the vector payload is never
@@ -639,12 +619,7 @@ def test_all_pairs_above_band_join_shuffles_ids_not_vectors(spark):
     old_n = SIM_MOD.SMALL_ALLPAIRS_TASK_N
     SIM_MOD.SMALL_ALLPAIRS_TASK_N = 0
     try:
-        mid = plan_of(
-            all_pairs_above(
-                df, min_cosine=0.5, num_planes=2, num_tables=4,
-                broadcast_rescore=True,
-            )
-        )
+        mid = plan_of(all_pairs_above(df, min_cosine=0.5, num_planes=2, num_tables=4))
     finally:
         SIM_MOD.SMALL_ALLPAIRS_TASK_N = old_n
     assert "ArrowEvalPython" in mid
@@ -672,3 +647,40 @@ def test_all_pairs_above_band_join_shuffles_ids_not_vectors(spark):
     for detail in bucket_exchanges:
         assert "__v" not in detail and "embedding" not in detail, detail
     release_intermediates(pairs)
+
+
+def test_all_pairs_above_shapes_agree_with_brute_force(spark, force_shape, monkeypatch):
+    """all_pairs_above's three shapes — the one-task profile, the
+    broadcast-matrix rescore and the band join — return the same pairs
+    and the same cos_sim doubles, bit for bit.  At q39's oracle-exact
+    setting (2 planes x 16 tables: recall ~1 at the threshold) they also
+    equal a brute-force cosine over every pair."""
+    import numpy as np
+
+    import tegallega_spark.operators.similarity as SIM_MOD
+    from tegallega_spark.session import release_intermediates
+
+    rng = np.random.default_rng(11)
+    vecs = rng.standard_normal((64, 8)).astype(np.float32)
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    thr = 0.462
+
+    def run(shape, task_n):
+        force_shape(shape)
+        monkeypatch.setattr(SIM_MOD, "SMALL_ALLPAIRS_TASK_N", task_n)
+        out = SIM_MOD.all_pairs_above(df, min_cosine=thr, num_planes=2, num_tables=16)
+        got = sorted((r.id_a, r.id_b, r.cos_sim) for r in out.collect())
+        release_intermediates(out)
+        return got
+
+    single = run("single", 4096)
+    rescore = run("single", 0)
+    join = run("distributed", 4096)
+    assert single and single == rescore == join
+
+    x = vecs.astype(np.float64)
+    cos = (x @ x.T) / np.outer(np.linalg.norm(x, axis=1), np.linalg.norm(x, axis=1))
+    want = {(a, b) for a in range(64) for b in range(a + 1, 64) if cos[a, b] >= thr}
+    assert {(a, b) for a, b, _ in single} == want
+    assert max(abs(c - cos[a, b]) for a, b, c in single) < 1e-12

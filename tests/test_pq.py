@@ -1,5 +1,6 @@
 """Product-quantization ANN: code properties, exact-equality under full
-re-rank, and measured recall of the bounded-re-rank scale path."""
+re-rank, and measured recall of the bounded-re-rank scale path.  Codes and
+ADC distances are squared-L2 on the raw vectors, as q69 and q73 run them."""
 
 from __future__ import annotations
 
@@ -20,12 +21,12 @@ def emb(spark):
 
 @pytest.fixture(scope="module")
 def codebooks(emb):
-    return train_pq_codebooks(emb, m=8, k=16, normalize=True)
+    return train_pq_codebooks(emb, m=8, k=16)
 
 
 def test_codebook_shape_and_determinism(emb, codebooks):
     assert codebooks.shape == (8, 16, 8)
-    again = train_pq_codebooks(emb, m=8, k=16, normalize=True)
+    again = train_pq_codebooks(emb, m=8, k=16)
     assert np.array_equal(codebooks, again)
 
 
@@ -37,7 +38,7 @@ def test_train_raises_when_sample_smaller_than_k(emb):
 
 
 def test_codes_compress_32x(emb, codebooks):
-    enc = encode_pq(emb, codebooks, normalize=True)
+    enc = encode_pq(emb, codebooks)
     row = enc.first()
     assert len(row.pq_code) == 8  # 8 bytes vs 64 float32 = 32x
     assert all(0 <= c < 16 for c in row.pq_code)
@@ -49,11 +50,9 @@ def test_full_rerank_equals_exact(spark, emb, codebooks):
     ADC candidate plumbing and the output contract."""
     n = emb.count()
     query = emb.orderBy("vec_id").first().embedding
-    enc = encode_pq(emb, codebooks, normalize=True).persist()
+    enc = encode_pq(emb, codebooks).persist()
     exact = brute_force_topk(emb, query, k=10).collect()
-    viapq = pq_topk(
-        enc, codebooks, query, k=10, rerank=n, normalize=True
-    ).collect()
+    viapq = pq_topk(enc, codebooks, query, k=10, rerank=n).collect()
     assert [r.vec_id for r in viapq] == [r.vec_id for r in exact]
     for a, b in zip(viapq, exact):
         assert abs(a.cos_sim - b.cos_sim) < 1e-12
@@ -62,14 +61,14 @@ def test_full_rerank_equals_exact(spark, emb, codebooks):
 def test_bounded_rerank_recall(spark, emb, codebooks):
     """The scale path (re-rank 50 of 500 = 10%) must keep high recall@10
     averaged over queries — measured, not assumed."""
-    enc = encode_pq(emb, codebooks, normalize=True).persist()
+    enc = encode_pq(emb, codebooks).persist()
     queries = [r.embedding for r in emb.orderBy("vec_id").limit(5).collect()]
     hits = total = 0
     for q in queries:
         exact = {r.vec_id for r in brute_force_topk(emb, q, k=10).collect()}
         approx = {
             r.vec_id
-            for r in pq_topk(enc, codebooks, q, k=10, rerank=50, normalize=True).collect()
+            for r in pq_topk(enc, codebooks, q, k=10, rerank=50).collect()
         }
         hits += len(exact & approx)
         total += len(exact)
@@ -84,24 +83,20 @@ def test_ivfpq_composition(spark, emb, codebooks):
     from tegallega_spark.operators.ivf import train_ivf_index_sampled
     from tegallega_spark.operators.pq import ivfpq_topk
 
-    idx = train_ivf_index_sampled(emb, k=8).encode(codebooks, normalize=True)
+    idx = train_ivf_index_sampled(emb, k=8).encode(codebooks)
     n = emb.count()
     query = emb.orderBy("vec_id").first().embedding
 
     exact = [r.vec_id for r in brute_force_topk(emb, query, k=10).collect()]
     full = [
         r.vec_id
-        for r in ivfpq_topk(
-            idx, codebooks, query, k=10, nprobe=8, rerank=n, normalize=True
-        ).collect()
+        for r in ivfpq_topk(idx, codebooks, query, k=10, nprobe=8, rerank=n).collect()
     ]
     assert full == exact
 
     pruned = {
         r.vec_id
-        for r in ivfpq_topk(
-            idx, codebooks, query, k=10, nprobe=4, rerank=50, normalize=True
-        ).collect()
+        for r in ivfpq_topk(idx, codebooks, query, k=10, nprobe=4, rerank=50).collect()
     }
     recall = len(set(exact) & pruned) / 10
     assert recall >= 0.5, f"IVF-PQ recall@10 = {recall}"
@@ -116,14 +111,13 @@ def test_ivfpq_batch_matches_per_query(spark, emb, codebooks):
     from tegallega_spark.operators.ivf import train_ivf_index_sampled
     from tegallega_spark.operators.pq import ivfpq_topk, ivfpq_topk_batch
 
-    idx = train_ivf_index_sampled(emb, k=8).encode(codebooks, normalize=True)
+    idx = train_ivf_index_sampled(emb, k=8).encode(codebooks)
     n = emb.count()
     queries = [list(r.embedding) for r in emb.orderBy("vec_id").limit(3).collect()]
 
     for nprobe, rerank in ((8, n), (4, 50)):
         batch = ivfpq_topk_batch(
-            idx, codebooks, queries, k=10, nprobe=nprobe, rerank=rerank,
-            normalize=True,
+            idx, codebooks, queries, k=10, nprobe=nprobe, rerank=rerank
         ).collect()
         got: dict[int, list] = {}
         for r in batch:
@@ -131,8 +125,7 @@ def test_ivfpq_batch_matches_per_query(spark, emb, codebooks):
         assert set(got) == {0, 1, 2}
         for qi, q in enumerate(queries):
             solo = ivfpq_topk(
-                idx, codebooks, q, k=10, nprobe=nprobe, rerank=rerank,
-                normalize=True,
+                idx, codebooks, q, k=10, nprobe=nprobe, rerank=rerank
             ).collect()
             b = sorted(got[qi], key=lambda t: (-t[1], t[0]))
             assert [v for v, _ in b] == [r.vec_id for r in solo]
@@ -177,27 +170,29 @@ def test_sampled_ivf_trainer_assignment_and_determinism(spark, emb):
 
 
 def test_sampled_ivf_trainer_raises_when_sample_below_k(emb):
+    """The draw is max(32·k, 8192) rows, so it falls below k only on a
+    corpus smaller than k: that must fail loudly, not train degenerate
+    lists."""
     from tegallega_spark.operators.ivf import train_ivf_index_sampled
 
     with pytest.raises(ValueError, match="rows < k"):
-        train_ivf_index_sampled(emb, k=64, sample=8)
+        train_ivf_index_sampled(emb, k=emb.count() + 1)
 
 
 def test_short_sample_draw_raises_without_corpus_size(emb):
-    """A caller-supplied draw shorter than `sample` trains on a different
-    sample than the documented one unless it is the whole corpus; with
-    `n` unknown that cannot be shown, so it must raise, not train."""
+    """A caller-supplied draw shorter than the trainer's own draw
+    (max(32·k, 8192) rows) trains on a different sample than the
+    documented one unless it is the whole corpus; with `n` unknown that
+    cannot be shown, so it must raise, not train."""
     from tegallega_spark.operators.ivf import train_centroids_sampled
 
     short = np.zeros((10, 8))
-    with pytest.raises(ValueError, match="sample_x has 10 rows < sample=32"):
-        train_centroids_sampled(emb, k=4, sample=32, sample_x=short)
+    with pytest.raises(ValueError, match="sample_x has 10 rows < sample=8192"):
+        train_centroids_sampled(emb, k=4, sample_x=short)
     # the whole-corpus draw stays accepted when `n` says so
     rng = np.random.default_rng(0)
     whole = rng.normal(size=(10, 8))
-    assert train_centroids_sampled(
-        emb, k=4, sample=32, sample_x=whole, n=10
-    ).shape == (4, 8)
+    assert train_centroids_sampled(emb, k=4, sample_x=whole, n=10).shape == (4, 8)
 
 
 def test_sample_prefilter_bit_identical(spark, emb):

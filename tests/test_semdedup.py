@@ -2,7 +2,9 @@
 
 Contract mirrors the other near-dup families: approximate blocking +
 exact verification, pinned against exact all-pairs where the blocking is
-degenerate (k_clusters=1) and against planted duplicates where it isn't.
+degenerate (one cell) and against planted duplicates where it isn't.  The
+cell count is always auto_k_clusters(n, target_cell_size), so a test that
+wants k cells on an n-row corpus passes a target_cell_size that yields k.
 """
 
 import warnings
@@ -48,9 +50,8 @@ def _keepers(df, pairs_df):
 
 def test_single_cluster_matches_exact_all_pairs(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    got_df = semantic_pairs(
-        emb, min_cosine=0.3, k_clusters=1, max_cluster=10**6
-    )
+    # 200 rows at the default target_cell_size (512): one cell
+    got_df = semantic_pairs(emb, min_cosine=0.3, max_cluster=10**6)
     got = {(r.id_a, r.id_b) for r in got_df.collect()}
     release_intermediates(got_df)
     want = _exact_pairs(emb, 0.3)
@@ -67,7 +68,7 @@ def test_non_default_seed_warns_inert(spark):
     df = _planted(spark, n_groups=4)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        pairs = semantic_pairs(df, min_cosine=0.999, k_clusters=2, seed=99)
+        pairs = semantic_pairs(df, min_cosine=0.999, target_cell_size=6, seed=99)
         pairs.collect()
         release_intermediates(pairs)
     assert any("no-op" in str(w.message) for w in caught)
@@ -87,7 +88,7 @@ def _planted(spark, n_groups=30, copies=3, dim=16, noise=1e-3, seed=7):
 
 def test_planted_duplicates_all_found_and_one_keeper_per_group(spark):
     df = _planted(spark)
-    pairs_df = semantic_pairs(df, min_cosine=0.999, k_clusters=8)
+    pairs_df = semantic_pairs(df, min_cosine=0.999, target_cell_size=12)  # 8 cells
     pairs = {(r.id_a, r.id_b) for r in pairs_df.collect()}
     # near-identical copies always share a k-means cell → full recall
     for g in range(30):
@@ -112,7 +113,7 @@ def test_hot_cluster_star_guard_bounds_pairs(spark):
         [(i, v) for i in range(n)], "vec_id long, embedding array<float>"
     )
     pairs_df = semantic_pairs(
-        df, min_cosine=0.99, k_clusters=2, max_cluster=50
+        df, min_cosine=0.99, target_cell_size=200, max_cluster=50
     )
     pairs = pairs_df.collect()
     assert len(pairs) == n - 1
@@ -124,7 +125,7 @@ def test_hot_cluster_star_guard_bounds_pairs(spark):
 
 def test_release_frees_cached_cluster_assignment(spark):
     df = _planted(spark, n_groups=5)
-    pairs_df = semantic_pairs(df, min_cosine=0.999, k_clusters=2)
+    pairs_df = semantic_pairs(df, min_cosine=0.999, target_cell_size=8)  # 2 cells
     pairs_df.collect()
     handles = getattr(pairs_df, "_tegallega_persisted", [])
     assert handles and all(h.is_cached for h in handles)
@@ -143,7 +144,7 @@ def test_auto_k_scales_with_corpus_size():
 
 
 def test_default_k_full_recall_on_planted(spark):
-    # no k_clusters argument at all: the auto default must still find
+    # default target_cell_size: the auto cell count must still find
     # every planted pair (the VERDICT round-4 acceptance criterion)
     df = _planted(spark, n_groups=40, copies=3)
     pairs_df = semantic_pairs(df, min_cosine=0.999)
@@ -164,14 +165,16 @@ def test_star_fraction_warning_fires_on_coarse_blocking(spark):
         [(i, v) for i in range(n)], "vec_id long, embedding array<float>"
     )
     with pytest.warns(UserWarning, match="STAR-link"):
-        pairs_df = semantic_pairs(df, min_cosine=0.99, k_clusters=2, max_cluster=50)
+        pairs_df = semantic_pairs(
+            df, min_cosine=0.99, target_cell_size=200, max_cluster=50
+        )
     pairs_df.collect()
     release_intermediates(pairs_df)
 
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         pairs_df = semantic_pairs(
-            df, min_cosine=0.99, k_clusters=2, max_cluster=10**6
+            df, min_cosine=0.99, target_cell_size=200, max_cluster=10**6
         )
     pairs_df.collect()
     release_intermediates(pairs_df)
@@ -197,7 +200,7 @@ def test_probe_visitors_do_not_star_link_true_small_cells(spark):
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # star warning must NOT fire either
         pairs_df = semantic_pairs(
-            df, min_cosine=0.999, k_clusters=2, probes=2, max_cluster=80
+            df, min_cosine=0.999, target_cell_size=60, probes=2, max_cluster=80
         )
         pairs = {(r.id_a, r.id_b) for r in pairs_df.collect()}
     release_intermediates(pairs_df)
@@ -224,7 +227,7 @@ def test_probe_inflow_work_bound_still_stars(spark):
     # the star path still produces exactly n-1 star pairs, not O(n²)
     with pytest.warns(UserWarning, match="STAR-link"):
         pairs_df = semantic_pairs(
-            df, min_cosine=0.99, k_clusters=2, probes=2, max_cluster=100
+            df, min_cosine=0.99, target_cell_size=150, probes=2, max_cluster=100
         )
     pairs = pairs_df.collect()
     release_intermediates(pairs_df)
@@ -235,16 +238,17 @@ def test_probe_inflow_work_bound_still_stars(spark):
 def test_tree_quantizer_path_full_recall_on_planted(spark):
     """r9: above TREE_QUANTIZER_MIN_K cells the blocking switches to the
     two-level tree quantizer (O(√k·d) probe — the fix for the r8 race's
-    N^1.7 curve).  Forcing that path with an explicit large k on a
+    N^1.7 curve).  Forcing that path with one cell per vector on a
     planted corpus must keep full pair recall, zero false positives at
     this threshold, and the same one-keeper-per-group dedup."""
     from tegallega_spark.operators.semdedup import TREE_QUANTIZER_MIN_K
 
-    k = TREE_QUANTIZER_MIN_K + 476  # well into the tree regime
-    df = _planted(spark, n_groups=120, copies=3)
-    pairs_df = semantic_pairs(df, min_cosine=0.999, k_clusters=k)
+    df = _planted(spark, n_groups=500, copies=3)
+    # 1,500 cells: well into the tree regime
+    assert auto_k_clusters(1500, 1) > TREE_QUANTIZER_MIN_K
+    pairs_df = semantic_pairs(df, min_cosine=0.999, target_cell_size=1)
     pairs = {(r.id_a, r.id_b) for r in pairs_df.collect()}
-    for g in range(120):
+    for g in range(500):
         ids = [g * 3, g * 3 + 1, g * 3 + 2]
         assert {(a, b) for a in ids for b in ids if a < b} <= pairs, (
             f"group {g} pairs missing under tree blocking"
@@ -253,7 +257,7 @@ def test_tree_quantizer_path_full_recall_on_planted(spark):
 
     ids = _keepers(df, pairs_df)
     release_intermediates(pairs_df)
-    assert ids == [g * 3 for g in range(120)]
+    assert ids == [g * 3 for g in range(500)]
 
 
 def test_tree_quantizer_probe_matches_bruteforce_cells(spark):
@@ -289,33 +293,3 @@ def test_tree_quantizer_probe_matches_bruteforce_cells(spark):
         want = [int(flat_ids[j]) for j in np.argsort(flat_d, kind="stable")[:2]]
         assert list(cells) == want
         assert all(flat_d[list(flat_ids).index(c)] < _EMPTY_SLOT for c in cells)
-
-
-def test_margin_probe_covers_centroid_ties(spark):
-    """r8: the radius-margin probe's losslessness rule.  Two
-    near-identical vectors sitting astride a two-centroid tie rank the
-    tied centroids OPPOSITE ways — fixed top-1 probing puts them in
-    disjoint cells (the failure measured at N=1M: 2 of 110,961 planted
-    pairs missed), while the d_min+r margin must make their probe sets
-    overlap for any pair within distance r."""
-    import pandas as pd
-
-    from tegallega_spark.operators.semdedup import _probe_cells_udf
-
-    # centroids symmetric about the y-axis; a and b are a near-identical
-    # pair straddling the boundary
-    centroids = [[-1.0, 0.0], [1.0, 0.0]]
-    a, b = [-0.001, 1.0], [0.001, 1.0]
-    df = spark.createDataFrame([(0, a), (1, b)], "id long, v array<double>")
-
-    plain = _probe_cells_udf(centroids, probes=1)
-    got_plain = {r.id: list(r.cells) for r in
-                 df.select("id", plain("v").alias("cells")).collect()}
-    assert got_plain[0] == [0] and got_plain[1] == [1]  # disjoint: the bug
-
-    margin = _probe_cells_udf(centroids, probes=1, margin=0.1)
-    got = {r.id: set(r.cells) for r in
-           df.select("id", margin("v").alias("cells")).collect()}
-    assert got[0] & got[1], "margin probe must give tie-straddling pairs a shared cell"
-    # and the sets are exactly the tie pair, not everything
-    assert got[0] == got[1] == {0, 1}

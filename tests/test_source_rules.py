@@ -9,7 +9,8 @@ Likewise the one auditable text hash and the one shingle word hash are
 each defined in one place, so every operator and oracle agree on them,
 and the feed's trip and shape id grammar is written only in
 functions/ids.py.  Every package function is run by a query, pipeline,
-race or tool, or is named in KEEP with the reason it stays."""
+race or tool, or is named in KEEP with the reason it stays; likewise every
+None/True/False option is set by one of them, or is named in KEEP_OPTIONS."""
 
 from __future__ import annotations
 
@@ -314,3 +315,133 @@ def test_keep_list_names_only_unreached_defs():
     assert not missing, f"KEEP names defs that do not exist: {missing}"
     reached = sorted(set(KEEP) & _reachable(defs, names, registered))
     assert not reached, f"KEEP entries that run outside tests: {reached}"
+
+
+# ---------------------------------------------------------------------------
+# Modes: every on/off or auto-vs-explicit option has a caller that is not a test
+# ---------------------------------------------------------------------------
+
+# Options kept although nothing outside tests sets them, each with its reason.
+KEEP_OPTIONS = {
+    "operators.jpeg.encode_jpeg(subsample)":
+        "makes the 4:2:0 inputs decode_jpeg must accept from outside encoders",
+    "session.release_intermediates(blocking)":
+        "tests assert the freed blocks are gone right after release",
+}
+_MODAL_DEFAULTS = (None, True, False)
+
+
+def _modal_options(node) -> dict[str, object]:
+    """The optional parameters of a def whose default is None, True or
+    False (an on/off or auto-versus-explicit switch), by name."""
+    a = node.args
+    positional = a.posonlyargs + a.args
+    pairs = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+    pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return {
+        p.arg: d.value for p, d in pairs
+        if isinstance(d, ast.Constant) and any(d.value is v for v in _MODAL_DEFAULTS)
+    }
+
+
+def _callables(defs) -> dict[str, ast.AST]:
+    """Module-level functions and the methods of module-level classes
+    ("module.Class.method"), by dotted name."""
+    out = {}
+    for key, node in defs.items():
+        if isinstance(node, ast.ClassDef):
+            for sub in node.body:
+                if isinstance(sub, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    out[f"{key}.{sub.name}"] = sub
+        else:
+            out[key] = node
+    return out
+
+
+def _option_settings(defs) -> tuple[set[str], dict[str, set[str]]]:
+    """Which modal options some caller outside tests (package defs,
+    methods and module top-level code, or ROOT_FILES) may set to a
+    non-default value: (options set outright, {option: the enclosing
+    def's options it forwards}).  Options are "module.def(param)"; methods
+    take part so that a method forwarding its own option counts only when
+    that option is set.  A call resolves by bare name to every def of that
+    name (a clash may keep a dead mode alive, never call a live one dead);
+    an argument that is the enclosing def's own modal option only forwards
+    it; a constant equal to the default sets nothing; `*args` / `**kwargs`
+    set every option."""
+    funcs = _callables(defs)
+    by_name: dict[str, list[str]] = {}
+    params: dict[str, list[str]] = {}
+    modal: dict[str, dict[str, object]] = {}
+    for key, node in funcs.items():
+        by_name.setdefault(node.name, []).append(key)
+        names = [p.arg for p in node.args.posonlyargs + node.args.args]
+        params[key] = names[1:] if names[:1] in (["self"], ["cls"]) else names
+        modal[key] = _modal_options(node)
+    units = list(funcs.items())
+    for f in sorted(PACKAGE.rglob("*.py")):  # module top-level code
+        for node in ast.parse(f.read_text(), filename=str(f)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                units.extend((None, d) for d in node.decorator_list)
+            else:
+                units.append((None, node))
+    for pattern in ROOT_FILES:
+        for f in sorted(REPO.glob(pattern)):
+            units.append((None, ast.parse(f.read_text(), filename=str(f))))
+    set_: set[str] = set()
+    forwards: dict[str, set[str]] = {}
+    for owner, tree in units:
+        own = modal.get(owner, {})
+        for call in ast.walk(tree):
+            for key in by_name.get(_call_name(call), ()):
+                args = [(params[key][i] if i < len(params[key]) else None, v)
+                        for i, v in enumerate(call.args)]
+                args += [(kw.arg, kw.value) for kw in call.keywords]
+                for param, value in args:
+                    if isinstance(value, ast.Starred) or param is None:
+                        set_ |= {f"{key}({p})" for p in modal[key]}
+                    elif param in modal[key] and not (
+                        isinstance(value, ast.Constant) and value.value is modal[key][param]
+                    ):
+                        option = f"{key}({param})"
+                        if isinstance(value, ast.Name) and value.id in own:
+                            forwards.setdefault(option, set()).add(f"{owner}({value.id})")
+                        else:
+                            set_.add(option)
+    return set_, forwards
+
+
+def _dead_options() -> list[str]:
+    defs, _, _ = _package_defs()
+    options = {
+        f"{key}({p})" for key, node in defs.items() if key not in KEEP
+        and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for p in _modal_options(node)
+    }
+    live, forwards = _option_settings(defs)
+    grew = True
+    while grew:
+        grew = False
+        for option, sources in forwards.items():
+            if option not in live and sources & live:
+                live.add(option)
+                grew = True
+    return sorted(options - live)
+
+
+def test_every_mode_is_set_outside_tests_or_is_kept():
+    """An option that only tests switch is a second code path nothing
+    ships: the strategy comes from the input or from the callers that
+    run, so delete the option with the path it selects, or name it in
+    KEEP_OPTIONS with the reason it stays."""
+    dead = _dead_options()
+    stray = [o for o in dead if o not in KEEP_OPTIONS]
+    assert not stray, f"options only tests set: {stray}"
+
+
+def test_keep_options_names_only_unset_options():
+    """Each KEEP_OPTIONS entry is an option nothing outside tests sets;
+    once a caller sets it, it leaves the list."""
+    dead = set(_dead_options())
+    reached = sorted(set(KEEP_OPTIONS) - dead)
+    assert not reached, f"KEEP_OPTIONS entries that are missing or set outside tests: {reached}"

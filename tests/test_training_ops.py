@@ -611,38 +611,6 @@ def test_normalize_text_matches_duckdb(spark, sf_dir):
     assert got == want
 
 
-def test_remove_duplicate_spans_keep_first(spark):
-    """keep_first=True: the paper's all-but-one removal — the globally
-    first (min doc id, pos) occurrence of the boilerplate survives, every
-    later occurrence is cut; doc-internal repeats keep their first copy."""
-    from tegallega_spark.operators.textual import remove_duplicate_spans
-
-    boiler = "all rights reserved contact us at the office for details now"
-    docs = [
-        (1, f"intro words {boiler} outro words"),
-        (2, f"{boiler} trailing unique content here today"),
-        (5, f"prefix {boiler} suffix"),
-        # doc-internal duplicate: second copy dropped, first kept
-        (7, f"opening {boiler} middle {boiler} closing"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {
-        r.doc_id: r.text
-        for r in remove_duplicate_spans(df, k=8, min_count=2, keep_first=True).collect()
-    }
-    assert out[1] == f"intro words {boiler} outro words"  # first occurrence kept
-    assert out[2] == "trailing unique content here today"
-    assert out[5] == "prefix suffix"
-    assert out[7] == "opening middle closing"  # both in-doc copies are later than doc 1's
-
-    # default stance unchanged: everything duplicated is dropped everywhere
-    out_all = {
-        r.doc_id: r.text
-        for r in remove_duplicate_spans(df, k=8, min_count=2).collect()
-    }
-    assert out_all[1] == "intro words outro words"
-
-
 def test_boilerplate_broadcast_gate_falls_back_above_limit(spark):
     """ADVICE r4: the broadcast hint is gated on the blocked set's actual
     count — above broadcast_limit the anti-join must NOT carry a broadcast
@@ -751,8 +719,8 @@ def test_mixture_sample_targets_and_determinism(spark):
 
 
 def test_mixture_sample_scan_side_filter(spark):
-    """With precomputed counts the mixture is a pure scan filter — no
-    shuffle, no collect: the 100 TB path."""
+    """The stratum counts come from one eager aggregate; the mixture it
+    returns is a pure scan filter — no shuffle in its plan."""
     from tegallega_spark.operators.sampling import mixture_sample
 
     df = spark.range(1000).select(
@@ -760,7 +728,7 @@ def test_mixture_sample_scan_side_filter(spark):
         F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("source"),
     )
     out = mixture_sample(df, key="doc_id", stratum="source",
-                         targets={"a": 0.5, "b": 0.5}, counts={"a": 500, "b": 500})
+                         targets={"a": 0.5, "b": 0.5})
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
@@ -844,8 +812,8 @@ def test_mixture_sample_independent_of_stratified_sampler(spark):
     applying a 50% bucket cut AFTER a 50% mixture keeps ~25% overall, not
     ~50% (the correlated-sampler bug: bucket is the top 8 bits of the
     UNSALTED md5 fraction, so unsalted mixture survivors would all sit
-    below any bucket threshold above their rate).  Zero caller-supplied
-    counts raise the designed ValueError, not ZeroDivisionError."""
+    below any bucket threshold above their rate).  A target stratum with
+    no rows raises the designed ValueError, not ZeroDivisionError."""
     from tegallega_spark.operators.sampling import mixture_sample
 
     df = spark.range(8000).select(
@@ -867,8 +835,7 @@ def test_mixture_sample_independent_of_stratified_sampler(spark):
     )
     with pytest.raises(ValueError, match="no rows"):
         mixture_sample(df, key="doc_id", stratum="source",
-                       targets={"web": 0.5, "ghost": 0.5},
-                       counts={"web": 4000, "ghost": 0})
+                       targets={"web": 0.5, "ghost": 0.5})
 
 
 # ---------------------------------------------------------------------------
@@ -978,13 +945,12 @@ def test_duplicated_spans_single_task_matches_distributed(spark, force_shape):
         (5, "just seven tokens here not enough pad"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    def run(shape, kf):
+    def run(shape):
         force_shape(shape)
-        out = duplicated_spans(docs, k=8, min_count=2, keep_first=kf)
+        out = duplicated_spans(docs, k=8, min_count=2)
         plan = out._jdf.queryExecution().logical().toString()
         assert ("MapInPandas" in plan) is (shape == "single")
         return sorted(tuple(r) for r in out.collect())
 
-    for kf in (False, True):
-        dist, single = run("distributed", kf), run("single", kf)
-        assert dist and dist == single
+    dist, single = run("distributed"), run("single")
+    assert dist and dist == single
