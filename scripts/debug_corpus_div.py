@@ -134,20 +134,20 @@ def spark_trace(pdf: pd.DataFrame, bl: list[str], target: int) -> None:
     docs = docs.withColumn("text", TXT.dedupe_paragraphs(F.col("text")))
     show(docs, "paragraph")
     docs = TXT.remove_boilerplate_lines(
-        docs, "doc_id", "text", max_doc_frequency=SC.LINE_MAX_DF
+        docs, max_doc_frequency=SC.LINE_MAX_DF
     ).persist()
     show(docs, "line")
     spans = TXT.duplicated_spans(
-        docs, "doc_id", "text", k=SC.SPAN_K, min_count=SC.SPAN_MIN_COUNT
+        docs, k=SC.SPAN_K, min_count=SC.SPAN_MIN_COUNT
     )
     tsp = spans.filter(F.col("doc_id") == target).collect()
     print(f"spark spans        target_spans={sorted((r.start_tok, r.end_tok) for r in tsp)}")
     docs = TXT.remove_duplicate_spans(
-        docs, "doc_id", "text", k=SC.SPAN_K, min_count=SC.SPAN_MIN_COUNT
+        docs, k=SC.SPAN_K, min_count=SC.SPAN_MIN_COUNT
     ).persist()
     show(docs, "spancut")
 
-    gf = TXT.gopher_quality_flags(docs, "doc_id", "text")
+    gf = TXT.gopher_quality_flags(docs)
     grow = gf.filter(F.col("doc_id") == target).select("gopher_pass").collect()
     print(f"spark gopher       pass={grow[0][0] if grow else None}")
     docs = docs.join(
@@ -155,7 +155,7 @@ def spark_trace(pdf: pd.DataFrame, bl: list[str], target: int) -> None:
     )
 
     scored = docs.withColumn("quality", TXT.quality_score(F.col("text")))
-    rep = TXT.repetition_stats(docs, "doc_id", "text", n=2)
+    rep = TXT.repetition_stats(docs)
     both = scored.join(rep, "doc_id")
     rowq = both.filter(F.col("doc_id") == target).select(
         "quality", "dup_ngram_frac"
@@ -168,13 +168,13 @@ def spark_trace(pdf: pd.DataFrame, bl: list[str], target: int) -> None:
     ).drop("top_ngram_frac").persist()
     show(kept, "qualgate")
 
-    cont = contamination_report(kept, bl_df, "doc_id", "text", SC.SHINGLE_N)
+    cont = contamination_report(kept, bl_df, SC.SHINGLE_N)
     crow = cont.filter(F.col("doc_id") == target).collect()
     print(f"spark decontam     contaminated={bool(crow)}")
     kept = kept.join(cont.select("doc_id"), "doc_id", "left_anti").persist()
 
     pairs = exact_shingle_jaccard_pairs(
-        kept, "doc_id", "text", SC.SHINGLE_N, SC.JACCARD_T,
+        kept, SC.SHINGLE_N, SC.JACCARD_T,
         max_df=SC.MAX_SHINGLE_DF,
     )
     inv = pairs.filter(

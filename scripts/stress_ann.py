@@ -168,7 +168,7 @@ def run_spark(spark, path: str, queries: np.ndarray, n: int):
     t0 = time.perf_counter()
     rows = ivfpq_topk_batch(
         index, cb, queries,
-        id_col="vec_id", k=K_TOP, nprobe=nprobe, rerank=RERANK,
+        k=K_TOP, nprobe=nprobe, rerank=RERANK,
     ).collect()
     query_s = time.perf_counter() - t0
     got: list[list[int]] = [[] for _ in range(len(queries))]

@@ -39,7 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # pipeline parameters (mirrored EXACTLY on both sides)
 LINE_MAX_DF = 5
-MIN_LINE_CHARS = 10        # remove_boilerplate_lines default
+MIN_LINE_CHARS = 10        # textual.MIN_LINE_CHARS
 SPAN_K = 8
 SPAN_MIN_COUNT = 2
 MIN_QUALITY = 0.5
@@ -1062,7 +1062,7 @@ def run(n: int, spark=None, strategy: str = "exact", repeats: int = 1,
                 normalize=True, line_dedup_max_df=LINE_MAX_DF,
                 span_dedup_k=SPAN_K, span_dedup_min_count=SPAN_MIN_COUNT,
                 gopher_rules=True, paragraph_dedup=True,
-                mixture_targets=MIXTURE, mixture_stratum="source",
+                mixture_targets=MIXTURE,
             )
             spark_rows = [
                 (int(r["doc_id"]), r["lang"], r["bucket"], float(r["quality"]),

@@ -451,7 +451,7 @@ def run_spark(
         nodes_df = spark.createDataFrame(
             pd.DataFrame(all_node_rows, columns=node_cols), STOP_NODE_SCHEMA
         )
-    stitched = stitch_ways(ways_df, key="relation_id").persist()
+    stitched = stitch_ways(ways_df).persist()
     stops = angkot_stops(nodes_df, stitched, ways_df)
     write_route_geojson(stitched, stops, spark_out)
     dt = time.perf_counter() - t0
@@ -489,7 +489,7 @@ def profile_spark(spark, box: str, rids: list[int]) -> dict:
     phases["fetch_parse"] = round(time.perf_counter() - t0, 2)
 
     t0 = time.perf_counter()
-    stitched = stitch_ways(ways_df, key="relation_id").persist()
+    stitched = stitch_ways(ways_df).persist()
     stops = angkot_stops(nodes_df, stitched, ways_df).persist()
     n_vertices, n_stops = stitched.count(), stops.count()
     phases["stitch_interpolate_thin"] = round(time.perf_counter() - t0, 2)

@@ -113,13 +113,11 @@ def run_spark(spark, path: str, n: int) -> tuple[float, set[tuple[int, int]]]:
     from tegallega_spark.session import release_intermediates
 
     # the operator's own cell count, auto_k_clusters (k ∝ N,
-    # target_cell_size=512), must be exact on its own
+    # TARGET_CELL_SIZE = 512), must be exact on its own
     probes = int(os.environ.get("TEGALLEGA_SEMDEDUP_PROBES", "2"))
     t0 = time.perf_counter()
     df = spark.read.parquet(path)
-    pairs_df = semantic_pairs(
-        df, min_cosine=THRESHOLD, max_cluster=4096, probes=probes
-    )
+    pairs_df = semantic_pairs(df, min_cosine=THRESHOLD, probes=probes)
     pairs = {(r.id_a, r.id_b) for r in pairs_df.collect()}
     dt = time.perf_counter() - t0
     release_intermediates(pairs_df)

@@ -39,8 +39,12 @@ def block_id_for(agency_id: Column, group_id: Column, n: Column, is_loop: Column
     return F.when(is_loop, F.concat(agency_id, group_id, n.cast("string"))).otherwise(F.lit(""))
 
 
-def to_fixed(x: Column, digits: int = 4) -> Column:
-    """ECMAScript Number.prototype.toFixed(digits) — NOT Java's %.Nf.
+# The virtual-stop id grammar's decimal places (update-routes.js:323).
+FIXED_DIGITS = 4
+
+
+def to_fixed(x: Column) -> Column:
+    """ECMAScript Number.prototype.toFixed(4) — NOT Java's %.4f.
 
     The two disagree on real data: toFixed rounds half-away-from-zero on
     the EXACT binary value of the double, while Java's Formatter %f first
@@ -56,7 +60,7 @@ def to_fixed(x: Column, digits: int = 4) -> Column:
     double product can decide the direction — |x|·10^d itself snaps ONTO
     the boundary.  The decision needs the EXACT product, which Dekker's
     two-product supplies in plain column arithmetic (no FMA needed):
-    split |x| into 26-bit halves with the 2²⁷+1 trick; 10^d (d ≤ 6) has
+    split |x| into 26-bit halves with the 2²⁷+1 trick; 10^4 has
     ≤ 20 significand bits, so hi·10^d and lo·10^d are both exact and
     err = (hi·10^d − y) + lo·10^d is the exact multiply residual —
     exact_product = y + err.  Then with f = y − floor(y) (an exact
@@ -68,17 +72,16 @@ def to_fixed(x: Column, digits: int = 4) -> Column:
     extract-race value and sign edges ((-0.00001).toFixed(4) ==
     "-0.0000").
 
-    Validity bound (ADVICE r9): exact only for |x|·10^digits < 2^53 —
+    Validity bound (ADVICE r9): exact only for |x|·10^4 < 2^53 —
     beyond that the scaled value y can't represent the integer grid and
     the Dekker split itself overflows near DBL_MAX.  Inside the bound the
     integer part is extracted EXACTLY: (n − n % p) is an exact multiple
     i·p ≤ 2^53, so its correctly-rounded double quotient is exactly i
     (the naive n/p double division the r9 advisor flagged could land one
     off when n/p sits within an ulp of an integer boundary).  The bound
-    covers the operator's whole domain (lon/lat ≤ 180, digits ≤ 6 →
-    1.8·10⁸ ≪ 2^53 ≈ 9·10¹⁵)."""
-    assert digits <= 6, "10^digits must fit 20 significand bits"
-    p = 10 ** digits
+    covers the operator's whole domain (lon/lat ≤ 180 →
+    1.8·10⁶ ≪ 2^53 ≈ 9·10¹⁵)."""
+    p = 10 ** FIXED_DIGITS
     pl = F.lit(float(p))
     ax = F.abs(x)
     split = ax * F.lit(134217729.0)  # 2^27 + 1
@@ -93,12 +96,12 @@ def to_fixed(x: Column, digits: int = 4) -> Column:
     sign = F.when(x < 0, F.lit("-")).otherwise(F.lit(""))
     frac = n % F.lit(p)
     int_part = ((n - frac) / pl).cast("long")  # exact: (i·p)/p with i·p ≤ 2^53
-    return F.format_string(f"%s%d.%0{digits}d", sign, int_part, frac)
+    return F.format_string(f"%s%d.%0{FIXED_DIGITS}d", sign, int_part, frac)
 
 
 def virtual_stop_id(lon: Column, lat: Column) -> Column:
     """'virtual_{lon.toFixed(4)}_{lat.toFixed(4)}' (update-routes.js:323).
     toFixed semantics, not %.4f — see to_fixed."""
     return F.concat(
-        F.lit("virtual_"), to_fixed(lon, 4), F.lit("_"), to_fixed(lat, 4)
+        F.lit("virtual_"), to_fixed(lon), F.lit("_"), to_fixed(lat)
     )

@@ -12,7 +12,7 @@ is a map-side-combinable groupBy on the word string (explode →
 count(*)), the cheapest shuffle Spark knows.  Everything after operates
 on the distinct-word frequency table, whose size is bounded by the
 LANGUAGE (Heaps' law: ~millions of types for billions of tokens), not
-the corpus; `min_count` prunes the long tail (hapax words cannot win a
+the corpus; `MIN_COUNT` prunes the long tail (hapax words cannot win a
 merge against real pairs anyway) and bounds driver memory explicitly.
 The merge loop itself is inherently sequential (merge i+1's counts
 depend on merge i) so it runs on the driver over that bounded table
@@ -38,40 +38,40 @@ from pyspark.sql import DataFrame
 
 __all__ = ["word_counts", "train_bpe", "bpe_encode_udf", "bpe_word"]
 
+# Words seen fewer times are not trained on: a hapax cannot win a merge.
+MIN_COUNT = 2
+# Driver-memory bound on the distinct words the merge loop holds.
+MAX_VOCAB_WORDS = 1_000_000
+# Per-worker LRU entries of the encoder (distinct words).
+_CACHE_WORDS = 2**16
 
-def word_counts(
-    df: DataFrame, text_col: str = "text", min_count: int = 1
-) -> DataFrame:
-    """(word, count) over whitespace tokens — the only stage whose cost
-    grows with the corpus.  Two-level hash aggregate: partial counts
-    combine map-side before the single exchange on the word string."""
+
+def word_counts(df: DataFrame) -> DataFrame:
+    """(word, count) over the whitespace tokens of `text`, for words seen
+    at least MIN_COUNT times — the only stage whose cost grows with the
+    corpus.  Two-level hash aggregate: partial counts combine map-side
+    before the single exchange on the word string."""
     return (
-        df.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("word"))
+        df.select(F.explode(F.split(F.col("text"), r"\s+")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("count"))
-        .filter(F.col("count") >= min_count)
+        .filter(F.col("count") >= MIN_COUNT)
     )
 
 
-def train_bpe(
-    df: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 1000,
-    min_count: int = 2,
-    max_vocab_words: int = 1_000_000,
-) -> list[tuple[str, str]]:
-    """Learn `num_merges` BPE merges from the corpus.  Returns the ordered
-    merge list [(left, right), ...] — rank = position.
+def train_bpe(df: DataFrame, num_merges: int = 1000) -> list[tuple[str, str]]:
+    """Learn `num_merges` BPE merges from the corpus's `text`.  Returns
+    the ordered merge list [(left, right), ...] — rank = position.
 
     The distributed part ends at the word-frequency table; if more than
-    `max_vocab_words` distinct words survive `min_count`, the most
-    frequent `max_vocab_words` are kept (an explicit driver-memory bound;
-    rare types contribute negligible pair mass).  Ties in pair frequency
+    MAX_VOCAB_WORDS distinct words survive MIN_COUNT, the most frequent
+    MAX_VOCAB_WORDS are kept (an explicit driver-memory bound; rare
+    types contribute negligible pair mass).  Ties in pair frequency
     break lexicographically, so training is deterministic."""
-    wc = word_counts(df, text_col, min_count)
     rows = (
-        wc.orderBy(F.desc("count"), "word").limit(max_vocab_words).collect()
+        word_counts(df).orderBy(F.desc("count"), "word")
+        .limit(MAX_VOCAB_WORDS).collect()
     )
     vocab = [([*r["word"]], int(r["count"])) for r in rows]
     return _merge_loop(vocab, num_merges)
@@ -155,7 +155,7 @@ def bpe_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return syms
 
 
-def bpe_encode_udf(merges: list[tuple[str, str]], cache_size: int = 2**16):
+def bpe_encode_udf(merges: list[tuple[str, str]]):
     """Arrow-vectorized text → array<string> of BPE tokens.  The merge
     table is closure-captured (broadcast with the serialized UDF — small:
     num_merges entries); per-word results are LRU-cached per worker, so
@@ -166,7 +166,7 @@ def bpe_encode_udf(merges: list[tuple[str, str]], cache_size: int = 2**16):
 
     @pandas_udf("array<string>")
     def encode(texts: pd.Series) -> pd.Series:
-        @lru_cache(maxsize=cache_size)
+        @lru_cache(maxsize=_CACHE_WORDS)
         def one_word(w: str) -> tuple[str, ...]:
             return tuple(bpe_word(w, ranks))
 

@@ -90,25 +90,21 @@ def _single_task_components(und: DataFrame, max_iter: int) -> DataFrame:
     return und.coalesce(1).mapInPandas(fn, schema)
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Label each node of an undirected pair graph with min(node id) of its
     component.
 
     Parameters
     ----------
-    edges : DataFrame with two id columns (any orderable type); treated as
-        undirected.  Isolated nodes (no edges) are not represented — callers
-        that want singleton clusters union them in afterwards.
+    edges : DataFrame with id columns `src` and `dst` (any orderable
+        type); treated as undirected.  Isolated nodes (no edges) are not
+        represented — callers that want singleton clusters union them in
+        afterwards.
     Returns DataFrame(node, cluster_id).
     """
     from tegallega_spark.operators.graph import SMALL_GRAPH_EDGES, UNROLL
 
-    und = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    und = edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
     und = und.union(und.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
     # LAZY checkpoint: the count() below materializes it (one job instead
     # of eager-checkpoint + count), and the measured edge count drives the
@@ -225,14 +221,16 @@ def connected_components(
     return out
 
 
-def dedup_cluster_assignments(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
-    """Cluster assignment + size from a near-duplicate pair list.
+def dedup_cluster_assignments(pairs: DataFrame) -> DataFrame:
+    """Cluster assignment + size from a near-duplicate pair list (id_a, id_b).
 
     Returns DataFrame(doc_id, cluster_id, cluster_size) for every doc that
     appears in at least one pair; cluster_id = min doc id of the component,
     so `doc_id == cluster_id` marks the canonical keeper.
     """
-    comp = connected_components(pairs, src=id_a, dst=id_b)
+    comp = connected_components(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    )
     sizes = comp.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return attach_intermediates(
         comp.join(sizes, "cluster_id").select(

@@ -133,7 +133,7 @@ def _normalized_words(text: Column) -> Column:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
+def word_shingles(text: Column, n: int) -> Column:
     """Distinct n-word shingles of a text column, as array<string>.
 
     Pure column expressions (transform over a sequence of offsets) — no UDF.
@@ -672,12 +672,20 @@ def minhash_near_duplicates_verified(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def md5_shingle_hashes(text: Column, shingle_n: int = 2) -> Column:
+# q36's SimHash contract: 2-gram shingles, 60-bit fingerprints cut into 13
+# bands (every pair within hamming 12 shares one), exact Jaccard ≥ 0.7.
+SIMHASH_SHINGLE_N = 2
+SIMHASH_MAX_HAMMING = 12
+SIMHASH_BANDS = 13
+SIMHASH_JACCARD = 0.7
+
+
+def md5_shingle_hashes(text: Column) -> Column:
     """60-bit integers from the first 15 md5 hex chars of each distinct
-    shingle — the ENGINE-AUDITABLE hash family (DuckDB replays md5 exactly;
-    xxhash64 it cannot).  Same hash as the winnowing sketch and hash_frac
-    (sampling.md5_60)."""
-    return F.transform(word_shingles(text, shingle_n), md5_60)
+    SIMHASH_SHINGLE_N-word shingle — the ENGINE-AUDITABLE hash family
+    (DuckDB replays md5 exactly; xxhash64 it cannot).  Same hash as the
+    winnowing sketch and hash_frac (sampling.md5_60)."""
+    return F.transform(word_shingles(text, SIMHASH_SHINGLE_N), md5_60)
 
 
 def make_simhash_bitsum_udf():
@@ -703,37 +711,28 @@ def make_simhash_bitsum_udf():
     return fingerprint
 
 
-def simhash_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int
-) -> DataFrame:
+def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(__id, __fp) with a 60-bit SimHash per document: md5 shingle hashes
     as a column, bit sums in one Arrow pass — oracle-replayable."""
     fp_udf = make_simhash_bitsum_udf()
     return parallelize_for_udf(df).select(
         F.col(id_col).alias("__id"),
-        fp_udf(md5_shingle_hashes(F.col(text_col), shingle_n)).alias("__fp"),
+        fp_udf(md5_shingle_hashes(F.col(text_col))).alias("__fp"),
     )
 
 
-def simhash_near_duplicates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 2,
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """SimHash near-dup pairs: band the 60-bit fingerprint into `bands`
-    chunks; by pigeonhole, any pair within max_hamming (< bands) shares at
-    least one identical chunk → equi-join per chunk, then exact Hamming
-    filter via bit_count(xor).
+def simhash_near_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """SimHash near-dup pairs: band the 60-bit fingerprint into
+    SIMHASH_BANDS chunks; by pigeonhole, any pair within
+    SIMHASH_MAX_HAMMING (< bands) shares at least one identical chunk →
+    equi-join per chunk, then exact Hamming filter via bit_count(xor).
     The pigeonhole argument needs only bands > max_hamming — chunks not
     covering all bits still guarantee recall (uncovered-bit diffs only
     reduce covered-bit diffs).  The md5 hash family keeps the whole
     contract DuckDB-replayable (see md5_shingle_hashes)."""
     # persist: the banded self-join reads fingerprints from both sides
-    fp = simhash_fingerprints(df, id_col, text_col, shingle_n).persist()
-    chunk_bits = 60 // bands
+    fp = simhash_fingerprints(df, id_col, text_col).persist()
+    chunk_bits = 60 // SIMHASH_BANDS
     banded = fp.select(
         "__id",
         "__fp",
@@ -743,7 +742,7 @@ def simhash_near_duplicates(
                     F.shiftrightunsigned(F.col("__fp"), b * chunk_bits).bitwiseAND(
                         F.lit((1 << chunk_bits) - 1)
                     )
-                    for b in range(bands)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("band_idx", "band_val"),
@@ -759,7 +758,7 @@ def simhash_near_duplicates(
         a.join(b, ["band_idx", "band_val"])
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("id_a", "id_b", "hamming")
         .dropDuplicates(["id_a", "id_b"]),
         fp,
@@ -767,21 +766,16 @@ def simhash_near_duplicates(
 
 
 def simhash_near_duplicates_verified(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 2,
-    max_hamming: int = 12,
-    bands: int = 13,
-    jaccard_threshold: float = 0.7,
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """SimHash near-dup pairs with EXACT Jaccard verification.
 
-    Candidates come from the banded fingerprint join (hamming ≤ max_hamming
-    guaranteed caught when bands > max_hamming); each candidate's exact
-    shingle-set Jaccard is then recomputed and filtered, so the output
-    (id_a, id_b, jaccard) is deterministic: exactly the pairs with
-    fingerprint hamming ≤ max_hamming AND exact Jaccard ≥ threshold.
+    Candidates come from the banded fingerprint join (hamming ≤
+    SIMHASH_MAX_HAMMING guaranteed caught, since bands > max hamming);
+    each candidate's exact shingle-set Jaccard is then recomputed and
+    filtered, so the output (id_a, id_b, jaccard) is deterministic:
+    exactly the pairs with fingerprint hamming ≤ SIMHASH_MAX_HAMMING AND
+    exact Jaccard ≥ SIMHASH_JACCARD.
     That CONTRACT is itself oracle-checkable — DuckDB can recompute the
     md5-simhash fingerprints, the hamming distances, and the exact
     Jaccard, so the gate checks what the operator promises
@@ -789,13 +783,11 @@ def simhash_near_duplicates_verified(
     operator's horizon: NIGHTLY_r9 at sf0.1 found one 0.7-Jaccard pair at
     hamming 13 — simhash's documented ε materializing, not a banding
     recall bug; the md5 oracle form pins the horizon explicitly.)"""
-    cand_full = simhash_near_duplicates(
-        df, id_col, text_col, shingle_n, max_hamming, bands
-    )
+    cand_full = simhash_near_duplicates(df, id_col, text_col)
     cand = attach_intermediates(cand_full.select("id_a", "id_b"), cand_full)
-    exact = exact_jaccard_for_pairs(cand, df, id_col, text_col, shingle_n)
+    exact = exact_jaccard_for_pairs(cand, df, id_col, text_col, SIMHASH_SHINGLE_N)
     return attach_intermediates(
-        exact.filter(F.col("jaccard") >= jaccard_threshold), exact
+        exact.filter(F.col("jaccard") >= SIMHASH_JACCARD), exact
     )
 
 
@@ -805,8 +797,6 @@ def simhash_near_duplicates_verified(
 
 def _single_task_jaccard_pairs(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     shingle_n: int,
     threshold: float,
     max_df: int | None,
@@ -825,7 +815,7 @@ def _single_task_jaccard_pairs(
     import pyspark.sql.types as T
 
     kernel = _make_shingle_kernel(shingle_n)
-    id_t = df.schema[id_col].dataType
+    id_t = df.schema["doc_id"].dataType
     schema = T.StructType(
         [
             T.StructField("id_a", id_t),
@@ -842,7 +832,7 @@ def _single_task_jaccard_pairs(
         card: dict = defaultdict(int)
         post: dict = defaultdict(list)
         for pdf in batches:
-            for i, t in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
+            for i, t in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
                 s = kernel(t).view("int64")
                 if max_df is None:
                     card[i] += len(s)
@@ -879,14 +869,12 @@ def _single_task_jaccard_pairs(
             yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "jaccard": out_j})
 
     return (
-        df.select(id_col, text_col).coalesce(1).mapInPandas(fn, schema)
+        df.select("doc_id", "text").coalesce(1).mapInPandas(fn, schema)
     )
 
 
 def exact_shingle_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 4,
     threshold: float = 0.5,
     max_df: int | None = None,
@@ -923,12 +911,12 @@ def exact_shingle_jaccard_pairs(
     """
     if small_scan_input(df):
         return _single_task_jaccard_pairs(
-            df, id_col, text_col, shingle_n, threshold, max_df
+            df, shingle_n, threshold, max_df
         )
     sh_udf = make_shingle_hash_udf(shingle_n)
     sh_raw = (
         parallelize_for_udf(df)
-        .select(F.col(id_col).alias("__id"), sh_udf(F.col(text_col)).alias("__sh"))
+        .select(F.col("doc_id").alias("__id"), sh_udf(F.col("text")).alias("__sh"))
         .select("__id", F.explode("__sh").alias("__g"))
     )
     if max_df is not None:
@@ -975,8 +963,6 @@ def exact_shingle_jaccard_pairs(
 def contamination_report(
     corpus: DataFrame,
     blocklist: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 4,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus docs sharing ≥1 n-gram shingle
@@ -998,15 +984,15 @@ def contamination_report(
     sh_udf = make_shingle_hash_udf(shingle_n)
     bench = (
         parallelize_for_udf(blocklist)
-        .select(F.explode(sh_udf(F.col(text_col))).alias("__g"))
+        .select(F.explode(sh_udf(F.col("text"))).alias("__g"))
         .distinct()
     )
     sh = parallelize_for_udf(corpus).select(
-        F.col(id_col),
-        F.explode(sh_udf(F.col(text_col))).alias("__g"),
+        F.col("doc_id"),
+        F.explode(sh_udf(F.col("text"))).alias("__g"),
     )
     return (
         sh.join(F.broadcast(bench), "__g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared_shingles"))
     )

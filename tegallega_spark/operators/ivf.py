@@ -22,23 +22,28 @@ from pyspark.sql.functions import pandas_udf
 from tegallega_spark.operators.similarity import cosine
 
 
-def _kmeans_blas(
-    x: np.ndarray, k: int, iters: int, chunk: int = 65536
-) -> np.ndarray:
-    """Lloyd's with matmul distances: ||x||² - 2x·cᵀ + ||c||² as a BLAS
-    GEMM — instead of broadcasting an (n, k, d) tensor (pq._kmeans's
+# Lloyd's iterations of every quantizer trained here and in pq.py.
+KMEANS_ITERS = 8
+# Row block of the k-means assignment step (see _kmeans_blas).
+KMEANS_CHUNK = 65536
+
+
+def _kmeans_blas(x: np.ndarray, k: int) -> np.ndarray:
+    """KMEANS_ITERS rounds of Lloyd's with matmul distances:
+    ||x||² - 2x·cᵀ + ||c||² as a BLAS GEMM — instead of broadcasting an
+    (n, k, d) tensor (pq._kmeans's
     shape, fine at k=16 subspace codebooks, 32 GB at k≈1400 coarse
     quantizers).  Deterministic first-k init (callers pass a hash-ordered
     sample); empty clusters re-seed from distinct farthest points.
 
-    The assignment step runs in row blocks of `chunk` (ADVICE r8): a
+    The assignment step runs in row blocks of KMEANS_CHUNK (ADVICE r8): a
     monolithic (n, k) float64 distance matrix grows ~n·k·8 bytes — with
     semdedup's unclamped k = N/512 and sample = N/16 that is N²/1024
     bytes, ~4 GB per temporary at 2 M vectors and OOM shortly above — a
     silent scale cliff in the component introduced to REMOVE the
     superlinear-training wall.  Chunking caps peak memory at
-    O(chunk·k) (~0.5 GB per temporary at k=8192) while the GEMMs stay
-    BLAS-sized; only O(n) per-row state (assignments, min-distances)
+    O(KMEANS_CHUNK·k) (~0.5 GB per temporary at k=8192) while the GEMMs
+    stay BLAS-sized; only O(n) per-row state (assignments, min-distances)
     persists across chunks."""
     x = np.ascontiguousarray(x, dtype=np.float64)
     n = x.shape[0]
@@ -46,7 +51,8 @@ def _kmeans_blas(
     x2 = (x * x).sum(axis=1)
     assign = np.empty(n, dtype=np.int64)
     mind2 = np.empty(n, dtype=np.float64)
-    for _ in range(iters):
+    chunk = KMEANS_CHUNK
+    for _ in range(KMEANS_ITERS):
         c2 = (centroids * centroids).sum(axis=1)
         for lo in range(0, n, chunk):
             hi = min(lo + chunk, n)
@@ -125,11 +131,33 @@ def _sample_vectors(
     return np.array([r.v for r in rows], dtype=np.float64)
 
 
+def checked_draw(
+    sample_x: "np.ndarray", sample: int, n: int | None
+) -> "np.ndarray":
+    """The first `sample` rows of a caller-supplied hash-ordered draw, as
+    float64.  That prefix IS what the trainer's own sample collect would
+    return, so callers training several quantizers from one salt-0 draw
+    (q69, q73: PQ codebooks + IVF coarse lists) pay ONE sample scan,
+    result-identical.  A draw SHORTER than `sample` is result-identical
+    only when it holds the whole corpus (the _ann_setup under-fill case);
+    a short draw from a larger corpus would silently train on a different
+    sample than the documented result (ADVICE r13).  With the corpus size
+    `n` unknown the whole-corpus case cannot be told apart, so any short
+    draw is refused."""
+    if len(sample_x) < sample and (n is None or n > len(sample_x)):
+        raise ValueError(
+            f"sample_x has {len(sample_x)} rows < sample={sample} on a "
+            f"corpus of {n if n is not None else 'unknown size'} — the "
+            "draw must cover `sample` rows (or the whole corpus, with "
+            "`n` given) to be result-identical"
+        )
+    return np.asarray(sample_x, dtype=np.float64)[:sample]
+
+
 def train_centroids_sampled(
     df: DataFrame,
     vec_col: str = "embedding",
     k: int = 16,
-    iters: int = 8,
     sample_salt: int = 0,
     n: int | None = None,
     sample_x: "np.ndarray | None" = None,
@@ -141,34 +169,18 @@ def train_centroids_sampled(
     assignment) use this to avoid a redundant full-corpus GEMM pass.
 
     `sample_x`: a caller-supplied hash-ordered draw (the first rows of
-    _sample_vectors(df, vec_col, >= sample, sample_salt)) — its `sample`
-    prefix IS what this function's own collect would return, so a caller
-    training several quantizers from the same salt-0 draw (q69: PQ
-    codebooks + IVF coarse lists) pays ONE sample scan instead of one
-    per trainer, result-identical.  The draw is `max(32·k, 8192)` rows."""
+    _sample_vectors(df, vec_col, >= sample, sample_salt)), checked and
+    cut by checked_draw.  The draw is `max(32·k, 8192)` rows."""
     sample = max(32 * k, 8192)
     if sample_x is not None:
-        # A draw SHORTER than `sample` is only result-identical when it
-        # holds the whole corpus (the _ann_setup under-fill case); a
-        # short draw from a larger corpus would silently train on a
-        # different sample than the documented result (ADVICE r13).
-        # With `n` unknown the whole-corpus case cannot be told apart,
-        # so any short draw is refused.
-        if len(sample_x) < sample and (n is None or n > len(sample_x)):
-            raise ValueError(
-                f"sample_x has {len(sample_x)} rows < sample={sample} on a "
-                f"corpus of {n if n is not None else 'unknown size'} — the "
-                "draw must cover `sample` rows (or the whole corpus, with "
-                "`n` given) to be result-identical"
-            )
-        x = np.asarray(sample_x, dtype=np.float64)[:sample]
+        x = checked_draw(sample_x, sample, n)
     else:
         x = _sample_vectors(df, vec_col, sample, sample_salt, n=n)
     if len(x) < k:
         raise ValueError(
             f"IVF training sample has {len(x)} rows < k={k} lists; lower k"
         )
-    return _kmeans_blas(x, k, iters)
+    return _kmeans_blas(x, k)
 
 
 def train_ivf_index_sampled(
@@ -176,8 +188,6 @@ def train_ivf_index_sampled(
     vec_col: str = "embedding",
     k: int | None = None,
     n: int | None = None,
-    iters: int = 8,
-    sample_salt: int = 0,
     sample_x: "np.ndarray | None" = None,
 ) -> "IVFIndex":
     """Coarse quantizer trained on a bounded hash-ordered SAMPLE.
@@ -197,20 +207,14 @@ def train_ivf_index_sampled(
       against the closure's (k, d) centroid table).
 
     k=None applies the √N law (`auto_k_lists`); n=None counts the input
-    (pass it when the caller already knows — saves an action).
-    `sample_salt` draws an INDEPENDENT training sample (and therefore an
-    independent centroid set / cell-boundary system) — callers that block
-    with two quantizers so boundary-miss events multiply (semdedup r8)
-    pass distinct salts; 0 keeps the original deterministic draw.
+    (pass it when the caller already knows — saves an action).  The
+    sample is the salt-0 draw.
     """
     if k is None:
         if n is None:
             n = df.count()
         k = auto_k_lists(n)
-    centroids = train_centroids_sampled(
-        df, vec_col, k, iters=iters, sample_salt=sample_salt, n=n,
-        sample_x=sample_x,
-    )
+    centroids = train_centroids_sampled(df, vec_col, k, n=n, sample_x=sample_x)
     assigned = assign_ivf_lists(df, centroids, vec_col)
     return IVFIndex(assigned, [c.tolist() for c in centroids], vec_col)
 
@@ -311,9 +315,7 @@ def train_tree_quantizer_sampled(
     df: DataFrame,
     vec_col: str = "embedding",
     k: int = 4096,
-    iters: int = 8,
     sample_salt: int = 0,
-    chunk: int = 65536,
     n: int | None = None,
 ) -> "TreeQuantizer":
     """Train a TreeQuantizer on a bounded hash-ordered sample.  Training
@@ -333,10 +335,11 @@ def train_tree_quantizer_sampled(
             f"tree-quantizer training sample has {len(x)} rows < k1={k1}; "
             "lower k"
         )
-    c1 = _kmeans_blas(x, k1, iters, chunk=chunk)
+    c1 = _kmeans_blas(x, k1)
     # assign the sample to its top cell (chunked — same memory bound)
     assign = np.empty(len(x), dtype=np.int64)
     c1sq = (c1 * c1).sum(axis=1)
+    chunk = KMEANS_CHUNK
     for lo in range(0, len(x), chunk):
         hi = min(lo + chunk, len(x))
         d2 = -2.0 * (x[lo:hi] @ c1.T) + c1sq[None, :]
@@ -348,16 +351,17 @@ def train_tree_quantizer_sampled(
         if len(xj) == 0:
             continue
         kj = min(k2, len(xj))
-        c2[j, :kj] = _kmeans_blas(xj, kj, iters, chunk=chunk)
+        c2[j, :kj] = _kmeans_blas(xj, kj)
     return TreeQuantizer(c1, c2)
 
 
 def assign_ivf_lists(
     df: DataFrame, centroids: "np.ndarray | list[list[float]]",
-    vec_col: str = "embedding", list_col: str = "ivf_list",
+    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Nearest-centroid assignment as ONE Arrow pass: the (k, d) table
-    rides the closure (≤ MB), each batch is a GEMM + argmin.  At 100 TB
+    """Nearest-centroid assignment to column `ivf_list` as ONE Arrow
+    pass: the (k, d) table rides the closure (≤ MB), each batch is a GEMM
+    + argmin.  At 100 TB
     this is the embarrassingly-parallel half of the build — no shuffle,
     no iteration, scan-partitioned.  (Deliberately NOT widened with
     parallelize_for_udf: with the batch-vectorized GEMM assign and PQ
@@ -373,7 +377,7 @@ def assign_ivf_lists(
         d2 = c2[None, :] - 2.0 * (x @ c.T)  # +||x||² is argmin-invariant
         return pd.Series(d2.argmin(axis=1).astype(np.int32))
 
-    return df.withColumn(list_col, assign(F.col(vec_col)))
+    return df.withColumn("ivf_list", assign(F.col(vec_col)))
 
 
 class IVFIndex:
@@ -384,11 +388,7 @@ class IVFIndex:
         self.centroids = centroids
         self.vec_col = vec_col
 
-    def encode(
-        self,
-        codebooks,
-        code_col: str = "pq_code",
-    ) -> "IVFIndex":
+    def encode(self, codebooks) -> "IVFIndex":
         """Attach PQ codes to the inverted lists in place (one call, no
         manual reassignment ritual) and return self so
         `train_ivf_index_sampled(df).encode(cb)` chains.  After this,
@@ -396,9 +396,7 @@ class IVFIndex:
         from tegallega_spark.operators.pq import encode_pq
 
         old = self.assigned
-        self.assigned = encode_pq(
-            old, codebooks, vec_col=self.vec_col, code_col=code_col
-        ).persist()
+        self.assigned = encode_pq(old, codebooks, vec_col=self.vec_col).persist()
         old.unpersist()
         return self
 
@@ -414,31 +412,26 @@ class IVFIndex:
     def search(
         self,
         query_vec: list[float],
-        id_col: str = "vec_id",
         k: int = 10,
         nprobe: int = 4,
     ) -> DataFrame:
-        """Cosine top-k over the nprobe nearest inverted lists only."""
+        """Cosine top-k `vec_id`s over the nprobe nearest inverted lists only."""
         lists = self._nearest_lists(query_vec, nprobe)
         q = F.array(*[F.lit(float(x)) for x in query_vec])
         candidates = self.assigned.filter(F.col("ivf_list").isin(lists))
         scored = candidates.select(
-            F.col(id_col),
+            "vec_id",
             F.round(cosine(F.col(self.vec_col).cast("array<double>"), q), 6).alias("cos_sim"),
         )
-        return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
+        return scored.orderBy(F.desc("cos_sim"), "vec_id").limit(k)
 
-    def recall_against_exact(
-        self, query_vec: list[float], id_col: str = "vec_id", k: int = 10, nprobe: int = 4
-    ) -> float:
-        """Fraction of the exact top-k recovered by the IVF search."""
+    def recall_against_exact(self, query_vec: list[float], nprobe: int = 4) -> float:
+        """Fraction of the exact top-10 `vec_id`s recovered by the IVF search."""
         from tegallega_spark.operators.similarity import brute_force_topk
 
         exact = {
-            r[id_col]
-            for r in brute_force_topk(
-                self.assigned, query_vec, id_col, self.vec_col, k
-            ).collect()
+            r.vec_id
+            for r in brute_force_topk(self.assigned, query_vec, self.vec_col).collect()
         }
-        approx = {r[id_col] for r in self.search(query_vec, id_col, k, nprobe).collect()}
+        approx = {r.vec_id for r in self.search(query_vec, 10, nprobe).collect()}
         return len(exact & approx) / len(exact) if exact else 1.0

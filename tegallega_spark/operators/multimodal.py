@@ -42,14 +42,14 @@ DECODED_SCHEMA = (
 )
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Simulate a multimodal table: payload = utf-8 bytes of the text column
-    plus typed metadata.  In production the payload column comes straight
+def attach_binary_payload(df: DataFrame) -> DataFrame:
+    """Simulate a multimodal table: payload = utf-8 bytes of the `text`
+    column plus typed metadata.  In production the payload column comes straight
     from parquet BINARY — this adapter only exists because the test corpus
     is text."""
     return df.select(
         "doc_id",
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.lit("fake/raw").alias("mime"),
     )
 
@@ -209,7 +209,7 @@ JPEG_MAGIC = b"\xff\xd8"
 RIFF_MAGIC = b"RIFF"
 
 
-def encode_wav(samples: "np.ndarray", sample_rate: int = 16000) -> bytes:
+def encode_wav(samples: "np.ndarray", sample_rate: int = 8000) -> bytes:
     """Minimal RIFF/WAVE PCM writer (pure stdlib): 16-bit signed
     little-endian, mono (n,) or multi-channel (n, c) interleaved.  Exists
     so tests and pipelines can round-trip real audio bytes without codec
@@ -531,9 +531,9 @@ _MOV_CONTAINERS = frozenset(
 _MOV_JPEG_FORMATS = (b"jpeg", b"mjpa", b"mjpb", b"MJPG", b"mjpg")
 
 
-def encode_mov(frames: "list[np.ndarray]", fps: int = 10,
-               quality: int = 85) -> bytes:
-    """Minimal QuickTime/MOV writer with photo-JPEG ('jpeg') video: the
+def encode_mov(frames: "list[np.ndarray]", fps: int = 10) -> bytes:
+    """Minimal QuickTime/MOV writer with photo-JPEG ('jpeg') video at
+    JPEG quality 85: the
     common `ftyp` + `mdat` + trailing `moov` layout, one video track, the
     full sample-table quartet (stsd/stts/stsc/stsz/stco) pointing at
     JPEG blobs encoded by the from-scratch baseline encoder
@@ -545,7 +545,7 @@ def encode_mov(frames: "list[np.ndarray]", fps: int = 10,
     if not frames:
         raise ValueError("encode_mov needs at least one frame")
     h, w = np.asarray(frames[0]).shape[:2]
-    blobs = [encode_jpeg(np.asarray(f, dtype=np.uint8), quality=quality)
+    blobs = [encode_jpeg(np.asarray(f, dtype=np.uint8), quality=85)
              for f in frames]
 
     def atom(typ: bytes, data: bytes) -> bytes:
@@ -797,15 +797,10 @@ def _fake_decode(payload: bytes) -> dict:
     }
 
 
-def attach_wav_payload(
-    df: DataFrame,
-    text_col: str = "text",
-    sample_rate: int = 8000,
-    max_samples: int = 200,
-) -> DataFrame:
+def attach_wav_payload(df: DataFrame) -> DataFrame:
     """Simulate an audio table deterministically: each doc's payload is a
-    real RIFF/WAVE PCM stream whose 16-bit samples are derived from the
-    first `max_samples` utf-8 bytes of the text ((byte-128)*256).  Exists
+    real 8 kHz RIFF/WAVE PCM stream whose 16-bit samples are derived from
+    the first 200 utf-8 bytes of `text` ((byte-128)*256).  Exists
     because the test corpus is text — in production the payload column
     comes straight from parquet BINARY.  The derivation is arithmetic on
     byte counts, so an oracle can predict byte_len/n_frames in SQL while
@@ -817,14 +812,14 @@ def attach_wav_payload(
     def to_wav(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
-            b = ("" if t is None else t).encode("utf-8")[:max_samples]
+            b = ("" if t is None else t).encode("utf-8")[:200]
             samples = (np.frombuffer(b, dtype=np.uint8).astype(np.int16) - 128) * 256
-            out.append(encode_wav(samples, sample_rate=sample_rate))
+            out.append(encode_wav(samples))
         return pd.Series(out)
 
     return df.select(
         "doc_id",
-        to_wav(F.col(text_col)).alias("payload"),
+        to_wav(F.col("text")).alias("payload"),
         F.lit("audio/wav").alias("mime"),
     )
 
@@ -901,22 +896,25 @@ def resize_pixels(px: "np.ndarray", out_h: int, out_w: int) -> "np.ndarray":
     return out[:, :, 0] if squeeze else out
 
 
-def _resize_stack(
-    stack: "np.ndarray", out_h: int, out_w: int, chunk: int = 2048
-) -> "np.ndarray":
+# Images per numpy working set in _resize_stack.
+_RESIZE_CHUNK = 2048
+
+
+def _resize_stack(stack: "np.ndarray", out_h: int, out_w: int) -> "np.ndarray":
     """resize_pixels over a whole (n, h, w, c) uint8 stack of SAME-SHAPE
     images in one set of numpy ops.  Identical arithmetic per image
     (elementwise gather + lerp, no reductions), so output bytes match the
     per-image path bit for bit — this is the §4.2 batching shape: one
     Python/numpy dispatch per BATCH instead of ~20 tiny-array ops per
-    image.  Rows are processed `chunk` at a time: a monolithic float64
+    image.  Rows are processed _RESIZE_CHUNK at a time: a monolithic float64
     working set allocates hundreds of MB of FRESH pages whose first touch
     stalls for seconds under THP compaction (measured 6.8 s cold vs
     0.22 s chunked for 20 k thumbnails); chunking keeps every temporary
     arena-reusable."""
+    chunk = _RESIZE_CHUNK
     if stack.shape[0] > chunk:
         return np.concatenate([
-            _resize_stack(stack[lo : lo + chunk], out_h, out_w, chunk)
+            _resize_stack(stack[lo : lo + chunk], out_h, out_w)
             for lo in range(0, stack.shape[0], chunk)
         ])
     src = stack.astype(np.float64)
@@ -996,9 +994,9 @@ FEATURES_SCHEMA = (
 )
 
 
-def extract_features(df: DataFrame, hist_bins: int = 16) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """mapInPandas image feature extraction over decoded pixels: per-
-    channel mean/std plus a normalized grayscale histogram — the typed
+    channel mean/std plus a normalized 16-bin grayscale histogram — the typed
     numeric columns an embedding/quality stage downstream would consume.
     Non-image/corrupt payloads yield NULL feature arrays (schema stays
     fixed; callers filter on mean IS NOT NULL)."""
@@ -1014,6 +1012,8 @@ def extract_features(df: DataFrame, hist_bins: int = 16) -> DataFrame:
         except (ValueError, IndexError, struct.error, zlib.error):
             return None
         return None
+
+    hist_bins = 16
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -10,10 +10,11 @@ DataFrame count/join and the whole contract SQL-expressible):
 
 where c(w1) is the CONTEXT count (bigrams starting with w1, so the
 distribution normalizes), V the vocabulary size including <unk>, and
-words below `min_count` map to <unk> first (the OOV convention).  A
-document's score is its mean negative log-probability over bigrams —
-low = fluent/in-domain, high = gibberish — the exact quantity CCNet
-thresholds into head/middle/tail buckets.
+words below MIN_COUNT map to <unk> first (the OOV convention); alpha is
+ALPHA.  Documents are (doc_id, text) rows.  A document's score is its
+mean negative log-probability over bigrams — low = fluent/in-domain,
+high = gibberish — the exact quantity CCNet thresholds into
+head/middle/tail buckets.
 
 Scale shape: training is two map-side-combinable counts (tokens,
 bigrams) — the same single-exchange shape as bpe.word_counts; scoring
@@ -33,6 +34,9 @@ from pyspark.sql import DataFrame
 __all__ = ["BigramLM", "train_bigram_lm", "perplexity_score"]
 
 UNK = "<unk>"
+# Words seen fewer times map to <unk>; ALPHA is the add-alpha smoothing mass.
+MIN_COUNT = 2
+ALPHA = 0.1
 # Largest pair space (K² for K token codes) the single-task counter counts
 # with a dense bincount: its int64 count array is 8·K² bytes, 128 MB here.
 # Above it the counter takes the sort-based np.unique path (same counts).
@@ -47,8 +51,7 @@ class BigramLM(NamedTuple):
     the whole train+score program stays one action for the caller and
     composes into larger single-action pipelines (clean_corpus's LM
     gate no longer forces an eager corpus pass at plan-build time).
-    alpha is the smoothing mass.
-    train_df/train_cols/doc_bigrams record the persisted unk-mapped
+    train_df/doc_bigrams record the persisted unk-mapped
     (__id, w1, w2) frame training derived its counts from, so scoring the
     SAME frame reuses it instead of re-running the corpus tokenize +
     vocab joins a second time (identity-gated: scoring any other frame
@@ -58,16 +61,13 @@ class BigramLM(NamedTuple):
     contexts: DataFrame
     vocab: DataFrame
     vocab_size: "int | DataFrame"
-    alpha: float
     train_df: DataFrame | None = None
-    train_cols: tuple | None = None
     doc_bigrams: DataFrame | None = None
     token_arrays: DataFrame | None = None
-    min_count: int | None = None
     small_gate: bool = False
 
 
-def _token_arrays(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _token_arrays(df: DataFrame) -> DataFrame:
     """(__id, __t): the tokenized corpus as STORED array columns.
 
     Training needs the token stream twice (unigram counts for the vocab,
@@ -80,9 +80,9 @@ def _token_arrays(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     scan is byte-split narrower than the core count (no-op at scale)."""
     from tegallega_spark.operators.dedup import parallelize_for_udf
 
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
+    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
     return parallelize_for_udf(df).select(
-        F.col(id_col).alias("__id"), toks.alias("__t")
+        F.col("doc_id").alias("__id"), toks.alias("__t")
     )
 
 
@@ -122,9 +122,7 @@ def _unk_map(bg: DataFrame, vocab: DataFrame) -> DataFrame:
     )
 
 
-def _single_task_bigram_counts(
-    df: DataFrame, id_col: str, text_col: str, min_count: int
-) -> DataFrame:
+def _single_task_bigram_counts(df: DataFrame) -> DataFrame:
     """(__id, c12, c1, __V) — one row per bigram OCCURRENCE of the
     self-scored corpus, counted inside ONE executor task (HYBRID: the
     tokenize runs as the SAME JVM split expression the distributed path
@@ -147,7 +145,7 @@ def _single_task_bigram_counts(
     Semantics replicated from the distributed derivations:
     - NULL text -> split->NULL tokens -> nothing counted, no bigrams;
     - vocab = tokens of ALL docs (incl. single-token docs) with
-      count >= min_count; V = |vocab| + 1 (<unk>);
+      count >= MIN_COUNT; V = |vocab| + 1 (<unk>);
     - bigrams from docs with >= 2 tokens, OOV slots mapped to <unk>
       BEFORE counting (a literal '<unk>' token merges with the mapped
       ones, exactly as the distributed unk-join does);
@@ -155,7 +153,7 @@ def _single_task_bigram_counts(
       bigram-first position."""
     import pyspark.sql.types as T
 
-    id_t = df.schema[id_col].dataType
+    id_t = df.schema["doc_id"].dataType
     schema = T.StructType(
         [
             T.StructField("__id", id_t),
@@ -164,8 +162,8 @@ def _single_task_bigram_counts(
             T.StructField("__V", T.LongType()),
         ]
     )
-    toks_col = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    arr = df.select(F.col(id_col).alias("__id"), toks_col.alias("__t"))
+    toks_col = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    arr = df.select(F.col("doc_id").alias("__id"), toks_col.alias("__t"))
 
     def fn(batches):
         import numpy as np
@@ -206,7 +204,7 @@ def _single_task_bigram_counts(
         )
         codes, uniques = pd.factorize(flat)
         tok_counts = np.bincount(codes, minlength=len(uniques))
-        in_vocab = tok_counts >= min_count
+        in_vocab = tok_counts >= MIN_COUNT
         V = int(in_vocab.sum()) + 1
         # OOV codes collapse onto the '<unk>' bucket: the in-vocab literal
         # '<unk>' code if one exists, else a fresh code
@@ -254,13 +252,7 @@ def _single_task_bigram_counts(
     return arr.repartition(1).mapInPandas(fn, schema)
 
 
-def train_bigram_lm(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 2,
-    alpha: float = 0.1,
-) -> BigramLM:
+def train_bigram_lm(df: DataFrame) -> BigramLM:
     """Count-based smoothed bigram LM from the corpus.  Two single-
     exchange aggregates (token counts → vocab; bigram counts after <unk>
     mapping) plus one derived context-count aggregate."""
@@ -279,10 +271,10 @@ def train_bigram_lm(
     # the bigram derivation both read the cached arrays instead of each
     # re-running the regex split over the corpus
     if small_gate:
-        toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-        arr = df.select(F.col(id_col).alias("__id"), toks.alias("__t"))
+        toks = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+        arr = df.select(F.col("doc_id").alias("__id"), toks.alias("__t"))
     else:
-        arr = _token_arrays(df, id_col, text_col).persist()
+        arr = _token_arrays(df).persist()
     tokens = (
         arr.select(F.explode(F.col("__t")).alias("word"))
         .groupBy("word")
@@ -295,7 +287,7 @@ def train_bigram_lm(
     # action serialized before the caller's own (measured ~40% of q56's
     # wall); scoring cross-joins the broadcast 1-row instead, and the
     # vocab persist materializes under the first broadcast build
-    vocab = tokens.filter(F.col("c") >= min_count).select("word")
+    vocab = tokens.filter(F.col("c") >= MIN_COUNT).select("word")
     if not small_gate:
         vocab = vocab.persist()
     vocab_size = vocab.agg((F.count("*") + F.lit(1)).alias("__V"))  # + <unk>
@@ -312,26 +304,20 @@ def train_bigram_lm(
         bigrams = bigrams.persist()
     contexts = bigrams.groupBy("w1").agg(F.sum("c12").alias("c1"))
     return BigramLM(
-        bigrams, contexts, vocab, vocab_size, alpha,
-        train_df=df, train_cols=(id_col, text_col), doc_bigrams=bg,
-        token_arrays=arr, min_count=min_count, small_gate=small_gate,
+        bigrams, contexts, vocab, vocab_size,
+        train_df=df, doc_bigrams=bg, token_arrays=arr, small_gate=small_gate,
     )
 
 
-def perplexity_score(
-    df: DataFrame,
-    lm: BigramLM,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id_col, n_bigrams, avg_nll): mean negative ln p(w2|w1) per doc.
+def perplexity_score(df: DataFrame, lm: BigramLM) -> DataFrame:
+    """(doc_id, n_bigrams, avg_nll): mean negative ln p(w2|w1) per doc.
     Docs with fewer than 2 tokens have no bigrams and are absent (the
     caller decides their fate — CCNet drops them).  Unseen bigrams get
     the smoothed floor alpha/(c1 + alpha*V); unseen contexts degrade to
     the uniform 1/V — both from the same formula with zero counts, no
     special cases."""
-    self_scoring = df is lm.train_df and (id_col, text_col) == lm.train_cols
-    if self_scoring and lm.small_gate and lm.min_count is not None:
+    self_scoring = df is lm.train_df
+    if self_scoring and lm.small_gate:
         # small-input single-task profile (gate decided at train time):
         # count (c12, c1, V) for every bigram occurrence in one
         # MapInPandas job — the lazily trained model frames are never
@@ -339,34 +325,34 @@ def perplexity_score(
         # reason).  The nll expression and the final aggregate are the
         # SAME JVM expressions over the same longs, so scores are
         # bit-identical to the distributed path's.
-        cnt = _single_task_bigram_counts(df, id_col, text_col, lm.min_count)
+        cnt = _single_task_bigram_counts(df)
         scored = cnt.select(
             "__id",
             (
                 -F.log(
-                    (F.coalesce(F.col("c12"), F.lit(0)) + F.lit(lm.alpha))
+                    (F.coalesce(F.col("c12"), F.lit(0)) + F.lit(ALPHA))
                     / (
                         F.coalesce(F.col("c1"), F.lit(0))
-                        + F.lit(lm.alpha) * F.col("__V")
+                        + F.lit(ALPHA) * F.col("__V")
                     )
                 )
             ).alias("nll"),
         )
         return scored.groupBy("__id").agg(
             F.count("*").alias("n_bigrams"), F.avg("nll").alias("avg_nll")
-        ).select(F.col("__id").alias(id_col), "n_bigrams", "avg_nll")
+        ).select(F.col("__id").alias("doc_id"), "n_bigrams", "avg_nll")
     if lm.doc_bigrams is not None and self_scoring:
         bg = lm.doc_bigrams  # persisted by train_bigram_lm — one pass total
     else:
-        bg = _unk_map(_doc_bigrams(_token_arrays(df, id_col, text_col)), lm.vocab)
+        bg = _unk_map(_doc_bigrams(_token_arrays(df)), lm.vocab)
     if isinstance(lm.vocab_size, DataFrame):
         # lazy V: broadcast the 1-row count frame in (BroadcastNestedLoop
         # with a single build row — free) so no driver action runs before
         # the caller's own
         bg = bg.crossJoin(F.broadcast(lm.vocab_size))
-        alpha_v = F.lit(lm.alpha) * F.col("__V")
+        alpha_v = F.lit(ALPHA) * F.col("__V")
     else:
-        alpha_v = F.lit(lm.alpha * lm.vocab_size)
+        alpha_v = F.lit(ALPHA * lm.vocab_size)
     scored = (
         bg.join(F.broadcast(lm.bigrams), ["w1", "w2"], "left")
         .join(F.broadcast(lm.contexts), "w1", "left")
@@ -374,7 +360,7 @@ def perplexity_score(
             "__id",
             (
                 -F.log(
-                    (F.coalesce(F.col("c12"), F.lit(0)) + F.lit(lm.alpha))
+                    (F.coalesce(F.col("c12"), F.lit(0)) + F.lit(ALPHA))
                     / (F.coalesce(F.col("c1"), F.lit(0)) + alpha_v)
                 )
             ).alias("nll"),
@@ -382,7 +368,7 @@ def perplexity_score(
     )
     out = scored.groupBy("__id").agg(
         F.count("*").alias("n_bigrams"), F.avg("nll").alias("avg_nll")
-    ).select(F.col("__id").alias(id_col), "n_bigrams", "avg_nll")
+    ).select(F.col("__id").alias("doc_id"), "n_bigrams", "avg_nll")
     # ride the persisted model tables out for release_intermediates
     from tegallega_spark.session import attach_intermediates
 

@@ -39,7 +39,7 @@ __all__ = [
 ]
 
 
-def _kmeans(x: np.ndarray, k: int, iters: int) -> np.ndarray:
+def _kmeans(x: np.ndarray, k: int) -> np.ndarray:
     """Deterministic Lloyd's: first-k init (the sample is hash-ordered, so
     first-k is an arbitrary-but-fixed draw), empty clusters re-seeded from
     the farthest points.
@@ -51,7 +51,7 @@ def _kmeans(x: np.ndarray, k: int, iters: int) -> np.ndarray:
     assignments."""
     from tegallega_spark.operators.ivf import _kmeans_blas
 
-    return _kmeans_blas(np.asarray(x, dtype=np.float64), k, iters)
+    return _kmeans_blas(np.asarray(x, dtype=np.float64), k)
 
 
 def train_pq_codebooks(
@@ -59,8 +59,8 @@ def train_pq_codebooks(
     vec_col: str = "embedding",
     m: int = 8,
     k: int = 16,
-    iters: int = 8,
     sample: int = 4096,
+    n: int | None = None,
     sample_x: "np.ndarray | None" = None,
 ) -> np.ndarray:
     """(m, k, d/m) codebooks trained on a deterministic hash-ordered sample.
@@ -68,19 +68,15 @@ def train_pq_codebooks(
     The sample bound makes training cost independent of corpus size — on
     100 TB this is one pruned scan of `sample` rows, not an iterative job.
 
-    `sample_x`: a caller-supplied salt-0 hash-ordered draw of >= `sample`
-    rows (ivf._sample_vectors order — the same xxhash64(vec_col) this
-    function sorts by), whose `sample` prefix IS what the collect below
-    would return; callers training PQ + IVF quantizers share one sample
-    scan (result-identical — ties are value-identical vectors).
-    A SHORTER draw is result-identical only when it holds the WHOLE
-    corpus (the _ann_setup under-fill case); a short draw from a larger
-    corpus trains on a different sample than this function's own collect
-    would (ADVICE r13) — this function cannot detect that case (no
-    corpus count in scope), so honoring it is on the caller.
+    `sample_x`: a caller-supplied salt-0 hash-ordered draw
+    (ivf._sample_vectors order — the same xxhash64(vec_col) this function
+    sorts by), checked against the corpus size `n` and cut to `sample`
+    rows by ivf.checked_draw, the same rule the IVF trainer applies.
     """
     if sample_x is not None:
-        x = np.asarray(sample_x, dtype=np.float64)[:sample]
+        from tegallega_spark.operators.ivf import checked_draw
+
+        x = checked_draw(sample_x, sample, n)
     else:
         rows = (
             df.select(F.col(vec_col).alias("v"), F.xxhash64(vec_col).alias("h"))
@@ -99,7 +95,7 @@ def train_pq_codebooks(
         raise ValueError(f"dim {d} not divisible by m={m}")
     dsub = d // m
     return np.stack(
-        [_kmeans(x[:, i * dsub : (i + 1) * dsub], k, iters) for i in range(m)]
+        [_kmeans(x[:, i * dsub : (i + 1) * dsub], k) for i in range(m)]
     )
 
 
@@ -107,9 +103,9 @@ def encode_pq(
     df: DataFrame,
     codebooks: np.ndarray,
     vec_col: str = "embedding",
-    code_col: str = "pq_code",
 ) -> DataFrame:
-    """Append the m-byte PQ code (array<smallint>, one entry per subspace).
+    """Append the m-byte PQ code as `pq_code` (array<smallint>, one entry
+    per subspace), the column pq_topk and ivfpq_topk read.
 
     One Arrow pass; codebooks ride into the UDF closure (≤ m·k·dsub floats,
     kilobytes — broadcast by pickling, same as any Spark closure constant).
@@ -136,23 +132,22 @@ def encode_pq(
         codes = d2.argmin(axis=2).astype(np.int16)
         return pd.Series(list(codes))
 
-    return df.withColumn(code_col, enc(F.col(vec_col)))
+    return df.withColumn("pq_code", enc(F.col(vec_col)))
 
 
 def pq_topk(
     encoded: DataFrame,
     codebooks: np.ndarray,
     query_vec: list[float],
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    code_col: str = "pq_code",
     k: int = 10,
     rerank: int = 0,
 ) -> DataFrame:
     """ADC top-k: m×k query distance table (driver), one Arrow gather-sum
-    pass over the codes, TakeOrdered.  With rerank=R > k, the top-R ADC
-    candidates are re-scored with exact cosine on the raw vectors and the
-    exact top-k of that pool is returned (columns: id, cos_sim) — matching
+    pass over the `pq_code` column, TakeOrdered.  With rerank=R > k, the
+    top-R ADC candidates are re-scored with exact cosine on the raw
+    vectors and the exact top-k of that pool is returned (columns:
+    vec_id, cos_sim) — matching
     similarity.brute_force_topk's output contract so the two are
     interchangeable."""
     cb = codebooks.astype(np.float64)
@@ -170,21 +165,21 @@ def pq_topk(
     # The ADC scan touches ONLY (id, code): the 100 TB contract is that the
     # hot pass reads m-byte codes, never the raw d-float vectors.  Raw
     # vectors come back via a broadcast join for the <= `rerank` survivors.
-    scored = encoded.select(id_col, adc(F.col(code_col)).alias("adc_dist"))
+    scored = encoded.select("vec_id", adc(F.col("pq_code")).alias("adc_dist"))
     if not rerank:
-        return scored.orderBy("adc_dist", F.col(id_col)).limit(k)
+        return scored.orderBy("adc_dist", F.col("vec_id")).limit(k)
 
     from tegallega_spark.operators.similarity import cosine
 
-    cands = scored.orderBy("adc_dist", F.col(id_col)).limit(rerank).select(id_col)
-    pool = encoded.select(id_col, vec_col).join(F.broadcast(cands), on=id_col)
+    cands = scored.orderBy("adc_dist", F.col("vec_id")).limit(rerank).select("vec_id")
+    pool = encoded.select("vec_id", vec_col).join(F.broadcast(cands), on="vec_id")
     qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         pool.select(
-            id_col,
+            "vec_id",
             cosine(F.col(vec_col).cast("array<double>"), qlit).alias("cos_sim"),
         )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
+        .orderBy(F.desc("cos_sim"), F.col("vec_id"))
         .limit(k)
     )
 
@@ -193,8 +188,6 @@ def ivfpq_topk(
     ivf_index,
     codebooks: np.ndarray,
     query_vec: list[float],
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
     k: int = 10,
     nprobe: int = 4,
     rerank: int = 50,
@@ -210,19 +203,12 @@ def ivfpq_topk(
     `ivf_index` is an operators.ivf.IVFIndex whose `assigned` DataFrame
     carries PQ codes — call `ivf_index.encode(codebooks)` once after
     training (or any DataFrame-holder with .assigned/.centroids whose
-    assigned has a `code_col`).
+    assigned has `vec_id` and `pq_code`).
     """
     lists = ivf_index._nearest_lists(query_vec, nprobe)
     pruned = ivf_index.assigned.filter(F.col("ivf_list").isin(lists))
     return pq_topk(
-        pruned,
-        codebooks,
-        query_vec,
-        id_col=id_col,
-        vec_col=ivf_index.vec_col,
-        code_col=code_col,
-        k=k,
-        rerank=rerank,
+        pruned, codebooks, query_vec, vec_col=ivf_index.vec_col, k=k, rerank=rerank
     )
 
 
@@ -230,8 +216,6 @@ def ivfpq_topk_batch(
     ivf_index,
     codebooks: np.ndarray,
     queries: "np.ndarray | list[list[float]]",
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
     k: int = 10,
     nprobe: int = 4,
     rerank: int = 50,
@@ -254,7 +238,7 @@ def ivfpq_topk_batch(
     driver-side by design — a query BATCH is metadata-sized (thousands),
     never corpus-sized; for corpus×corpus problems use the dedup family.
 
-    Returns (qid, id_col, cos_sim) — per qid, the exact-cosine top-k of
+    Returns (qid, vec_id, cos_sim) — per qid, the exact-cosine top-k of
     the ADC candidate pool, matching `ivfpq_topk`'s contract query-wise.
     """
     from pyspark.sql import Window
@@ -292,13 +276,13 @@ def ivfpq_topk_batch(
         return pd.Series(tables[qi[:, None], np.arange(m), arr].sum(axis=1))
 
     scored = pruned.select(
-        "qid", id_col, adc_b(F.col("qid"), F.col(code_col)).alias("adc_dist")
+        "qid", "vec_id", adc_b(F.col("qid"), F.col("pq_code")).alias("adc_dist")
     )
-    w = Window.partitionBy("qid").orderBy("adc_dist", F.col(id_col))
+    w = Window.partitionBy("qid").orderBy("adc_dist", F.col("vec_id"))
     cands = (
         scored.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= rerank)
-        .select("qid", id_col)
+        .select("qid", "vec_id")
     )
 
     # exact re-rank: raw vectors for the ≤ NQ·rerank survivors only.  The
@@ -311,18 +295,18 @@ def ivfpq_topk_batch(
          for qi, qv in enumerate(np.asarray(queries, dtype=np.float64))],
         "qid int, __qvec array<double>",
     )
-    pool = ivf_index.assigned.select(id_col, ivf_index.vec_col).join(
-        F.broadcast(cands), on=id_col
+    pool = ivf_index.assigned.select("vec_id", ivf_index.vec_col).join(
+        F.broadcast(cands), on="vec_id"
     )
     rescored = pool.join(F.broadcast(qdf), on="qid").select(
         "qid",
-        id_col,
+        "vec_id",
         cosine(
             F.col(ivf_index.vec_col).cast("array<double>"),
             F.col("__qvec"),
         ).alias("cos_sim"),
     )
-    wk = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.col(id_col))
+    wk = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.col("vec_id"))
     return (
         rescored.withColumn("__rk", F.row_number().over(wk))
         .filter(F.col("__rk") <= k)

@@ -31,7 +31,7 @@ Spark-first composition — everything reuses existing pieces:
 
 Hot-cluster guard: a degenerate corpus (10⁶ copies of one template) puts
 everything in one cluster; all-pairs there is 10¹² join rows.  Clusters
-larger than `max_cluster` switch to STAR linking — every member pairs
+larger than MAX_CLUSTER switch to STAR linking — every member pairs
 with the cluster's min id only, O(k) pairs instead of O(k²).  For dedup
 (a transitive-closure consumer) the star is exactly as connective when
 members truly are near-dups of each other; items NOT similar to the
@@ -60,22 +60,28 @@ __all__ = ["semantic_pairs", "auto_k_clusters"]
 
 # above this many cells the blocking switches from the flat quantizer to
 # the two-level TreeQuantizer: flat probing is O(k·d) per vector, so with
-# k ∝ N the blocking pass alone is O(N²/target_cell_size) — measured
+# k ∝ N the blocking pass alone is O(N²/TARGET_CELL_SIZE) — measured
 # bending the r8 race to N^1.7 (512 k → 149 s, 1 M → 511 s, 2 M →
 # 1,704 s).  The tree probes O(√k·d).  1024 keeps every sub-threshold
 # configuration byte-identical to the flat path the earlier races pinned.
 TREE_QUANTIZER_MIN_K = 1024
+# Expected vectors per cell (see auto_k_clusters).
+TARGET_CELL_SIZE = 512
+# Cells with more primary members than this star-link (see semantic_pairs).
+MAX_CLUSTER = 4096
+# Share of blocked rows in star-linked cells above which semantic_pairs warns.
+_WARN_STAR_FRACTION = 0.25
 
 
-def auto_k_clusters(n: int, target_cell_size: int = 512) -> int:
+def auto_k_clusters(n: int) -> int:
     """SemDeDup's own scaling rule, k ∝ N: enough clusters that the
-    EXPECTED cell holds ~target_cell_size vectors, so per-cell quadratic
+    EXPECTED cell holds ~TARGET_CELL_SIZE vectors, so per-cell quadratic
     work stays constant as the corpus grows.  A fixed k is the scale trap:
-    at 100 TB every cell blows past max_cluster and the operator silently
+    at 100 TB every cell blows past MAX_CLUSTER and the operator silently
     degrades to all-star linking (recall collapses to similarity-to-the-
     representative).  512 matches the stress race's measured sweet spot
     (~500 vectors/cluster, scripts/stress_semdedup.py)."""
-    return max(1, math.ceil(n / target_cell_size))
+    return max(1, math.ceil(n / TARGET_CELL_SIZE))
 
 
 def _probe_cells_udf(centroids: list[list[float]], probes: int):
@@ -147,30 +153,18 @@ def _cell_pairs_kernel(threshold: float):
 
 
 def semantic_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    min_cosine: float = 0.95,
-    seed: int = 42,
-    max_cluster: int = 4096,
-    probes: int = 2,
-    target_cell_size: int = 512,
-    warn_star_fraction: float | None = 0.25,
+    df: DataFrame, min_cosine: float = 0.95, probes: int = 2
 ) -> DataFrame:
-    """Verified near-duplicate pairs (id_a, id_b, cos_sim) with
-    cos_sim >= min_cosine, searched within k-means cells only.
+    """Verified near-duplicate pairs (id_a, id_b, cos_sim) of the
+    (vec_id, embedding) rows with cos_sim >= min_cosine, searched within
+    k-means cells only.
 
-    The blocking is sized to the corpus: auto_k_clusters(count,
-    target_cell_size) cells — one cheap parquet count() buys the k ∝ N
-    scaling the method requires.  A corpus of at most `target_cell_size`
-    rows gets one cell, which degenerates to exact all-pairs.
-
-    `seed` is a NO-OP since r8: the sampled trainer
-    (train_ivf_index_sampled) is deterministic by construction
-    (hash-ordered sample, first-k init) and consumes no RNG, so varying
-    seed no longer varies the blocking.  The parameter is kept for
-    signature stability; passing a non-default value emits a one-time
-    warning so callers probing blocking sensitivity learn it's inert.
+    The blocking is sized to the corpus: auto_k_clusters(count) cells —
+    one cheap parquet count() buys the k ∝ N scaling the method requires.
+    A corpus of at most TARGET_CELL_SIZE rows gets one cell, which
+    degenerates to exact all-pairs.  The blocking is deterministic: the
+    sampled trainers use a hash-ordered sample and first-k init, and
+    consume no RNG.
 
     `probes` is the boundary-recall knob: each vector blocks into its
     `probes` nearest centroids' cells (FAISS-style multi-probe), so two
@@ -189,29 +183,21 @@ def semantic_pairs(
     Pick probes=2 for the scaling default, probes=3 when the workload
     needs the measured-zero configuration.
 
-    `max_cluster` is measured in TRUE cell population — distinct primary
+    MAX_CLUSTER is measured in TRUE cell population — distinct primary
     (nearest-centroid) members, NOT probe-inflated visitor rows — so a
     cell whose real membership is under the cap keeps full pairwise
     recall even when multi-probe visitors push its row count over.  The
     O(cell²) work bound is enforced separately: a cell whose
-    probe-inflated row count exceeds max_cluster*probes star-links
+    probe-inflated row count exceeds MAX_CLUSTER*probes star-links
     regardless (worst pairwise work is probes² × the single-probe bound —
-    bounded, documented).  When more than `warn_star_fraction` of all
+    bounded, documented).  When more than _WARN_STAR_FRACTION of all
     blocked rows land in star-linked cells, a warning is emitted (one
     tiny aggregate over the persisted assignment) — on a healthy corpus
     with auto-k the fraction is ~0; a high value means the blocking is
-    too coarse (raise k / lower target_cell_size) or the corpus is
-    template spam.  None disables the check."""
-    if seed != 42:
-        warnings.warn(
-            "semantic_pairs: `seed` has been a no-op since "
-            "the r8 sampled trainer (deterministic hash-ordered sample); "
-            "varying it does not vary the blocking",
-            stacklevel=2,
-        )
-    base = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
+    too coarse or the corpus is template spam."""
+    base = df.select(F.col("vec_id").alias("__id"), F.col("embedding").alias("__v"))
     n_count = df.count()
-    k_clusters = auto_k_clusters(n_count, target_cell_size)
+    k_clusters = auto_k_clusters(n_count)
     p = 1
     if k_clusters == 1:
         # degenerate blocking (exact all-pairs); pyspark.ml KMeans needs k>=2
@@ -225,8 +211,7 @@ def semantic_pairs(
         # quality only needs approximate cells: the exactness contract
         # comes from the verify-every-candidate cosine, not from centroid
         # optimality.  Training is deterministic (hash-ordered sample,
-        # first-k init) — `seed` is kept for signature stability but no
-        # longer consumed.
+        # first-k init).
         #
         # DUAL-QUANTIZER blocking (r8): two quantizers trained on
         # INDEPENDENT samples (sample_salt) give two independent
@@ -292,11 +277,11 @@ def semantic_pairs(
 
     # Two per-cell counts feed the star decision (VERDICT r4 #7):
     #   __tsize — TRUE population: primary (nearest-centroid) members only.
-    #     max_cluster compares against THIS, so the name means what it
+    #     MAX_CLUSTER compares against THIS, so the name means what it
     #     says — a cell whose real membership is under the cap never loses
     #     pair recall just because probe visitors inflated its row count.
     #   __csize — probe-inflated rows: what the O(cell²) kernel actually
-    #     receives.  A hard work bound of max_cluster*p rows per cell
+    #     receives.  A hard work bound of MAX_CLUSTER*p rows per cell
     #     stays in force (worst quadratic work p² × the p=1 bound), so a
     #     pathologically attractive cell (few primaries, huge visitor
     #     in-flow) still can't trigger runaway pairwise work.
@@ -325,10 +310,10 @@ def semantic_pairs(
         )
     else:
         sizes = sizes.withColumn("__tsize", F.col("__csize"))
-    star_cond = (F.col("__tsize") > max_cluster) | (
-        F.col("__csize") > max_cluster * p
+    star_cond = (F.col("__tsize") > MAX_CLUSTER) | (
+        F.col("__csize") > MAX_CLUSTER * p
     )
-    if warn_star_fraction is not None and k_clusters > 1:
+    if k_clusters > 1:
         # one tiny agg over the persisted assignment (KMeans already ran
         # eagerly, so this adds a cache-backed job, not a corpus rescan):
         # the probe-inflated row share landing in star-linked cells
@@ -337,14 +322,14 @@ def semantic_pairs(
             F.sum(F.when(star_cond, F.col("__csize"))),
         ).first()
         frac = (star or 0) / tot if tot else 0.0
-        if frac > warn_star_fraction:
+        if frac > _WARN_STAR_FRACTION:
             warnings.warn(
                 f"semantic_pairs: {frac:.0%} of blocked rows fall in cells "
-                f"larger than max_cluster={max_cluster} and will STAR-link "
+                f"larger than MAX_CLUSTER={MAX_CLUSTER} and will STAR-link "
                 "(pair recall degrades to similarity-to-representative in "
                 f"those cells). {k_clusters} cells are too coarse for "
-                "this corpus — lower target_cell_size, or raise "
-                "max_cluster if the quadratic work is acceptable.",
+                "this corpus — lower TARGET_CELL_SIZE, or raise "
+                "MAX_CLUSTER if the quadratic work is acceptable.",
                 stacklevel=2,
             )
     tagged = cells.join(F.broadcast(sizes), "__cell")
@@ -356,7 +341,7 @@ def semantic_pairs(
     # measured it ~50× slower than DuckDB's native loop at N=8k: a cell of
     # c vectors is c²/2 interpreted 64-element folds as join ROWS, versus
     # microseconds as a (c×d)@(d×c) matmul.  Pair blowup is impossible by
-    # construction (cells are capped at max_cluster).
+    # construction (cells are capped at MAX_CLUSTER).
     small = tagged.filter(~star_cond)
     pairs_small = small.select("__cell", "__id", "__v").groupBy("__cell").applyInPandas(
         _cell_pairs_kernel(min_cosine), "id_a long, id_b long, cos_sim double"

@@ -65,23 +65,19 @@ def cosine_pairs_udf():
 
 
 def brute_force_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
+    df: DataFrame, query_vec: list[float], vec_col: str = "embedding"
 ) -> DataFrame:
-    """Exact cosine top-k against one query vector.
+    """Exact cosine top-10 `vec_id`s against one query vector.
 
     The query vector is a literal array (broadcast into the plan); the scan
     is a single map stage + TakeOrdered — no shuffle of the big table.
     """
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = df.select(
-        F.col(id_col),
+        "vec_id",
         cosine(F.col(vec_col).cast("array<double>"), q).alias("cos_sim"),
     )
-    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
+    return scored.orderBy(F.desc("cos_sim"), "vec_id").limit(10)
 
 
 def _plane_components(plane_seed: int, dim: int) -> list[float]:
@@ -169,8 +165,6 @@ SMALL_ALLPAIRS_TASK_N = 4096
 
 def _single_task_all_pairs(
     df: DataFrame,
-    id_col: str,
-    vec_col: str,
     min_cosine: float,
     num_planes: int,
     num_tables: int,
@@ -189,7 +183,7 @@ def _single_task_all_pairs(
     bucket_ids = _bucketer(num_planes, num_tables, dim)
     spark = df.sparkSession
     bcast = spark.sparkContext.broadcast((list(idx), M))
-    id_t = df.schema[id_col].dataType
+    id_t = df.schema["vec_id"].dataType
     schema = T.StructType(
         [
             T.StructField("id_a", id_t),
@@ -257,16 +251,15 @@ def _single_task_all_pairs(
 
 def all_pairs_above(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     min_cosine: float = 0.9,
     num_planes: int = 6,
     num_tables: int = 1,
 ) -> DataFrame:
-    """Embedding near-dup pairs: multi-table LSH-bucket self-join, bare-pair
-    dedup, then exact cosine recomputed per candidate.  Returns
-    (id_a, id_b, cos_sim) — deterministic, so with enough tables for recall
-    1 at the threshold it is oracle-checkable against exact all-pairs.
+    """Embedding near-dup pairs over (vec_id, embedding): multi-table
+    LSH-bucket self-join, bare-pair dedup, then exact cosine recomputed
+    per candidate.  Returns (id_a, id_b, cos_sim) — deterministic, so
+    with enough tables for recall 1 at the threshold it is
+    oracle-checkable against exact all-pairs.
 
     Recall per pair at angle θ is 1-(1-(1-θ/π)^planes)^tables — tables is
     the recall knob, planes the candidate-sparsity knob.  The band join
@@ -304,7 +297,7 @@ def all_pairs_above(
         import numpy as np
         from pyspark.sql.functions import pandas_udf
 
-        rows = df.select(id_col, vec_col).collect()
+        rows = df.select("vec_id", "embedding").collect()
         M = np.array([list(r[1]) for r in rows], dtype=np.float64)
         idx = pd.Index([r[0] for r in rows])
         if M.ndim == 2 and len(M):
@@ -314,7 +307,7 @@ def all_pairs_above(
             # row-pair) — the gather can't represent that
             broadcast_vectors = False
     if dim is None:
-        dim = len(df.select(vec_col).first()[0])
+        dim = len(df.select("embedding").first()[0])
     if broadcast_vectors and len(M) <= SMALL_ALLPAIRS_TASK_N:
         # With the vectors in hand and at weak-LSH parameters where the
         # candidate set approaches ALL pairs, the distributed shape's
@@ -327,14 +320,13 @@ def all_pairs_above(
         # einsum rescore doubles.  Memory is a (n, n) candidate mask —
         # the SMALL_ALLPAIRS_TASK_N row gate bounds it (16 MB at 4096).
         return _single_task_all_pairs(
-            df, id_col, vec_col, min_cosine, num_planes, num_tables,
-            dim, idx, M,
+            df, min_cosine, num_planes, num_tables, dim, idx, M,
         )
     # persist: both sides of the bucket self-join read the exploded buckets —
     # without it the bucket computation runs twice per row
     bucket_udf = make_bucket_udf(num_planes, num_tables, dim)
     with_buckets = (
-        df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
+        df.select(F.col("vec_id").alias("__id"), F.col("embedding").alias("__v"))
         .select("__id", F.posexplode(bucket_udf(F.col("__v"))).alias("table_idx", "bucket"))
         .persist()
     )
@@ -377,8 +369,8 @@ def all_pairs_above(
             with_buckets,
             _BroadcastHandle(bcast),
         )
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
+    va = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"))
+    vb = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"))
     # vectorized rescore (guide §4.2): one numpy batch op instead of three
     # interpreted array folds per candidate pair.  asNondeterministic
     # (§4.4): without it the min_cosine filter's pushdown duplicated the

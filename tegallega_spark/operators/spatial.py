@@ -17,6 +17,10 @@ import pyspark.sql.functions as F
 from tegallega_spark.functions.geo import haversine_km, haversine_m, lerp
 from tegallega_spark.functions.ids import virtual_stop_id
 
+# Virtual stops go between consecutive real stops farther apart than this
+# (update-routes.js:282).
+MAX_DISTANCE_KM = 0.25
+
 
 def project_onto_segments(
     points: DataFrame,
@@ -87,8 +91,8 @@ def _projection_candidates(
     )
 
 
-def polyline_arrays(vertices: DataFrame, key: str = "relation_id") -> DataFrame:
-    """(key, verts: array<struct<lon,lat>>): one row per polyline, vertices
+def polyline_arrays(vertices: DataFrame) -> DataFrame:
+    """(relation_id, verts: array<struct<lon,lat>>): one row per polyline, vertices
     in vertex_idx order.
 
     The array form is the r13 extract-chain optimization (r12 verdict #3):
@@ -102,7 +106,7 @@ def polyline_arrays(vertices: DataFrame, key: str = "relation_id") -> DataFrame:
     the row form (the extract race asserts output identity vs the node
     reference).  Polylines are route shapes (≤ a few hundred vertices), so
     one array row is KBs — far under any array/row size limit."""
-    return vertices.groupBy(key).agg(
+    return vertices.groupBy("relation_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("vertex_idx", "lon", "lat"))),
             lambda s: F.struct(s["lon"].alias("lon"), s["lat"].alias("lat")),
@@ -113,21 +117,19 @@ def polyline_arrays(vertices: DataFrame, key: str = "relation_id") -> DataFrame:
 def interpolate_virtual_stops_along_polyline(
     real_stops: DataFrame,
     polylines: DataFrame,
-    key: str = "relation_id",
-    order_col: str = "member_order",
-    max_gap_km: float = 0.25,
 ) -> DataFrame:
     """Reference-faithful W10 (update-routes.js:281-333): between each pair
     of CONSECUTIVE real stops (member order), when their straight-line
-    distance exceeds max_gap_km, insert ⌊d/max_gap⌋ stops evenly spaced in
+    distance d exceeds MAX_DISTANCE_KM, insert ⌊d/MAX_DISTANCE_KM⌋ stops evenly spaced in
     FRACTIONAL-INDEX space and interpolated along the route polyline.
 
-    real_stops must carry (key, order_col, lon, lat, frac_idx); polylines
+    real_stops must carry (relation_id, member_order, lon, lat, frac_idx); polylines
     is the polyline_arrays form.  The lag-pair and explode(sequence) run
     over the small stops frame; each segment endpoint is an element_at
     lookup into the joined array — no vertex-row shuffle.  Rows whose
     coordIdx falls outside [0, len-2] are dropped (js:302)."""
-    w = Window.partitionBy(key).orderBy(order_col)
+    key = "relation_id"
+    w = Window.partitionBy(key).orderBy("member_order")
     paired = (
         real_stops.withColumn("nlon", F.lead("lon").over(w))
         .withColumn("nlat", F.lead("lat").over(w))
@@ -139,8 +141,8 @@ def interpolate_virtual_stops_along_polyline(
     gap_km = haversine_m(F.col("lon"), F.col("lat"), F.col("nlon"), F.col("nlat")) / 1000.0
     paired = (
         paired.withColumn("__gap", gap_km)
-        .filter(F.col("__gap") > max_gap_km)
-        .withColumn("__n", F.floor(F.col("__gap") / max_gap_km).cast("int"))
+        .filter(F.col("__gap") > MAX_DISTANCE_KM)
+        .withColumn("__n", F.floor(F.col("__gap") / MAX_DISTANCE_KM).cast("int"))
         .withColumn("__step", (F.col("nidx") - F.col("frac_idx")) / (F.col("__n") + 1))
     )
     exploded = paired.select(
@@ -172,18 +174,17 @@ def interpolate_virtual_stops_along_polyline(
 def drop_near_real_arr(
     virtual: DataFrame,
     real: DataFrame,
-    key: str = "relation_id",
     max_dist_m: float = 150.0,
 ) -> DataFrame:
     """Distance-predicate anti join (J5, update-routes.js:311-313): drop a
     virtual stop if any real stop of the same route lies within
     max_dist_m.  No theta join: the real stops aggregate to one coordinate
-    array per key, and each virtual stop filters on F.exists over that
+    array per relation_id, and each virtual stop filters on F.exists over that
     array — one small groupBy plus a 1-row-per-key join.  The inner join
     keeps every virtual stop that should survive because every virtual
     stop's relation has real stops by construction (virtuals interpolate
     BETWEEN real pairs)."""
-    arr = real.groupBy(key).agg(
+    arr = real.groupBy("relation_id").agg(
         F.collect_list(F.struct("lon", "lat")).alias("__real")
     )
     near = lambda p: haversine_m(  # noqa: E731
@@ -191,7 +192,7 @@ def drop_near_real_arr(
     ) < max_dist_m
     return (
         virtual.alias("v")
-        .join(arr, key)
+        .join(arr, "relation_id")
         .filter(~F.exists(F.col("__real"), near))
         .drop("__real")
     )
@@ -201,7 +202,6 @@ def line_slice(
     slices: DataFrame,
     vertices: DataFrame,
     key: str = "relation_id",
-    slice_id: str = "slice_id",
 ) -> DataFrame:
     """Slice a polyline between two points — `turf.lineSlice` re-expressed
     as a set operation over MANY (start, stop, line) triples at once
@@ -242,13 +242,13 @@ def line_slice(
     """
     pts = slices.select(
         F.col(key),
-        F.struct(F.col(slice_id).alias("sid"), F.lit("start").alias("role")).alias("__pid"),
+        F.struct(F.col("slice_id").alias("sid"), F.lit("start").alias("role")).alias("__pid"),
         F.col("start_lon").alias("lon"),
         F.col("start_lat").alias("lat"),
     ).unionByName(
         slices.select(
             F.col(key),
-            F.struct(F.col(slice_id).alias("sid"), F.lit("stop").alias("role")).alias("__pid"),
+            F.struct(F.col("slice_id").alias("sid"), F.lit("stop").alias("role")).alias("__pid"),
             F.col("stop_lon").alias("lon"),
             F.col("stop_lat").alias("lat"),
         )
@@ -269,7 +269,7 @@ def line_slice(
     a_idx = F.greatest(F.ceil(F.col("__a")["frac_idx"]) - 1, F.lit(0)).cast("int")
     b_idx = F.greatest(F.ceil(F.col("__b")["frac_idx"]) - 1, F.lit(0)).cast("int")
     wide = wide.select(
-        key, F.col("__sid").alias(slice_id), "__a", "__b",
+        key, F.col("__sid").alias("slice_id"), "__a", "__b",
         a_idx.alias("__ai"), b_idx.alias("__bi"),
     )
     swap = F.col("__ai") > F.col("__bi")
@@ -279,7 +279,7 @@ def line_slice(
         ).alias("__vs")
     )
     ends = wide.select(
-        key, slice_id,
+        key, "slice_id",
         F.when(swap, F.col("__bi")).otherwise(F.col("__ai")).alias("lo_idx"),
         F.when(swap, F.col("__ai")).otherwise(F.col("__bi")).alias("hi_idx"),
         F.when(swap, F.col("__b")["proj_lon"]).otherwise(F.col("__a")["proj_lon"]).alias("lo_lon"),
@@ -311,8 +311,8 @@ def line_slice(
         )),
     )
     return ends.select(
-        key, slice_id, F.explode(out_arr).alias("__p")
-    ).select(key, slice_id, "__p.pt_seq", "__p.lon", "__p.lat")
+        key, "slice_id", F.explode(out_arr).alias("__p")
+    ).select(key, "slice_id", "__p.pt_seq", "__p.lon", "__p.lat")
 
 
 def slice_path_geojson(
@@ -368,7 +368,6 @@ def slice_path_geojson(
 def interpolate_virtual_stops(
     real_stops: DataFrame,
     key: str = "relation_id",
-    order_col: str = "frac_idx",
     max_gap_km: float = 0.25,
 ) -> DataFrame:
     """Insert ⌊d/max_gap⌋ evenly spaced virtual stops between consecutive
@@ -386,17 +385,17 @@ def interpolate_virtual_stops(
     interpolation.  1-row→N-rows generation without a UDTF.
     Returns rows (key, stop_id, lon, lat, frac_idx, is_real=false).
     """
-    w = Window.partitionBy(key).orderBy(order_col)
+    w = Window.partitionBy(key).orderBy("frac_idx")
     paired = (
         real_stops.withColumn("nlon", F.lead("lon").over(w))
         .withColumn("nlat", F.lead("lat").over(w))
-        .withColumn("nidx", F.lead(order_col).over(w))
+        .withColumn("nidx", F.lead("frac_idx").over(w))
         .filter(F.col("nlon").isNotNull())
     )
     gap_km = haversine_km(F.col("lon"), F.col("lat"), F.col("nlon"), F.col("nlat"))
     paired = paired.withColumn("__n", F.floor(gap_km / max_gap_km).cast("int")).filter(F.col("__n") >= 1)
     exploded = paired.select(
-        key, "lon", "lat", "nlon", "nlat", F.col(order_col).alias("__i0"), "nidx", "__n",
+        key, "lon", "lat", "nlon", "nlat", F.col("frac_idx").alias("__i0"), "nidx", "__n",
         F.explode(F.sequence(F.lit(1), F.col("__n"))).alias("__k"),
     )
     t = F.col("__k").cast("double") / (F.col("__n") + 1)
@@ -407,6 +406,6 @@ def interpolate_virtual_stops(
         virtual_stop_id(vlon, vlat).alias("stop_id"),
         vlon.alias("lon"),
         vlat.alias("lat"),
-        lerp(F.col("__i0"), F.col("nidx"), t).alias(order_col),
+        lerp(F.col("__i0"), F.col("nidx"), t).alias("frac_idx"),
         F.lit(False).alias("is_real"),
     )

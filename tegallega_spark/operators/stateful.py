@@ -172,7 +172,7 @@ def _stitch_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def stitch_ways(vertices: DataFrame, key: str = "relation_id") -> DataFrame:
+def stitch_ways(vertices: DataFrame) -> DataFrame:
     """vertices(relation_id, way_order, vertex_idx, lon, lat) →
     one stitched polyline per relation: (relation_id, vertex_idx, lon, lat).
 
@@ -182,7 +182,7 @@ def stitch_ways(vertices: DataFrame, key: str = "relation_id") -> DataFrame:
     kernel is asserted equivalent by the same goldens/races."""
     schema = "relation_id string, vertex_idx long, lon double, lat double"
     return apply_sorted_groups(
-        vertices, key, ["way_order", "vertex_idx"], _stitch_batch, schema
+        vertices, "relation_id", ["way_order", "vertex_idx"], _stitch_batch, schema
     )
 
 
@@ -231,45 +231,42 @@ def _thin_group(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf[keep]
 
 
-def _make_thin_batch(key: str):
-    def _thin_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Multi-relation form of _thin_group: input sorted by
-        (key, frac_idx), relations contiguous; the chunk-and-rescan fold
-        runs per group over numpy slices — no per-group pandas frame."""
-        import numpy as np
+def _thin_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Multi-relation form of _thin_group: input sorted by
+    (relation_id, frac_idx), relations contiguous; the chunk-and-rescan fold
+    runs per group over numpy slices — no per-group pandas frame."""
+    import numpy as np
 
-        k = pdf[key].to_numpy()
-        gstarts = np.flatnonzero(np.concatenate(([True], k[1:] != k[:-1])))
-        gends = np.concatenate((gstarts[1:], [len(k)]))
-        lon = pdf["lon"].to_numpy(dtype=np.float64)
-        lat = pdf["lat"].to_numpy(dtype=np.float64)
-        is_real = pdf["is_real"].to_numpy().astype(bool)
-        keep = np.zeros(len(k), dtype=bool)
-        for gs, ge in zip(gstarts, gends):
-            i = gs
-            while i < ge:
-                keep[i] = True
-                j = i + 1
-                if j >= ge:
-                    break
-                p1 = math.radians(lat[i])
-                dp = np.radians(lat[j:ge]) - p1
-                dl = np.radians(lon[j:ge] - lon[i])
-                a = (np.sin(dp / 2) ** 2
-                     + math.cos(p1) * np.cos(np.radians(lat[j:ge]))
-                     * np.sin(dl / 2) ** 2)
-                d = 2 * 6371000.0 * np.arcsin(np.sqrt(a))
-                ok = is_real[j:ge] | (d >= MIN_SPACING_M)
-                nxt = np.flatnonzero(ok)
-                if len(nxt) == 0:
-                    break
-                i = j + int(nxt[0])
-        return pdf[keep]
-
-    return _thin_batch
+    k = pdf["relation_id"].to_numpy()
+    gstarts = np.flatnonzero(np.concatenate(([True], k[1:] != k[:-1])))
+    gends = np.concatenate((gstarts[1:], [len(k)]))
+    lon = pdf["lon"].to_numpy(dtype=np.float64)
+    lat = pdf["lat"].to_numpy(dtype=np.float64)
+    is_real = pdf["is_real"].to_numpy().astype(bool)
+    keep = np.zeros(len(k), dtype=bool)
+    for gs, ge in zip(gstarts, gends):
+        i = gs
+        while i < ge:
+            keep[i] = True
+            j = i + 1
+            if j >= ge:
+                break
+            p1 = math.radians(lat[i])
+            dp = np.radians(lat[j:ge]) - p1
+            dl = np.radians(lon[j:ge] - lon[i])
+            a = (np.sin(dp / 2) ** 2
+                 + math.cos(p1) * np.cos(np.radians(lat[j:ge]))
+                 * np.sin(dl / 2) ** 2)
+            d = 2 * 6371000.0 * np.arcsin(np.sqrt(a))
+            ok = is_real[j:ge] | (d >= MIN_SPACING_M)
+            nxt = np.flatnonzero(ok)
+            if len(nxt) == 0:
+                break
+            i = j + int(nxt[0])
+    return pdf[keep]
 
 
-def thin_stops(stops: DataFrame, key: str = "relation_id") -> DataFrame:
+def thin_stops(stops: DataFrame) -> DataFrame:
     """stops(relation_id, stop_id, lon, lat, frac_idx, is_real) → subset
     satisfying the min-spacing invariant.
 
@@ -280,5 +277,5 @@ def thin_stops(stops: DataFrame, key: str = "relation_id") -> DataFrame:
         f"{f.name} {f.dataType.simpleString()}" for f in stops.schema.fields
     )
     return apply_sorted_groups(
-        stops, key, ["frac_idx"], _make_thin_batch(key), schema
+        stops, "relation_id", ["frac_idx"], _thin_batch, schema
     )

@@ -90,13 +90,12 @@ def quality_score(text: Column) -> Column:
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_quality_flags(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def gopher_quality_flags(df: DataFrame) -> DataFrame:
     """The MassiveText/Gopher document-quality rules (public literature:
     Rae et al., "Scaling Language Models: Methods, Analysis & Insights
-    from Training Gopher", arXiv:2112.11446, Appendix A) as one boolean
-    flag per rule plus the conjunction `gopher_pass`:
+    from Training Gopher", arXiv:2112.11446, Appendix A) over (doc_id,
+    text) rows, as one boolean flag per rule plus the conjunction
+    `gopher_pass`:
 
       ok_word_count    — 50 <= words <= 100,000
       ok_mean_wlen     — mean word length in [3, 10]
@@ -110,9 +109,9 @@ def gopher_quality_flags(
     Python); at 100 TB this is a scan-side map with no shuffle at all.
     NULL text fails every rule (flags false, not NULL) so downstream
     filters need no three-valued-logic care."""
-    staged, flags, n_words = _gopher_staged(df, text_col)
+    staged, flags, n_words = _gopher_staged(df)
     out = staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_words.cast("long").alias("n_words"),
         *[v.alias(k) for k, v in flags.items()],
     )
@@ -122,14 +121,14 @@ def gopher_quality_flags(
     )
 
 
-def gopher_pass_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_pass_filter(df: DataFrame) -> DataFrame:
     """Filter `df` to the rows passing ALL Gopher rules, preserving the
     caller's columns — the gate form of gopher_quality_flags.  Computing
     the conjunction inline and filtering in place costs ONE pass over the
     text; the flags-frame + left-semi-join shape costs two full
     evaluations of everything upstream of the text column (both join
     branches re-run the lineage) plus a join exchange."""
-    staged, flags, _ = _gopher_staged(df, text_col)
+    staged, flags, _ = _gopher_staged(df)
     keep = None
     for v in flags.values():
         keep = v if keep is None else (keep & v)
@@ -147,7 +146,7 @@ def gopher_pass_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
     return staged.filter(keep & barrier).select(*df.columns)
 
 
-def _gopher_staged(df: DataFrame, text_col: str):
+def _gopher_staged(df: DataFrame):
     """Shared staging for the Gopher rules: returns (staged_df, flag
     expression dict, n_words expression), where staged_df carries the
     split arrays as stored columns.
@@ -158,7 +157,7 @@ def _gopher_staged(df: DataFrame, text_col: str):
     lowercasing transform once per stopword (8×)."""
     staged = df.select(
         "*",
-        F.coalesce(F.col(text_col), F.lit("")).alias("__t"),
+        F.coalesce(F.col("text"), F.lit("")).alias("__t"),
     ).select(
         "*",
         F.filter(F.split(F.col("__t"), r"\s+"), lambda w: w != "").alias("__toks"),
@@ -211,12 +210,10 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.trim(normalized))
 
 
-def rolling_hash_fingerprints_from_tokens(
-    toks: Column, window: int = 8, keep_every: int = 16
-) -> Column:
+def rolling_hash_fingerprints_from_tokens(toks: Column) -> Column:
     """Winnowing-style document fingerprints over a PRE-TOKENIZED array
-    column (`tokens(text)`): hash every `window`-word shingle, keep hashes
-    ≡ 0 (mod keep_every).  array<bigint> sketch usable for containment
+    column (`tokens(text)`): hash every 8-word shingle, keep hashes
+    ≡ 0 (mod 16).  array<bigint> sketch usable for containment
     checks at scale.
 
     Each shingle hash is the first 60 bits of md5 as a non-negative bigint
@@ -225,11 +222,12 @@ def rolling_hash_fingerprints_from_tokens(
 
     Interpreted higher-order lambdas get no common-subexpression reuse:
     when `toks` is the tokens(text) EXPRESSION, the per-element
-    `slice(toks, i, window)` re-runs lower+regex-split+filter for EVERY
+    `slice(toks, i, 8)` re-runs lower+regex-split+filter for EVERY
     shingle — measured 8.4 s → 1.9 s on q62 (5 k docs, ~43 shingles each)
     just by tokenizing once into a stored array column in a prior select
     (the q37 idiom) and shingling from the attribute.  Pass a bare column
     reference here, not a derived expression, to keep that property."""
+    window, keep_every = 8, 16
     num = F.size(toks) - F.lit(window - 1)
     # guard: sequence(1, 0) DESCENDS ([1, 0]) and slice rejects start 0 —
     # a doc shorter than `window` tokens must yield an empty sketch, not
@@ -284,10 +282,9 @@ def redact_pii(text: Column) -> Column:
 # low-quality training data even when surface stats look fine)
 # ---------------------------------------------------------------------------
 
-def repetition_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 2
-) -> DataFrame:
-    """Per-document n-gram repetition: (id, dup_ngram_frac, top_ngram_frac).
+def repetition_stats(df: DataFrame) -> DataFrame:
+    """Per-document word-bigram repetition: (id, dup_ngram_frac,
+    top_ngram_frac).
 
     dup_ngram_frac = 1 - distinct/total grams (how much of the doc is
     repeated phrasing); top_ngram_frac = share of the single most frequent
@@ -321,6 +318,7 @@ def repetition_stats(
     )
 
     token_re = re.compile(r"[^a-z0-9]+")
+    n = 2
     coef = _window_coef(n)
 
     @pandas_udf("struct<total: long, nd: long, top: long>")
@@ -338,11 +336,11 @@ def repetition_stats(
         return pd.DataFrame(rows, columns=["total", "nd", "top"])
 
     stats = parallelize_for_udf(df).select(
-        F.col(id_col), rep_kernel(F.col(text_col)).alias("__s")
+        F.col("doc_id"), rep_kernel(F.col("text")).alias("__s")
     )
     r4 = lambda c: F.floor(c * 10000.0 + 0.5) / 10000.0  # noqa: E731
     return stats.select(
-        F.col(id_col),
+        F.col("doc_id"),
         r4(1.0 - F.col("__s.nd") / F.col("__s.total")).alias("dup_ngram_frac"),
         r4(F.col("__s.top") / F.col("__s.total")).alias("top_ngram_frac"),
     )
@@ -368,21 +366,20 @@ def _chunk_token_list(
 
 def chunk_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_tokens: int = 512,
     stride: int | None = None,
 ) -> DataFrame:
-    """Sliding-window document chunking — the pretraining prep step that
-    turns long documents into context-length pieces BEFORE packing
-    (pack_sequences then lays the chunks into fixed token budgets).
+    """Sliding-window chunking of (doc_id, text) documents — the
+    pretraining prep step that turns long documents into context-length
+    pieces BEFORE packing (pack_sequences then lays the chunks into fixed
+    token budgets).
     `stride` < `chunk_tokens` gives overlapping windows (RoBERTa-style
     stride training); the default stride == chunk_tokens tiles the doc
     without overlap.
 
     Chunks start at every multiple of `stride` below the token count, so
     the final window may be short; a 0-token / NULL doc emits no chunks.
-    Returns (id_col, chunk_idx, n_tokens, chunk_text).
+    Returns (doc_id, chunk_idx, n_tokens, chunk_text).
 
     Contract: tokens are ASCII-whitespace splits and `chunk_text` is the
     token slice REJOINED with single spaces — deterministic and
@@ -401,15 +398,13 @@ def chunk_documents(
     if stride <= 0 or chunk_tokens <= 0:
         raise ValueError("chunk_tokens and stride must be positive")
 
-    id_type = dict(df.dtypes)[id_col]
-    schema = (
-        f"{id_col} {id_type}, chunk_idx int, n_tokens int, chunk_text string"
-    )
+    id_type = dict(df.dtypes)["doc_id"]
+    schema = f"doc_id {id_type}, chunk_idx int, n_tokens int, chunk_text string"
 
     def chunk(batches):
         for pdf in batches:
             ids, idxs, lens, texts = [], [], [], []
-            for doc_id, t in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
                 if t is None:
                     continue
                 for i, piece in enumerate(
@@ -420,13 +415,13 @@ def chunk_documents(
                     lens.append(len(piece))
                     texts.append(" ".join(piece))
             yield pd.DataFrame(
-                {id_col: ids, "chunk_idx": idxs, "n_tokens": lens,
+                {"doc_id": ids, "chunk_idx": idxs, "n_tokens": lens,
                  "chunk_text": texts}
             )
 
     from tegallega_spark.operators.dedup import parallelize_for_udf
 
-    return parallelize_for_udf(df.select(id_col, text_col)).mapInPandas(
+    return parallelize_for_udf(df.select("doc_id", "text")).mapInPandas(
         chunk, schema=schema
     )
 
@@ -459,23 +454,25 @@ def dedupe_paragraphs(text: Column) -> Column:
     )
 
 
+# Trimmed lines shorter than this are never boilerplate (remove_boilerplate_lines).
+MIN_LINE_CHARS = 10
+# Largest blocked-line set remove_boilerplate_lines hints as a broadcast.
+BOILERPLATE_BROADCAST_LIMIT = 10_000_000
+
+
 def remove_boilerplate_lines(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_doc_frequency: int = 2,
-    min_line_chars: int = 10,
-    broadcast_limit: int | None = 10_000_000,
 ) -> DataFrame:
     """Cross-document line-level dedup (the C4/CCNet boilerplate cut):
     drop every line whose TRIMMED form appears in more than
     `max_doc_frequency` distinct documents — navigation menus, cookie
     banners, footers — and reassemble each document with its surviving
-    lines in original order.  Lines shorter than `min_line_chars` after
+    lines in original order.  Lines shorter than MIN_LINE_CHARS after
     trimming (blank lines, lone punctuation) are exempt: they are
     universal, not boilerplate.
 
-    Returns df with `text_col` replaced.  NULL text stays NULL (split on
+    Returns df with `text` replaced.  NULL text stays NULL (split on
     NULL explodes to zero rows, so the rebuild misses the doc; the final
     select restores the NULL rather than normalizing it to '').  A
     non-NULL doc whose every line is blocked becomes the empty string.
@@ -492,10 +489,10 @@ def remove_boilerplate_lines(
     map-side-combines before the exchange).
     """
     lines = df.select(
-        F.col(id_col).alias("__doc"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("__pos", "__line"),
+        F.col("doc_id").alias("__doc"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("__pos", "__line"),
     ).withColumn("__t", F.trim(F.col("__line")))
-    eligible = F.length("__t") >= min_line_chars
+    eligible = F.length("__t") >= MIN_LINE_CHARS
     hashed = lines.withColumn(
         "__h", F.when(eligible, F.xxhash64("__t")).otherwise(F.lit(None))
     )
@@ -511,21 +508,17 @@ def remove_boilerplate_lines(
     # lowered AQE threshold) would silently turn this into a full
     # sort-merge shuffle of every line hash in the corpus.  But the hint
     # bypasses AQE's size safety, so it is GATED on the actual count
-    # (ADVICE r4): a pathological corpus (low max_doc_frequency on crawl
-    # spam) can push the blocked set to tens of millions of hashes, and
+    # against BOILERPLATE_BROADCAST_LIMIT (ADVICE r4): a pathological
+    # corpus (low max_doc_frequency on crawl spam) can push the blocked
+    # set to tens of millions of hashes, and
     # hard-forcing that broadcast OOMs the driver instead of degrading to
     # a shuffle join.  The count rides the persisted blocked frame, so
     # the aggregation runs once; the handle is attached for release.
-    handles = ()
-    if broadcast_limit is not None:
-        blocked = blocked.persist()
-        handles = (blocked,)
-        n_blocked = blocked.count()
-        blocked_side = (
-            F.broadcast(blocked) if n_blocked <= broadcast_limit else blocked
-        )
-    else:
-        blocked_side = F.broadcast(blocked)
+    blocked = blocked.persist()
+    n_blocked = blocked.count()
+    blocked_side = (
+        F.broadcast(blocked) if n_blocked <= BOILERPLATE_BROADCAST_LIMIT else blocked
+    )
     kept = hashed.join(blocked_side, "__h", "left_anti")
     rebuilt = kept.groupBy("__doc").agg(
         F.array_join(
@@ -536,19 +529,19 @@ def remove_boilerplate_lines(
             "\n",
         ).alias("__new_text")
     )
-    others = [c for c in df.columns if c != text_col]
+    others = [c for c in df.columns if c != "text"]
     out = (
-        df.join(rebuilt, F.col(id_col) == F.col("__doc"), "left")
+        df.join(rebuilt, F.col("doc_id") == F.col("__doc"), "left")
         .select(
             *others,
-            F.when(F.col(text_col).isNull(), F.lit(None).cast("string"))
+            F.when(F.col("text").isNull(), F.lit(None).cast("string"))
             .otherwise(F.coalesce("__new_text", F.lit("")))
-            .alias(text_col),
+            .alias("text"),
         )
     )
     from tegallega_spark.session import attach_intermediates
 
-    return attach_intermediates(out, *handles) if handles else out
+    return attach_intermediates(out, blocked)
 
 
 def normalize_text_udf():
@@ -649,7 +642,7 @@ def _span_shingle_udf(k: int):
 
 
 def _token_shingle_positions(
-    df: DataFrame, id_col: str, text_col: str, k: int
+    df: DataFrame, k: int
 ) -> DataFrame:
     """(doc, token position, hash of the k-token shingle starting there).
     Whitespace tokens; a doc shorter than k tokens emits nothing."""
@@ -657,15 +650,13 @@ def _token_shingle_positions(
 
     sh = _span_shingle_udf(k)
     return parallelize_for_udf(df).select(
-        F.col(id_col).alias("__doc"),
-        F.posexplode(sh(F.col(text_col))).alias("__pos", "__h"),
+        F.col("doc_id").alias("__doc"),
+        F.posexplode(sh(F.col("text"))).alias("__pos", "__h"),
     )
 
 
 def _single_task_duplicated_spans(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     k: int,
     min_count: int,
 ) -> DataFrame:
@@ -681,10 +672,10 @@ def _single_task_duplicated_spans(
     import numpy as np
     import pyspark.sql.types as T
 
-    id_t = df.schema[id_col].dataType
+    id_t = df.schema["doc_id"].dataType
     schema = T.StructType(
         [
-            T.StructField(id_col, id_t),
+            T.StructField("doc_id", id_t),
             T.StructField("start_tok", T.IntegerType()),
             T.StructField("end_tok", T.IntegerType()),
         ]
@@ -696,8 +687,8 @@ def _single_task_duplicated_spans(
         doc_ids: list = []
         doc_wins: list = []  # per row: uint64 window-hash array
         for pdf in batches:
-            doc_ids.extend(pdf[id_col].tolist())
-            doc_wins.extend(_span_window_hashes(pdf[text_col], k))
+            doc_ids.extend(pdf["doc_id"].tolist())
+            doc_wins.extend(_span_window_hashes(pdf["text"], k))
         if not doc_ids:
             return
         all_h = np.concatenate(doc_wins)
@@ -748,19 +739,17 @@ def _single_task_duplicated_spans(
         span_last = np.concatenate([span_first[1:] - 1, [len(p_s) - 1]])
         yield pd.DataFrame(
             {
-                id_col: uniq_ids[c_s[span_first]],
+                "doc_id": uniq_ids[c_s[span_first]],
                 "start_tok": p_s[span_first].astype(np.int32),
                 "end_tok": (p_s[span_last] + k).astype(np.int32),
             }
         )
 
-    return df.select(id_col, text_col).coalesce(1).mapInPandas(fn, schema)
+    return df.select("doc_id", "text").coalesce(1).mapInPandas(fn, schema)
 
 
 def duplicated_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
     min_count: int = 2,
 ) -> DataFrame:
@@ -772,7 +761,7 @@ def duplicated_spans(
     duplicated windows reconstructs the maximal span; spans shorter than
     k are below the operator's resolution and not reported).
 
-    Returns (id_col, start_tok, end_tok) with end exclusive, in token
+    Returns (doc_id, start_tok, end_tok) with end exclusive, in token
     coordinates of the whitespace tokenization.
 
     Scale shape: shingle hashing is ONE Arrow pass over the corpus
@@ -798,8 +787,8 @@ def duplicated_spans(
     from tegallega_spark.session import plan_size_bytes, small_scan_input
 
     if small_scan_input(df):
-        return _single_task_duplicated_spans(df, id_col, text_col, k, min_count)
-    sh = _token_shingle_positions(df, id_col, text_col, k)
+        return _single_task_duplicated_spans(df, k, min_count)
+    sh = _token_shingle_positions(df, k)
     # Size the wide exchange for the sort-based WindowExec behind it from
     # the INPUT size, not the core count: the shingle frame carries ~one
     # row per corpus token (~64× the compressed text bytes — 320k docs /
@@ -827,10 +816,10 @@ def duplicated_spans(
     hits = counted.filter(F.col("__n") >= min_count).select(
         "__doc", F.col("__pos").alias("__start"), (F.col("__pos") + k).alias("__end")
     )
-    return _merge_window_hits(hits, id_col)
+    return _merge_window_hits(hits)
 
 
-def _merge_window_hits(hits: DataFrame, id_col: str) -> DataFrame:
+def _merge_window_hits(hits: DataFrame) -> DataFrame:
     """(__doc, __start, __end) windows → maximal merged spans per doc.
     Interval merge via the classic running-max window: a window starts a
     new span iff it begins after the running max end of all earlier
@@ -851,7 +840,7 @@ def _merge_window_hits(hits: DataFrame, id_col: str) -> DataFrame:
     return (
         flagged.groupBy("__doc", "__span")
         .agg(F.min("__start").alias("start_tok"), F.max("__end").alias("end_tok"))
-        .select(F.col("__doc").alias(id_col), "start_tok", "end_tok")
+        .select(F.col("__doc").alias("doc_id"), "start_tok", "end_tok")
     )
 
 
@@ -913,8 +902,6 @@ def _span_cut_udf():
 
 def remove_duplicate_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
     min_count: int = 2,
 ) -> DataFrame:
@@ -935,13 +922,13 @@ def remove_duplicate_spans(
     anti-join and a collect_list — two corpus-sized token shuffles that
     this formulation replaces with one doc-keyed join of a small frame.
     Nothing persists, so there is nothing for callers to release."""
-    spans = duplicated_spans(df, id_col, text_col, k, min_count)
-    per_doc = spans.groupBy(id_col).agg(
+    spans = duplicated_spans(df, k, min_count)
+    per_doc = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("start_tok", "end_tok"))).alias("__spans")
-    ).withColumnRenamed(id_col, "__doc")
+    ).withColumnRenamed("doc_id", "__doc")
     cut = _span_cut_udf()
-    others = [c for c in df.columns if c != text_col]
+    others = [c for c in df.columns if c != "text"]
     return (
-        df.join(per_doc, F.col(id_col) == F.col("__doc"), "left")
-        .select(*others, cut(F.col(text_col), F.col("__spans")).alias(text_col))
+        df.join(per_doc, F.col("doc_id") == F.col("__doc"), "left")
+        .select(*others, cut(F.col("text"), F.col("__spans")).alias("text"))
     )

@@ -152,12 +152,7 @@ def _stage_boundary(df: DataFrame, path: str, handles=()) -> DataFrame:
 
 
 def mini_clean_corpus(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mixture_targets: dict[str, float],
-    mixture_stratum: str = "source",
+    docs: DataFrame, *, mixture_targets: dict[str, float]
 ) -> DataFrame:
     """The composed normalize → paragraph-dedup → Gopher-gate → mixture
     prefix of `clean_corpus`, exposed as an oracle-checkable unit.
@@ -169,7 +164,7 @@ def mini_clean_corpus(
     optional middle stages (line/span cut) and the tail stages
     (near-dup clustering, stratified sample, packing) disabled — the
     remaining four stages run in the identical order with the identical
-    composition idioms: in-place text_col rewrite, left-semi gate join,
+    composition idioms: in-place `text` rewrite, left-semi gate join,
     persist before the mixture stage's per-stratum count action.
 
     Composition sensitivity: the Gopher word count is computed on the
@@ -177,19 +172,20 @@ def mini_clean_corpus(
     from the per-stratum counts of the GATED corpus — a stage that reads
     stale text or pre-gate counts produces a different survivor set.
 
-    Returns the surviving rows with `text_col` rewritten; strata not in
-    `mixture_targets` are dropped (mixture_sample's contract).
+    Returns the surviving rows with `text` rewritten; `source` strata
+    not in `mixture_targets` are dropped (mixture_sample's
+    contract).
     """
     source = docs
     nt = TXT.normalize_text_udf()
-    docs = docs.withColumn(text_col, nt(F.col(text_col)))
-    docs = docs.withColumn(text_col, TXT.dedupe_paragraphs(F.col(text_col)))
+    docs = docs.withColumn("text", nt(F.col("text")))
+    docs = docs.withColumn("text", TXT.dedupe_paragraphs(F.col("text")))
     # Gate inline (gopher_pass_filter) instead of flags-frame + left-semi
     # join: the join shape evaluated the whole upstream lineage TWICE —
     # the Arrow normalize pass and the caller's text construction ran
     # once per branch — plus a join exchange; the in-place filter is one
     # pass and keeps the survivor set identical.
-    docs = TXT.gopher_pass_filter(docs, text_col)
+    docs = TXT.gopher_pass_filter(docs)
     # mixture_sample's per-stratum count is an action; persist the gated
     # corpus so the final output doesn't re-run the Arrow normalize pass
     # (same rationale as clean_corpus stage 3.5).  The count's stage
@@ -198,7 +194,7 @@ def mini_clean_corpus(
     docs = docs.persist()
     with aqe_off_for_small_input(source):
         kept = mixture_sample(
-            docs, key=id_col, stratum=mixture_stratum, targets=mixture_targets
+            docs, key="doc_id", stratum="source", targets=mixture_targets
         )
     return attach_intermediates(kept, docs)
 
@@ -207,9 +203,6 @@ def clean_corpus(
     docs: DataFrame,
     blocklist: DataFrame | None = None,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stratum_col: str = "lang",
     min_quality: float = 0.5,
     max_dup_ngram_frac: float = 0.5,
     shingle_n: int = 4,
@@ -227,9 +220,9 @@ def clean_corpus(
     gopher_rules: bool = False,
     paragraph_dedup: bool = False,
     mixture_targets: dict[str, float] | None = None,
-    mixture_stratum: str = "source",
 ) -> DataFrame:
-    """Clean, dedup, sample, and pack a document corpus.
+    """Clean, dedup, sample, and pack a document corpus of (doc_id,
+    text, lang) rows.
 
     Returns one row per surviving document with the full provenance:
     (id, stratum, bucket, quality, dup_ngram_frac, cluster_id, n_tokens,
@@ -270,7 +263,7 @@ def clean_corpus(
     the first scan.
 
     `mixture_targets` (opt-in): rebalance the SURVIVING corpus to target
-    domain shares over `mixture_stratum` (sampling.mixture_sample, The
+    domain shares over `source` (sampling.mixture_sample, The
     Pile-style "30% web / 30% books" specification) — runs after dedup so
     the mixture is computed over unique documents, before packing so the
     packed shards carry the final mixture.  Strata not in the map are
@@ -302,7 +295,6 @@ def clean_corpus(
         with aqe_off_for_small_input(docs):
             out = _clean_corpus_impl(
                 docs, blocklist,
-                id_col=id_col, text_col=text_col, stratum_col=stratum_col,
                 min_quality=min_quality, max_dup_ngram_frac=max_dup_ngram_frac,
                 shingle_n=shingle_n, jaccard_threshold=jaccard_threshold,
                 sample_thresholds=sample_thresholds,
@@ -314,7 +306,6 @@ def clean_corpus(
                 span_dedup_min_count=span_dedup_min_count,
                 gopher_rules=gopher_rules,
                 paragraph_dedup=paragraph_dedup, mixture_targets=mixture_targets,
-                mixture_stratum=mixture_stratum,
                 stage_boundary_dir=stage_boundary_dir,
             )
     except BaseException:
@@ -334,9 +325,6 @@ def _clean_corpus_impl(
     docs: DataFrame,
     blocklist: DataFrame | None,
     *,
-    id_col: str,
-    text_col: str,
-    stratum_col: str,
     min_quality: float,
     max_dup_ngram_frac: float,
     shingle_n: int,
@@ -354,7 +342,6 @@ def _clean_corpus_impl(
     gopher_rules: bool,
     paragraph_dedup: bool,
     mixture_targets: dict[str, float] | None,
-    mixture_stratum: str,
     stage_boundary_dir: str | None,
 ) -> DataFrame:
     # 0. optional C4/CCNet-style cross-document line dedup — rewrite the
@@ -366,12 +353,12 @@ def _clean_corpus_impl(
         # step -1: unicode NFC + control-strip + whitespace collapse, so
         # every downstream hash (line, span, shingle) sees canonical text
         nt = TXT.normalize_text_udf()
-        docs = docs.withColumn(text_col, nt(F.col(text_col)))
+        docs = docs.withColumn("text", nt(F.col("text")))
     if paragraph_dedup:
         # intra-doc repeat cut BEFORE any corpus-wide hashing: a doc whose
         # footer repeats 40x would otherwise look like 40 duplicated lines
         # to the cross-doc cut and depress its own quality/repetition stats
-        docs = docs.withColumn(text_col, TXT.dedupe_paragraphs(F.col(text_col)))
+        docs = docs.withColumn("text", TXT.dedupe_paragraphs(F.col("text")))
     if (normalize or paragraph_dedup) and line_dedup_max_df is not None:
         # The line cut's doc-rebuild JOINS the corpus against its own
         # exploded lines, and its broadcast-gate count is a separate
@@ -388,7 +375,7 @@ def _clean_corpus_impl(
         line_cut_handles = (docs,)
     if line_dedup_max_df is not None:
         docs = TXT.remove_boilerplate_lines(
-            docs, id_col, text_col, max_doc_frequency=line_dedup_max_df
+            docs, max_doc_frequency=line_dedup_max_df
         )
         # the blocked-hash set persists inside (size-gated broadcast);
         # later transforms return new DataFrames that drop the attribute,
@@ -406,7 +393,7 @@ def _clean_corpus_impl(
     if span_dedup_k is not None:
         # persists nothing (single-exchange formulation) — no handle to ride
         docs = TXT.remove_duplicate_spans(
-            docs, id_col, text_col, k=span_dedup_k,
+            docs, k=span_dedup_k,
             min_count=span_dedup_min_count,
         )
         if stage_boundary_dir is not None:
@@ -422,13 +409,13 @@ def _clean_corpus_impl(
         # everything upstream of the text twice (once per join branch)
         # plus a join exchange — gopher_pass_filter is one pass and the
         # identical survivor set (q72 evidence: 5.2 s -> 1.8 s)
-        docs = TXT.gopher_pass_filter(docs, text_col)
+        docs = TXT.gopher_pass_filter(docs)
 
     # 1. quality + repetition gate (scan-side)
-    scored = docs.withColumn("quality", TXT.quality_score(F.col(text_col)))
-    rep = TXT.repetition_stats(docs, id_col, text_col, n=2)
+    scored = docs.withColumn("quality", TXT.quality_score(F.col("text")))
+    rep = TXT.repetition_stats(docs)
     kept = (
-        scored.join(rep, id_col)
+        scored.join(rep, "doc_id")
         .filter(
             (F.col("quality") >= min_quality)
             & (F.col("dup_ngram_frac") <= max_dup_ngram_frac)
@@ -439,9 +426,9 @@ def _clean_corpus_impl(
     # 2. decontamination (broadcast blocklist; anti-join keeps clean docs)
     if blocklist is not None:
         contaminated = contamination_report(
-            kept, blocklist, id_col, text_col, shingle_n
-        ).select(id_col)
-        kept = kept.join(contaminated, id_col, "left_anti")
+            kept, blocklist, shingle_n
+        ).select("doc_id")
+        kept = kept.join(contaminated, "doc_id", "left_anti")
 
     # 3. near-dup clustering; keep the canonical (min-id) doc per cluster
     #
@@ -455,22 +442,21 @@ def _clean_corpus_impl(
     kept = corpus_handle = kept.persist()
     if dedup_strategy == "exact":
         pairs = exact_shingle_jaccard_pairs(
-            kept, id_col, text_col, shingle_n, jaccard_threshold,
+            kept, shingle_n, jaccard_threshold,
             max_df=max_shingle_df,
         )
     elif dedup_strategy == "minhash":
         pairs = minhash_near_duplicates_verified(
-            kept, id_col, text_col, shingle_n=shingle_n,
+            kept, "doc_id", "text", shingle_n=shingle_n,
             jaccard_threshold=jaccard_threshold, max_bucket=max_shingle_df,
         )
     else:
         raise ValueError(f"unknown dedup_strategy {dedup_strategy!r}")
-    assignments = dedup_cluster_assignments(pairs, "id_a", "id_b")
-    clusters = assignments.withColumnRenamed("doc_id", id_col)
+    assignments = dedup_cluster_assignments(pairs)
     kept = (
-        kept.join(clusters.select(id_col, "cluster_id"), id_col, "left")
-        .withColumn("cluster_id", F.coalesce("cluster_id", F.col(id_col)))
-        .filter(F.col("cluster_id") == F.col(id_col))
+        kept.join(assignments.select("doc_id", "cluster_id"), "doc_id", "left")
+        .withColumn("cluster_id", F.coalesce("cluster_id", F.col("doc_id")))
+        .filter(F.col("cluster_id") == F.col("doc_id"))
     )
 
     # 3.5 optional domain-mixture rebalancing — after dedup (shares are
@@ -482,20 +468,20 @@ def _clean_corpus_impl(
         kept = kept.persist()
         mixture_handles = (kept,)
         kept = mixture_sample(
-            kept, key=id_col, stratum=mixture_stratum, targets=mixture_targets
+            kept, key="doc_id", stratum="source", targets=mixture_targets
         )
 
     # 4. deterministic stratified sampling (scan filter, reproducible)
     kept = stratified_hash_sample(
-        kept, id_col, stratum_col, sample_thresholds or {}, default_sample_threshold
+        kept, "doc_id", "lang", sample_thresholds or {}, default_sample_threshold
     )
 
     # 5. sequence packing (sharded cumsum window)
-    kept = kept.withColumn("n_tokens", TXT.token_count(F.col(text_col))).withColumn(
-        "shard", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
+    kept = kept.withColumn("n_tokens", TXT.token_count(F.col("text"))).withColumn(
+        "shard", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_shards))
     )
     packed = pack_sequences(
-        kept, token_col="n_tokens", order_col=id_col, shard_col="shard",
+        kept, token_col="n_tokens", order_col="doc_id", shard_col="shard",
         budget=pack_budget,
     )
     # pairs' persisted LSH/postings intermediates, the cluster-assignment
@@ -503,7 +489,7 @@ def _clean_corpus_impl(
     # release_intermediates(out)
     return attach_intermediates(
         packed.select(
-            id_col, stratum_col, "bucket", "quality", "dup_ngram_frac", "cluster_id",
+            "doc_id", "lang", "bucket", "quality", "dup_ngram_frac", "cluster_id",
             "n_tokens", "shard", "pack_id", "pack_offset", "spills_over",
         ),
         pairs,

@@ -40,7 +40,6 @@ from tegallega_spark.sources.overpass import (
     fetch_relation_bundle,
 )
 
-MAX_DISTANCE_KM = 0.25  # js:282
 MIN_DISTANCE_KM = 0.15  # js:283
 
 
@@ -82,7 +81,7 @@ def angkot_stops(
     """
     # the array frame is read by the interpolation + near-real filter —
     # persist and ride the handle out on the result (session pattern)
-    poly = polyline_arrays(stitched, key="relation_id").persist()
+    poly = polyline_arrays(stitched).persist()
 
     # J4: project real stops (by member order, ids may repeat)
     pts = real_stops.select(
@@ -108,14 +107,11 @@ def angkot_stops(
     virt = interpolate_virtual_stops_along_polyline(
         real.select("relation_id", F.col("pid").alias("member_order"), "lon", "lat", "frac_idx"),
         poly,
-        key="relation_id",
-        order_col="member_order",
-        max_gap_km=MAX_DISTANCE_KM,
     )
     # J5: too close to ANY real stop of the relation (js:311-313)
     virt = drop_near_real_arr(
         virt, real.select("relation_id", "lon", "lat"),
-        key="relation_id", max_dist_m=MIN_DISTANCE_KM * 1000,
+        max_dist_m=MIN_DISTANCE_KM * 1000,
     )
     # A7 lookup: virtual stop name = street of the exactly-matching vertex,
     # default 'Jalan terdekat' (js:324 — the exact-coordinate lookup only
@@ -170,7 +166,6 @@ def angkot_stops(
                 "relation_id", "stop_id", "name", "role", "lon", "lat",
                 "frac_idx", "is_real",
             ),
-            key="relation_id",
         ),
         poly,
         real,
@@ -186,7 +181,7 @@ def extract_route(
     """processRoute (js:379-474): returns (stitched way vertices, stops)."""
     bundle = fetch_relation_bundle(relation_id, fetch_fn)
     ways_df, nodes_df = bundle_to_dataframes(spark, relation_id, bundle)
-    stitched = stitch_ways(ways_df, key="relation_id")
+    stitched = stitch_ways(ways_df)
     if mode == "angkot":
         stops = angkot_stops(nodes_df, stitched, ways_df)
     else:

@@ -21,9 +21,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
-def partition_fingerprints(df: DataFrame, key: str = "relation_id") -> DataFrame:
-    """Content hash per partition: order-insensitive fingerprint (the
-    data-level analogue of the reference's git diff)."""
+def partition_fingerprints(df: DataFrame) -> DataFrame:
+    """Content hash per relation_id partition: order-insensitive
+    fingerprint (the data-level analogue of the reference's git diff)."""
     # bit_xor alone is blind to changes that preserve even row
     # multiplicities (xor of two identical rows cancels: swapping 2×A for
     # 2×B keeps xor AND count unchanged), so pair it with a sum of hashes.
@@ -33,12 +33,12 @@ def partition_fingerprints(df: DataFrame, key: str = "relation_id") -> DataFrame
     # canonical column order: a partitioned read-back reorders columns
     # (partition key last), which must not change the fingerprint
     row_hash = F.xxhash64(*[F.col(c) for c in sorted(df.columns)])
-    return df.groupBy(key).agg(
+    return df.groupBy("relation_id").agg(
         F.bit_xor(row_hash).alias("__x"),
         F.sum(row_hash.cast("decimal(38,0)")).alias("__s"),
         F.count("*").alias("__n"),
     ).select(
-        key,
+        "relation_id",
         F.xxhash64(
             F.col("__x").cast("string"),
             F.col("__s").cast("string"),
@@ -47,39 +47,34 @@ def partition_fingerprints(df: DataFrame, key: str = "relation_id") -> DataFrame
     )
 
 
-def changed_partitions(
-    new: DataFrame, previous: DataFrame | None, key: str = "relation_id"
-) -> DataFrame:
+def changed_partitions(new: DataFrame, previous: DataFrame | None) -> DataFrame:
     """Relations whose content fingerprint differs from the previous run
     (or that are new).  previous=None → everything is changed."""
-    new_fp = partition_fingerprints(new, key)
+    new_fp = partition_fingerprints(new)
     if previous is None:
-        return new_fp.select(key)
-    old_fp = partition_fingerprints(previous, key).withColumnRenamed(
+        return new_fp.select("relation_id")
+    old_fp = partition_fingerprints(previous).withColumnRenamed(
         "fingerprint", "old_fingerprint"
     )
-    j = new_fp.join(old_fp, key, "left")
+    j = new_fp.join(old_fp, "relation_id", "left")
     return j.filter(
         F.col("old_fingerprint").isNull()
         | (F.col("fingerprint") != F.col("old_fingerprint"))
-    ).select(key)
+    ).select("relation_id")
 
 
-def write_partitioned(
-    df: DataFrame, out_dir: str, key: str = "relation_id"
-) -> None:
+def write_partitioned(df: DataFrame, out_dir: str) -> None:
     """Dynamic-partition-overwrite write: only partitions present in `df`
     are replaced; untouched relations keep their existing files."""
     spark = df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode("overwrite").partitionBy(key).parquet(out_dir)
+    df.write.mode("overwrite").partitionBy("relation_id").parquet(out_dir)
 
 
 def incremental_update(
     spark: SparkSession,
     new: DataFrame,
     out_dir: str,
-    key: str = "relation_id",
 ) -> int:
     """One incremental cycle: diff against the current output, rewrite only
     changed/new relation partitions.  Returns #partitions rewritten."""
@@ -90,15 +85,16 @@ def incremental_update(
         # xxhash64(int) never equal xxhash64(string) — every partition would
         # look changed and the pipeline would silently rewrite everything.
         # Cast the key back to the incoming frame's type before fingerprinting.
+        key_type = new.schema["relation_id"].dataType
         previous = previous.withColumn(
-            key, F.col(key).cast(new.schema[key].dataType)
+            "relation_id", F.col("relation_id").cast(key_type)
         )
     except Exception:
         previous = None
-    changed = changed_partitions(new, previous, key)
+    changed = changed_partitions(new, previous)
     n = changed.count()
     if n == 0:
         return 0
-    subset = new.join(F.broadcast(changed), key)
-    write_partitioned(subset, out_dir, key)
+    subset = new.join(F.broadcast(changed), "relation_id")
+    write_partitioned(subset, out_dir)
     return n

@@ -804,7 +804,7 @@ def q23(spark, sf_dir):
     meets the threshold, so a pair-level dedup would keep two of the three."""
     d = T(spark, sf_dir, "documents")
     pairs = D.exact_shingle_jaccard_pairs(
-        d, id_col="doc_id", text_col="text", shingle_n=4, threshold=0.5
+        d, shingle_n=4, threshold=0.5
     )
     return CC.dedup_cluster_assignments(pairs).select("doc_id", "cluster_id", "cluster_size")
 
@@ -868,7 +868,7 @@ def q25(spark, sf_dir):
     blocklist = d.filter(F.col("doc_id") % 29 == 0)
     corpus = d.filter(F.col("doc_id") % 29 != 0)
     return D.contamination_report(
-        corpus, blocklist, id_col="doc_id", text_col="text", shingle_n=4
+        corpus, blocklist, shingle_n=4
     )
 
 
@@ -1090,7 +1090,7 @@ def q33(spark, sf_dir):
         TXT.token_count(F.col("text")).alias("n_tokens"),
         F.length("text").alias("n_chars"),
     )
-    return base.join(TXT.repetition_stats(d, "doc_id", "text", n=2), "doc_id")
+    return base.join(TXT.repetition_stats(d), "doc_id")
 
 
 @register(
@@ -1259,10 +1259,7 @@ def q36(spark, sf_dir):
     whole contract — fingerprints, hamming horizon, exact scores —
     replayable by the DuckDB oracle at any scale."""
     d = T(spark, sf_dir, "documents")
-    pairs = D.simhash_near_duplicates_verified(
-        d, "doc_id", "text", shingle_n=2, max_hamming=12, bands=13,
-        jaccard_threshold=0.7,
-    )
+    pairs = D.simhash_near_duplicates_verified(d, "doc_id", "text")
     return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 
 
@@ -1367,9 +1364,7 @@ def q39(spark, sf_dir):
     (judge finding: the old 0.95 threshold on random vectors returned 0 rows
     — unfalsifiable)."""
     emb = T(spark, sf_dir, "embeddings")
-    pairs = SIM.all_pairs_above(
-        emb, "vec_id", "embedding", min_cosine=0.462, num_planes=2, num_tables=16
-    )
+    pairs = SIM.all_pairs_above(emb, min_cosine=0.462, num_planes=2, num_tables=16)
     return pairs.select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
 
 
@@ -1879,7 +1874,7 @@ def q51(spark, sf_dir):
     k-gram -> count -> interval-merge query as DuckDB SQL — a second
     independent implementation, same contract as scripts/stress_spans.py."""
     d = T(spark, sf_dir, "documents").select("doc_id", "text")
-    return TXT.duplicated_spans(d, "doc_id", "text", k=8, min_count=2).select(
+    return TXT.duplicated_spans(d, k=8, min_count=2).select(
         "doc_id",
         F.col("start_tok").cast("long").alias("start_tok"),
         F.col("end_tok").cast("long").alias("end_tok"),
@@ -2039,7 +2034,7 @@ def q55(spark, sf_dir):
     from tegallega_spark.operators.bpe import bpe_encode_udf, train_bpe
 
     d = T(spark, sf_dir, "documents")
-    merges = train_bpe(d, num_merges=300, min_count=2)
+    merges = train_bpe(d, num_merges=300)
     enc = bpe_encode_udf(merges)
     return d.select(
         "doc_id",
@@ -2100,7 +2095,7 @@ def q56(spark, sf_dir):
     from tegallega_spark.operators.ngram_lm import perplexity_score, train_bigram_lm
 
     d = T(spark, sf_dir, "documents").select("doc_id", "text")
-    lm = train_bigram_lm(d, min_count=2, alpha=0.1)
+    lm = train_bigram_lm(d)
     return perplexity_score(d, lm).select(
         "doc_id",
         F.col("n_bigrams").cast("long").alias("n_bigrams"),
@@ -2420,7 +2415,7 @@ def q61(spark, sf_dir):
         (F.lit(-6.9) + ((F.col("s_suppkey") * 7) % 23) / F.lit(71.0)).alias("lat"),
     )
     virt = SP.interpolate_virtual_stops(
-        stops, key="rel", order_col="frac_idx", max_gap_km=0.4
+        stops, key="rel", max_gap_km=0.4
     )
     return virt.select(
         "rel",
@@ -2468,9 +2463,7 @@ def q62(spark, sf_dir):
     return d.select("doc_id", TXT.tokens(F.col("text")).alias("__toks")).select(
         "doc_id",
         F.explode(
-            TXT.rolling_hash_fingerprints_from_tokens(
-                F.col("__toks"), window=8, keep_every=16
-            )
+            TXT.rolling_hash_fingerprints_from_tokens(F.col("__toks"))
         ).alias("fp"),
     )
 
@@ -2581,7 +2574,7 @@ def q64(spark, sf_dir):
     )
     from tegallega_spark.operators.stateful import stitch_ways
 
-    out = stitch_ways(stored, key="relation_id")
+    out = stitch_ways(stored)
     return out.select(
         "relation_id", "vertex_idx",
         F.round("lon", 6).alias("lon"), F.round("lat", 6).alias("lat"),
@@ -2760,7 +2753,7 @@ def q66(spark, sf_dir):
             + F.col("n_nationkey") * F.lit(0.0007)
         ).alias("lat"),
     )
-    out = SP.line_slice(slices, verts, key="rel", slice_id="slice_id")
+    out = SP.line_slice(slices, verts, key="rel")
     return out.select(
         "slice_id", "pt_seq",
         F.round("lon", 6).alias("lon"), F.round("lat", 6).alias("lat"),
@@ -2828,16 +2821,20 @@ def q68(spark, sf_dir):
         F.col("c_custkey").alias("custkey"),
         F.col("c_mktsegment").alias("mktsegment"),
     )
-    out = salted_join(o, c, key="custkey", salt=8)
+    out = salted_join(o, c, key="custkey")
     return out.select("o_orderkey", "custkey", "mktsegment", "totalprice")
 
 
-def _ann_setup(spark, emb, n_queries: int, sample: int = 8192):
+# The IVF trainer's draw at k=8 lists, max(32·k, 8192); PQ's 4096 is a prefix.
+_ANN_SAMPLE = 8192
+
+
+def _ann_setup(spark, emb, n_queries: int):
     """(query vectors, corpus size, hash-ordered training sample) for the
     IVF-PQ queries in as few driver actions as possible.
 
     ONE collect fetches (vec_id, embedding, xxhash64) ordered by the
-    hash, limited to `sample`: when fewer than `sample` rows come back
+    hash, limited to `sample` (_ANN_SAMPLE): when fewer than `sample` rows come back
     the whole corpus is in hand, so n = len(rows), the query vectors are
     the lowest-vec_id embeddings, and the rows ARE the salt-0 sample in
     _sample_vectors order (ties are value-identical vectors) — every
@@ -2850,6 +2847,7 @@ def _ann_setup(spark, emb, n_queries: int, sample: int = 8192):
     docstring now matches the code)."""
     import numpy as np
 
+    sample = _ANN_SAMPLE
     rows = (
         emb.select("vec_id", F.col("embedding").alias("v"),
                    F.xxhash64("embedding").alias("h"))
@@ -2911,7 +2909,7 @@ def q69(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings")
     qvs, n, sx = _ann_setup(spark, emb, n_queries=1)
     qv = qvs[0]
-    cb = train_pq_codebooks(emb, m=8, k=16, sample_x=sx)
+    cb = train_pq_codebooks(emb, m=8, k=16, n=n, sample_x=sx)
     idx = train_ivf_index_sampled(emb, k=8, n=n, sample_x=sx).encode(cb)
     full = ivfpq_topk(idx, cb, qv, k=n, nprobe=8, rerank=n)
     return (
@@ -3226,7 +3224,7 @@ def q73(spark, sf_dir):
 
     emb = T(spark, sf_dir, "embeddings")
     queries, n, sx = _ann_setup(spark, emb, n_queries=3)
-    cb = train_pq_codebooks(emb, m=8, k=16, sample_x=sx)
+    cb = train_pq_codebooks(emb, m=8, k=16, n=n, sample_x=sx)
     # sampled coarse quantizer: at full probe/rerank the exact per-query
     # top-k is centroid-independent (same argument as q69)
     idx = train_ivf_index_sampled(emb, k=8, n=n, sample_x=sx).encode(cb)

@@ -162,7 +162,14 @@ def plan_size_bytes(df) -> int:
     analyzer's estimate is conservative upward (filters it cannot see
     through keep the parent's size), which is the right direction for
     gating perf heuristics: a small input is never over-reported as
-    smaller than it is."""
+    smaller than it is.
+
+    9223372036854775807 (Long.MaxValue, Catalyst's default) means
+    "unknown": an RDD-backed root such as `spark.createDataFrame(rows,
+    schema)` (a LogicalRDD) has no size statistics, so even a 3-row frame
+    reads that way.  Every gate built on this estimate reads unknown as
+    big and takes its large-input branch (stage boundaries on, AQE left
+    on) — the conservative answer, kept on purpose."""
     return int(str(df._jdf.queryExecution().analyzed().stats().sizeInBytes()))
 
 

@@ -29,21 +29,25 @@ STOP_ROLES = ("stop", "stop_entry_only", "stop_exit_only")  # js:160-165
 FetchFn = Callable[[str], list[dict]]
 
 
-def default_fetch(
-    query: str, retries: int = 3, delay_s: float = 2.0, timeout_s: float = 15.0
-) -> list[dict]:
+# update-routes.js:48-66: attempts per query, linear backoff step, request timeout
+FETCH_RETRIES = 3
+FETCH_DELAY_S = 2.0
+FETCH_TIMEOUT_S = 15.0
+
+
+def default_fetch(query: str) -> list[dict]:
     """GET with retry + linear backoff (update-routes.js:48-66)."""
     url = f"{OVERPASS_URL}?data={urllib.parse.quote(query)}"
     last: Exception | None = None
-    for attempt in range(1, retries + 1):
+    for attempt in range(1, FETCH_RETRIES + 1):
         try:
             if attempt > 1:
-                time.sleep(delay_s * (attempt - 1))
-            with urllib.request.urlopen(url, timeout=timeout_s) as resp:
+                time.sleep(FETCH_DELAY_S * (attempt - 1))
+            with urllib.request.urlopen(url, timeout=FETCH_TIMEOUT_S) as resp:
                 return json.loads(resp.read())["elements"]
         except Exception as e:  # noqa: BLE001 — retry loop mirrors reference
             last = e
-    raise RuntimeError(f"Overpass query failed after {retries} attempts: {last}")
+    raise RuntimeError(f"Overpass query failed after {FETCH_RETRIES} attempts: {last}")
 
 
 def relation_query(relation_id: str) -> str:

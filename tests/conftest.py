@@ -7,7 +7,18 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from hypothesis import settings  # noqa: E402
+
 from tegallega_spark.session import get_spark  # noqa: E402
+
+# Property tests: tier-1 draws the same examples on every run (a derived
+# seed per test, no example database replaying earlier failures), so a red
+# run is reproducible and a green one stays green.  The nightly tier
+# (TEGALLEGA_NIGHTLY=1) draws fresh random examples and keeps exploring.
+# Per-test @settings (max_examples, deadline) apply on top of either.
+settings.register_profile("tier1", derandomize=True, database=None)
+settings.register_profile("nightly", derandomize=False)
+settings.load_profile("nightly" if os.environ.get("TEGALLEGA_NIGHTLY") else "tier1")
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"

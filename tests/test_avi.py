@@ -130,12 +130,13 @@ def test_extract_features_matches_numpy(spark):
     px = rng.randint(0, 256, size=(24, 16, 3), dtype=np.uint8)
     rows = [(1, bytearray(MM.encode_png(px))), (2, bytearray(b"junk"))]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r.doc_id: r for r in MM.extract_features(df, hist_bins=8).collect()}
+    got = {r.doc_id: r for r in MM.extract_features(df).collect()}
     arr = px.astype(np.float64)
     assert got[1].channels == 3 and (got[1].width, got[1].height) == (16, 24)
     assert got[1].mean == pytest.approx(arr.mean(axis=(0, 1)).tolist(), abs=1e-9)
     assert got[1].std == pytest.approx(arr.std(axis=(0, 1)).tolist(), abs=1e-9)
-    hist, _ = np.histogram(arr.mean(axis=2), bins=8, range=(0.0, 256.0))
+    hist, _ = np.histogram(arr.mean(axis=2), bins=16, range=(0.0, 256.0))
+    assert len(got[1].hist) == 16
     assert got[1].hist == pytest.approx((hist / hist.sum()).tolist(), abs=1e-12)
     assert sum(got[1].hist) == pytest.approx(1.0)
     assert got[2].mean is None and got[2].channels == 0

@@ -14,6 +14,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from tegallega_spark.operators.bpe import (
+    MIN_COUNT,
     bpe_encode_udf,
     bpe_word,
     train_bpe,
@@ -54,12 +55,9 @@ def test_train_matches_naive_reference_on_real_corpus(spark, sf_dir):
     from tegallega_spark.session import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("text").limit(120)
-    got = train_bpe(docs, num_merges=200, min_count=2)
+    got = train_bpe(docs, num_merges=200)
 
-    freqs = {
-        r.word: r["count"]
-        for r in word_counts(docs, min_count=2).collect()
-    }
+    freqs = {r.word: r["count"] for r in word_counts(docs).collect()}
     want = naive_bpe(freqs, 200)
     assert got == want
     assert len(got) > 50  # enough merges that the race isn't vacuous
@@ -72,8 +70,8 @@ def test_merge_loop_handles_overlapping_pairs(spark):
     df = spark.createDataFrame(
         [("aaaa aaaa baab",)] * 5, "text string"
     )
-    got = train_bpe(df, num_merges=6, min_count=1)
-    freqs = {r.word: r["count"] for r in word_counts(df, min_count=1).collect()}
+    got = train_bpe(df, num_merges=6)
+    freqs = {r.word: r["count"] for r in word_counts(df).collect()}
     assert got == naive_bpe(freqs, 6)
 
 
@@ -84,7 +82,7 @@ def test_encode_round_trip_and_rank_order(spark, sf_dir):
     from tegallega_spark.session import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(60)
-    merges = train_bpe(docs, num_merges=150, min_count=2)
+    merges = train_bpe(docs, num_merges=150)
     ranks = {p: i for i, p in enumerate(merges)}
 
     rows = docs.collect()
@@ -109,7 +107,7 @@ def test_encode_udf_matches_local_and_preserves_null(spark):
         [(1, "the cat sat on the mat"), (2, "the the the"), (3, None)],
         "doc_id long, text string",
     )
-    merges = train_bpe(df, num_merges=10, min_count=1)
+    merges = train_bpe(df, num_merges=10)
     enc = bpe_encode_udf(merges)
     got = {r.doc_id: r.toks for r in df.select("doc_id", enc("text").alias("toks")).collect()}
     ranks = {p: i for i, p in enumerate(merges)}
@@ -122,13 +120,12 @@ def test_encode_udf_matches_local_and_preserves_null(spark):
 
 
 def test_word_counts_matches_python_counter(spark):
-    texts = ["a b b c", "c c  a", "", "b"]
+    texts = ["a b b c d", "c c  a", "", "b"]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = {r.word: r["count"] for r in word_counts(df, min_count=1).collect()}
+    got = {r.word: r["count"] for r in word_counts(df).collect()}
     want = Counter(w for t in texts for w in t.split())
-    assert got == dict(want)
-    got2 = {r.word: r["count"] for r in word_counts(df, min_count=2).collect()}
-    assert got2 == {w: c for w, c in want.items() if c >= 2}
+    assert got == {w: c for w, c in want.items() if c >= MIN_COUNT}
+    assert got and len(got) < len(want)  # the floor both keeps and drops words
 
 
 def test_min_count_prunes_hapax_from_training(spark):
@@ -136,7 +133,7 @@ def test_min_count_prunes_hapax_from_training(spark):
     df = spark.createDataFrame(
         [("zzzz",), ("aa bb",), ("aa bb",), ("aa bb",)], "text string"
     )
-    merges = train_bpe(df, num_merges=5, min_count=2)
+    merges = train_bpe(df, num_merges=5)
     assert ("z", "z") not in merges
     assert ("a", "a") in merges and ("b", "b") in merges
 

@@ -43,7 +43,7 @@ OPERATORS = {
     ).simhash_near_duplicates_verified(_docs(spark), "doc_id", "text"),
     "semdedup_pairs": lambda spark: __import__(
         "tegallega_spark.operators.semdedup", fromlist=["x"]
-    ).semantic_pairs(_emb(spark), min_cosine=0.9, target_cell_size=38),  # 4 cells
+    ).semantic_pairs(_emb(spark), min_cosine=0.9),  # 4 cells, see the test
     "similarity_lsh": lambda spark: __import__(
         "tegallega_spark.operators.similarity", fromlist=["x"]
     ).all_pairs_above(_emb(spark), min_cosine=0.9),
@@ -105,9 +105,13 @@ DISTRIBUTED = {"minhash", "ngram_lm_score"}
 
 
 @pytest.mark.parametrize("name", sorted(OPERATORS))
-def test_release_restores_persistent_rdd_registry(spark, name, force_shape):
+def test_release_restores_persistent_rdd_registry(spark, name, force_shape, monkeypatch):
     if name in DISTRIBUTED:
         force_shape("distributed")
+    if name == "semdedup_pairs":  # 150 rows at 38 per cell: 4 cells
+        from tegallega_spark.operators import semdedup
+
+        monkeypatch.setattr(semdedup, "TARGET_CELL_SIZE", 38)
     spark.catalog.clearCache()
     before = _persistent_ids(spark)
     out = OPERATORS[name](spark)

@@ -2,11 +2,32 @@
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
+import pytest
+
 import pyspark.sql.functions as F
 
 from tegallega_spark.pipeline.corpus import clean_corpus
-from tegallega_spark.session import load_table
+from tegallega_spark.session import load_table, release_intermediates
 from tests.conftest import SF_SMOKE
+
+_BOUNDARY_DIRS = os.path.join(tempfile.gettempdir(), "tegallega_stage_boundaries_*")
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _no_leaked_stage_boundary_dirs():
+    """clean_corpus's stage-boundary gate reads an in-memory corpus
+    (createDataFrame: unknown size) as big and creates a boundary
+    directory that only release_intermediates(result) removes.  Every test
+    here that fires the gate releases its result, so the module leaves no
+    new directory behind."""
+    before = set(glob.glob(_BOUNDARY_DIRS))
+    yield
+    leaked = set(glob.glob(_BOUNDARY_DIRS)) - before
+    assert not leaked, f"stage-boundary directories left behind: {sorted(leaked)}"
 
 
 def test_clean_corpus_end_to_end(spark):
@@ -55,12 +76,12 @@ def test_hot_shingle_df_cut_bounds_candidates(spark):
     docs = spark.createDataFrame(rows, "doc_id int, text string")
 
     # Uncapped: every pair shares the universal shingle -> n(n-1)/2 pairs.
-    uncapped = exact_shingle_jaccard_pairs(docs, "doc_id", "text", 4, 0.01)
+    uncapped = exact_shingle_jaccard_pairs(docs, 4, 0.01)
     assert uncapped.count() == n * (n - 1) // 2
 
     # DF-cut drops the universal shingle; no other shingle is shared, so
     # the candidate join emits zero rows — the bound, not just a filter.
-    capped = exact_shingle_jaccard_pairs(docs, "doc_id", "text", 4, 0.01, max_df=10)
+    capped = exact_shingle_jaccard_pairs(docs, 4, 0.01, max_df=10)
     assert capped.count() == 0
 
 
@@ -70,8 +91,8 @@ def test_df_cut_is_noop_when_not_binding(spark):
     from tegallega_spark.operators.dedup import exact_shingle_jaccard_pairs
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    a = exact_shingle_jaccard_pairs(docs, "doc_id", "text", 4, 0.5).collect()
-    b = exact_shingle_jaccard_pairs(docs, "doc_id", "text", 4, 0.5, max_df=10_000).collect()
+    a = exact_shingle_jaccard_pairs(docs, 4, 0.5).collect()
+    b = exact_shingle_jaccard_pairs(docs, 4, 0.5, max_df=10_000).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
@@ -81,7 +102,6 @@ def test_single_task_pair_gen_matches_distributed(spark, force_shape):
     postings-join shape, across the DF-cut, duplicate ids, and string
     ids."""
     from tegallega_spark.operators.dedup import exact_shingle_jaccard_pairs
-    from tegallega_spark.session import release_intermediates
 
     def both(docs, **kw):
         force_shape("single")
@@ -128,7 +148,7 @@ def test_clean_corpus_drops_near_duplicates(spark):
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text", "lang")
     from tegallega_spark.operators.dedup import exact_shingle_jaccard_pairs
 
-    pairs = exact_shingle_jaccard_pairs(docs, "doc_id", "text", 4, 0.5).collect()
+    pairs = exact_shingle_jaccard_pairs(docs, 4, 0.5).collect()
     out_ids = {
         r.doc_id
         for r in clean_corpus(docs, None, min_quality=0.0,
@@ -164,6 +184,7 @@ def test_clean_corpus_line_dedup_stage(spark):
         n_shards=2,
     )
     ids = sorted(r.doc_id for r in out.collect())
+    release_intermediates(out)
     assert ids == [0, 1, 2]
 
     out_nodedup = clean_corpus(
@@ -176,6 +197,7 @@ def test_clean_corpus_line_dedup_stage(spark):
         n_shards=2,
     )
     assert out_nodedup.count() < 3  # the banner glued them together
+    release_intermediates(out_nodedup)
 
 
 def test_clean_corpus_span_dedup_stage(spark):
@@ -199,6 +221,7 @@ def test_clean_corpus_span_dedup_stage(spark):
         df, min_quality=0.0, max_dup_ngram_frac=1.0, jaccard_threshold=0.5
     )
     assert sorted(r.doc_id for r in out_glued.collect()) == [1]
+    release_intermediates(out_glued)
 
     # with it, the boilerplate is stripped before shingling → all six
     # docs survive as distinct documents
@@ -206,7 +229,9 @@ def test_clean_corpus_span_dedup_stage(spark):
         df, min_quality=0.0, max_dup_ngram_frac=1.0, jaccard_threshold=0.5,
         span_dedup_k=8,
     )
-    assert sorted(r.doc_id for r in out.collect()) == [1, 2, 3, 4, 5, 6]
+    ids = sorted(r.doc_id for r in out.collect())
+    release_intermediates(out)
+    assert ids == [1, 2, 3, 4, 5, 6]
 
 
 def test_clean_corpus_normalize_stage(spark):
@@ -258,7 +283,6 @@ def test_clean_corpus_mixture_and_paragraph_stages(spark):
     """mixture_targets rebalances the post-dedup corpus to target shares
     (binding stratum kept whole, absent strata dropped); paragraph_dedup
     rewrites text before token counting; persisted intermediates release."""
-    from tegallega_spark.session import release_intermediates
 
     base = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text", "lang")
     # plant sources: 0-199 web, 200-299 books, everything else 'other'
@@ -305,7 +329,6 @@ def test_clean_corpus_survivors_same_with_and_without_aqe_off_window(spark, monk
     window fires and when the size probe reports a big input and AQE
     stays on."""
     from tegallega_spark import session as S
-    from tegallega_spark.session import release_intermediates
 
     docs = (
         load_table(spark, SF_SMOKE, "documents")
@@ -336,11 +359,7 @@ def test_stage_boundary_output_identical_and_releases_upstream(spark, monkeypatc
     (post line cut, post span cut), and unpersist the pre-cut corpus
     handle so its blocks + upstream shuffle files can be released before
     the pair/CC waves."""
-    import glob
-    import os
-
     from tegallega_spark.pipeline import corpus
-    from tegallega_spark.session import release_intermediates
 
     docs = (
         load_table(spark, SF_SMOKE, "documents")
@@ -388,12 +407,8 @@ def test_stage_boundary_auto_gate_regimes(spark, monkeypatch, tmp_path):
     boundary parquet into an auto temp dir whose handle
     release_intermediates removes; default auto stays OFF for a toy corpus
     (identical rows, no temp dir)."""
-    import glob
-    import os
-
     from tegallega_spark.pipeline import corpus
     from tegallega_spark.pipeline.corpus import stage_boundaries_needed
-    from tegallega_spark.session import release_intermediates
 
     gib = 1 << 30
     # the ENOSPC regime the gate exists for: projected 83 GB spill vs 75 GB

@@ -286,7 +286,7 @@ def test_distributed_fetch_feeds_extract_chain(spark):
 
     multi_fetch = _make_multi_fetch()
     ways_d, nodes_d = fetch_bundles_distributed(spark, ["900"], multi_fetch)
-    stitched = stitch_ways(ways_d, key="relation_id")
+    stitched = stitch_ways(ways_d)
     stops = angkot_stops(nodes_d, stitched, ways_d)
     via_driver = extract_route(spark, "900", mode="angkot", fetch_fn=multi_fetch)
     want_coords = [

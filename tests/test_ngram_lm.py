@@ -9,6 +9,7 @@ from collections import Counter
 import pytest
 
 from tegallega_spark.operators.ngram_lm import (
+    ALPHA,
     UNK,
     perplexity_score,
     train_bigram_lm,
@@ -44,9 +45,9 @@ def ref_scores(texts: dict[int, str], min_count=2, alpha=0.1):
     return out
 
 
-def _score(spark, texts, **kw):
+def _score(spark, texts):
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    lm = train_bigram_lm(df, **kw)
+    lm = train_bigram_lm(df)
     rows = perplexity_score(df, lm).collect()
     return {r.doc_id: (r.n_bigrams, r.avg_nll) for r in rows}, lm
 
@@ -111,7 +112,7 @@ def test_unseen_bigram_and_context_smoothing(spark):
 
     train_texts = {1: "aa bb aa bb aa", 2: "bb aa bb cc bb"}
     df = spark.createDataFrame(list(train_texts.items()), "doc_id long, text string")
-    lm = train_bigram_lm(df, min_count=2, alpha=0.5)
+    lm = train_bigram_lm(df)
     held = spark.createDataFrame([(9, "cc cc")], "doc_id long, text string")
     rows = perplexity_score(held, lm).collect()
     assert len(rows) == 1 and rows[0].n_bigrams == 1
@@ -127,7 +128,7 @@ def test_unseen_bigram_and_context_smoothing(spark):
     c1 = Counter()
     for (a, _), c in c12.items():
         c1[a] += c
-    want = -math.log((c12[("cc", "cc")] + 0.5) / (c1["cc"] + 0.5 * V))
+    want = -math.log((c12[("cc", "cc")] + ALPHA) / (c1["cc"] + ALPHA * V))
     assert rows[0].avg_nll == pytest.approx(want, rel=1e-12)
     assert math.isfinite(rows[0].avg_nll)
 
@@ -173,7 +174,7 @@ def test_single_task_matches_distributed_bitwise(spark, force_shape):
 
     def run(shape):
         force_shape(shape)
-        lm = train_bigram_lm(df, min_count=2, alpha=0.1)
+        lm = train_bigram_lm(df)
         assert lm.small_gate is (shape == "single")
         return sorted(
             (r.doc_id, r.n_bigrams, struct.pack("<d", r.avg_nll).hex())

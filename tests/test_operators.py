@@ -220,18 +220,16 @@ def test_verified_neardups_equal_exact_sets(spark, sf_dir):
     }
     ex3 = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in exact_shingle_jaccard_pairs(d, "doc_id", "text", 3, 0.7).collect()
+        for r in exact_shingle_jaccard_pairs(d, 3, 0.7).collect()
     }
     assert mh == ex3 and len(mh) > 0
     sh = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in simhash_near_duplicates_verified(
-            d, "doc_id", "text", shingle_n=2, jaccard_threshold=0.7
-        ).collect()
+        for r in simhash_near_duplicates_verified(d, "doc_id", "text").collect()
     }
     ex2 = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in exact_shingle_jaccard_pairs(d, "doc_id", "text", 2, 0.7).collect()
+        for r in exact_shingle_jaccard_pairs(d, 2, 0.7).collect()
     }
     assert sh == ex2 and len(sh) > 0
 
@@ -292,7 +290,7 @@ def test_md5_simhash_fingerprints_rederivable(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").limit(50)
     got = {
         r["__id"]: r["__fp"]
-        for r in simhash_fingerprints(d, "doc_id", "text", 2).collect()
+        for r in simhash_fingerprints(d, "doc_id", "text").collect()
     }
     for row in d.select("doc_id", "text").collect():
         words = [w for w in _re.split(r"[^a-z0-9]+", (row.text or "").lower()) if w]
@@ -311,13 +309,11 @@ def test_md5_simhash_fingerprints_rederivable(spark, sf_dir):
     full = load_table(spark, sf_dir, "documents")
     md5_pairs = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in simhash_near_duplicates_verified(
-            full, "doc_id", "text", shingle_n=2, jaccard_threshold=0.7
-        ).collect()
+        for r in simhash_near_duplicates_verified(full, "doc_id", "text").collect()
     }
     ex2 = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in exact_shingle_jaccard_pairs(full, "doc_id", "text", 2, 0.7).collect()
+        for r in exact_shingle_jaccard_pairs(full, 2, 0.7).collect()
     }
     assert md5_pairs == ex2 and len(md5_pairs) > 0
 
@@ -331,7 +327,7 @@ def test_embedding_all_pairs_equals_brute_force(spark, sf_dir):
     got = {
         (r.id_a, r.id_b, round(r.cos_sim, 6))
         for r in all_pairs_above(
-            emb, "vec_id", "embedding", min_cosine=0.462, num_planes=2, num_tables=16
+            emb, min_cosine=0.462, num_planes=2, num_tables=16
         ).collect()
     }
     va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
@@ -361,15 +357,13 @@ def test_text_sketches(spark):
     )
 
     df = spark.createDataFrame(
-        [(1, "the quick brown fox and the lazy dog in the yard " * 4)],
+        [(1, " ".join(f"w{i}" for i in range(100)))],
         "id long, text string",
     )
 
     def sketch():
         return df.select(
-            rolling_hash_fingerprints_from_tokens(
-                tokens(F.col("text")), window=4, keep_every=4
-            ).alias("fp")
+            rolling_hash_fingerprints_from_tokens(tokens(F.col("text"))).alias("fp")
         ).first().fp
 
     fp = sketch()

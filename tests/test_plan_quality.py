@@ -242,12 +242,12 @@ def test_duplicated_spans_plan_shape(spark, force_shape):
     assert "Exchange" not in st
 
 
-def test_semantic_dedup_no_cartesian_and_bounded_exchanges(spark):
+def test_semantic_dedup_no_cartesian_and_bounded_exchanges(spark, monkeypatch):
     """Within-cluster pair search must be an equi-join on the cluster id —
     a cartesian / nested loop would mean the blocking key got lost."""
     import numpy as np
 
-    from tegallega_spark.operators.semdedup import semantic_pairs
+    from tegallega_spark.operators import semdedup
 
     rng = np.random.default_rng(0)
     rows = [
@@ -255,7 +255,8 @@ def test_semantic_dedup_no_cartesian_and_bounded_exchanges(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     # 64 rows at 16 per cell: 4 cells
-    plan = plan_of(semantic_pairs(df, target_cell_size=16, min_cosine=0.9))
+    monkeypatch.setattr(semdedup, "TARGET_CELL_SIZE", 16)
+    plan = plan_of(semdedup.semantic_pairs(df, min_cosine=0.9))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

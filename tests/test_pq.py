@@ -51,7 +51,7 @@ def test_full_rerank_equals_exact(spark, emb, codebooks):
     n = emb.count()
     query = emb.orderBy("vec_id").first().embedding
     enc = encode_pq(emb, codebooks).persist()
-    exact = brute_force_topk(emb, query, k=10).collect()
+    exact = brute_force_topk(emb, query).collect()
     viapq = pq_topk(enc, codebooks, query, k=10, rerank=n).collect()
     assert [r.vec_id for r in viapq] == [r.vec_id for r in exact]
     for a, b in zip(viapq, exact):
@@ -65,7 +65,7 @@ def test_bounded_rerank_recall(spark, emb, codebooks):
     queries = [r.embedding for r in emb.orderBy("vec_id").limit(5).collect()]
     hits = total = 0
     for q in queries:
-        exact = {r.vec_id for r in brute_force_topk(emb, q, k=10).collect()}
+        exact = {r.vec_id for r in brute_force_topk(emb, q).collect()}
         approx = {
             r.vec_id
             for r in pq_topk(enc, codebooks, q, k=10, rerank=50).collect()
@@ -87,7 +87,7 @@ def test_ivfpq_composition(spark, emb, codebooks):
     n = emb.count()
     query = emb.orderBy("vec_id").first().embedding
 
-    exact = [r.vec_id for r in brute_force_topk(emb, query, k=10).collect()]
+    exact = [r.vec_id for r in brute_force_topk(emb, query).collect()]
     full = [
         r.vec_id
         for r in ivfpq_topk(idx, codebooks, query, k=10, nprobe=8, rerank=n).collect()
@@ -157,7 +157,7 @@ def test_sampled_ivf_trainer_assignment_and_determinism(spark, emb):
 
     # full-probe search over the sampled index == brute force
     query = emb.orderBy("vec_id").first().embedding
-    exact = [r.vec_id for r in brute_force_topk(emb, query, k=10).collect()]
+    exact = [r.vec_id for r in brute_force_topk(emb, query).collect()]
     got = [r.vec_id for r in idx.search(query, k=10, nprobe=8).collect()]
     assert got == exact
     idx.assigned.unpersist()
@@ -195,6 +195,26 @@ def test_short_sample_draw_raises_without_corpus_size(emb):
     assert train_centroids_sampled(emb, k=4, sample_x=whole, n=10).shape == (4, 8)
 
 
+def test_pq_short_sample_draw_raises_unless_whole_corpus(emb, codebooks):
+    """PQ applies the IVF trainer's draw rule (ivf.checked_draw): a draw
+    shorter than `sample` from a larger corpus must raise, not train on a
+    different sample; the whole corpus as the draw, in hash order, trains
+    the same codebooks as the trainer's own collect."""
+    n = emb.count()
+    short = np.zeros((20, 64))
+    with pytest.raises(ValueError, match="sample_x has 20 rows < sample=4096"):
+        train_pq_codebooks(emb, m=8, k=16, n=n, sample_x=short)
+    with pytest.raises(ValueError, match="unknown size"):
+        train_pq_codebooks(emb, m=8, k=16, sample_x=short)
+    whole = np.array(
+        [r.embedding for r in emb.orderBy(F.xxhash64("embedding")).collect()],
+        dtype=np.float64,
+    )
+    assert len(whole) == n < 4096
+    got = train_pq_codebooks(emb, m=8, k=16, n=n, sample_x=whole)
+    assert np.array_equal(got, codebooks)
+
+
 def test_sample_prefilter_bit_identical(spark, emb):
     """r9: the hash-cutoff prefilter in _sample_vectors (the fix for
     orderBy().limit() collecting whole partitions at corpus scale) must
@@ -210,19 +230,21 @@ def test_sample_prefilter_bit_identical(spark, emb):
         assert np.array_equal(filtered, full)
 
 
-def test_kmeans_blas_chunked_assignment_matches_monolithic():
-    """ADVICE r9: the chunked assignment step (peak memory O(chunk·k)
-    instead of a monolithic (n, k) float64 matrix — the N²/1024-byte
-    driver-OOM cliff at semdedup's unclamped k ∝ N) must be bit-identical
-    to the monolithic path, including the empty-cluster farthest-point
-    re-seed that consumes the per-row min distances."""
-    from tegallega_spark.operators.ivf import _kmeans_blas
+def test_kmeans_blas_chunked_assignment_matches_monolithic(monkeypatch):
+    """ADVICE r9: the chunked assignment step (peak memory
+    O(KMEANS_CHUNK·k) instead of a monolithic (n, k) float64 matrix — the
+    N²/1024-byte driver-OOM cliff at semdedup's unclamped k ∝ N) must be
+    bit-identical to the monolithic path, including the empty-cluster
+    farthest-point re-seed that consumes the per-row min distances."""
+    from tegallega_spark.operators import ivf
 
     rng = np.random.default_rng(3)
     x = rng.normal(size=(500, 12))
     # duplicate the first row many times so first-k init starts with
     # coincident centroids → empty clusters → the re-seed path runs
     x[:40] = x[0]
-    mono = _kmeans_blas(x, 16, 6, chunk=10**9)
-    chunked = _kmeans_blas(x, 16, 6, chunk=37)  # ragged, < n
+    monkeypatch.setattr(ivf, "KMEANS_CHUNK", 10**9)
+    mono = ivf._kmeans_blas(x, 16)
+    monkeypatch.setattr(ivf, "KMEANS_CHUNK", 37)  # ragged, < n
+    chunked = ivf._kmeans_blas(x, 16)
     assert np.array_equal(mono, chunked)

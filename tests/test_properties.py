@@ -15,9 +15,9 @@ from tegallega_spark.functions.timecodec import (
 )
 from tegallega_spark.operators.stateful import (
     MIN_SPACING_M,
-    _make_thin_batch,
     _stitch_batch,
     _stitch_group,
+    _thin_batch,
     _thin_group,
 )
 
@@ -167,7 +167,7 @@ def test_thin_batch_equals_per_relation_reference(relations, rnd):
     want = pd.concat(
         [_thin_group(g) for _, g in pdf.groupby("relation_id", sort=True)]
     )
-    got = _make_thin_batch("relation_id")(pdf)
+    got = _thin_batch(pdf)
     assert list(got["stop_id"]) == list(want["stop_id"])
     assert list(got.itertuples(index=False, name=None)) == list(
         want.itertuples(index=False, name=None)

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from tegallega_spark.operators.ivf import train_ivf_index_sampled
-from tegallega_spark.operators.skew import salted_join
+from tegallega_spark.operators.skew import SALT, salted_join
 from tegallega_spark.session import load_table
 from tests.conftest import SF_SMOKE
 
@@ -17,18 +17,10 @@ def test_salted_join_matches_plain_join(spark):
         F.col("c_custkey").alias("o_custkey"), "c_name"
     )
     plain = orders.join(customer, "o_custkey").select("o_orderkey", "c_name")
-    salted = salted_join(orders, customer, "o_custkey", salt=4).select(
+    salted = salted_join(orders, customer, "o_custkey").select(
         "o_orderkey", "c_name"
     )
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_left_join_keeps_unmatched(spark):
-    big = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    small = spark.createDataFrame([(1, "x")], "k int, w string")
-    out = salted_join(big, small, "k", salt=3, how="left").collect()
-    got = {(r.k, r.v, r.w) for r in out}
-    assert got == {(1, "a", "x"), (2, "b", None)}
 
 
 def test_salted_join_balances_planted_hot_key(spark):
@@ -53,7 +45,7 @@ def test_salted_join_balances_planted_hot_key(spark):
         # test session defaults to one per core, where 8 cells → 8
         # partitions stack 3-deep and hide the balancing effect)
         conf.set("spark.sql.shuffle.partitions", "64")
-        salt = 8
+        salt = SALT
         # hot key 0: 20k rows; 50 cold keys: 200 rows each → hot share ≈ 2/3
         big = spark.range(30_000).select(
             F.when(F.col("id") < 20_000, F.lit(0))
@@ -71,7 +63,7 @@ def test_salted_join_balances_planted_hot_key(spark):
             )
 
         plain_max = max(r["count"] for r in partition_counts(big.join(small, "k")))
-        salted = salted_join(big, small, "k", salt=salt)
+        salted = salted_join(big, small, "k")
         salted_max = max(r["count"] for r in partition_counts(salted))
         assert plain_max >= 20_000  # the hot key really is a straggler
         # the straggler partition shrinks several-fold (exact factor is
@@ -96,9 +88,9 @@ def test_ivf_search_recall(spark):
     qrow = emb.orderBy("vec_id").first()
     qv = [float(x) for x in qrow["embedding"]]
     # probing all lists must equal brute force exactly
-    assert index.recall_against_exact(qv, k=10, nprobe=8) == 1.0
+    assert index.recall_against_exact(qv, nprobe=8) == 1.0
     # probing half the lists keeps decent recall on clustered synthetic data
-    recall = index.recall_against_exact(qv, k=10, nprobe=4)
+    recall = index.recall_against_exact(qv, nprobe=4)
     assert recall >= 0.5
     top = index.search(qv, k=3, nprobe=8).collect()
     assert top[0]["vec_id"] == qrow["vec_id"]  # the query vector itself

@@ -3,8 +3,10 @@
 Contract mirrors the other near-dup families: approximate blocking +
 exact verification, pinned against exact all-pairs where the blocking is
 degenerate (one cell) and against planted duplicates where it isn't.  The
-cell count is always auto_k_clusters(n, target_cell_size), so a test that
-wants k cells on an n-row corpus passes a target_cell_size that yields k.
+cell count is always auto_k_clusters(n), so a test that wants k cells on
+an n-row corpus sets semdedup.TARGET_CELL_SIZE to a value that yields k
+(and semdedup.MAX_CLUSTER for the star-link cap); both are read at call
+time.
 """
 
 import warnings
@@ -14,6 +16,7 @@ import pytest
 
 import pyspark.sql.functions as F
 
+from tegallega_spark.operators import semdedup
 from tegallega_spark.operators.cc import dedup_cluster_assignments
 from tegallega_spark.operators.semdedup import auto_k_clusters, semantic_pairs
 from tegallega_spark.operators.similarity import cosine
@@ -39,7 +42,7 @@ def _exact_pairs(df, min_cosine):
 def _keepers(df, pairs_df):
     """Ids that survive semantic dedup (clean_corpus's semantic step):
     every row outside the pair graph plus each component's min id."""
-    assign = dedup_cluster_assignments(pairs_df, "id_a", "id_b")
+    assign = dedup_cluster_assignments(pairs_df)
     dupes = {
         r.doc_id
         for r in assign.filter(F.col("doc_id") != F.col("cluster_id")).collect()
@@ -50,28 +53,14 @@ def _keepers(df, pairs_df):
 
 def test_single_cluster_matches_exact_all_pairs(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    # 200 rows at the default target_cell_size (512): one cell
-    got_df = semantic_pairs(emb, min_cosine=0.3, max_cluster=10**6)
+    # 200 rows at TARGET_CELL_SIZE (512): one cell, under MAX_CLUSTER
+    assert 200 <= semdedup.TARGET_CELL_SIZE < semdedup.MAX_CLUSTER
+    got_df = semantic_pairs(emb, min_cosine=0.3)
     got = {(r.id_a, r.id_b) for r in got_df.collect()}
     release_intermediates(got_df)
     want = _exact_pairs(emb, 0.3)
     assert got == want
     assert want, "threshold too strict — test would be vacuous"
-
-
-def test_non_default_seed_warns_inert(spark):
-    """ADVICE r9: `seed` has been a no-op since the r8 deterministic
-    sampled trainer — a caller varying it to probe blocking sensitivity
-    must get a warning, not silently identical results."""
-    import warnings
-
-    df = _planted(spark, n_groups=4)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        pairs = semantic_pairs(df, min_cosine=0.999, target_cell_size=6, seed=99)
-        pairs.collect()
-        release_intermediates(pairs)
-    assert any("no-op" in str(w.message) for w in caught)
 
 
 def _planted(spark, n_groups=30, copies=3, dim=16, noise=1e-3, seed=7):
@@ -86,9 +75,10 @@ def _planted(spark, n_groups=30, copies=3, dim=16, noise=1e-3, seed=7):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_planted_duplicates_all_found_and_one_keeper_per_group(spark):
+def test_planted_duplicates_all_found_and_one_keeper_per_group(spark, monkeypatch):
     df = _planted(spark)
-    pairs_df = semantic_pairs(df, min_cosine=0.999, target_cell_size=12)  # 8 cells
+    monkeypatch.setattr(semdedup, "TARGET_CELL_SIZE", 12)  # 8 cells
+    pairs_df = semantic_pairs(df, min_cosine=0.999)
     pairs = {(r.id_a, r.id_b) for r in pairs_df.collect()}
     # near-identical copies always share a k-means cell → full recall
     for g in range(30):
@@ -103,7 +93,7 @@ def test_planted_duplicates_all_found_and_one_keeper_per_group(spark):
     assert ids == [g * 3 for g in range(30)]  # min id of each group
 
 
-def test_hot_cluster_star_guard_bounds_pairs(spark):
+def test_hot_cluster_star_guard_bounds_pairs(spark, monkeypatch):
     # 400 identical vectors: one cluster whatever k is; all-pairs would be
     # ~80k pairs, the star guard emits exactly n-1 and still collapses the
     # whole set to one keeper.
@@ -112,9 +102,9 @@ def test_hot_cluster_star_guard_bounds_pairs(spark):
     df = spark.createDataFrame(
         [(i, v) for i in range(n)], "vec_id long, embedding array<float>"
     )
-    pairs_df = semantic_pairs(
-        df, min_cosine=0.99, target_cell_size=200, max_cluster=50
-    )
+    monkeypatch.setattr(semdedup, "TARGET_CELL_SIZE", 200)
+    monkeypatch.setattr(semdedup, "MAX_CLUSTER", 50)
+    pairs_df = semantic_pairs(df, min_cosine=0.99)
     pairs = pairs_df.collect()
     assert len(pairs) == n - 1
     assert {r.id_a for r in pairs} == {0}
@@ -123,9 +113,10 @@ def test_hot_cluster_star_guard_bounds_pairs(spark):
     release_intermediates(pairs_df)
 
 
-def test_release_frees_cached_cluster_assignment(spark):
+def test_release_frees_cached_cluster_assignment(spark, monkeypatch):
     df = _planted(spark, n_groups=5)
-    pairs_df = semantic_pairs(df, min_cosine=0.999, target_cell_size=8)  # 2 cells
+    monkeypatch.setattr(semdedup, "TARGET_CELL_SIZE", 8)  # 2 cells
+    pairs_df = semantic_pairs(df, min_cosine=0.999)
     pairs_df.collect()
     handles = getattr(pairs_df, "_tegallega_persisted", [])
     assert handles and all(h.is_cached for h in handles)
@@ -135,16 +126,17 @@ def test_release_frees_cached_cluster_assignment(spark):
 
 def test_auto_k_scales_with_corpus_size():
     # the k ∝ N rule itself, pinned
-    assert auto_k_clusters(100, 512) == 1
-    assert auto_k_clusters(512, 512) == 1
-    assert auto_k_clusters(513, 512) == 2
-    assert auto_k_clusters(5000, 512) == 10
-    assert auto_k_clusters(1_000_000, 512) == 1954
-    assert auto_k_clusters(0, 512) == 1
+    assert semdedup.TARGET_CELL_SIZE == 512
+    assert auto_k_clusters(100) == 1
+    assert auto_k_clusters(512) == 1
+    assert auto_k_clusters(513) == 2
+    assert auto_k_clusters(5000) == 10
+    assert auto_k_clusters(1_000_000) == 1954
+    assert auto_k_clusters(0) == 1
 
 
 def test_default_k_full_recall_on_planted(spark):
-    # default target_cell_size: the auto cell count must still find
+    # the shipped TARGET_CELL_SIZE: the auto cell count must still find
     # every planted pair (the VERDICT round-4 acceptance criterion)
     df = _planted(spark, n_groups=40, copies=3)
     pairs_df = semantic_pairs(df, min_cosine=0.999)
@@ -156,35 +148,36 @@ def test_default_k_full_recall_on_planted(spark):
     assert all(a // 3 == b // 3 for a, b in pairs)
 
 
-def test_star_fraction_warning_fires_on_coarse_blocking(spark):
-    # 400 identical vectors with max_cluster=50: 100% of rows star-link →
-    # the warning must fire; with max_cluster above the corpus it must not
+def test_star_fraction_warning_fires_on_coarse_blocking(spark, monkeypatch):
+    # 400 identical vectors with MAX_CLUSTER=50: 100% of rows star-link →
+    # the warning must fire; with the shipped MAX_CLUSTER (above the
+    # corpus) it must not
     n = 400
     v = [float(x) for x in np.ones(8) / np.sqrt(8)]
     df = spark.createDataFrame(
         [(i, v) for i in range(n)], "vec_id long, embedding array<float>"
     )
-    with pytest.warns(UserWarning, match="STAR-link"):
-        pairs_df = semantic_pairs(
-            df, min_cosine=0.99, target_cell_size=200, max_cluster=50
-        )
+    monkeypatch.setattr(semdedup, "TARGET_CELL_SIZE", 200)
+    with monkeypatch.context() as m:
+        m.setattr(semdedup, "MAX_CLUSTER", 50)
+        with pytest.warns(UserWarning, match="STAR-link"):
+            pairs_df = semantic_pairs(df, min_cosine=0.99)
     pairs_df.collect()
     release_intermediates(pairs_df)
 
+    assert semdedup.MAX_CLUSTER > n
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        pairs_df = semantic_pairs(
-            df, min_cosine=0.99, target_cell_size=200, max_cluster=10**6
-        )
+        pairs_df = semantic_pairs(df, min_cosine=0.99)
     pairs_df.collect()
     release_intermediates(pairs_df)
 
 
-def test_probe_visitors_do_not_star_link_true_small_cells(spark):
-    """VERDICT r4 #7 acceptance: max_cluster compares TRUE cell population
+def test_probe_visitors_do_not_star_link_true_small_cells(spark, monkeypatch):
+    """VERDICT r4 #7 acceptance: MAX_CLUSTER compares TRUE cell population
     (primary members), not probe-inflated rows.  Two well-separated
     clusters of 60 with probes=2 put ~120 rows in each cell; with
-    max_cluster=80 (true 60 < 80 < inflated 120) both cells must keep
+    MAX_CLUSTER=80 (true 60 < 80 < inflated 120) both cells must keep
     FULL pairwise recall — under the old inflated-count guard they
     star-linked and lost the non-representative pairs."""
     rng = np.random.default_rng(5)
@@ -197,11 +190,11 @@ def test_probe_visitors_do_not_star_link_true_small_cells(spark):
                 v = base + 1e-3 * rng.standard_normal(16)
                 rows.append((cluster * 60 + g * 3 + c, [float(x) for x in v]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    monkeypatch.setattr(semdedup, "TARGET_CELL_SIZE", 60)
+    monkeypatch.setattr(semdedup, "MAX_CLUSTER", 80)
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # star warning must NOT fire either
-        pairs_df = semantic_pairs(
-            df, min_cosine=0.999, target_cell_size=60, probes=2, max_cluster=80
-        )
+        pairs_df = semantic_pairs(df, min_cosine=0.999, probes=2)
         pairs = {(r.id_a, r.id_b) for r in pairs_df.collect()}
     release_intermediates(pairs_df)
     want = _exact_pairs(df, 0.999)
@@ -212,30 +205,30 @@ def test_probe_visitors_do_not_star_link_true_small_cells(spark):
     assert non_star, "no non-representative pairs — guard still star-linking"
 
 
-def test_probe_inflow_work_bound_still_stars(spark):
+def test_probe_inflow_work_bound_still_stars(spark, monkeypatch):
     """The O(cell²) bound survives the true-count guard: when the
-    probe-inflated row count exceeds max_cluster*probes, the cell
-    star-links even though its true population is under max_cluster."""
+    probe-inflated row count exceeds MAX_CLUSTER*probes, the cell
+    star-links even though its true population is under MAX_CLUSTER."""
     n = 300
     v = [float(x) for x in np.ones(8) / np.sqrt(8)]
     df = spark.createDataFrame(
         [(i, v) for i in range(n)], "vec_id long, embedding array<float>"
     )
     # identical vectors: KMeans yields duplicate centroids; probes=2 puts
-    # all 300 rows in BOTH cells → inflated 300 > max_cluster*2 = 200,
+    # all 300 rows in BOTH cells → inflated 300 > MAX_CLUSTER*2 = 200,
     # true population 300 > 100 too — but the point being pinned is that
     # the star path still produces exactly n-1 star pairs, not O(n²)
+    monkeypatch.setattr(semdedup, "TARGET_CELL_SIZE", 150)
+    monkeypatch.setattr(semdedup, "MAX_CLUSTER", 100)
     with pytest.warns(UserWarning, match="STAR-link"):
-        pairs_df = semantic_pairs(
-            df, min_cosine=0.99, target_cell_size=150, probes=2, max_cluster=100
-        )
+        pairs_df = semantic_pairs(df, min_cosine=0.99, probes=2)
     pairs = pairs_df.collect()
     release_intermediates(pairs_df)
     assert len(pairs) == n - 1
     assert {r.id_a for r in pairs} == {0}
 
 
-def test_tree_quantizer_path_full_recall_on_planted(spark):
+def test_tree_quantizer_path_full_recall_on_planted(spark, monkeypatch):
     """r9: above TREE_QUANTIZER_MIN_K cells the blocking switches to the
     two-level tree quantizer (O(√k·d) probe — the fix for the r8 race's
     N^1.7 curve).  Forcing that path with one cell per vector on a
@@ -245,8 +238,9 @@ def test_tree_quantizer_path_full_recall_on_planted(spark):
 
     df = _planted(spark, n_groups=500, copies=3)
     # 1,500 cells: well into the tree regime
-    assert auto_k_clusters(1500, 1) > TREE_QUANTIZER_MIN_K
-    pairs_df = semantic_pairs(df, min_cosine=0.999, target_cell_size=1)
+    monkeypatch.setattr(semdedup, "TARGET_CELL_SIZE", 1)
+    assert auto_k_clusters(1500) > TREE_QUANTIZER_MIN_K
+    pairs_df = semantic_pairs(df, min_cosine=0.999)
     pairs = {(r.id_a, r.id_b) for r in pairs_df.collect()}
     for g in range(500):
         ids = [g * 3, g * 3 + 1, g * 3 + 2]

@@ -10,7 +10,8 @@ each defined in one place, so every operator and oracle agree on them,
 and the feed's trip and shape id grammar is written only in
 functions/ids.py.  Every package function is run by a query, pipeline,
 race or tool, or is named in KEEP with the reason it stays; likewise every
-None/True/False option is set by one of them, or is named in KEEP_OPTIONS."""
+optional parameter is set to another value by one of them, or is named in
+KEEP_OPTIONS."""
 
 from __future__ import annotations
 
@@ -318,30 +319,114 @@ def test_keep_list_names_only_unreached_defs():
 
 
 # ---------------------------------------------------------------------------
-# Modes: every on/off or auto-vs-explicit option has a caller that is not a test
+# Options: every optional parameter has a caller that is not a test
 # ---------------------------------------------------------------------------
 
 # Options kept although nothing outside tests sets them, each with its reason.
+# The encoders build the outside-format inputs the decoders must read: a
+# header field the encoder cannot vary is one the decoder could assume.
 KEEP_OPTIONS = {
     "operators.jpeg.encode_jpeg(subsample)":
         "makes the 4:2:0 inputs decode_jpeg must accept from outside encoders",
+    "operators.jpeg.encode_jpeg(quality)":
+        "varies the quantization tables decode_jpeg must read from DQT",
+    "operators.jpeg.encode_jpeg(restart_interval)":
+        "makes the DRI/RSTn streams decode_jpeg must resynchronize on",
+    "operators.multimodal.encode_avi(fps)":
+        "varies the strh rate/scale decode_avi must read the frame rate from",
+    "operators.multimodal.encode_avi(quality)":
+        "varies the MJPEG frames' quantization tables decode_avi must decode",
+    "operators.multimodal.encode_mov(fps)":
+        "varies the mdhd timescale decode_mov must read the frame rate from",
+    "operators.multimodal.encode_wav(sample_rate)":
+        "varies the fmt sample rate decode_wav must read, not assume",
+    "operators.multimodal.encode_y4m(fps)":
+        "varies the F header field decode_y4m must read the frame rate from",
+    "operators.multimodal.encode_y4m(colorspace)":
+        "makes the C420 planes decode_y4m must size from the header",
+    "sources.osm_pbf.write_osm_pbf(block_size)":
+        "real PBFs have many blocks, and the blob-split reader must split them",
     "session.release_intermediates(blocking)":
         "tests assert the freed blocks are gone right after release",
 }
-_MODAL_DEFAULTS = (None, True, False)
+# A default that is not a literal constant (`2**16`, a tuple, a name).
+_COMPUTED = object()
 
 
-def _modal_options(node) -> dict[str, object]:
-    """The optional parameters of a def whose default is None, True or
-    False (an on/off or auto-versus-explicit switch), by name."""
+def _options(node) -> dict[str, object]:
+    """The optional parameters of a def with their defaults, by name: the
+    constant's value, or _COMPUTED for a default written as an expression."""
     a = node.args
     positional = a.posonlyargs + a.args
     pairs = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
     pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
     return {
-        p.arg: d.value for p, d in pairs
-        if isinstance(d, ast.Constant) and any(d.value is v for v in _MODAL_DEFAULTS)
+        p.arg: d.value if isinstance(d, ast.Constant) else _COMPUTED
+        for p, d in pairs
     }
+
+
+def _is_default(value, default, consts: dict[str, object]) -> bool:
+    """True when the argument `value` is a constant of the default's type
+    and equal to it (`salt=8` against `salt: int = 8`).  A name bound to a
+    module-level constant (`consts`) counts as its value, so renaming a
+    literal does not set an option.  A computed default is set by any
+    argument."""
+    if isinstance(value, ast.Name):
+        value = consts.get(value.id, value)
+    v = value.value if isinstance(value, ast.Constant) else value
+    return default is not _COMPUTED and type(v) is type(default) and v == default
+
+
+def _module_constants(trees) -> dict[str, object]:
+    """Names bound at module level to a literal constant, with its value.
+    A name bound more than once with other values, or to an expression,
+    maps to _COMPUTED (it may be anything)."""
+    out: dict[str, object] = {}
+    for tree in trees:
+        for node in tree.body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                targets, value = [node.target], node.value
+            else:
+                continue
+            for t in targets:
+                if isinstance(t, ast.Name):
+                    v = value.value if isinstance(value, ast.Constant) else _COMPUTED
+                    old = out.get(t.id, v)
+                    same = type(old) is type(v) and old == v
+                    out[t.id] = v if same else _COMPUTED
+    return out
+
+
+def _outside_names(trees) -> set[str]:
+    """Names bound by importing from outside the package (`re`, `F` in
+    `from pyspark.sql import functions as F`) and never from inside it: a
+    call through them (`F.encode(...)`, `re.search(...)`) is not a
+    package def's."""
+    outside, inside = set(), set()
+    for tree in trees:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [(a.name, a) for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [("." * node.level + (node.module or ""), a) for a in node.names]
+            else:
+                continue
+            for mod, a in names:
+                ours = mod.startswith((".", "tegallega_spark"))
+                (inside if ours else outside).add(a.asname or a.name.split(".")[0])
+    return outside - inside
+
+
+def _package_call_name(call, outside: set[str]) -> str | None:
+    """The bare name a call may resolve to a package def by, or None for
+    a call through a name imported from outside the package."""
+    f = getattr(call, "func", None)
+    if isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name) and f.value.id in outside:
+        return None
+    return _call_name(call)
 
 
 def _callables(defs) -> dict[str, ast.AST]:
@@ -359,50 +444,63 @@ def _callables(defs) -> dict[str, ast.AST]:
 
 
 def _option_settings(defs) -> tuple[set[str], dict[str, set[str]]]:
-    """Which modal options some caller outside tests (package defs,
+    """Which options some caller outside tests (package defs,
     methods and module top-level code, or ROOT_FILES) may set to a
     non-default value: (options set outright, {option: the enclosing
     def's options it forwards}).  Options are "module.def(param)"; methods
     take part so that a method forwarding its own option counts only when
     that option is set.  A call resolves by bare name to every def of that
-    name (a clash may keep a dead mode alive, never call a live one dead);
-    an argument that is the enclosing def's own modal option only forwards
-    it; a constant equal to the default sets nothing; `*args` / `**kwargs`
-    set every option."""
+    name (a clash may keep a dead mode alive, never call a live one dead),
+    except a call through a name imported from outside the package; an
+    argument that is the enclosing def's own parameter only forwards it,
+    and a required parameter takes part only to forward (any argument sets
+    it), so an option passed down through one stays dead with its source; a
+    constant of the default's type and value sets nothing, also under a
+    module-level name; `*args` / `**kwargs` set every option."""
     funcs = _callables(defs)
     by_name: dict[str, list[str]] = {}
     params: dict[str, list[str]] = {}
-    modal: dict[str, dict[str, object]] = {}
+    opts: dict[str, dict[str, object]] = {}
     for key, node in funcs.items():
         by_name.setdefault(node.name, []).append(key)
         names = [p.arg for p in node.args.posonlyargs + node.args.args]
         params[key] = names[1:] if names[:1] in (["self"], ["cls"]) else names
-        modal[key] = _modal_options(node)
+        opts[key] = _options(node)
+        # a required parameter only forwards: any argument sets it
+        required = params[key] + [p.arg for p in node.args.kwonlyargs]
+        opts[key] |= {p: _COMPUTED for p in required if p not in opts[key]}
     units = list(funcs.items())
+    trees = []
     for f in sorted(PACKAGE.rglob("*.py")):  # module top-level code
-        for node in ast.parse(f.read_text(), filename=str(f)).body:
+        trees.append(ast.parse(f.read_text(), filename=str(f)))
+        for node in trees[-1].body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 units.extend((None, d) for d in node.decorator_list)
             else:
                 units.append((None, node))
     for pattern in ROOT_FILES:
         for f in sorted(REPO.glob(pattern)):
-            units.append((None, ast.parse(f.read_text(), filename=str(f))))
+            trees.append(ast.parse(f.read_text(), filename=str(f)))
+            units.append((None, trees[-1]))
+    consts, outside = _module_constants(trees), _outside_names(trees)
     set_: set[str] = set()
     forwards: dict[str, set[str]] = {}
     for owner, tree in units:
-        own = modal.get(owner, {})
+        own = opts.get(owner, {})
+        local = {n.id for n in ast.walk(tree)
+                 if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)}
+        if owner is not None:
+            local |= {p.arg for p in ast.walk(tree.args) if isinstance(p, ast.arg)}
+        seen = {k: v for k, v in consts.items() if k not in local}
         for call in ast.walk(tree):
-            for key in by_name.get(_call_name(call), ()):
+            for key in by_name.get(_package_call_name(call, outside), ()):
                 args = [(params[key][i] if i < len(params[key]) else None, v)
                         for i, v in enumerate(call.args)]
                 args += [(kw.arg, kw.value) for kw in call.keywords]
                 for param, value in args:
                     if isinstance(value, ast.Starred) or param is None:
-                        set_ |= {f"{key}({p})" for p in modal[key]}
-                    elif param in modal[key] and not (
-                        isinstance(value, ast.Constant) and value.value is modal[key][param]
-                    ):
+                        set_ |= {f"{key}({p})" for p in opts[key]}
+                    elif param in opts[key] and not _is_default(value, opts[key][param], seen):
                         option = f"{key}({param})"
                         if isinstance(value, ast.Name) and value.id in own:
                             forwards.setdefault(option, set()).add(f"{owner}({value.id})")
@@ -416,7 +514,7 @@ def _dead_options() -> list[str]:
     options = {
         f"{key}({p})" for key, node in defs.items() if key not in KEEP
         and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-        for p in _modal_options(node)
+        for p in _options(node)
     }
     live, forwards = _option_settings(defs)
     grew = True
@@ -430,10 +528,12 @@ def _dead_options() -> list[str]:
 
 
 def test_every_mode_is_set_outside_tests_or_is_kept():
-    """An option that only tests switch is a second code path nothing
-    ships: the strategy comes from the input or from the callers that
-    run, so delete the option with the path it selects, or name it in
-    KEEP_OPTIONS with the reason it stays."""
+    """An option that only tests set is a value or code path nothing
+    ships: a mode, size or column name comes from the input or from the
+    callers that run, so fix the option at the value they run (a module
+    constant a test may monkeypatch), or name it in KEEP_OPTIONS with the
+    reason it stays.  Every default counts: None/True/False switches,
+    numbers, strings and computed defaults alike."""
     dead = _dead_options()
     stray = [o for o in dead if o not in KEEP_OPTIONS]
     assert not stray, f"options only tests set: {stray}"

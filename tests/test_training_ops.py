@@ -322,16 +322,14 @@ def test_boilerplate_lines_removed_order_preserved(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     out = {
         r.doc_id: r.text
-        for r in remove_boilerplate_lines(
-            df, max_doc_frequency=2, min_line_chars=5
-        ).collect()
+        for r in remove_boilerplate_lines(df, max_doc_frequency=2).collect()
     }
     # banner (3 docs) and shared tail (3 docs) exceed max_df=2 → dropped
     assert out[1] == "unique alpha content line"
     assert out[2] == "unique beta content line"
     assert out[3] == "unique gamma content line"
     assert out[4] == "totally original document line"
-    # "ok" is below min_line_chars → kept in all docs, order preserved
+    # "ok" is below MIN_LINE_CHARS → kept in all docs, order preserved
     assert out[5] == "ok\nunique delta content line\nok"
     assert out[6] == "ok\nunique epsilon content line"
     assert out[7] == "ok\nunique zeta content line"
@@ -364,16 +362,14 @@ def test_boilerplate_line_dedup_matches_duckdb(spark, sf_dir):
     parity for the blocked-line selection AND the reassembled text."""
     import duckdb
 
-    from tegallega_spark.operators.textual import remove_boilerplate_lines
+    from tegallega_spark.operators.textual import MIN_LINE_CHARS, remove_boilerplate_lines
     from tegallega_spark.session import load_table, table_path
 
-    max_df, min_chars = 1, 10
+    max_df, min_chars = 1, MIN_LINE_CHARS
     docs = load_table(spark, sf_dir, "documents")
     got = {
         r.doc_id: r.text
-        for r in remove_boilerplate_lines(
-            docs, max_doc_frequency=max_df, min_line_chars=min_chars
-        ).collect()
+        for r in remove_boilerplate_lines(docs, max_doc_frequency=max_df).collect()
     }
 
     con = duckdb.connect()
@@ -537,9 +533,7 @@ def test_rolling_hash_fingerprints_short_doc_regression(spark):
         r.doc_id: r.f
         for r in df.select(
             "doc_id",
-            rolling_hash_fingerprints_from_tokens(
-                tokens(F2.col("text")), window=8
-            ).alias("f"),
+            rolling_hash_fingerprints_from_tokens(tokens(F2.col("text"))).alias("f"),
         ).collect()
     }
     assert rows[1] == []
@@ -611,12 +605,13 @@ def test_normalize_text_matches_duckdb(spark, sf_dir):
     assert got == want
 
 
-def test_boilerplate_broadcast_gate_falls_back_above_limit(spark):
+def test_boilerplate_broadcast_gate_falls_back_above_limit(spark, monkeypatch):
     """ADVICE r4: the broadcast hint is gated on the blocked set's actual
-    count — above broadcast_limit the anti-join must NOT carry a broadcast
-    hint (AQE/size estimation decides), below it the hint is pinned.
-    Identical output either way; the persisted blocked set is released
-    via release_intermediates."""
+    count — above BOILERPLATE_BROADCAST_LIMIT the anti-join must NOT carry
+    a broadcast hint (AQE/size estimation decides), below it the hint is
+    pinned.  Identical output either way; the persisted blocked set is
+    released via release_intermediates."""
+    from tegallega_spark.operators import textual
     from tegallega_spark.operators.textual import remove_boilerplate_lines
     from tegallega_spark.session import release_intermediates
 
@@ -627,12 +622,10 @@ def test_boilerplate_broadcast_gate_falls_back_above_limit(spark):
         banner_docs.append((d, "\n".join(lines)))
     df = spark.createDataFrame(banner_docs, "doc_id long, text string")
 
-    forced_shuffle = remove_boilerplate_lines(
-        df, max_doc_frequency=2, broadcast_limit=3  # 10 blocked > 3
-    )
-    hinted = remove_boilerplate_lines(
-        df, max_doc_frequency=2, broadcast_limit=10_000
-    )
+    monkeypatch.setattr(textual, "BOILERPLATE_BROADCAST_LIMIT", 3)  # 10 blocked > 3
+    forced_shuffle = remove_boilerplate_lines(df, max_doc_frequency=2)
+    monkeypatch.undo()  # the shipped limit: 10 blocked lines broadcast
+    hinted = remove_boilerplate_lines(df, max_doc_frequency=2)
     plan_shuffle = forced_shuffle._jdf.queryExecution().toString()
     want = {(d, f"unique content for document {d}") for d in range(4)}
     assert {(r.doc_id, r.text) for r in forced_shuffle.collect()} == want
@@ -735,9 +728,9 @@ def test_mixture_sample_scan_side_filter(spark):
 
 def test_rolling_fingerprints_md5_hasher_matches_reference_hash(spark):
     """The shingle hash is the documented first-60-bits-of-md5 value
-    (sampling.md5_60) — pin one ASCII and one non-ASCII shingle's
-    fingerprint, and hash_frac's salted fraction, against hashlib computed
-    in plain Python."""
+    (sampling.md5_60) — pin an ASCII and a non-ASCII doc's kept 8-word
+    shingle fingerprints (hash ≡ 0 mod 16), and hash_frac's salted
+    fraction, against hashlib computed in plain Python."""
     import hashlib
 
     from tegallega_spark.operators.sampling import hash_frac
@@ -749,21 +742,28 @@ def test_rolling_fingerprints_md5_hasher_matches_reference_hash(spark):
     def md5_60(s):
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
-    ascii_text = " ".join(f"w{i}" for i in range(8))
-    utf8_text = "café naïve über straße ñandú été jalan 東京"
+    utf8_words = "café naïve über straße ñandú été jalan 東京".split()
+    texts = {
+        1: [f"w{i}" for i in range(100)],
+        2: [f"{utf8_words[i % 8]}{i}" for i in range(100)],
+    }
+
+    def kept(words):
+        hs = {md5_60(" ".join(words[i : i + 8])) for i in range(len(words) - 7)}
+        return sorted(h for h in hs if h % 16 == 0)
+
     df = spark.createDataFrame(
-        [(1, ascii_text), (2, utf8_text)], "doc_id long, text string"
+        [(i, " ".join(ws)) for i, ws in texts.items()], "doc_id long, text string"
     )
     out = {
         r.doc_id: r.fps
         for r in df.select(
             "doc_id",
-            rolling_hash_fingerprints_from_tokens(
-                tokens(F.col("text")), window=8, keep_every=1
-            ).alias("fps"),
+            rolling_hash_fingerprints_from_tokens(tokens(F.col("text"))).alias("fps"),
         ).collect()
     }
-    assert out == {1: [md5_60(ascii_text)], 2: [md5_60(utf8_text)]}
+    want = {i: kept(ws) for i, ws in texts.items()}
+    assert out == want and all(want.values())
 
     keys = ["1", "42", "doc-東京", "ünïcode"]
     kdf = spark.createDataFrame([(k,) for k in keys], "k string")
